@@ -10,27 +10,79 @@ Reference behavior being re-expressed:
 
 Neither lidNet/fastText nor CLD2/3 is installable here, so the default
 model is a self-trained character-n-gram multinomial Naive Bayes - the
-same model family fastText's supervised mode reduces to for LID - trained
-with DataFrame aggregations (distributed counting), collected into a
-compact top-K table, and scored inside an ``Iterator[pd.Series]`` pandas
-UDF so the model deserializes ONCE per executor python worker, not once
-per batch (the fastText-on-Spark serving pattern).
+same model family fastText's supervised mode reduces to for LID.
+
+Training is two Spark actions: one aggregation explodes the padded,
+lowercased text into char n-grams, counts per (lang, gram), rolls up per
+gram (global count plus the per-language counts) and collects the top_k
+grams; one ``groupBy(label).count()`` gives the priors.  Every label gets
+an unseen-gram value, also a label none of whose grams made the top_k.
+
+Scoring is vectorised per text with numpy.  On first use in a Python
+worker (after the broadcast deserializes; the arrays are never pickled)
+the model builds a sorted uint64 key array of the vocabulary grams (each
+code point packed into 21 bits, which is why n is limited to 1..3), a
+dense (language x vocabulary) log-likelihood matrix and a priors vector.
+``predict_batch`` turns a text into UTF-32 code points, packs its sliding
+n-gram keys, finds the vocabulary grams with ``searchsorted``, gathers
+their matrix columns and sums them with ``cumsum`` after the prior.
+``cumsum`` adds strictly left to right, so every score has the bits of a
+per-row loop over the grams (tests/oracle.py keeps that loop as the
+reference); ``argmax`` over the sorted languages gives the tie rule
+(highest score, then the lower language name).  The scorer is served by
+an ``Iterator[pd.Series]`` pandas UDF, so the model deserializes ONCE per
+executor python worker, not once per batch (the fastText-on-Spark
+serving pattern).
 
 Swapping in the real model is a config string, not a code change:
 ``load_model("fasttext:/path/lid.176.bin")`` returns a FastTextLidModel
-with the same predict interface, served by the same UDF
-(tests/test_lid.py exercises the seam with a fake fasttext module).
+with the same ``predict``/``predict_batch`` interface, served by the same
+UDF (tests/test_lid.py exercises the seam with a fake fasttext module).
 Verification: the NB scorer is hash-verified against DuckDB as the
 driver-gated ``lid_ngram_sql`` query, the UDF path is asserted equal to
-that SQL rendering, and a held-out accuracy floor runs on genuinely
-multilingual synthetic docs (tests/test_lid.py).
+that SQL rendering, training and scoring are asserted equal to the
+pure-Python reference in tests/oracle.py (score vectors bit for bit),
+and a held-out accuracy floor runs on genuinely multilingual synthetic
+docs (tests/test_lid.py).
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
+
+
+# each code point takes 21 bits of a uint64 gram key, so n <= 3
+_CP_BITS = 21
+_MAX_N = 64 // _CP_BITS
+
+
+def _check_n(n: int) -> None:
+    if not 1 <= n <= _MAX_N:
+        raise ValueError(f"n-gram order must be in 1..{_MAX_N}, got {n}")
+
+
+def _pack(gram: str) -> int:
+    key = 0
+    for ch in gram:
+        key = key << _CP_BITS | ord(ch)
+    return key
+
+
+def _gram_keys(t: str, n: int) -> np.ndarray:
+    """``_pack`` of every sliding n-gram of *t*, in text order."""
+    cp = np.frombuffer(t.encode("utf-32-le", "surrogatepass"),
+                       dtype=np.uint32).astype(np.uint64)
+    m = len(cp) - n + 1
+    if m <= 0:
+        return cp[:0]
+    keys = cp[:m].copy()
+    for j in range(1, n):
+        keys <<= np.uint64(_CP_BITS)
+        keys |= cp[j:j + m]
+    return keys
 
 
 class NgramLidModel:
@@ -38,33 +90,71 @@ class NgramLidModel:
 
     def __init__(self, n: int, priors: dict, loglik: dict, vocab: set,
                  alpha_denom: dict):
+        _check_n(n)
         self.n = n
         self.priors = priors        # lang -> log prior
         self.loglik = loglik        # (lang, gram) -> log prob
         self.vocab = vocab
         self.alpha_denom = alpha_denom  # lang -> log(unseen-gram prob)
+        self._arrays = None
 
-    def grams(self, text: str):
-        t = f" {text.lower()} "
-        return (t[i:i + self.n] for i in range(max(len(t) - self.n + 1, 1)))
+    def __getstate__(self):
+        # the scoring arrays are rebuilt per worker, never shipped
+        return {**self.__dict__, "_arrays": None}
+
+    def _tables(self):
+        """(langs, gram keys, loglik matrix, priors), built on first use:
+        sorted languages; sorted packed keys of the vocabulary grams with
+        a sentinel above every real key; a (language x vocabulary)
+        matrix, ``loglik`` where the pair was seen and the language's
+        ``alpha_denom`` elsewhere; the priors in language order."""
+        if self._arrays is None:
+            langs = sorted(self.priors)
+            # train keeps n-character grams only; another length could
+            # alias a packed key
+            grams = [g for g in self.vocab if len(g) == self.n]
+            keys = np.array([_pack(g) for g in grams], dtype=np.uint64)
+            order = np.argsort(keys)
+            grams = [grams[i] for i in order]
+            ll = np.array([[self.loglik.get((lang, g), self.alpha_denom[lang])
+                            for g in grams] for lang in langs],
+                          dtype=np.float64)
+            keys = np.append(keys[order], np.uint64(2 ** 64 - 1))
+            priors = np.array([self.priors[lang] for lang in langs],
+                              dtype=np.float64)
+            self._arrays = (langs, keys, ll, priors)
+        return self._arrays
+
+    def scores(self, text: str) -> np.ndarray:
+        """Log score per language, in sorted-language order."""
+        _, keys, ll, priors = self._tables()
+        grams = _gram_keys(f" {text.lower()} ", self.n)
+        pos = np.searchsorted(keys, grams)
+        idx = pos[keys[pos] == grams]
+        # cumsum adds strictly left to right: prior, then each gram in
+        # text order, as a per-row loop would
+        terms = np.concatenate((priors[:, None], ll[:, idx]), axis=1)
+        return np.cumsum(terms, axis=1)[:, -1]
+
+    def predict_batch(self, texts, min_len: int = 0) -> list:
+        """Label per text: the highest score, ties to the lower language
+        name (argmax keeps the first max over sorted languages); "ukn" for
+        None or a text of at most *min_len* characters."""
+        langs = self._tables()[0]
+        return ["ukn" if t is None or len(t) <= min_len
+                else langs[int(np.argmax(self.scores(t)))] for t in texts]
 
     def predict(self, text: str, min_len: int = 0) -> str:
-        if text is None or len(text) <= min_len:
-            return "ukn"
-        scores = dict(self.priors)
-        for g in self.grams(text):
-            if g in self.vocab:
-                for lang in scores:
-                    scores[lang] += self.loglik.get(
-                        (lang, g), self.alpha_denom[lang])
-        # deterministic argmax (score desc, lang asc)
-        return max(sorted(scores), key=lambda lg: scores[lg])
+        return self.predict_batch([text], min_len)[0]
 
 
 def train(docs: DataFrame, n: int = 3, text_col: str = "text",
           label_col: str = "lang", top_k: int = 4000) -> NgramLidModel:
     """Distributed training: explode char n-grams, count per (lang, gram),
-    keep the top_k grams by global frequency, Laplace-smooth."""
+    keep the top_k grams by global frequency, Laplace-smooth.  Two
+    actions: the vocabulary with its per-language counts, and the
+    label counts."""
+    _check_n(n)
     # the padded-lower text is BOUND to a projection column before the
     # lambda references it: HOFs are interpreted, so an inlined concat/
     # lower re-evaluates once per character position - O(len^2) on long
@@ -76,25 +166,28 @@ def train(docs: DataFrame, n: int = 3, text_col: str = "text",
     grams = F.transform(idx, lambda i: F.substring(tcol, i + 1, n))
     g = (padded.select("lang", F.explode(grams).alias("gram"))
          .where(F.length("gram") == n))
-    counts = g.groupBy("lang", "gram").count()
-    vocab_rows = (counts.groupBy("gram").agg(F.sum("count").alias("n"))
+    vocab_rows = (g.groupBy("lang", "gram").count()
+                  .groupBy("gram")
+                  .agg(F.sum("count").alias("n"),
+                       F.collect_list(F.struct("lang", "count"))
+                       .alias("by_lang"))
                   .orderBy(F.desc("n"), "gram").limit(top_k).collect())
+    prior_rows = docs.groupBy(label_col).count().collect()
+    # every label gets a total, 0 when none of its grams made the vocab
+    lang_totals = {r[label_col]: 0 for r in prior_rows}
+    for r in vocab_rows:
+        for lang, c in r.by_lang:
+            lang_totals[lang] += c
     vocab = {r.gram for r in vocab_rows}
-    cl = counts.where(F.col("gram").isin(list(vocab))).collect()
-    lang_totals: dict = {}
-    for r in cl:
-        lang_totals[r.lang] = lang_totals.get(r.lang, 0) + r["count"]
     v = len(vocab)
     loglik = {
-        (r.lang, r.gram):
-            math.log((r["count"] + 1) / (lang_totals[r.lang] + v + 1))
-        for r in cl
+        (lang, r.gram): math.log((c + 1) / (lang_totals[lang] + v + 1))
+        for r in vocab_rows for lang, c in r.by_lang
     }
     alpha_denom = {
         lang: math.log(1.0 / (tot + v + 1)) for lang, tot in lang_totals.items()
     }
-    n_docs = docs.count()
-    prior_rows = docs.groupBy(label_col).count().collect()
+    n_docs = sum(r["count"] for r in prior_rows)
     priors = {r[label_col]: math.log(r["count"] / n_docs) for r in prior_rows}
     return NgramLidModel(n, priors, loglik, vocab, alpha_denom)
 
@@ -103,7 +196,8 @@ class FastTextLidModel:
     """The real-cluster seam (reference: cc_corpus.py:147-148,176 loads
     lidNet once per worker; geoWAC.py:19-41 CLD2/3): wraps a fastText
     supervised LID model (e.g. lid.176.bin) behind the SAME
-    ``predict(text, min_len) -> lang`` interface as NgramLidModel, so
+    ``predict(text, min_len) -> lang`` and ``predict_batch(texts,
+    min_len) -> [lang]`` interface as NgramLidModel, so
     ``predict``/``agreement_filter`` and the Iterator-UDF serving path
     need zero changes to swap models.
 
@@ -133,6 +227,9 @@ class FastTextLidModel:
         lab = labels[0]
         return lab[len(self.label_prefix):] \
             if lab.startswith(self.label_prefix) else lab
+
+    def predict_batch(self, texts, min_len: int = 0) -> list:
+        return [self.predict(t, min_len) for t in texts]
 
     def __getstate__(self):
         return {"path": self.path, "label_prefix": self.label_prefix}
@@ -166,7 +263,7 @@ def make_predict_udf(spark, model, min_len: int = 0):
     def predict_iter(it: "Iterator[pandas.Series]"):
         m = bc.value                      # once per worker
         for series in it:
-            yield pandas.Series([m.predict(x, min_len) for x in series])
+            yield pandas.Series(m.predict_batch(series, min_len))
 
     from typing import Iterator as _It
     predict_iter.__annotations__ = {

@@ -13,13 +13,21 @@ The only shared component is the emoji codepoint table
 (ccspark.regexes.EMOJI_RANGES): the reference used the `emoji` package,
 which is unavailable in this environment, so its behavior is pinned by that
 frozen approximation on all sides (documented in ccspark/regexes.py).
+
+It also restates the char-n-gram Naive Bayes LID of ccspark.lid
+(``nb_train``, ``nb_scores``, ``nb_predict``) with ``collections.Counter``
+and a per-row scoring loop, so the Spark trainer and the numpy batch
+scorer are checked against a model and scores computed without them.
 """
 
 from __future__ import annotations
 
+import math
 import re
 import string
 import unicodedata
+from collections import Counter
+from types import SimpleNamespace
 
 from ccspark.regexes import EMOJI_RANGES
 
@@ -120,3 +128,69 @@ def process_page(text: str):
             n += 1
             out.append((n, cleaned))
     return out
+
+
+# ---------------------------------------------------------------------
+# char-n-gram multinomial Naive Bayes LID (ccspark.lid), restated with
+# Counter and per-row loops
+
+def nb_grams(text: str, n: int) -> list:
+    """Sliding n-grams of the space-padded lowercased text; a text
+    shorter than n yields its whole padded form (never a vocab gram)."""
+    t = f" {text.lower()} "
+    return [t[i:i + n] for i in range(max(len(t) - n + 1, 1))]
+
+
+def nb_train(docs, n: int, top_k: int) -> SimpleNamespace:
+    """Train on (text, label) pairs: per-(label, gram) counts, the top_k
+    grams by (total count desc, gram asc), Laplace smoothing over the
+    vocabulary, log priors from label frequencies.  A label none of whose
+    grams made the vocabulary has total 0."""
+    labels = Counter()
+    counts = Counter()
+    for text, lang in docs:
+        labels[lang] += 1
+        if text is None:
+            continue
+        for g in nb_grams(text, n):
+            if len(g) == n:
+                counts[(lang, g)] += 1
+    totals = Counter()
+    for (_, g), c in counts.items():
+        totals[g] += c
+    vocab = set(sorted(totals, key=lambda g: (-totals[g], g))[:top_k])
+    lang_tot = {lang: 0 for lang in labels}
+    for (lang, g), c in counts.items():
+        if g in vocab:
+            lang_tot[lang] += c
+    v = len(vocab)
+    n_docs = sum(labels.values())
+    return SimpleNamespace(
+        n=n,
+        priors={lang: math.log(c / n_docs) for lang, c in labels.items()},
+        loglik={(lang, g): math.log((c + 1) / (lang_tot[lang] + v + 1))
+                for (lang, g), c in counts.items() if g in vocab},
+        vocab=vocab,
+        alpha_denom={lang: math.log(1.0 / (tot + v + 1))
+                     for lang, tot in lang_tot.items()})
+
+
+def nb_scores(model, text: str) -> dict:
+    """label -> log prior plus, for each vocab gram of the text in order,
+    its log-likelihood (or the label's unseen-gram value)."""
+    scores = dict(model.priors)
+    for g in nb_grams(text, model.n):
+        if g in model.vocab:
+            for lang in scores:
+                scores[lang] += model.loglik.get((lang, g),
+                                                 model.alpha_denom[lang])
+    return scores
+
+
+def nb_predict(model, text: str, min_len: int = 0) -> str:
+    """Argmax label (score desc, label asc); "ukn" for None or a text of
+    at most min_len characters."""
+    if text is None or len(text) <= min_len:
+        return "ukn"
+    scores = nb_scores(model, text)
+    return max(sorted(scores), key=lambda lg: scores[lg])

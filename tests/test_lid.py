@@ -13,17 +13,25 @@ fourth - it hash-verifies the NB math against DuckDB):
     min_len gate drops short rows);
   * the fastText seam: a fake fasttext module shipped via addPyFile
     serves through the same broadcast + Iterator-UDF path with zero
-    pipeline changes.
+    pipeline changes;
+  * parity with the pure-Python reference in tests/oracle.py: the
+    trained model equals ``oracle.nb_train``'s dict for dict, and the
+    batch scorer's labels and score vectors equal the per-row loop's bit
+    for bit;
+  * training runs a bounded number of Spark jobs.
 """
 
 from __future__ import annotations
 
 import random
 
+import numpy as np
+import pytest
 from pyspark.sql import Row, functions as F
 
 from ccspark import lid
 from ccspark import queries as Q
+from tests import oracle
 
 WORDS = {
     "eng": ("the quick brown fox jumps over lazy dog with from this that "
@@ -125,8 +133,131 @@ def test_fasttext_seam_serves_through_udf(spark, tmp_path):
 
 
 def test_load_model_spec_errors():
-    import pytest
     with pytest.raises(ValueError, match="needs training docs"):
         lid.load_model("ngram")
     with pytest.raises(ValueError, match="unknown LID model"):
         lid.load_model("cld3")
+
+
+# CJK text with supplementary-plane ideographs (U+20000...) and emoji
+CJK = ("\u4e2d\u6587\u7f51\u9875\u7684\u8bed\u8a00\u8bc6\u522b"
+       "\u6d4b\u8bd5\U00020000\U00020001\U0002000b\U0001F600")
+
+
+def parity_corpus(seed: int):
+    """(training docs, texts to score): the word lists plus CJK text,
+    capitalised words, supplementary-plane characters, texts shorter than
+    n, "" and None.  'İ' (whose lower() is two characters) appears only
+    in scored texts, where Python's lower() is the only one applied."""
+    rng = random.Random(seed)
+    langs = dict(WORDS, zho=list(CJK))
+    docs = []
+    for lang, words in sorted(langs.items()):
+        sep = "" if lang == "zho" else " "
+        for _ in range(12):
+            ws = rng.choices(words, k=rng.randint(3, 25))
+            ws[0] = ws[0].capitalize()
+            docs.append((sep.join(ws), lang))
+    docs += [("", "eng"), (None, "deu"), ("a", "spa"), ("\U0001F600", "zho")]
+    texts = [t for t, _ in docs[::3]]
+    texts += ["İstanbul über alles", "İİİ", "", None, "x", "ab",
+              "\U00020000", "\U0001F600\U0001F600 la maison",
+              "Qqqq zzzz", "exactly9!"]
+    return docs, texts
+
+
+@pytest.mark.parametrize("n,top_k", [(2, 150), (3, 400)])
+def test_train_and_predict_match_oracle(spark, n, top_k):
+    docs, texts = parity_corpus(seed=40 + n)
+    model = lid.train(spark.createDataFrame(docs, "text string, lang string"),
+                      n=n, top_k=top_k)
+    ref = oracle.nb_train(docs, n=n, top_k=top_k)
+    assert len(ref.vocab) == top_k          # the cut is exercised
+    assert model.n == ref.n
+    assert model.priors == ref.priors
+    assert model.vocab == ref.vocab
+    assert model.loglik == ref.loglik
+    assert model.alpha_denom == ref.alpha_denom
+
+    langs = sorted(ref.priors)
+    for min_len in (0, 9):
+        assert model.predict_batch(texts, min_len) == \
+            [oracle.nb_predict(ref, t, min_len) for t in texts]
+    for t in texts:
+        if t is not None:
+            want = oracle.nb_scores(ref, t)
+            assert model.scores(t).tobytes() == \
+                np.array([want[lg] for lg in langs]).tobytes(), t
+    # the served path gives the same labels
+    rows = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                                 "doc_id int, text string")
+    got = {r.doc_id: r.lang_pred
+           for r in lid.predict(spark, rows, model, min_len=9).collect()}
+    assert got == {i: oracle.nb_predict(ref, t, 9)
+                   for i, t in enumerate(texts)}
+
+
+def test_tie_goes_to_lower_label(spark):
+    docs = [("zebra zone", "zzz"), ("mellow moon", "mmm")]
+    model = lid.train(spark.createDataFrame(docs, "text string, lang string"),
+                      n=3, top_k=100)
+    assert model.priors["zzz"] == model.priors["mmm"]
+    text = "quick fix"                      # no vocabulary gram
+    assert not set(oracle.nb_grams(text, 3)) & model.vocab
+    assert model.predict(text) == "mmm"
+    assert oracle.nb_predict(oracle.nb_train(docs, 3, 100), text) == "mmm"
+
+
+def test_label_without_vocab_gram_gets_a_label(spark):
+    """A label none of whose grams made the top_k vocabulary still gets
+    an unseen-gram value, so scoring a text with a vocabulary gram
+    returns a label instead of raising KeyError."""
+    docs = [("aaaa aaaa", "big")] * 6 + [("qrst", "small")]
+    model = lid.train(spark.createDataFrame(docs, "text string, lang string"),
+                      n=2, top_k=3)
+    assert not any(lang == "small" for lang, _ in model.loglik)
+    assert "aa" in model.vocab
+    assert model.predict("aaaa") == "big"
+    got = lid.predict(spark, spark.createDataFrame([("aaaa qrst",)], "text string"),
+                      model).collect()
+    assert got[0].lang_pred in {"big", "small"}
+
+
+def test_scoring_arrays_are_not_pickled(spark):
+    import pickle
+    docs = synth_docs(spark, per_lang=5)
+    model = lid.train(docs, n=3, top_k=200)
+    model.predict("the quick brown fox")
+    assert model._arrays is not None
+    copy = pickle.loads(pickle.dumps(model))
+    assert copy._arrays is None
+    assert copy.predict("der die das") == model.predict("der die das")
+
+
+def test_ngram_order_limit(spark):
+    docs = synth_docs(spark, per_lang=2)
+    with pytest.raises(ValueError, match="1..3"):
+        lid.train(docs, n=4)
+    with pytest.raises(ValueError, match="1..3"):
+        lid.NgramLidModel(0, {}, {}, set(), {})
+
+
+def test_train_job_count(spark):
+    """Training is one vocabulary aggregation and one label count; with
+    AQE each query stage is its own job.  A second pass over the gram
+    counts, or a separate docs.count(), pushes it past 5 (9 jobs on this
+    sample, which mirrors crawl_build's LID training set)."""
+    from perfbench import gen
+    rng = random.Random(1)
+    docs = spark.createDataFrame(
+        [(gen.text_line(rng, lang), lang) for lang in gen.LANGS
+         for _ in range(gen.LID_LINES_PER_LANG)], "text string, lang string")
+    sc = spark.sparkContext
+    group = "test_train_job_count"
+    sc.setJobGroup(group, "lid.train")
+    try:
+        lid.train(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
