@@ -854,9 +854,16 @@ def domain_quality(pages: DataFrame, text_col: str = "text",
     dict the page-level gate runs with, so domains are judged by the
     same rule as their pages (the facade threads its gopher_thresholds
     through; judging the rollup with defaults while gating pages with
-    overrides silently diverges - ADVICE r3)."""
+    overrides silently diverges - ADVICE r3).
+
+    Pages are judged by the whole-batch Arrow gate (``engine="udf"``),
+    the verdict the fused page stage runs; the signal columns feed only
+    the two means, which Catalyst prunes when a caller reads just
+    ``domain_keep``.  A page with a null *lang_col* that fails the gate
+    counts against its domain (the Catalyst verdict is NULL there, which
+    ``avg`` would skip)."""
     g = gopher_quality(pages, text_col, lang_col=lang_col,
-                       thresholds=thresholds)
+                       thresholds=thresholds, engine="udf")
 
     # cross-engine-deterministic mean: the per-page signals are 4-decimal
     # doubles, so avg() would sum floats in engine-dependent order and can

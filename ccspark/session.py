@@ -1,10 +1,13 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults match the sandbox (local[32], single JVM); the same
-configs are what we'd submit to a real cluster via spark-submit --py-files,
-minus master/memory which come from the cluster manager.  AQE is on so
-skewed shuffles (giant domains) are split at runtime; shuffle partitions
-sized to cores rather than the 200 default.
+Local-mode defaults come from the host: ``local[<usable cores>]`` and a
+driver heap of half the physical RAM, capped at 24g (one JVM holds every
+executor thread).  ``SPARK_GRAFT_CPUS`` and ``CCSPARK_DRIVER_MEM``
+override them.  The same configs are what we'd submit to a real cluster
+via spark-submit --py-files, minus master/memory which come from the
+cluster manager.  AQE is on so skewed shuffles (giant domains) are split
+at runtime; shuffle partitions sized to cores rather than the 200
+default.
 """
 
 from __future__ import annotations
@@ -14,10 +17,32 @@ import os
 from pyspark.sql import SparkSession
 
 
+DRIVER_MEM_CAP_GB = 24
+
+
+def host_defaults(env, usable_cores: int,
+                  phys_bytes: int) -> tuple[int, str]:
+    """(cores, driver memory) for ``get_spark``: the env overrides in
+    *env* when set, else *usable_cores* and half of *phys_bytes* in
+    whole GB (at least 1g, at most DRIVER_MEM_CAP_GB)."""
+    cores = int(env.get("SPARK_GRAFT_CPUS") or usable_cores)
+    half_gb = min(max(phys_bytes // 2 // 2**30, 1), DRIVER_MEM_CAP_GB)
+    return cores, env.get("CCSPARK_DRIVER_MEM") or f"{half_gb}g"
+
+
+def _usable_cores() -> int:
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def get_spark(app: str = "ccspark",
               cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    default_cores, driver_mem = host_defaults(
+        os.environ, _usable_cores(),
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
+    cores = cores or default_cores
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
         SparkSession.builder
@@ -27,7 +52,7 @@ def get_spark(app: str = "ccspark",
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("CCSPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")

@@ -419,3 +419,45 @@ def test_c4_arrow_gate_matches_duckdb_expr(duck):
     ).fetchall()
     exp = [bool(v) if v is not None else False for _, v in exp_rows]
     assert got == exp, list(zip(docs, got, exp))
+
+
+def _expr_rollup(df, lang_col, min_keep_frac):
+    """Domain rollup over the Catalyst expression gate."""
+    from pyspark.sql import functions as F
+    g = quality.gopher_quality(df, lang_col=lang_col, signals=False,
+                               engine="expr")
+    return {r.domain: (r.n_pages, r.keep_frac, r.keep_frac >= min_keep_frac)
+            for r in g.groupBy("domain").agg(
+                F.count("*").alias("n_pages"),
+                F.round(F.avg(F.col("gopher_keep").cast("double")), 4)
+                .alias("keep_frac")).collect()}
+
+
+def test_domain_rollup_matches_expression_gate_rollup(spark):
+    """domain_quality judges pages with the Arrow gate; its n_pages,
+    keep_frac and domain_keep equal a rollup over the expression gate on
+    the fixture's geo pages, language-blind and language-aware."""
+    from ccspark import pipeline
+    from ccspark.fixtures_sql import pages_spark
+    geo = pipeline.with_geo(pages_spark(spark, "/root/testdata/sf0.001"))
+    for lang_col in (None, "lang"):
+        got = {r.domain: (r.n_pages, r.keep_frac, r.domain_keep)
+               for r in quality.domain_quality(
+                   geo, lang_col=lang_col, min_keep_frac=0.9).collect()}
+        assert got == _expr_rollup(geo, lang_col, 0.9), lang_col
+        assert {v[2] for v in got.values()} == {True, False}, lang_col
+
+
+def test_domain_rollup_counts_failing_null_lang_page(spark):
+    """A null-lang page that fails the gate: the expression verdict is
+    NULL, which avg() skips; the Arrow verdict is False, which counts
+    against the domain."""
+    df = spark.createDataFrame(
+        [Row(domain="a.de", lang=None, text=DOCS["clean"]),
+         Row(domain="a.de", lang=None, text=DOCS["long_words"])],
+        "domain string, lang string, text string")
+    got = {r.domain: (r.n_pages, r.keep_frac, r.domain_keep)
+           for r in quality.domain_quality(df, lang_col="lang",
+                                           min_keep_frac=0.6).collect()}
+    assert got == {"a.de": (2, 0.5, False)}
+    assert _expr_rollup(df, "lang", 0.6) == {"a.de": (2, 1.0, True)}
