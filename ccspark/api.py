@@ -86,16 +86,32 @@ class CCSparkCorpus:
         CJK page and demands English stopwords of German ones.  Pass
         ``lang_aware=False`` for the static single-language gate.
 
-        ``domain_min_keep`` turns on the WHOLESALE domain gate: the
-        per-domain Gopher keep fraction is rolled up ONCE over the
-        geo-gated pages (quality.domain_quality - spam farms fail
-        wholesale, so judging the domain once is the cheapest pruning at
-        crawl scale) and only pages of domains at/above the threshold
-        continue.  The surviving-domain set is small, so it rejoins as a
-        BROADCAST left-semi join (plan-asserted in tests) - zero extra
-        shuffle.  The gated composite is hash-verified end-to-end
-        against its own one-statement DuckDB twin (driver query
-        ``training_corpus_domgate``).
+        ``domain_min_keep`` turns on the WHOLESALE domain gate: a domain
+        continues only when the fraction of its geo-gated pages passing
+        the Gopher gate (rounded to 4 places,
+        quality.domain_keep_frac) is at least ``domain_min_keep``; a
+        NULL domain never continues.  Spam farms fail wholesale, so
+        judging the domain once is the cheapest pruning at crawl scale.
+        The rollup runs with the caller's ``gopher_thresholds`` and
+        language mode, and also when ``gopher=False``.  Each page is
+        judged ONCE: the fused page stage runs the Gopher gate on every
+        page, C4 on the Gopher survivors, and the split and kernel on
+        pages passing the enabled gates; it emits the kept lines plus one
+        row per page with its Gopher verdict (see
+        pipeline.explode_clean_fused), and the keep fraction is a window
+        over ``partitionBy(domain)`` on that output.  Output equals the
+        ungated composite run over the pages of the domains
+        quality.domain_quality keeps (asserted in tests).
+
+        Trade-off: the window adds one exchange, keyed by domain, over
+        the kept lines plus one small row per page; a domain's rows sort
+        in one task (the window buffer can spill), so one giant domain
+        is one long task.  It replaces a second scan, a second geo pass
+        and a second Python gate pass over every page.  The kernel also
+        runs on gate-passing pages of domains that fail the rollup; their
+        lines are dropped after the window.  The CCSPARK_KERNEL=py staged
+        path still rolls up with quality.domain_quality and rejoins the
+        surviving domains as a broadcast left-semi join.
 
         Scrub runs AFTER dedup on purpose: the dedup hash keys pre-scrub
         text (placeholders like <EMAIL> would otherwise collide distinct
@@ -105,15 +121,18 @@ class CCSparkCorpus:
 
         ``with_metrics=True`` returns ``(lines, metrics_fn)`` instead of
         the bare frame: lineage counters riding the SAME plan at zero
-        extra kernel passes (r3 verdict item 5 - the composite used to
-        discard its verdict counts).  ``metrics_fn()`` - call it AFTER an
-        action on ``lines`` - returns {docs_seen (geo-gated pages
-        entering the composite, exact via ``observe``), lines_gated
-        (kernel-candidate lines; ``observe``d on the py path, accumulator
-        on the fused path - see explode_clean_fused), lines_kept
-        (pre-dedup kept lines, exact), docs_kept_approx (HLL distinct
-        urls among kept lines)}.  The per-(region, country, lang) cube
-        remains checkpoint/cell_metrics territory."""
+        extra kernel passes, all ``observe``d, so exact.  ``metrics_fn()``
+        - call it AFTER an action on ``lines`` - returns {docs_seen
+        (geo-gated pages entering the composite, after the domain gate),
+        lines_gated (kernel-candidate lines of those pages that pass the
+        document gates), lines_kept (pre-dedup kept lines),
+        docs_kept_approx (HLL distinct urls among kept lines)}.  On the
+        fused path the first two are read from the stage's page rows.
+        The per-(region, country, lang) cube remains
+        checkpoint/cell_metrics territory."""
+        import os
+
+        from pyspark.sql import Observation
         lang_col = "lang" if (lang_aware and "lang" in pages.columns) \
             else None
         # geo gate FIRST: host/ccTLD/MNC is a cheap projection + two
@@ -122,39 +141,25 @@ class CCSparkCorpus:
         # unchanged; the oracle twin has always been geo-first)
         df = pipeline.with_geo(pages, self.url_filter,
                                self.countries_to_skip)
-        if domain_min_keep is not None:
-            # the rollup judges domains with the SAME thresholds the page
-            # gate runs with (ADVICE r3: defaults here while pages use
-            # overrides would silently diverge from the DuckDB twin,
-            # which applies the caller's thresholds to both)
-            rollup = quality.domain_quality(df, lang_col=lang_col,
-                                            min_keep_frac=domain_min_keep,
-                                            thresholds=gopher_thresholds)
-            good = rollup.where("domain_keep").select("domain")
-            df = df.join(F.broadcast(good), "domain", "left_semi")
-        obs_in = obs_lines = obs_gated = acc = None
-        if with_metrics:
-            from pyspark.sql import Observation
-            obs_in, obs_lines = Observation(), Observation()
-            df = df.observe(obs_in, F.count(F.lit(1)).alias("docs_seen"))
-        import os
-        fused = os.environ.get("CCSPARK_KERNEL", "arrow") == "arrow"
-        if fused and (gopher or c4):
-            # Gopher + C4 page gates FUSED into the mapInArrow line
-            # stage (both are pure page predicates, so they commute with
-            # each other and with the staged order): page text crosses
-            # the JVM->Python boundary ONCE for gates + split + kernel,
-            # and the composite has ZERO separate full-text Catalyst
-            # pass left.  Reuses the parity-proven arrowgate batch gates
-            # - identical keep set to the staged stages.
-            if with_metrics:
-                acc = self.spark.sparkContext.accumulator(0)
-            lines = self._fused_gated_lines(df, lang_col,
-                                            gopher_thresholds,
-                                            gopher=gopher, c4=c4,
-                                            gated_counter=acc,
-                                            lines_obs=obs_lines)
+        if os.environ.get("CCSPARK_KERNEL", "arrow") == "arrow":
+            obs = Observation() if with_metrics else None
+            observations = [obs]
+            lines = self._fused_gated_lines(
+                df, lang_col, gopher_thresholds, gopher=gopher, c4=c4,
+                domain_min_keep=domain_min_keep, obs=obs)
         else:
+            if domain_min_keep is not None:
+                # the rollup judges domains with the SAME thresholds the
+                # page gate runs with
+                rollup = quality.domain_quality(
+                    df, lang_col=lang_col, min_keep_frac=domain_min_keep,
+                    thresholds=gopher_thresholds)
+                good = rollup.where("domain_keep").select("domain")
+                df = df.join(F.broadcast(good), "domain", "left_semi")
+            observations = [Observation() for _ in range(3)]
+            if with_metrics:
+                df = df.observe(observations[0],
+                                F.count(F.lit(1)).alias("docs_seen"))
             if c4:
                 df = quality.c4_page_filter(df)
             if gopher:
@@ -164,10 +169,7 @@ class CCSparkCorpus:
                                              lang_col=lang_col)
                       .where("gopher_keep").drop("gopher_keep"))
             if with_metrics:
-                from pyspark.sql import Observation
-                obs_gated = Observation()
-                lines = self._staged_observed_lines(df, obs_gated,
-                                                    obs_lines)
+                lines = self._staged_observed_lines(df, *observations[1:])
             else:
                 lines = self._lines_from_geo(df)
         if scrub_pii:
@@ -176,10 +178,9 @@ class CCSparkCorpus:
             return lines
 
         def metrics_fn() -> dict:
-            out = dict(obs_in.get)
-            out.update(obs_lines.get)
-            out["lines_gated"] = (acc.value if acc is not None
-                                  else obs_gated.get["lines_gated"])
+            out = {}
+            for obs in observations:
+                out.update(obs.get)
             return out
         return lines, metrics_fn
 
@@ -212,12 +213,16 @@ class CCSparkCorpus:
                            thresholds: dict | None,
                            gopher: bool = True,
                            c4: bool = True,
-                           gated_counter=None,
-                           lines_obs=None) -> DataFrame:
-        """Line pipeline with the Gopher/C4 document gates fused into the
-        single mapInArrow stage (see pipeline.explode_clean_fused)."""
+                           domain_min_keep: float | None = None,
+                           obs=None) -> DataFrame:
+        """Line pipeline with the Gopher/C4 document gates, and the
+        domain rollup's page verdicts, fused into the single mapInArrow
+        stage (see pipeline.explode_clean_fused); *obs* observes the
+        lineage counters on its page and line rows."""
+        from pyspark.sql.window import Window
         cols = ["domain", "tld", "country", "region", "url"]
         in_cols = cols + ([lang_col] if lang_col else [])
+        rollup = domain_min_keep is not None
 
         def page_gate(chunk):
             import numpy as np
@@ -227,38 +232,69 @@ class CCSparkCorpus:
             text = chunk.column(chunk.schema.get_field_index("text"))
             lang = (chunk.column(chunk.schema.get_field_index(lang_col))
                     if lang_col else None)
-            # C4 first (one replace chain + split); the pricier Gopher
-            # signals run only on C4 survivors - batch short-circuiting
-            mask = arrowgate.c4_keep_batch(text) if c4 else None
-            if gopher:
-                if mask is None:
-                    g = (arrowgate.gopher_keep_batch(
-                            text, lang, thresholds=thresholds) if lang_col
-                         else arrowgate.gopher_keep_batch(
-                            text, thresholds=thresholds))
-                    return g
-                idx = np.flatnonzero(mask)
+
+            def gopher_keep(t, lg):
+                return arrowgate.gopher_keep_batch(t, lg,
+                                                   thresholds=thresholds)
+
+            def c4_keep(t, lg):
+                return arrowgate.c4_keep_batch(t)
+
+            def where(keep, gate):
+                # keep & gate, the gate run only on the pages keep holds
+                # for (batch short-circuiting); keep None = every page
+                if keep is None:
+                    return gate(text, lang)
+                idx = np.flatnonzero(keep)
+                out = np.zeros(len(keep), dtype=bool)
                 if idx.size:
                     ia = pa.array(idx)
-                    sub_t = text.take(ia)
-                    g = (arrowgate.gopher_keep_batch(
-                            sub_t, lang.take(ia), thresholds=thresholds)
-                         if lang_col
-                         else arrowgate.gopher_keep_batch(
-                            sub_t, thresholds=thresholds))
-                    out = np.zeros(len(mask), dtype=bool)
-                    out[idx] = g
-                    mask = out
-            return mask
+                    out[idx] = gate(text.take(ia),
+                                    lang.take(ia) if lang_col else None)
+                return out
 
+            keep = verdict = None
+            if rollup:
+                # the rollup needs every page's Gopher verdict; C4 then
+                # runs only on the Gopher survivors
+                verdict = keep = where(None, gopher_keep)
+                if not gopher:
+                    keep = None
+                if c4:
+                    keep = where(keep, c4_keep)
+            else:
+                # C4 first (one replace chain + split); the pricier
+                # Gopher signals run only on C4 survivors
+                if c4:
+                    keep = where(None, c4_keep)
+                if gopher:
+                    keep = where(keep, gopher_keep)
+            if keep is None:
+                keep = np.ones(chunk.num_rows, dtype=bool)
+            return keep, verdict
+
+        page_rows = rollup or obs is not None
         df = pipeline.explode_clean_fused(
             geo_pages.select(*in_cols, "text"), page_gate=page_gate,
-            gated_counter=gated_counter)
-        if lines_obs is not None:
+            page_rows=page_rows)
+        if rollup:
+            frac = quality.domain_keep_frac(
+                "gopher_keep", Window.partitionBy("domain"))
+            df = (df.withColumn("_keep_frac", frac)
+                  .where(F.col("domain").isNotNull()
+                         & (F.col("_keep_frac") >= domain_min_keep)))
+        if obs is not None:
+            page = F.col("line_id").isNull()
             df = df.observe(
-                lines_obs,
-                F.count(F.lit(1)).alias("lines_kept"),
-                F.approx_count_distinct("url").alias("docs_kept_approx"))
+                obs,
+                F.count(F.when(page, 1)).alias("docs_seen"),
+                F.coalesce(F.sum("lines_gated"), F.lit(0))
+                .alias("lines_gated"),
+                F.count("line_id").alias("lines_kept"),
+                F.approx_count_distinct(F.when(~page, F.col("url")))
+                .alias("docs_kept_approx"))
+        if page_rows:
+            df = df.where(F.col("line_id").isNotNull())
         df = pipeline._ordinal_and_hash(df)
         return pipeline.dedup_keep_first(
             df.select(*cols, "line_id", "text", "hash"))

@@ -97,7 +97,7 @@ def clean_and_filter(lines: DataFrame) -> DataFrame:
 def explode_clean_fused(geo_pages: DataFrame,
                         pages_per_chunk: int = 4096,
                         page_gate=None,
-                        gated_counter=None) -> DataFrame:
+                        page_rows: bool = False) -> DataFrame:
     """F5 + F6-F13 FUSED into one ``mapInArrow`` stage (arrow-kernel
     production path): the line split (RE2 ``split_pattern_regex``, same
     dialect-neutral pattern as the JVM split), the raw-length gate, and
@@ -135,26 +135,32 @@ def explode_clean_fused(geo_pages: DataFrame,
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` pages; each chunk
     materializes its lines ~3 times during the kernel passes).
 
-    *page_gate*: optional page-level predicate fused into the SAME
-    stage - a callable (RecordBatch chunk) -> numpy bool mask over its
-    pages; gated-out pages never reach the split/kernel, and the page
+    *page_gate*: optional page-level gate fused into the SAME stage - a
+    callable (RecordBatch chunk) -> (keep, verdict): ``keep`` is a numpy
+    bool mask over the chunk's pages, ``verdict`` a per-page bool array
+    or None.  Gated-out pages never reach the split/kernel, and the page
     text crosses the JVM->Python boundary once for gate AND kernel (the
-    facade passes the Gopher document gate here - see
+    facade passes the Gopher/C4 document gates here - see
     api.build_training_corpus).
 
-    *gated_counter*: optional Spark Accumulator incremented by the
-    number of kernel-candidate lines (split lines passing the raw
-    >15-char gate, the same population corpus_lines_observed counts) -
-    the ONLY line-level metric the kept-lines-only fused stage cannot
-    surface through ``observe()``.  Exact when no task retries occur
-    (always true in local mode); on a cluster with speculative
-    execution prefer the observed kept/docs metrics or the checkpoint
-    metrics table, which derive from committed data."""
+    *page_rows*: also emit ONE page row per input page, after that
+    chunk's line rows.  Output gains (gopher_keep boolean, lines_gated
+    int): a page row carries the passthrough columns, the page_gate's
+    ``verdict`` as ``gopher_keep`` (NULL when it returned None) and its
+    kernel-candidate line count as ``lines_gated`` (split lines passing
+    the raw >15-char gate, the population corpus_lines_observed counts;
+    0 for a gated-out page), with NULL pos, line_id and text.  Line rows
+    carry NULL in both new columns.  Page rows let the plan above judge
+    pages (the facade's domain rollup) and count pages and candidate
+    lines with ``observe()`` from the same single pass; filter
+    ``line_id IS NOT NULL`` to get the kept lines."""
     keep_cols = [c for c in geo_pages.columns if c != "text"]
     passthrough = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in geo_pages.schema.fields if f.name != "text")
     schema = f"{passthrough}, pos int, line_id int, text string"
+    if page_rows:
+        schema += ", gopher_keep boolean, lines_gated int"
 
     # the in-stage ordinal's contract is ONE input row per url (the pages
     # table's natural key); with duplicate urls the ordinal restarts per
@@ -181,16 +187,27 @@ def explode_clean_fused(geo_pages: DataFrame,
         from ccspark import arrowkernel
         from ccspark.regexes import RE_LINE_SPLIT as pat
 
+        names = keep_cols + ["pos", "line_id", "text"]
+        if page_rows:
+            names += ["gopher_keep", "lines_gated"]
+
+        def passthrough(chunk, take=None):
+            cols = [chunk.column(chunk.schema.get_field_index(c))
+                    for c in keep_cols]
+            return cols if take is None else [c.take(take) for c in cols]
+
         for batch in batches:
             for start in range(0, batch.num_rows, pages_per_chunk):
                 chunk = batch.slice(start, pages_per_chunk)
+                n_pages = chunk.num_rows
+                verdict = None
+                gidx = np.arange(n_pages)
                 if page_gate is not None:
-                    gidx = np.flatnonzero(page_gate(chunk))
-                    if gidx.size == 0:
-                        continue
-                    if gidx.size < chunk.num_rows:
-                        chunk = chunk.take(pa.array(gidx))
-                text = chunk.column(chunk.schema.get_field_index("text"))
+                    page_keep, verdict = page_gate(chunk)
+                    gidx = np.flatnonzero(page_keep)
+                gated = (chunk if gidx.size == n_pages
+                         else chunk.take(pa.array(gidx)))
+                text = gated.column(gated.schema.get_field_index("text"))
                 ll = pc.split_pattern_regex(text, pat)
                 flat = pc.list_flatten(ll)
                 parents = pc.list_parent_indices(ll).to_numpy(
@@ -200,29 +217,44 @@ def explode_clean_fused(geo_pages: DataFrame,
                 starts = np.zeros(len(lens) + 1, dtype=np.int64)
                 np.cumsum(lens, out=starts[1:])
                 pos = np.arange(len(flat), dtype=np.int64) - starts[parents]
-                if gated_counter is not None:
-                    gl = pc.utf8_length(flat).to_numpy(zero_copy_only=False)
-                    gated_counter.add(int((gl > 15).sum()))
-                cleaned, keep, _ = arrowkernel.verdict_batch(flat)
-                idx = np.flatnonzero(keep)
-                # kept-line ordinal per page: idx is page-major and
-                # pos-ascending (flatten order), so rank = offset within
-                # each parent run
-                kp = parents[idx]
-                run_start = np.zeros(len(kp), dtype=np.int64)
-                if len(kp):
-                    new = np.flatnonzero(np.diff(kp)) + 1
-                    run_start[new] = new
-                    np.maximum.accumulate(run_start, out=run_start)
-                line_id = np.arange(len(kp), dtype=np.int64) - run_start + 1
-                take = pa.array(kp)
-                cols = [chunk.column(chunk.schema.get_field_index(c))
-                        .take(take) for c in keep_cols]
-                yield pa.RecordBatch.from_arrays(
-                    cols + [pa.array(pos[idx].astype(np.int32)),
-                            pa.array(line_id.astype(np.int32)),
-                            pa.array(cleaned[idx], type=pa.string())],
-                    names=keep_cols + ["pos", "line_id", "text"])
+                if gidx.size:
+                    cleaned, keep, _ = arrowkernel.verdict_batch(flat)
+                    idx = np.flatnonzero(keep)
+                    # kept-line ordinal per page: idx is page-major and
+                    # pos-ascending (flatten order), so rank = offset
+                    # within each parent run
+                    kp = parents[idx]
+                    run_start = np.zeros(len(kp), dtype=np.int64)
+                    if len(kp):
+                        new = np.flatnonzero(np.diff(kp)) + 1
+                        run_start[new] = new
+                        np.maximum.accumulate(run_start, out=run_start)
+                    line_id = (np.arange(len(kp), dtype=np.int64)
+                               - run_start + 1)
+                    extra = ([pa.nulls(len(kp), pa.bool_()),
+                              pa.nulls(len(kp), pa.int32())]
+                             if page_rows else [])
+                    yield pa.RecordBatch.from_arrays(
+                        passthrough(gated, pa.array(kp))
+                        + [pa.array(pos[idx].astype(np.int32)),
+                           pa.array(line_id.astype(np.int32)),
+                           pa.array(cleaned[idx], type=pa.string())]
+                        + extra, names=names)
+                if page_rows:
+                    cand = pc.utf8_length(flat).to_numpy(
+                        zero_copy_only=False) > 15
+                    n_gated = np.zeros(n_pages, dtype=np.int32)
+                    n_gated[gidx] = np.bincount(
+                        parents, weights=cand, minlength=gidx.size)
+                    yield pa.RecordBatch.from_arrays(
+                        passthrough(chunk)
+                        + [pa.nulls(n_pages, pa.int32()),
+                           pa.nulls(n_pages, pa.int32()),
+                           pa.nulls(n_pages, pa.string()),
+                           pa.array(verdict, type=pa.bool_())
+                           if verdict is not None
+                           else pa.nulls(n_pages, pa.bool_()),
+                           pa.array(n_gated)], names=names)
 
     return geo_pages.mapInArrow(fused, schema)
 

@@ -838,6 +838,17 @@ def gopher_repetition(docs: DataFrame, text_col: str = "text",
                       "dup5_frac", keep.alias("rep_keep"))
 
 
+def domain_keep_frac(verdict_col: str = "gopher_keep", window=None):
+    """A domain's page keep fraction: ``round(avg(double(verdict)), 4)``
+    - the ONE rendering of the rollup rule, used as domain_quality's
+    aggregate and, with *window* (``partitionBy(domain)``), as the
+    facade's window.  ``avg`` skips NULL verdicts, so rows that are not
+    pages (the fused stage's line rows) do not count.  The verdicts are
+    0/1 doubles, so the sum is exact in any order."""
+    avg = F.avg(F.col(verdict_col).cast("double"))
+    return F.round(avg if window is None else avg.over(window), 4)
+
+
 def domain_quality(pages: DataFrame, text_col: str = "text",
                    domain_col: str = "domain",
                    min_keep_frac: float = 0.5,
@@ -848,13 +859,16 @@ def domain_quality(pages: DataFrame, text_col: str = "text",
     keep fraction is below *min_keep_frac* (spam farms fail wholesale, so
     judging the domain once beats re-judging each of its million pages).
     One scan + one aggregation; join the survivors back as a broadcast or
-    bucketed gate (api.build_training_corpus(domain_min_keep=...) does
-    exactly that).  *lang_col*: judge each page with the language-aware
-    gate.  *thresholds*: Gopher threshold overrides - MUST be the same
-    dict the page-level gate runs with, so domains are judged by the
-    same rule as their pages (the facade threads its gopher_thresholds
-    through; judging the rollup with defaults while gating pages with
-    overrides silently diverges - ADVICE r3).
+    bucketed gate where the pages must be gated before another pass.
+    api.build_training_corpus(domain_min_keep=...) does not call this:
+    it takes each page's verdict from its fused page stage and applies
+    the same keep-fraction expression (domain_keep_frac) as a window,
+    so its pages are judged once.  *lang_col*: judge each page with the
+    language-aware gate.  *thresholds*: Gopher threshold overrides -
+    MUST be the same dict the page-level gate runs with, so domains are
+    judged by the same rule as their pages (judging the rollup with
+    defaults while gating pages with overrides silently diverges -
+    ADVICE r3).
 
     Pages are judged by the whole-batch Arrow gate (``engine="udf"``),
     the verdict the fused page stage runs; the signal columns feed only
@@ -878,8 +892,7 @@ def domain_quality(pages: DataFrame, text_col: str = "text",
 
     return (g.groupBy(domain_col)
             .agg(F.count("*").alias("n_pages"),
-                 F.round(F.avg(F.col("gopher_keep").cast("double")), 4)
-                 .alias("keep_frac"),
+                 domain_keep_frac("gopher_keep").alias("keep_frac"),
                  exact_mean("mean_word_len").alias("avg_word_len"),
                  exact_mean("dup_line_frac").alias("avg_dup_line_frac"))
             .withColumn("domain_keep",

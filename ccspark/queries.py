@@ -628,8 +628,9 @@ def q_training_corpus_domgate(d: str) -> str:
     Gopher keep fraction is rolled up once over the geo-gated pages and
     pages of below-threshold domains are dropped before the doc gates.
     Judging a spam farm once instead of per-page is the cheapest pruning
-    at crawl scale; the survivor-domain set is tiny, so the Spark side
-    rejoins it broadcast-left-semi (plan-asserted in tests)."""
+    at crawl scale; the Spark side takes each page's verdict from its
+    one fused page stage and gates by a window over the domain
+    (plan-asserted in tests)."""
     from ccspark.quality import c4_page_keep_expr, gopher_keep_ml_expr
     keep = gopher_keep_ml_expr(d, "text", "lang", TRAINING_GOPHER_TH)
     rollup = f"""dq AS (

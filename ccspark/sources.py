@@ -58,6 +58,10 @@ def parse_wet_bytes(blob: bytes, segment: str = ""):
             length = int(headers.get("content-length", "0"))
         except ValueError:
             length = 0
+        # a negative length would move pos backwards (the same record
+        # forever); treat it like an unparseable one.  With length >= 0,
+        # pos ends past hdr_end >= pos, so the loop always advances.
+        length = max(length, 0)
         body_start = hdr_end + 4
         body = blob[body_start:body_start + length]
         yield (

@@ -251,7 +251,7 @@ def test_composite_arrow_py_paths_identical(spark):
     old = os.environ.get("CCSPARK_KERNEL")
     try:
         for kwargs in ({}, {"domain_min_keep": 0.7},
-                       {"lang_aware": False}):
+                       {"domain_min_keep": 0.9}, {"lang_aware": False}):
             os.environ["CCSPARK_KERNEL"] = "py"
             a = sorted(map(tuple,
                            cc.build_training_corpus(pages, **kwargs)
@@ -266,6 +266,102 @@ def test_composite_arrow_py_paths_identical(spark):
             os.environ.pop("CCSPARK_KERNEL", None)
         else:
             os.environ["CCSPARK_KERNEL"] = old
+
+
+_SENT = ("the quick brown fox jumps over and over that lazy dog to be "
+         "of service and have fun with every word in this line")
+# >= 5 sentences: passes Gopher and C4
+_PASS = "\n".join(_SENT + " variant {i} line %d." % j for j in range(6))
+# 4 sentences: passes Gopher, fails C4
+_C4FAIL = "\n".join(_SENT + " variant {i} line %d" % j for j in range(4))
+# mean word length > 10: fails Gopher
+_FAIL = "\n".join(" ".join("supercalifragilistic" for _ in range(30))
+                  for _ in range(2)) + " the and"
+DOMAIN_MIN_KEEP = 0.9
+
+
+def _planted():
+    rows = []
+
+    def add(domain, kind, n, lang="en"):
+        for _ in range(n):
+            i = len(rows)
+            rows.append((f"https://www.{domain}.de/p{i}",
+                         kind.format(i=i), lang))
+    add("atmin", _PASS, 9)                  # 9/10 = exactly the minimum
+    add("atmin", _FAIL, 1)
+    add("nulllang", _PASS, 2)               # 2/3: the null-lang fail counts
+    add("nulllang", _FAIL, 1, lang=None)
+    add("conly", _C4FAIL, 3)                # kept, but emits no lines
+    add("lifted", _PASS, 1)                 # 10/11 only because the
+    add("lifted", _C4FAIL, 9)               # C4 fails count as Gopher
+    add("lifted", _FAIL, 1)                 # passes
+    add("nodomain", _PASS, 1)               # domain forced to NULL
+    return rows
+
+
+def test_domain_gate_equals_ungated_over_kept_domains(spark, monkeypatch):
+    """build_training_corpus(domain_min_keep=...) equals the ungated
+    composite run over only the pages of the domains
+    quality.domain_quality keeps - language-aware, language-blind and
+    with a Gopher threshold override - on the sf0.001 pages plus planted
+    edge domains: one exactly at the minimum, one whose failing page has
+    a NULL lang (it counts against the domain), one whose Gopher-passing
+    pages all fail C4 (kept, no lines), one lifted over the minimum only
+    by such pages, and a page with a NULL domain (dropped)."""
+    from ccspark import quality
+    from ccspark.api import CCSparkCorpus
+    from ccspark.fixtures_sql import pages_spark
+
+    # with_geo never yields a NULL domain for a URL today, so the gate's
+    # NULL rule is pinned by forcing one for the planted page
+    with_geo = pipeline.with_geo
+    nodomain = "https://www.nodomain.de/p"
+
+    def geo_with_null_domain(*args, **kwargs):
+        df = with_geo(*args, **kwargs)
+        return df.withColumn("domain", F.when(
+            F.col("url").startswith(nodomain), F.lit(None).cast("string"))
+            .otherwise(F.col("domain")))
+    monkeypatch.setattr(pipeline, "with_geo", geo_with_null_domain)
+
+    planted = spark.createDataFrame(_planted(),
+                                    "url string, text string, lang string")
+    pages = (pages_spark(spark, "/root/testdata/sf0.001")
+             .select("url", "text", "lang").unionByName(planted))
+    cc = CCSparkCorpus(spark)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    ungated_urls = {r.url for r in
+                    cc.build_training_corpus(pages).select("url").collect()}
+    assert any(u.startswith(nodomain) for u in ungated_urls)
+    for cfg in ({}, {"lang_aware": False},
+                {"gopher_thresholds": {"min_alpha_word_frac": 0.9}}):
+        lang_col = "lang" if cfg.get("lang_aware", True) else None
+        geo = pipeline.with_geo(pages)
+        rollup = quality.domain_quality(
+            geo, lang_col=lang_col, min_keep_frac=DOMAIN_MIN_KEEP,
+            thresholds=cfg.get("gopher_thresholds"))
+        kept = rollup.where("domain_keep").select("domain")
+        kept_urls = geo.join(kept, "domain", "left_semi").select("url")
+        want = rows(cc.build_training_corpus(
+            pages.join(kept_urls, "url", "left_semi"), **cfg))
+        got_rows = cc.build_training_corpus(
+            pages, domain_min_keep=DOMAIN_MIN_KEEP, **cfg).collect()
+        got = sorted(map(tuple, got_rows))
+        assert got == want and got, cfg
+
+        judged = {r.domain: r.domain_keep for r in rollup.collect()}
+        assert {d: judged[d] for d in
+                ("atmin", "nulllang", "conly", "lifted")} == {
+            "atmin": True, "nulllang": False, "conly": True,
+            "lifted": True}, cfg
+        assert not all(judged.values()), cfg       # the gate bites
+        out = {r.domain for r in got_rows}
+        assert {"atmin", "lifted"} <= out, cfg
+        assert not out & {"nulllang", "conly", None}, cfg
 
 
 def test_verdict_fused_matches_staged(spark):

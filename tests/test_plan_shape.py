@@ -139,25 +139,31 @@ def test_finalize_dedup_is_aggregate(spark):
     assert out.count() == 5
 
 
-def test_domain_gate_joins_broadcast_semi(spark):
+def test_domain_gate_judges_pages_once(spark):
     """The wholesale domain gate (build_training_corpus(domain_min_keep=
-    ...)) must rejoin the surviving-domain set as a BROADCAST left-semi
-    join - the survivor set is tiny, so a shuffle there would be a plan
-    bug at crawl scale."""
+    ...)) judges each page once: the gated plan scans the pages parquet
+    once, runs ONE MapInArrow stage (gates + rollup verdicts + kernel),
+    no ArrowEvalPython gate UDF and no second with_geo Generate chain.
+    The rollup's window adds exactly one exchange to the ungated
+    composite's."""
     from ccspark.api import CCSparkCorpus
     pages = pages_spark(spark, "/root/testdata/sf0.001", materialize=True)
-    out = CCSparkCorpus(spark).build_training_corpus(
-        pages, domain_min_keep=0.7, scrub_pii=False)
-    plan = plan_of(out)
-    semi = [ln for ln in plan.splitlines()
-            if "LeftSemi" in ln and "domain" in ln]
-    assert semi, plan
-    assert all("BroadcastHashJoin" in ln for ln in semi), semi
-    # the gate itself must not shuffle the big side: the only exchange it
-    # may add is the rollup's own groupBy(domain) aggregation (a narrow
-    # (domain, signals) frame), on top of the composite's two
-    base = plan_of(CCSparkCorpus(spark).build_training_corpus(
-        pages, scrub_pii=False))
+    cc = CCSparkCorpus(spark)
+    plan = plan_of(cc.build_training_corpus(
+        pages, domain_min_keep=0.7, scrub_pii=False))
+    base = plan_of(cc.build_training_corpus(pages, scrub_pii=False))
+    lines = plan.splitlines()
+    scans = [ln for ln in lines
+             if "FileScan parquet" in ln and "ccspark_pages" in ln]
+    assert len(scans) == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    n_gen = lambda p: len([ln for ln in p.splitlines()
+                           if re.search(r"\bGenerate\b", ln)])
+    assert n_gen(plan) == n_gen(base) == 2, (n_gen(plan), n_gen(base))
+    # the gate itself must not shuffle more than once: the only exchange
+    # it may add is the window's partitionBy(domain), on top of the
+    # composite's own
     n_ex = lambda p: len([ln for ln in p.splitlines()
                           if re.search(r"\bExchange hashpartitioning", ln)])
     assert n_ex(plan) == n_ex(base) + 1, (n_ex(plan), n_ex(base))
