@@ -116,8 +116,7 @@ class CCSparkCorpus:
         Scrub runs AFTER dedup on purpose: the dedup hash keys pre-scrub
         text (placeholders like <EMAIL> would otherwise collide distinct
         lines, and the kernel's strip_tags would eat the placeholders if
-        scrubbed before cleaning).  The whole composite is hash-verified
-        against a DuckDB SQL twin (driver query ``training_corpus``).
+        scrubbed before cleaning).
 
         ``with_metrics=True`` returns ``(lines, metrics_fn)`` instead of
         the bare frame: lineage counters riding the SAME plan at zero
@@ -402,8 +401,7 @@ class CCSparkCorpus:
         screening would leave the crawl's largest non-Latin languages
         unprotected (pass ``char_n=None`` for word-only).  Corpus-
         shuffle-free: the benchmark's gram hashes broadcast, only
-        matching rows aggregate.  Driver-graded as query
-        ``decontamination`` (word + char tag-union)."""
+        matching rows aggregate."""
         from ccspark import decontam
         fn = decontam.remove_contaminated if remove else \
             decontam.decontaminate
@@ -419,8 +417,7 @@ class CCSparkCorpus:
         connected components -> keep cluster-min canonical + singletons.
         ``pre_exact`` defaults ON here - raw crawls are copy-heavy and
         pair emission is quadratic in copy multiplicity; survivors are
-        provably identical.  Driver-graded as query
-        ``near_dup_removal`` (est+ver tag-union)."""
+        provably identical."""
         from ccspark import dedup
         return dedup.dedup_near(docs, threshold=threshold,
                                 hash_family="xxhash64",
@@ -445,7 +442,7 @@ class CCSparkCorpus:
         ``minhash_signature_table``/``banded_signatures`` carry them as
         column metadata and a mismatch raises (dedup.incremental_near_dups
         validates).  Dedup WITHIN the crawl is ``dedup_near``'s job, run
-        after.  Driver-graded as query ``incremental_dedup``."""
+        after."""
         from pyspark.sql import functions as F
 
         from ccspark import dedup
@@ -466,8 +463,7 @@ class CCSparkCorpus:
                        vec_col: str = "embedding") -> DataFrame:
         """Embedding-space near-dup removal
         (ccspark.similarity.dedup_near_embeddings): sign-LSH bucketed
-        cosine pairs -> connected components -> cluster-min survivors.
-        Driver-graded inside query ``sign_lsh_suite``."""
+        cosine pairs -> connected components -> cluster-min survivors."""
         from ccspark import similarity
         return similarity.dedup_near_embeddings(
             embeddings, threshold=threshold, pre_exact=pre_exact,
@@ -480,8 +476,7 @@ class CCSparkCorpus:
         """Token-budget sampling (ccspark.sampling): deterministic
         hash-ordered greedy prefix per *group_col* up to *budget* tokens
         (data mixing).  Returns the sampled rows, or every row with
-        (weight, cum, kept) when ``flags_only``.  Driver-graded inside
-        query ``token_suite``."""
+        (weight, cum, kept) when ``flags_only``."""
         from ccspark import sampling
         out = sampling.sample_by_token_budget(docs, budget,
                                               group_col=group_col,
@@ -500,8 +495,7 @@ class CCSparkCorpus:
         group's derived quota with the deterministic hash-ordered greedy
         prefix.  Groups absent from *proportions* are excluded.  Returns
         the sampled rows, or every row with (weight, cum, budget, kept)
-        when ``flags_only``.  Driver-graded inside query
-        ``token_suite`` ('mixture' branch)."""
+        when ``flags_only``."""
         from ccspark import sampling
         out = sampling.sample_by_mixture(docs, total_budget, proportions,
                                          group_col=group_col,

@@ -6,8 +6,7 @@ per-lang stopword sets, CJK char-counted words, token-shape gates
 bypassed for space-free scripts).  Same approach as
 ``ccspark.arrowkernel``: every per-doc signal becomes a batch
 pyarrow.compute kernel, so the per-row Python loop - the measured
-throughput ceiling of the composite pipeline (BENCH.md doc-gate table) -
-disappears.
+throughput ceiling of the composite pipeline - disappears.
 
 Signal-by-signal equivalences with the per-row loop (quality.keep_one):
 
@@ -25,7 +24,7 @@ Signal-by-signal equivalences with the per-row loop (quality.keep_one):
   re-match without consuming a real newline, so each line counts at
   most once - exactly the per-line startswith/endswith semantics.
 * alpha tokens  = count of ``' [^ \\p{L}]*\\p{L}'`` over ``' ' + text``
-  (same re-anchoring dodge: the SQL twin's ``(?:^| )`` alternation
+  (same re-anchoring dodge: the Spark SQL ``(?:^| )`` alternation
   overcounts under resume-re-anchoring, the space-sentinel form is
   count-equal to the token-level Python loop).
 * duplicate-line signals = split into a ListArray, ``dictionary_encode``
@@ -35,7 +34,7 @@ Signal-by-signal equivalences with the per-row loop (quality.keep_one):
 * round(x, 4)   = vectorized HALF_UP with a guard band: rows whose
   scaled value lies within 1e-9 of the .5 rounding boundary are re-done
   through the scalar ``quality._round4`` (Decimal-on-repr), so boundary
-  docs agree with the Spark/DuckDB twins bit-for-bit.
+  docs agree with the Spark expression gate bit-for-bit.
 
 Parity with the per-row UDFs is asserted on the boundary fixtures and
 under hypothesis in tests/test_gopher.py.
@@ -261,7 +260,7 @@ def c4_keep_batch(texts, min_sentences: int = 5) -> np.ndarray:
     non-empty sentences (same mark-and-split sentence splitter, same
     patterns - newline/Latin-terminal+space/ideographic-terminal
     boundaries) and none of C4_BAD_SUBSTRINGS.  Verdict-parity with the
-    Spark/DuckDB expression renderings is asserted in tests."""
+    Spark expression rendering is asserted in tests."""
     from ccspark.quality import C4_BAD_SUBSTRINGS, SENT_MARK
     if not isinstance(texts, (pa.Array, pa.ChunkedArray)):
         texts = pa.array(texts, type=pa.string())

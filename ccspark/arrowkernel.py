@@ -5,17 +5,16 @@ cc_corpus.py:254-293), but evaluated as WHOLE-BATCH pyarrow.compute
 kernels instead of a per-row Python loop.  pyarrow's string-regex kernels
 (``replace_substring_regex`` / ``match_substring_regex``) are backed by
 RE2 in C++ - precisely the "different regex engine" the round-2
-kernel-throughput experiment (BENCH.md) named as the only thing worth
-revisiting the measured pandas-UDF optimum for.
+kernel-throughput experiment named as the only thing worth revisiting
+the measured pandas-UDF optimum for.
 
 Why this is byte-identical by construction:
 
-* Every pattern in ``ccspark.regexes`` is already dialect-neutral across
+* Every pattern in ``ccspark.regexes`` is dialect-neutral across
   Python re / Java regex / RE2 (explicit codepoint classes, no shorthand
-  classes, no backreferences-in-pattern, no lookaround) BECAUSE the
-  DuckDB oracle evaluates the same strings under RE2 and must agree
-  bitwise - so the RE2-compatibility audit was done in round 1 and is
-  re-proven by every oracle run.
+  classes, no backreferences-in-pattern, no lookaround), and the kernel
+  renderings are checked against the Python-re oracle (tests/oracle.py)
+  row for row.
 * The per-row guards in ``pykernel.clean_line`` ("skip the url pass when
   'http' absent") are exact - a pattern cannot match without its trigger
   substring - so a guarded pass and an unconditional pass produce the
@@ -194,10 +193,11 @@ def verdict_batch(raw):
 def make_scrub_udf():
     """The PII scrub chain (scrub.SCRUB_STEPS, the ONE ordered
     definition) as a whole-batch Arrow/RE2 UDF: raw line -> scrubbed
-    line.  Byte-identical to the Catalyst regexp_replace chain by the
-    same argument as the kernel above - every pattern is already
-    RE2-evaluated bitwise-identically by the DuckDB oracle, and the
-    replacements carry no backreferences."""
+    line.  The replacements carry no backreferences, and RE2's ``\\b``
+    is the ASCII word boundary that scrub.java_pattern spells out for
+    Java.  Byte identity with the Catalyst chain (scrub.scrub_col) and
+    with a Python ``re.ASCII`` restatement (tests/oracle.py) is fuzzed
+    in tests/test_cross_engine_fuzz.py::test_fuzz_pii_chain."""
     import pandas
     from pyspark.sql.functions import pandas_udf
 

@@ -18,10 +18,8 @@ rows sorted by url inside each group.  Reference quirks handled:
   * the reference labels the domain-change sample with the NEW row's
     date/domain (:60 - a bug); we label samples with their OWN domain.
 
-The SQL-oracle-checkable fixed-boundary variant (cumulative word count
-bucketed every N words) is queries.q_domain_word_chunks; this module is
-the exact greedy semantics, pytest-verified against a pandas
-transcription.
+This module is the exact greedy semantics, pytest-verified against a
+pandas transcription.
 """
 
 from __future__ import annotations
@@ -30,8 +28,7 @@ from pyspark.sql import DataFrame
 
 CHUNK_SCHEMA = ("domain string, chunk_id int, n_words int, text string")
 
-# reference default (deduplication.py:19 chunksize=5000); the sf0.01
-# oracle query uses queries.CHUNK_WORDS_SF through the same template
+# reference default (deduplication.py:19 chunksize=5000)
 DEFAULT_CHUNK_WORDS = 5000
 # a 100-TB crawl always contains a mega-domain; one domain = one task in
 # the sequential accumulator, so cap its rows by default (the reference's

@@ -22,11 +22,11 @@ Scale design (the whole point at 100 TB):
   * the per-doc flag is rejoined with a second broadcast (the hit set is
     small by construction), so the full pipeline is corpus-shuffle-free.
 
-Normalization (both engines, one template): lowercase, every non-
-alphanumeric run (unicode classes ``\\p{L}\\p{N}``) collapsed to a single
-space, empty tokens dropped.  Space-free scripts (CJK) normalize to one
-long token and therefore produce no word 13-grams - the #2/#3 crawl
-languages would get ZERO overlap protection from the word operator.
+Normalization: lowercase, every non-alphanumeric run (unicode classes
+``\\p{L}\\p{N}``) collapsed to a single space, empty tokens dropped.
+Space-free scripts (CJK) normalize to one long token and therefore
+produce no word 13-grams - the #2/#3 crawl languages would get ZERO
+overlap protection from the word operator.
 ``decontaminate_chars`` closes that gap: character n-grams (default 20
 chars ~ the word operator's 13-word span at CJK information density)
 over the same normalization with the spaces removed entirely, riding
@@ -34,44 +34,42 @@ the identical broadcast skeleton.  ``decontaminate(char_n=...)`` runs
 both and flags a doc contaminated on EITHER overlap; the training-
 corpus path should enable it whenever the geo gate admits CJK pages.
 
-Cross-engine verification: the driver query ``decontamination`` runs
-THIS module (xxhash64 hash path) against a DuckDB twin that matches the
-normalized gram STRINGS directly - a green value-hash proves the hashed
-fast path implements exactly the string-overlap semantics.
+Verification: tests/test_decontam.py checks both hashed paths against a
+pure-Python string-overlap restatement (tests/oracle.py) on the
+documents fixture, and the fuzz pins the normalizer and gram arrays.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ccspark.sqlgen import DUCK, SPARK, arr_filter, arr_len, rrep, split_arr
+from ccspark.sqlgen import lit, rrep
 
 DEFAULT_N = 13
 DEFAULT_CHAR_N = 20
 
 # one normalized token never contains a space, so a true n-gram has
-# exactly n-1 spaces: the greatest()-guard + space-count filter is the
-# proven dual-dialect way to drop the short-doc degenerate slices
-# (q_word_ngrams pattern) without a CASE over mismatched array types
+# exactly n-1 spaces: the greatest()-guard + space-count filter drops
+# the short-doc degenerate slice without a CASE over mismatched array
+# types
 _WORDS_SENTINEL = "__ccspark_words__"
 
 
-def norm_words(d: str, e: str) -> str:
-    """Array of normalized words of text expr *e* (dialect *d*).
+def norm_words(e: str) -> str:
+    """Array of normalized words of text expr *e*.
 
     Combining marks (``\\p{M}``) are stripped after lowercasing: this
-    pins the one measured Java-vs-ICU ``lower()`` divergence (Turkish
-    'İ' lowers to ``i`` + U+0307 in the JVM but plain ``i`` in DuckDB -
-    cross-engine fuzz, r4) and keeps marks from SPLITTING a word (they
-    are not ``\\p{L}``).  Precomposed accents survive (``é`` stays
-    ``é``); NFC-vs-NFD unification is out of scope (no shared SQL
-    normalizer) and documented as a boundary."""
-    demarked = rrep(d, f"lower({e})", r"\p{M}", "")
-    cleaned = rrep(d, demarked, r"[^\p{L}\p{N}]+", " ")
-    return arr_filter(d, split_arr(d, cleaned, " "), "x != ''")
+    pins the Turkish 'İ', which the JVM lowers to ``i`` + U+0307, to a
+    plain ``i``, and keeps marks from SPLITTING a word (they are not
+    ``\\p{L}``).  Precomposed accents survive (``é`` stays ``é``);
+    NFC-vs-NFD unification is out of scope and documented as a
+    boundary."""
+    demarked = rrep(f"lower({e})", r"\p{M}", "")
+    cleaned = rrep(demarked, r"[^\p{L}\p{N}]+", " ")
+    return f"filter(split({cleaned}, {lit(' ')}), x -> x != '')"
 
 
-def gram_array(d: str, words: str, n: int = DEFAULT_N) -> str:
+def gram_array(words: str, n: int = DEFAULT_N) -> str:
     """Array of word ``n``-grams (space-joined) over a words-array expr.
 
     *words* MUST be a bound COLUMN (projection/CTE), never an inline
@@ -82,39 +80,34 @@ def gram_array(d: str, words: str, n: int = DEFAULT_N) -> str:
     Docs shorter than *n* words yield an empty set: the guarded sequence
     emits one degenerate short slice which the space-count filter drops.
     """
-    if d == SPARK:
-        raw = (f"transform(sequence(1, greatest({arr_len(d, words)} - "
-               f"{n - 1}, 1)), i -> concat_ws(' ', slice({words}, i, {n})))")
-    else:
-        raw = (f"list_transform(generate_series(1, greatest("
-               f"{arr_len(d, words)} - {n - 1}, 1)), "
-               f"i -> array_to_string({words}[i:i+{n - 1}], ' '))")
-    return arr_filter(
-        d, raw, f"length(x) - length(replace(x, ' ', '')) = {n - 1}")
+    raw = (f"transform(sequence(1, greatest(size({words}) - "
+           f"{n - 1}, 1)), i -> concat_ws(' ', slice({words}, i, {n})))")
+    return (f"filter({raw}, x -> "
+            f"length(x) - length(replace(x, ' ', '')) = {n - 1})")
 
 
 def _gram_hashes_expr(n: int) -> str:
     """Spark SQL: array<bigint> of xxhash64'd n-grams of a words column."""
-    grams = gram_array(SPARK, _WORDS_SENTINEL, n)
+    grams = gram_array(_WORDS_SENTINEL, n)
     return f"transform({grams}, g -> xxhash64(g))"
 
 
 _CHARS_SENTINEL = "__ccspark_chars__"
 
 
-def char_stream(d: str, e: str) -> str:
-    """Normalized CHARACTER stream of text expr *e* (dialect *d*): the
-    word normalization with the separators removed entirely - lowercase,
+def char_stream(e: str) -> str:
+    """Normalized CHARACTER stream of text expr *e*: the word
+    normalization with the separators removed entirely - lowercase,
     combining marks stripped, every non-alphanumeric run deleted.  For a
     space-free script this is just the cleaned text; for a spaced one it
     is the words concatenated (char grams then span word boundaries,
     which is what makes a 20-char gram comparable to a multi-word
     span)."""
-    demarked = rrep(d, f"lower({e})", r"\p{M}", "")
-    return rrep(d, demarked, r"[^\p{L}\p{N}]+", "")
+    demarked = rrep(f"lower({e})", r"\p{M}", "")
+    return rrep(demarked, r"[^\p{L}\p{N}]+", "")
 
 
-def char_gram_array(d: str, s: str, n: int = DEFAULT_CHAR_N) -> str:
+def char_gram_array(s: str, n: int = DEFAULT_CHAR_N) -> str:
     """Array of character ``n``-grams over a normalized char-stream expr.
 
     *s* MUST be a bound COLUMN (projection/CTE) - it is referenced in
@@ -122,27 +115,20 @@ def char_gram_array(d: str, s: str, n: int = DEFAULT_CHAR_N) -> str:
     binding rule); ``length(s)`` sits in the ARGUMENT position and is
     evaluated once.  Streams shorter than *n* chars yield an empty set:
     the guarded sequence emits one short slice, dropped by the exact-
-    length filter.  ``substring``/``length`` count CODE POINTS
-    identically in Spark and DuckDB, so the rendering is dual-dialect
-    by construction - including supplementary-plane letters: CJK
-    Extension B+ ideographs (U+20000+) ARE ``\\p{L}``, survive the
-    normalization, and occupy exactly one code-point position in both
-    engines (r6 ADVICE fix: the earlier comment wrongly claimed astral
-    chars never reach the stream; agreement is now asserted in
+    length filter.  ``substring``/``length`` count CODE POINTS, so
+    supplementary-plane letters - CJK Extension B+ ideographs (U+20000+)
+    ARE ``\\p{L}`` and survive the normalization - occupy exactly one
+    position (asserted in
     tests/test_decontam.py::test_char_grams_supplementary_plane)."""
-    if d == SPARK:
-        raw = (f"transform(sequence(1, greatest(length({s}) - {n - 1}, 1)),"
-               f" i -> substring({s}, i, {n}))")
-    else:
-        raw = (f"list_transform(generate_series(1, greatest(length({s}) - "
-               f"{n - 1}, 1)), i -> substring({s}, i, {n}))")
-    return arr_filter(d, raw, f"length(x) = {n}")
+    raw = (f"transform(sequence(1, greatest(length({s}) - {n - 1}, 1)),"
+           f" i -> substring({s}, i, {n}))")
+    return f"filter({raw}, x -> length(x) = {n})"
 
 
 def _char_gram_hashes_expr(n: int) -> str:
     """Spark SQL: array<bigint> of xxhash64'd char n-grams of a bound
     char-stream column."""
-    grams = char_gram_array(SPARK, _CHARS_SENTINEL, n)
+    grams = char_gram_array(_CHARS_SENTINEL, n)
     return f"transform({grams}, g -> xxhash64(g))"
 
 
@@ -154,7 +140,7 @@ def bench_gram_hashes(benchmark: DataFrame, *, n: int = DEFAULT_N,
     callers broadcast it; the distinct is a shuffle of the benchmark side
     only, never of the corpus.
     """
-    words = F.expr(norm_words(SPARK, text_col))
+    words = F.expr(norm_words(text_col))
     return (benchmark
             .select(words.alias(_WORDS_SENTINEL))
             .select(F.explode(F.expr(_gram_hashes_expr(n))).alias("gh"))
@@ -166,7 +152,7 @@ def bench_char_gram_hashes(benchmark: DataFrame, *,
                            text_col: str = "text") -> DataFrame:
     """Distinct xxhash64 char n-gram hashes of the benchmark texts -
     the char-side twin of ``bench_gram_hashes`` (one column ``gh``)."""
-    stream = F.expr(char_stream(SPARK, text_col))
+    stream = F.expr(char_stream(text_col))
     return (benchmark
             .select(stream.alias(_CHARS_SENTINEL))
             .select(F.explode(
@@ -200,7 +186,7 @@ def _char_hit_counts(docs: DataFrame, benchmark: DataFrame, n: int,
     shared by ``decontaminate_chars`` and ``decontaminate``)."""
     bench = bench_char_gram_hashes(benchmark, n=n,
                                    text_col=bench_text_col)
-    stream = F.expr(char_stream(SPARK, text_col))
+    stream = F.expr(char_stream(text_col))
     exploded = (docs
                 .select(F.col(id_col), stream.alias(_CHARS_SENTINEL))
                 .select(id_col,
@@ -230,7 +216,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, *,
     of the corpus projection, still shuffle-free).
     """
     bench = bench_gram_hashes(benchmark, n=n, text_col=bench_text_col)
-    words = F.expr(norm_words(SPARK, text_col))
+    words = F.expr(norm_words(text_col))
     exploded = (docs
                 .select(F.col(id_col),
                         words.alias(_WORDS_SENTINEL))

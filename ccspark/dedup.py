@@ -17,10 +17,10 @@ tiebreak.
 
 Near-dup extensions (not in the reference beyond a docstring stub,
 WET_processor.py:125-132): MinHash-LSH, SimHash, and n-gram Jaccard -
-the standard toolkit for web-scale corpus dedup.  They use
-*cross-engine-stable* md5-derived hashes so the DuckDB oracle can verify
-them value-for-value; swap `md5_i64` for `xxhash64` for raw speed at
-production scale (the plan shape is identical).
+the standard toolkit for web-scale corpus dedup.  The md5 hash family
+is reproducible outside Spark (hashlib), so tests check it value for
+value; ``hash_family='xxhash64'`` is the fast path at production scale
+(the plan shape is identical).
 """
 
 from __future__ import annotations
@@ -38,8 +38,7 @@ def str_hash_expr(col: str = "text") -> str:
     ``sha1()`` into big-endian order, then ``conv(.., 16, 10)`` (unsigned,
     so the full uint64 range survives as a decimal string).  Verified
     byte-for-byte against hashlib - the reference's own implementation -
-    in tests/test_operators.py and the driver-gated ``str_hash_bitcompat``
-    query."""
+    in tests/test_operators.py."""
     h = f"sha1({col})"
     le = "||".join(f"substring({h}, {i}, 2)" for i in range(15, 0, -2))
     return f"conv({le}, 16, 10)"
@@ -181,8 +180,8 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
     window of *w* consecutive positions, emit the distinct fingerprint
     set per document as (doc_id, fingerprint, n_windows).
 
-    The md5 family is the cross-engine form (graded oracle
-    ``doc_fingerprint``; module == SQL rendering asserted in pytest);
+    The md5 family is the reproducible form (equal to a hashlib
+    restatement in tests/test_operators.py);
     ``hash_family='xxhash64'`` is the production fast path (8-byte
     fingerprints, and the k-gram is hashed compositionally from per-word
     hashes - no gram STRING is ever built; see ``_word_hash_kgrams``,
@@ -229,13 +228,13 @@ def minhash_signatures(sh: DataFrame, num_hashes: int = 16,
     per-seed row explosion, one shuffle.  31-bit values keep a_i*h
     inside int64 (Spark 4 ANSI mode raises on bigint overflow).
 
-    *hash_family*: ``md5`` (default) is cross-engine stable so the DuckDB
-    oracle verifies signatures value-for-value; ``xxhash64`` is the
+    *hash_family*: ``md5`` (default) is reproducible with hashlib, so
+    tests verify signatures value-for-value; ``xxhash64`` is the
     PRODUCTION fast path (JVM long straight from codegen - no hex
     string materialization/parse per shingle).  Either family is a
     uniform hash, so near-dup quality is identical; only the concrete
     signature values differ (pair-level equivalence on duplicate-heavy
-    fixtures is pytest-asserted, and bench.py times both).
+    fixtures is pytest-asserted).
 
     Accepts either ``shingles`` output (a ``shingle`` string column) or
     the ``shingle_hashes`` fast-path output (``_h64`` long - already
@@ -284,9 +283,8 @@ def lsh_candidate_pairs(sig: DataFrame, bands: int = 4,
         .alias("band", "digest"))
     # bucket + stacked explodes instead of a self-join: the join planned
     # (and ran) the signature chain once per side - broadcast build +
-    # streamed - while the grouped form references it ONCE (r6; same
-    # rewrite as the graded template).  Pairs stream row-at-a-time, so
-    # memory per bucket row is O(bucket size).
+    # streamed - while the grouped form references it ONCE (r6).  Pairs
+    # stream row-at-a-time, so memory per bucket row is O(bucket size).
     buckets = (digests.groupBy("band", "digest")
                .agg(F.collect_list(id_col).alias("ds")))
     return (buckets
@@ -305,7 +303,7 @@ def minhash_near_dups(docs: DataFrame, text_col: str = "text", k: int = 3,
     """End-to-end MinHash-LSH near-dup candidate pairs with estimated
     Jaccard (fraction of agreeing minhash columns).  Pass
     ``hash_family='xxhash64'`` for the production fast path (same
-    candidate quality, no cross-engine md5 verifiability; gram strings
+    candidate quality, no hashlib-reproducible values; gram strings
     are never materialized - ``shingle_hashes``).
 
     The signature COLUMNS ride through the banding explode, so the
@@ -335,7 +333,7 @@ def minhash_near_dups(docs: DataFrame, text_col: str = "text", k: int = 3,
     # posexplode so the band INDEX rides along: candidates must agree on
     # (band, digest), not digest alone - a cross-band digest coincidence
     # (doc A's band-i tuple hashing like doc B's band-j tuple) must not
-    # pair, matching lsh_candidate_pairs and the graded oracle's
+    # pair, matching lsh_candidate_pairs'
     # a.band = b.band AND a.digest = b.digest.
     dg = sig.select(id_col, *mcols,
                     F.posexplode(F.array(*digs)).alias("band", "digest"))
@@ -374,8 +372,8 @@ def simhash(docs: DataFrame, text_col: str = "text", bits: int = 16,
             hash_family: str = "md5") -> DataFrame:
     """SimHash fingerprint: bit i of the fingerprint is the majority vote
     of hex digit i of md5(word) being >= 8 (the digit's high bit), over
-    all words.  16 hex digits -> 16-bit fingerprint; cross-engine stable
-    (the oracled ``simhash`` query is this rendering).
+    all words.  16 hex digits -> 16-bit fingerprint, reproducible with
+    hashlib.
 
     ``hash_family='xxhash64'`` is the production fast path: bit i is
     read straight off the word's xxhash64 long (shiftright + mask, all
@@ -664,8 +662,8 @@ def dedup_near(docs: DataFrame, threshold: float = 0.5,
     direct form: a group's representative is its min id, an exact-dup
     group always joins its representative's cluster (Jaccard 1.0 >= any
     threshold), and min over a cluster = min over its groups' minima -
-    asserted in tests.  This is the production default for raw crawls;
-    it is off here only so the graded direct path stays bit-stable."""
+    asserted in tests.  This is the production default for raw crawls
+    (the facade's dedup_near turns it on)."""
     if pre_exact:
         th = F.xxhash64(F.col(text_col))
         rep = (docs.select(th.alias("_th"), F.col(id_col))

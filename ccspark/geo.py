@@ -41,11 +41,7 @@ broadcast join.
 
 from __future__ import annotations
 
-import os
-
-from ccspark.sqlgen import arr_get, arr_len, in_list, rext, rrep, split_arr
-
-DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+from ccspark.sqlgen import lit, rrep
 
 
 # --------------------------------------------------------------------------
@@ -137,56 +133,64 @@ def registrable_domain(host: str) -> str:
 
 
 # --------------------------------------------------------------------------
-# Expression builders (dialect-parameterized; see ccspark.sqlgen)
+# Spark SQL expression builders
 
-def host_expr(d: str, url: str) -> str:
+def host_expr(url: str) -> str:
     """Lowercased hostname: strip scheme, take authority, strip
     userinfo + port."""
-    no_scheme = rrep(d, url, "^[A-Za-z][A-Za-z0-9+.-]*://", "")
-    auth = rext(d, no_scheme, "^([^/?#]*)", 1)
-    no_user = rrep(d, auth, "^[^@]*@", "")
-    no_port = rrep(d, no_user, ":[0-9]*\\z", "")
+    no_scheme = rrep(url, "^[A-Za-z][A-Za-z0-9+.-]*://", "")
+    auth = f"regexp_extract({no_scheme}, {lit('^([^/?#]*)')}, 1)"
+    no_user = rrep(auth, "^[^@]*@", "")
+    no_port = rrep(no_user, ":[0-9]*\\z", "")
     return f"lower({no_port})"
 
 
-def tld_expr(d: str, host: str) -> str:
+def tld_expr(host: str) -> str:
     """Last dot-label of the host (the reference's suffix.split('.')[-1])."""
-    return rext(d, host, "([^.]+)\\z", 1)
+    last_label = lit("([^.]+)\\z")
+    return f"regexp_extract({host}, {last_label}, 1)"
 
 
-def domain_expr(d: str, host: str) -> str:
+def domain_expr(host: str) -> str:
     """Registrable domain label (tldextract's ``domain`` field): the PSL
     algorithm rendered as one CASE over the vendored rule sets - exception
     rules first (they beat wildcards), then longest match.  Mirrors
     ``registrable_domain`` exactly (asserted in tests/test_geo_helpers.py);
-    the IN-lists compile to Catalyst OptimizedInSet / DuckDB constant sets,
-    so this stays a pure projection - no join, no UDF.  Arms are GENERATED
-    per rule depth found in the data file (not fixed 2/3-label tiers), so
-    dropping in the full public_suffix_list.dat - which carries 4+-label
-    exact rules and 3-label wildcards - renders a complete CASE."""
-    labels = split_arr(d, host, "\\.")
-    n = arr_len(d, labels)
+    the IN-lists compile to Catalyst OptimizedInSet, so this stays a pure
+    projection - no join, no UDF.  Arms are GENERATED per rule depth
+    found in the data file (not fixed 2/3-label tiers), so dropping in
+    the full public_suffix_list.dat - which carries 4+-label exact rules
+    and 3-label wildcards - renders a complete CASE."""
+    dot = lit("\\.")
+    labels = f"split({host}, {dot})"
+    n = f"size({labels})"
+
+    def label(i: int) -> str:          # 1-based; negative from the end
+        return f"element_at({labels}, {i})"
 
     def lastk(k: int) -> str:
-        parts = [arr_get(d, labels, -i) for i in range(k, 0, -1)]
+        parts = [label(-i) for i in range(k, 0, -1)]
         return parts[0] if k == 1 else \
             "concat(" + ", '.', ".join(parts) + ")"
+
+    def isin(k: int, rules) -> str:
+        return f"({lastk(k)} IN ({', '.join(map(lit, rules))}))"
 
     arms = []
     for k in sorted(_EXC_BY_DEPTH, reverse=True):    # exceptions prevail,
         arms.append(f"WHEN {n} >= {k} AND "          # longest first
-                    f"{in_list(d, lastk(k), _EXC_BY_DEPTH[k])} "
-                    f"THEN {arr_get(d, labels, -k)}")
+                    f"{isin(k, _EXC_BY_DEPTH[k])} "
+                    f"THEN {label(-k)}")
     for depth in range(_MAX_SUFFIX_DEPTH, 0, -1):    # longest suffix wins
         if depth in _EXACT_BY_DEPTH:
             arms.append(f"WHEN {n} >= {depth + 1} AND "
-                        f"{in_list(d, lastk(depth), _EXACT_BY_DEPTH[depth])} "
-                        f"THEN {arr_get(d, labels, -(depth + 1))}")
+                        f"{isin(depth, _EXACT_BY_DEPTH[depth])} "
+                        f"THEN {label(-(depth + 1))}")
         if depth - 1 in _WILD_BY_DEPTH:
             arms.append(f"WHEN {n} >= {depth + 1} AND "
-                        f"{in_list(d, lastk(depth - 1), _WILD_BY_DEPTH[depth - 1])} "
-                        f"THEN {arr_get(d, labels, -(depth + 1))}")
-    arms.append(f"WHEN {n} >= 2 THEN {arr_get(d, labels, -2)}")
+                        f"{isin(depth - 1, _WILD_BY_DEPTH[depth - 1])} "
+                        f"THEN {label(-(depth + 1))}")
+    arms.append(f"WHEN {n} >= 2 THEN {label(-2)}")
     return "(CASE " + " ".join(arms) + f" ELSE {host} END)"
 
 
@@ -199,33 +203,33 @@ _TRACKING_PARAMS = ("utm_source", "utm_medium", "utm_campaign", "utm_term",
                     "mc_eid", "ref", "sessionid", "phpsessid", "sid")
 
 
-def normalize_url_expr(d: str, url: str) -> str:
+def normalize_url_expr(url: str) -> str:
     """Canonical URL for dedup keys: lowercase scheme+authority (path case
     preserved), strip the fragment, default ports (:80 http / :443 https),
     well-known tracking query params (utm_*, gclid, ...), a then-empty
-    '?', and the trailing slash of non-root paths.  Dialect-shared so the
-    oracle verifies it cross-engine.
+    '?', and the trailing slash of non-root paths.  Pinned against a
+    Python restatement (tests/oracle.py) by the fuzz.
 
     Param-stripping is anchored to the QUERY portion (everything from the
     first '?'): '&' is a legal *path* character (RFC 3986), so a path like
     '/a&ref=b/page' must survive untouched - the normalizer never changes
     which resource a URL names."""
-    e = rrep(d, url, "#[\\s\\S]*", "")                 # fragment (to end)
+    e = rrep(url, "#[\\s\\S]*", "")                 # fragment (to end)
     # split at the FIRST '?': pre = scheme+authority+path, q = '?...' | ''
-    pre = rext(d, e, "^[^?]*", 0)
+    pre = f"regexp_extract({e}, {lit('^[^?]*')}, 0)"
     q = f"substr({e}, length({pre}) + 1)"
     for p in _TRACKING_PARAMS:
-        q = rrep(d, q, f"([?&]){p}=[^&#]*", "\\1")      # the param value
-    q = rrep(d, q, r"\?&", "?")                         # '?&x' -> '?x'
-    q = rrep(d, q, "&&+", "&")                          # '&&' runs
-    q = rrep(d, q, "[?&]+\\z", "")                     # empty query tail
+        q = rrep(q, f"([?&]){p}=[^&#]*", "\\1")      # the param value
+    q = rrep(q, r"\?&", "?")                         # '?&x' -> '?x'
+    q = rrep(q, "&&+", "&")                          # '&&' runs
+    q = rrep(q, "[?&]+\\z", "")                     # empty query tail
     head_pat = "^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)"
-    head = f"lower({rext(d, pre, head_pat, 1)})"
-    head = rrep(d, head, "^(http://[^/:?#]+):80\\z", "\\1")
-    head = rrep(d, head, "^(https://[^/:?#]+):443\\z", "\\1")
-    path = rrep(d, pre, head_pat, "")
+    head = f"lower(regexp_extract({pre}, {lit(head_pat)}, 1))"
+    head = rrep(head, "^(http://[^/:?#]+):80\\z", "\\1")
+    head = rrep(head, "^(https://[^/:?#]+):443\\z", "\\1")
+    path = rrep(pre, head_pat, "")
     tail = f"concat({path}, {q})"
-    tail = rrep(d, tail, "^(/.+)/\\z", "\\1")          # trailing slash
+    tail = rrep(tail, "^(/.+)/\\z", "\\1")          # trailing slash
     return f"concat({head}, {tail})"
 
 
@@ -281,16 +285,6 @@ def url_filter_dim(spark):
                        ["domain", "num_of_countries", "num_of_pages"])
 
 
-def country_iso3_dim(spark):
-    return _values_dim(spark, _read_data_csv("country_iso3"),
-                       ["country", "iso3"])
-
-
-def lang_iso3_dim(spark):
-    return _values_dim(spark, _read_data_csv("lang_iso2_iso3"),
-                       ["iso2", "iso3"])
-
-
 def write_url_filter_csv(df, path: str) -> None:
     """S9 writer (utilities.py:247-256): persist a mined multinational-
     domain filter as the space-delimited url_filter format."""
@@ -299,15 +293,9 @@ def write_url_filter_csv(df, path: str) -> None:
        .coalesce(1).write.mode("overwrite").text(path))
 
 
-def crawl_period_expr(d: str, col: str) -> str:
+def crawl_period_expr(col: str) -> str:
     """X6 (cc_corpus.py:159-162): crawl period from a segment id/filename -
     strip the 'CC-MAIN-' prefix, keep the first 7 chars ('2022-40').
     Real event time comes from warc_ts; this labels outputs by crawl."""
-    stripped = rrep(d, col, "CC-MAIN-", "")
+    stripped = rrep(col, "CC-MAIN-", "")
     return f"substring({stripped}, 1, 7)"
-
-
-# DuckDB-side loader for the oracle SQL (reads the same CSVs).
-def duck_dim_sql(name: str) -> str:
-    path = os.path.join(DATA_DIR, f"{name}.csv")
-    return f"read_csv('{path}', header=true, all_varchar=true)"

@@ -1,4 +1,4 @@
-"""The per-line keep/drop + clean kernel, rendered for Spark SQL or DuckDB.
+"""The per-line keep/drop + clean kernel, rendered as Spark SQL.
 
 This is the product's correctness contract: a faithful re-expression of the
 reference chain (/root/reference cc_corpus.py:254-293, byte-equivalent twin
@@ -26,48 +26,50 @@ multinational filter - :246-248) runs before this chain; see ccspark.geo.
 from __future__ import annotations
 
 from ccspark import regexes as R
-from ccspark.sqlgen import SPARK, count_char, rlike, rrep
+from ccspark.sqlgen import lit, rrep
 
 
-def cleaned_expr(d: str, raw: str) -> str:
+def cleaned_expr(raw: str) -> str:
     """The cleaned text of one raw line (steps 2-6)."""
-    c = rrep(d, raw, R.RE_URL, "")
-    c = rrep(d, c, R.RE_AT, "")
-    c = rrep(d, c, R.RE_HASHTAG, "")
-    c = rrep(d, c, R.RE_ANGLE, "")
-    c = rrep(d, c, R.EMOJI_CLASS, "")
-    c = rrep(d, c, R.RE_GENSIM_TAGS, "")
-    c = rrep(d, c, R.RE_AL_NUM, "\\1 \\2")
-    c = rrep(d, c, R.RE_NUM_AL, "\\1 \\2")
-    c = rrep(d, c, R.RE_MULTI_WS, " ")
+    c = rrep(raw, R.RE_URL, "")
+    c = rrep(c, R.RE_AT, "")
+    c = rrep(c, R.RE_HASHTAG, "")
+    c = rrep(c, R.RE_ANGLE, "")
+    c = rrep(c, R.EMOJI_CLASS, "")
+    c = rrep(c, R.RE_GENSIM_TAGS, "")
+    c = rrep(c, R.RE_AL_NUM, "\\1 \\2")
+    c = rrep(c, R.RE_NUM_AL, "\\1 \\2")
+    c = rrep(c, R.RE_MULTI_WS, " ")
     return c
 
 
-def short_alphabet_expr(d: str, c: str) -> str:
+def short_alphabet_expr(c: str) -> str:
     """True when the 15-char (vs 50) minimum applies: every alphabetic char
     of the line is CJK, or all Hangul, or all Hiragana, or all Katakana
     (vacuously true when the line has no alphabetic chars at all)."""
     parts = []
     for cls in (R.CJK_CLASS, R.HANGUL_CLASS, R.HIRAGANA_CLASS, R.KATAKANA_CLASS):
-        stripped = rrep(d, c, cls, "")
-        parts.append(f"(NOT {rlike(d, stripped, R.ALPHA_CLASS)})")
+        stripped = rrep(c, cls, "")
+        parts.append(f"(NOT ({stripped} RLIKE {lit(R.ALPHA_CLASS)}))")
     return "(" + " OR ".join(parts) + ")"
 
 
-def rule_exprs(d: str, raw: str, cleaned: str = "cleaned") -> dict[str, str]:
+def rule_exprs(raw: str, cleaned: str = "cleaned") -> dict[str, str]:
     """Per-rule boolean expressions.  *raw* / *cleaned* are SQL expressions
-    (typically column names); all rules must hold for a line to be kept."""
-    char_only = rrep(d, rrep(d, cleaned, R.RE_NUMERIC, ""), R.PUNCT_CLASS, " ")
+    (typically column names); all rules must hold for a line to be kept.
+    A punctuation count is length minus length-after-removal."""
+    char_only = rrep(rrep(cleaned, R.RE_NUMERIC, ""), R.PUNCT_CLASS, " ")
     budget = " AND ".join(
-        f"({count_char(cleaned, ch, d)} < {k})" for ch, k in R.PUNCT_BUDGET
+        f"((length({cleaned}) - length(replace({cleaned}, {lit(ch)}, '')))"
+        f" < {k})" for ch, k in R.PUNCT_BUDGET
     )
     return {
         "k_rawlen": f"(length({raw}) > 15)",
         "k_postlen": f"(length({cleaned}) > 15)",
-        "k_illegal": f"(NOT {rlike(d, cleaned, R.ILLEGAL_CLASS)})",
+        "k_illegal": f"(NOT ({cleaned} RLIKE {lit(R.ILLEGAL_CLASS)}))",
         "k_alphamass": f"(length({char_only}) > 12)",
         "k_cjklen": (
-            f"(length({cleaned}) >= (CASE WHEN {short_alphabet_expr(d, cleaned)} "
+            f"(length({cleaned}) >= (CASE WHEN {short_alphabet_expr(cleaned)} "
             f"THEN 15 ELSE 50 END))"
         ),
         "k_punct": f"({budget})",
@@ -78,16 +80,6 @@ RULE_ORDER = ("k_rawlen", "k_postlen", "k_illegal",
               "k_alphamass", "k_cjklen", "k_punct")
 
 
-def keep_expr(d: str, raw: str, cleaned: str = "cleaned") -> str:
-    rules = rule_exprs(d, raw, cleaned)
+def keep_expr(raw: str, cleaned: str = "cleaned") -> str:
+    rules = rule_exprs(raw, cleaned)
     return "(" + " AND ".join(rules[k] for k in RULE_ORDER) + ")"
-
-
-def drop_reason_expr(d: str, raw: str, cleaned: str = "cleaned") -> str:
-    """First failing rule, evaluated in reference order; NULL when kept."""
-    rules = rule_exprs(d, raw, cleaned)
-    whens = " ".join(
-        f"WHEN NOT {rules[k]} THEN '{k[2:]}'" for k in RULE_ORDER
-    )
-    return f"(CASE {whens} ELSE CAST(NULL AS STRING) END)" if d == SPARK else \
-        f"(CASE {whens} ELSE NULL END)"

@@ -38,9 +38,7 @@ Swapping in the real model is a config string, not a code change:
 ``load_model("fasttext:/path/lid.176.bin")`` returns a FastTextLidModel
 with the same ``predict``/``predict_batch`` interface, served by the same
 UDF (tests/test_lid.py exercises the seam with a fake fasttext module).
-Verification: the NB scorer is hash-verified against DuckDB as the
-driver-gated ``lid_ngram_sql`` query, the UDF path is asserted equal to
-that SQL rendering, training and scoring are asserted equal to the
+Verification: training and scoring are asserted equal to the
 pure-Python reference in tests/oracle.py (score vectors bit for bit),
 and a held-out accuracy floor runs on genuinely multilingual synthetic
 docs (tests/test_lid.py).

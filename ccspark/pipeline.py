@@ -28,7 +28,7 @@ from pyspark.sql.window import Window
 
 from ccspark import geo, kernel, pykernel
 from ccspark.regexes import RE_LINE_SPLIT
-from ccspark.sqlgen import SPARK, lit as sql_lit
+from ccspark.sqlgen import lit as sql_lit
 
 
 def with_geo(pages: DataFrame,
@@ -43,18 +43,17 @@ def with_geo(pages: DataFrame,
     210-213).  *countries_to_skip*: country names excluded outright
     (cc_corpus.py:205-208)."""
     spark = pages.sparkSession
-    host = geo.host_expr(SPARK, "url")
+    host = geo.host_expr("url")
     # host and (tld, domain) are bound behind generator-position
     # evaluation barriers (explode of a 1-element array), not plain
     # withColumn projections: Spark-4 pushdown re-inlines projection
     # columns into the dimension-join keys and the scan's isnotnull
     # filter, re-evaluating the 4-regex host chain inside every PSL
-    # CASE arm (~40x per page - same fix as the SQL geo_pages_cte,
-    # values identical, r6).
+    # CASE arm (~40x per page; values identical, r6).
     df = pages.select(
         "*", F.explode(F.array(F.expr(host))).alias("host"))
-    td = F.struct(F.expr(geo.tld_expr(SPARK, "host")).alias("tld"),
-                  F.expr(geo.domain_expr(SPARK, "host")).alias("domain"))
+    td = F.struct(F.expr(geo.tld_expr("host")).alias("tld"),
+                  F.expr(geo.domain_expr("host")).alias("domain"))
     df = (df.select("*", F.explode(F.array(td)).alias("_td"))
           .withColumn("tld", F.col("_td.tld"))
           .withColumn("domain", F.col("_td.domain"))
@@ -71,7 +70,7 @@ def with_geo(pages: DataFrame,
 
 def explode_lines(pages_geo: DataFrame) -> DataFrame:
     """F5: one row per raw line, preserving original order via `pos`."""
-    split_expr = f"split(text, {sql_lit(SPARK, RE_LINE_SPLIT)})"
+    split_expr = f"split(text, {sql_lit(RE_LINE_SPLIT)})"
     cols = [c for c in pages_geo.columns if c != "text"]
     return pages_geo.select(
         *cols, F.posexplode(F.expr(split_expr)).alias("pos", "raw_line")

@@ -10,8 +10,7 @@ runs exactly once per line).
 
 Semantics are the reference chain, byte-for-byte (cc_corpus.py:254-293);
 patterns come from ccspark.regexes - the same dialect-neutral strings the
-DuckDB oracle SQL uses, so Spark results and oracle results agree by
-construction.  An independent transcription of the reference (gensim-style
+Spark SQL and Arrow renderings use.  An independent transcription of the reference (gensim-style
 ``\\s`` shorthands + unicodedata alphabet detection) lives in
 tests/oracle.py and cross-validates this module on boundary fixtures.
 """
@@ -70,7 +69,7 @@ def clean_line(line: str) -> str:
 
 def _has_alpha(s: str) -> bool:
     """Python-re has no \\p{L}; str.isalpha() is the same category-L* test
-    the SQL dialects express with [\\p{L}]."""
+    Java regex and RE2 express with \\p{L}."""
     return any(ch.isalpha() for ch in s)
 
 

@@ -130,41 +130,6 @@ def _horner(q, coefs):
     return acc
 
 
-def _flit(x: float) -> str:
-    """Double literal for BOTH dialects: scientific notation, because
-    Spark parses bare `0.5`-style literals as DECIMAL (dual-dialect
-    rule: `1e0` not `1.0`)."""
-    return format(x, ".17e")
-
-
-def _horner_sql(col: str, coefs) -> str:
-    acc = _flit(coefs[0])
-    for c in coefs[1:]:
-        acc = f"({acc} * {col} + {_flit(c)})"
-    return acc
-
-
-def norm_ppf_case_sql(pp: str = "pp", ql: str = "ql", qh: str = "qh",
-                      qm: str = "qm", rr: str = "rr") -> str:
-    """SQL rendering of norm_ppf for the graded template - SAME _ACK_*
-    constants as the Column form above (single source, so the module
-    and the dual-dialect oracle cannot drift).  The helper arguments
-    must be COLUMNS pre-bound in an earlier CTE:
-        ql = sqrt(-2e0 * ln(pp)),  qh = sqrt(-2e0 * ln(1e0 - pp)),
-        qm = pp - 5e-1,            rr = qm * qm
-    so the Horner chains below reference cheap column reads instead of
-    re-inlining sqrt/ln trees ~11x each (the codegen-blowup trap)."""
-    tail_low = (f"{_horner_sql(ql, _ACK_C)} / "
-                f"({_horner_sql(ql, _ACK_D)} * {ql} + 1e0)")
-    tail_high = (f"-({_horner_sql(qh, _ACK_C)} / "
-                 f"({_horner_sql(qh, _ACK_D)} * {qh} + 1e0))")
-    central = (f"{_horner_sql(rr, _ACK_A)} * {qm} / "
-               f"({_horner_sql(rr, _ACK_B)} * {rr} + 1e0)")
-    return (f"CASE WHEN {pp} < {_flit(_ACK_PLOW)} THEN {tail_low} "
-            f"WHEN {pp} > {_flit(1.0 - _ACK_PLOW)} THEN {tail_high} "
-            f"ELSE {central} END")
-
-
 def norm_ppf(p) -> F.Column:
     """Standard-normal inverse CDF of a probability column, as a pure
     Catalyst expression (Acklam's approximation).  p must lie in (0, 1);
@@ -335,42 +300,41 @@ GOPHER_THRESHOLDS = dict(
 )
 
 
-def gopher_signal_exprs(d: str, text: str = "text",
+# a token carrying at least one letter: one regexp_count scan
+_ALPHA_TOKEN = "(?:^| )[^ \\p{L}]*\\p{L}"
+
+
+def gopher_signal_exprs(text: str = "text",
                         stopwords: tuple = GOPHER_STOPWORDS) -> dict:
-    """Dual-dialect SQL fragments for every Gopher/C4 signal over a text
-    column.  Shared by the oracled query template (queries.q_gopher_quality)
-    and the DataFrame operator below, so Spark and DuckDB cannot drift.
+    """Spark SQL fragments for every Gopher signal over a text column,
+    one expression per signal (gopher_quality binds each to a column).
     *stopwords*: the required-stopword set - pick per corpus language
     from GOPHER_STOPWORDS_BY_LANG."""
-    from ccspark.sqlgen import (
-        SPARK, arr_distinct, arr_filter, arr_sum_lengths, rcount,
-    )
+    from ccspark.sqlgen import lit
     # word-level signals are SINGLE-SCAN regex counts, never
     # split-into-array-then-filter: the array form costs one regex match
     # per WORD (measured ~21s for the full gate over 3M docs vs ~2s
     # single-scan) and identical values are proven on edge inputs in
     # tests + the A/B in the round-2 log.  Token = run of non-space
     # (newlines stay inside tokens - the original split-on-' ' semantics).
-    n_words = rcount(d, text, "[^ ]+")
+    n_words = f"regexp_count({text}, {lit('[^ ]+')})"
     word_chars = f"cast(length(replace({text}, ' ', '')) AS bigint)"
-    n_alpha = rcount(d, text, "(?:^| )[^ \\p{L}]*\\p{L}")
+    n_alpha = f"regexp_count({text}, {lit(_ALPHA_TOKEN)})"
     # line-level: n_lines and total line chars are native char counts
     # (split-free); only dup detection and the per-line prefix/suffix
     # filters need the actual array (higher-order functions evaluate
     # interpreted and dominate the gate cost - keep them minimal)
-    lines = f"split({text}, chr(10))" if d == SPARK else \
-        f"string_split({text}, chr(10))"
+    lines = f"split({text}, chr(10))"
     n_lines = (f"(length({text}) - length(replace({text}, chr(10), ''))"
                f" + 1)")
     line_chars = f"(length({text}) - ({n_lines} - 1))"
-    dl = arr_distinct(d, lines)
-    n_dl = (f"size({dl})" if d == SPARK else f"len({dl})")
-    bullets = arr_filter(
-        d, lines, "(x LIKE '- %' OR x LIKE '* %' OR x LIKE '• %')")
-    n_bullet = (f"size({bullets})" if d == SPARK else f"len({bullets})")
-    ellipses = arr_filter(
-        d, lines, "(x LIKE '%...' OR x LIKE '%…')")
-    n_ellip = (f"size({ellipses})" if d == SPARK else f"len({ellipses})")
+    dl = f"array_distinct({lines})"
+    n_dl = f"size({dl})"
+    n_bullet = (f"size(filter({lines}, x -> "
+                f"(x LIKE '- %' OR x LIKE '* %' OR x LIKE '• %')))")
+    n_ellip = f"size(filter({lines}, x -> (x LIKE '%...' OR x LIKE '%…')))"
+    dl_chars = (f"aggregate(transform({dl}, x -> length(x)), "
+                f"cast(0 as bigint), (acc, v) -> acc + v)")
     padded = f"concat(' ', replace(lower({text}), chr(10), ' '), ' ')"
     stop_hits = " + ".join(
         f"(CASE WHEN position(' {w} ' IN {padded}) > 0 THEN 1 ELSE 0 END)"
@@ -396,34 +360,12 @@ def gopher_signal_exprs(d: str, text: str = "text",
                           f"greatest({n_lines}, 1), 4)"),
         "dup_line_char_frac": (
             f"round(greatest({line_chars} - "
-            f"{arr_sum_lengths(d, dl)}, 0) * 1e0 / "
+            f"{dl_chars}, 0) * 1e0 / "
             f"greatest({line_chars}, 1), 4)"),
     }
 
 
-def gopher_keep_expr(d: str, text: str = "text",
-                     th: dict | None = None,
-                     stopwords: tuple = GOPHER_STOPWORDS) -> str:
-    """The conjunction of all Gopher gates as one boolean expression."""
-    t = dict(GOPHER_THRESHOLDS, **(th or {}))
-    s = gopher_signal_exprs(d, text, stopwords)
-    checks = [
-        f"({s['n_words']} >= {t['min_words']})",
-        f"({s['n_words']} <= {t['max_words']})",
-        f"({s['mean_word_len']} >= {t['min_mean_word_len']})",
-        f"({s['mean_word_len']} <= {t['max_mean_word_len']})",
-        f"({s['symbol_word_ratio']} <= {t['max_symbol_word_ratio']})",
-        f"({s['bullet_frac']} <= {t['max_bullet_frac']})",
-        f"({s['ellipsis_frac']} <= {t['max_ellipsis_frac']})",
-        f"({s['alpha_word_frac']} >= {t['min_alpha_word_frac']})",
-        f"({s['stopword_hits']} >= {t['min_stopword_hits']})",
-        f"({s['dup_line_frac']} <= {t['max_dup_line_frac']})",
-        f"({s['dup_line_char_frac']} <= {t['max_dup_line_char_frac']})",
-    ]
-    return "(" + " AND ".join(checks) + ")"
-
-
-def gopher_signal_exprs_ml(d: str, text: str = "text",
+def gopher_signal_exprs_ml(text: str = "text",
                            lang: str = "lang") -> dict:
     """LANGUAGE-AWARE Gopher signals: same fragments as
     gopher_signal_exprs, but every token-shaped signal dispatches on the
@@ -444,16 +386,16 @@ def gopher_signal_exprs_ml(d: str, text: str = "text",
     Line-level signals (bullets, ellipses, duplicate lines) are
     language-neutral and identical to the static rendering."""
     from ccspark import regexes as R
-    from ccspark.sqlgen import in_list, rcount
+    from ccspark.sqlgen import lit
 
-    base = gopher_signal_exprs(d, text)
-    sf = in_list(d, lang, SPACE_FREE_LANGS)
-    n_tok = rcount(d, text, "[^ ]+")
-    n_cjk = rcount(d, text, R.CJKISH_CLASS)
+    base = gopher_signal_exprs(text)
+    sf = _space_free(lang)
+    n_tok = f"regexp_count({text}, {lit('[^ ]+')})"
+    n_cjk = f"regexp_count({text}, {lit(R.CJKISH_CLASS)})"
     n_words = f"(CASE WHEN {sf} THEN {n_cjk} ELSE {n_tok} END)"
     word_chars = f"cast(length(replace({text}, ' ', '')) AS bigint)"
-    n_letters = rcount(d, text, R.ALPHA_CLASS)
-    n_alpha_tok = rcount(d, text, "(?:^| )[^ \\p{L}]*\\p{L}")
+    n_letters = f"regexp_count({text}, {lit(R.ALPHA_CLASS)})"
+    n_alpha_tok = f"regexp_count({text}, {lit(_ALPHA_TOKEN)})"
     n_hash = f"(length({text}) - length(replace({text}, '#', '')))"
     n_uell = f"(length({text}) - length(replace({text}, '…', '')))"
     n_dell = (f"floor((length({text}) - "
@@ -483,7 +425,12 @@ def gopher_signal_exprs_ml(d: str, text: str = "text",
     return out
 
 
-def gopher_keep_ml_expr(d: str, text: str = "text", lang: str = "lang",
+def _space_free(lang: str) -> str:
+    from ccspark.sqlgen import lit
+    return f"({lang} IN ({', '.join(map(lit, SPACE_FREE_LANGS))}))"
+
+
+def gopher_keep_ml_expr(text: str = "text", lang: str = "lang",
                         th: dict | None = None,
                         s: dict | None = None) -> str:
     """Language-aware keep verdict: the Gopher conjunction with per-row
@@ -493,11 +440,12 @@ def gopher_keep_ml_expr(d: str, text: str = "text", lang: str = "lang",
     names (the DataFrame operator computes signals once as columns and
     derives keep from them, keeping each signal inside its own codegen
     method)."""
-    from ccspark.sqlgen import in_list
+    from ccspark.sqlgen import lit
     t = dict(GOPHER_THRESHOLDS, **(th or {}))
-    s = s or gopher_signal_exprs_ml(d, text, lang)
-    sf = in_list(d, lang, SPACE_FREE_LANGS)
-    known = in_list(d, lang, tuple(sorted(GOPHER_STOPWORDS_BY_LANG)))
+    s = s or gopher_signal_exprs_ml(text, lang)
+    sf = _space_free(lang)
+    known = (f"({lang} IN "
+             f"({', '.join(map(lit, sorted(GOPHER_STOPWORDS_BY_LANG)))}))")
     checks = [
         f"({s['n_words']} >= {t['min_words']})",
         f"({s['n_words']} <= {t['max_words']})",
@@ -629,17 +577,16 @@ def gopher_quality(docs: DataFrame, text_col: str = "text",
     With *lang_col* the gate is LANGUAGE-AWARE (see
     gopher_signal_exprs_ml): per-row stopword sets, CJK-safe word
     counting, token-shape gates bypassed for space-free scripts."""
-    from ccspark.sqlgen import SPARK as _S
     t = dict(GOPHER_THRESHOLDS, **(thresholds or {}))
-    sig = (gopher_signal_exprs_ml(_S, text_col, lang_col)
+    sig = (gopher_signal_exprs_ml(text_col, lang_col)
            if lang_col is not None
-           else gopher_signal_exprs(_S, text_col, stopwords))
+           else gopher_signal_exprs(text_col, stopwords))
     out = docs
     for name, expr in sig.items():
         out = out.withColumn(name, F.expr(expr))
     if lang_col is not None:
         keep = F.expr(gopher_keep_ml_expr(
-            _S, text_col, lang_col, thresholds,
+            text_col, lang_col, thresholds,
             s={name: name for name in sig}))
     else:
         keep = (
@@ -683,45 +630,42 @@ C4_BAD_SUBSTRINGS = ("lorem ipsum", "{")
 SENT_MARK = "\x1e"
 
 
-def c4_sentences_expr(d: str, text: str = "text") -> str:
+def c4_sentences_expr(text: str = "text") -> str:
     """Sentence array: mark terminal-punctuation boundaries with a
-    sentinel, then split - RE2 (DuckDB) has no lookbehind, so the
-    mark-and-split form is the cross-engine sentence splitter.  Newlines
-    are boundaries too.  CJK sentences end in IDEOGRAPHIC terminal
-    punctuation (。！？) with NO following space - those are boundaries
-    on their own."""
-    from ccspark.sqlgen import rrep, split_arr
-    marked = rrep(d, f"replace({text}, chr(10), '{SENT_MARK}')",
+    sentinel, then split (the same mark-and-split form the RE2 gate in
+    arrowgate uses, which has no lookbehind).  Newlines are boundaries
+    too.  CJK sentences end in IDEOGRAPHIC terminal punctuation (。！？)
+    with NO following space - those are boundaries on their own."""
+    from ccspark.sqlgen import lit, rrep
+    marked = rrep(f"replace({text}, chr(10), '{SENT_MARK}')",
                   r"([.!?]) ", "\\1" + SENT_MARK)
-    marked = rrep(d, marked, "([。！？])", "\\1" + SENT_MARK)
-    return split_arr(d, marked, SENT_MARK)
+    marked = rrep(marked, "([。！？])", "\\1" + SENT_MARK)
+    return f"split({marked}, {lit(SENT_MARK)})"
 
 
-def c4_line_keep_expr(d: str, line: str) -> str:
+def c4_line_keep_expr(line: str) -> str:
     """C4 line gates: ends in terminal punctuation (Latin OR ideographic -
     a language-blind [.!?"] check structurally dropped every CJK line),
     >= 3 words OR >= 6 space-free-script chars (CJK lines have no
     spaces), and no 'javascript' (case-insensitive)."""
     from ccspark import regexes as R
-    from ccspark.sqlgen import rcount, rlike
+    from ccspark.sqlgen import lit
     words = f"(length({line}) - length(replace({line}, ' ', '')) + 1)"
     # \z (absolute end) not $: Java's $ also matches BEFORE a final
     # newline while RE2's does not - found by the cross-engine fuzz
     term_pat = '[.!?"。！？」』]\\z'
-    term = rlike(d, line, term_pat)
-    cjk = rcount(d, line, R.CJKISH_CLASS)
-    nojs = rlike(d, f"lower({line})", "javascript")
+    term = f"({line} RLIKE {lit(term_pat)})"
+    cjk = f"regexp_count({line}, {lit(R.CJKISH_CLASS)})"
+    nojs = f"(lower({line}) RLIKE {lit('javascript')})"
     return (f"({term} AND ({words} >= 3 OR {cjk} >= 6) "
             f"AND NOT {nojs})")
 
 
-def c4_page_keep_expr(d: str, text: str = "text",
-                      min_sentences: int = 5) -> str:
+def c4_page_keep_expr(text: str = "text", min_sentences: int = 5) -> str:
     """C4 page gates: >= min_sentences sentences, no 'lorem ipsum', no
     curly brace."""
-    arr = c4_sentences_expr(d, text)
-    n = (f"size(filter({arr}, x -> length(x) > 0))" if d == "spark"
-         else f"len(list_filter({arr}, x -> length(x) > 0))")
+    arr = c4_sentences_expr(text)
+    n = f"size(filter({arr}, x -> length(x) > 0))"
     bads = " AND ".join(
         f"(position('{b}' IN lower({text})) = 0)" for b in C4_BAD_SUBSTRINGS)
     return f"(({n}) >= {min_sentences} AND {bads})"
@@ -729,9 +673,7 @@ def c4_page_keep_expr(d: str, text: str = "text",
 
 def c4_page_filter(docs: DataFrame, text_col: str = "text",
                    min_sentences: int = 5) -> DataFrame:
-    from ccspark.sqlgen import SPARK as _S
-    return docs.where(F.expr(c4_page_keep_expr(_S, text_col,
-                                               min_sentences)))
+    return docs.where(F.expr(c4_page_keep_expr(text_col, min_sentences)))
 
 
 def c4_span_dedup(docs: DataFrame, text_col: str = "text",
@@ -741,12 +683,11 @@ def c4_span_dedup(docs: DataFrame, text_col: str = "text",
     (doc_id, span_idx)).  Returns (doc_id, span_idx, span_hash, keep) -
     one shuffle on the span hash with map-side partial aggregation via
     min(struct), the same 100x-safe plan as line dedup."""
-    from ccspark.sqlgen import SPARK as _S
     # sentence array bound to a projection column before the lambda
     # references it (interpreted HOFs re-evaluate lambda-body exprs per
     # element - the regex sentence split ran once per span; r4, see
     # dedup.shingles)
-    arr = c4_sentences_expr(_S, text_col)
+    arr = c4_sentences_expr(text_col)
     sents = docs.select(F.col(id_col).alias("doc_id"),
                         F.expr(arr).alias("_s"))
     spans = (f"transform(sequence(1, greatest(size(_s) - {span - 1}, 1)),"
@@ -788,9 +729,8 @@ def gopher_repetition(docs: DataFrame, text_col: str = "text",
     """Per-doc repetition signals + ``rep_keep``.  All gram sizes ride ONE
     tagged union -> one count shuffle on (doc, n, gram), one window on
     (doc, n), one pivot - instead of a per-n explode/aggregate/join chain
-    (8 exchanges -> 4).  DataFrame twin of the oracled SQL template
-    (queries.q_gopher_repetition) - asserted equal in
-    tests/test_gopher.py."""
+    (8 exchanges -> 4).  Asserted equal to a pure-Python restatement
+    (tests/oracle.py) in tests/test_gopher.py."""
     from pyspark.sql.window import Window
     t = dict(GOPHER_REP_THRESHOLDS, **(thresholds or {}))
     base = docs.select(F.col(id_col).alias("doc_id"),
@@ -879,12 +819,10 @@ def domain_quality(pages: DataFrame, text_col: str = "text",
     g = gopher_quality(pages, text_col, lang_col=lang_col,
                        thresholds=thresholds, engine="udf")
 
-    # cross-engine-deterministic mean: the per-page signals are 4-decimal
-    # doubles, so avg() would sum floats in engine-dependent order and can
-    # land on either side of a round(.,4) boundary (observed one ULP off
-    # vs DuckDB once the fixture gained CJK outlier values).  Summing the
-    # signals as EXACT integers (x10000) and dividing once is
-    # order-independent in both engines.
+    # order-independent mean: the per-page signals are 4-decimal doubles,
+    # so avg() would sum floats in partition-dependent order and can land
+    # on either side of a round(.,4) boundary.  Summing the signals as
+    # EXACT integers (x10000) and dividing once is order-independent.
     def exact_mean(col: str):
         return F.round(
             F.sum(F.round(F.col(col) * 10000).cast("long"))
@@ -900,7 +838,7 @@ def domain_quality(pages: DataFrame, text_col: str = "text",
 
 
 def _round4(x: float) -> float:
-    """Spark/DuckDB round(double, 4): HALF_UP on the shortest decimal
+    """Spark round(double, 4): HALF_UP on the shortest decimal
     representation (Java BigDecimal.valueOf semantics) - NOT Python's
     banker's rounding."""
     from decimal import ROUND_HALF_UP, Decimal
@@ -927,9 +865,9 @@ def make_gopher_keep_udf_py(thresholds: dict | None = None,
     line kernel taught (CLAUDE.md): Spark 4 evaluates a
     many-regex/HOF expression chain per check with no sharing (measured
     26s for the expression gate over 3M docs vs ~2s here), while a single
-    Python pass computes every signal once.  Verdict-identical to
-    gopher_keep_expr (parity-tested per row incl. the round(.,4) HALF_UP
-    threshold boundaries)."""
+    Python pass computes every signal once.  Verdict-identical to the
+    expression gate in gopher_quality (parity-tested per row incl. the
+    round(.,4) HALF_UP threshold boundaries)."""
     import pandas  # noqa: F401
     from pyspark.sql.functions import pandas_udf
 

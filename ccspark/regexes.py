@@ -7,8 +7,8 @@ mention stripper, and the ``emoji`` library).  Our rebuild evaluates the
 same chain in three engines:
 
   * Spark/Catalyst  (Java java.util.regex)
-  * DuckDB oracle   (RE2)
-  * pandas test oracle (Python re)
+  * the Arrow kernels (RE2, via pyarrow.compute)
+  * the test oracle (Python re)
 
 To make all three agree byte-for-byte we avoid every dialect-specific
 construct: no ``\\s``/``\\S``/``\\w`` shorthands (their Unicode coverage
@@ -177,13 +177,10 @@ RE_PII_IP = (
 )
 RE_PII_SSN = "[0-9]{3}-[0-9]{2}-[0-9]{4}"
 # 16-digit card in 4-groups (space/dash/nothing); \b guards keep longer
-# digit runs (ids, timestamps) untouched - ASCII word boundary, verified
-# match-identical Java vs RE2.  Regex-only (no Luhn), the standard
+# digit runs (ids, timestamps) untouched.  \b means the ASCII word
+# boundary ([0-9A-Za-z_]), as in RE2 and re.ASCII; Java's \b differs next
+# to non-ASCII letters and digits, so scrub.java_pattern spells it out
+# for the Catalyst rendering.  Regex-only (no Luhn), the standard
 # pipeline trade-off: a 16-digit 4-grouped false positive is rare and
 # redaction is the safe direction.
 RE_PII_CC = "\\b[0-9]{4}([ -]?[0-9]{4}){3}\\b"
-
-
-def sql_quote(pattern: str) -> str:
-    """Embed a pattern in a single-quoted SQL string literal."""
-    return pattern.replace("'", "''")

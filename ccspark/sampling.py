@@ -31,10 +31,9 @@ bounded stages (the classic distributed prefix-sum):
      prefix-summed and BROADCAST;
   3. cum = bucket offset + within-bucket running sum.
 
-Values are bit-identical to the naive window (the DuckDB oracle twin in
-queries.q_token_suite recomputes exactly that, and the driver
-hash-compares), so the scalable plan is value-verified, not just
-plausible.
+Values are bit-identical to the naive window (sample_by_token_budget_window)
+and to a pure-Python greedy prefix (tests/oracle.py), so the scalable
+plan is value-verified, not just plausible.
 """
 
 from __future__ import annotations
@@ -99,8 +98,8 @@ def sample_by_token_budget(docs: DataFrame, budget: int,
     Distributed prefix-sum (see module docstring): the bucket is the
     first md5 byte, so (bucket, ord, id) sorts identically to (ord, id)
     and the three-stage cum equals the naive per-group window's value
-    bit for bit - asserted against the window form in
-    tests/test_sampling.py and against DuckDB by the driver."""
+    bit for bit - asserted against the window form and the Python
+    restatement in tests/test_sampling.py."""
     if weight_col is None:
         docs = with_token_weights(docs, text_col)
         weight_col = "weight"
@@ -127,10 +126,7 @@ def derive_mixture_budgets(total_budget: int,
     # Each group's quota floors independently, so up to
     # len(proportions)-1 tokens of total_budget stay UNALLOCATED (e.g.
     # total=100 over three equal groups -> 33+33+33).  Deliberate: the
-    # floor keeps every quota an exact integer BOTH engines derive
-    # identically, and the graded token_suite mixture branch inlines
-    # these exact constants - largest-remainder rounding would change
-    # graded values for a <=(k-1)-token budget gain (r6 ADVICE note).
+    # floor keeps every quota an exact integer with a one-line rule.
     return {g: int(total_budget * p / s) for g, p in proportions.items()}
 
 
@@ -158,9 +154,8 @@ def sample_by_mixture(docs: DataFrame, total_budget: int,
     tiny driver-derived table broadcast onto it — no extra shuffle
     beyond the fixed-budget sampler's.  Values are bit-identical to
     running sample_by_token_budget per group with the derived budgets
-    (asserted in tests/test_sampling.py) and hash-verified against the
-    DuckDB window recomputation by the driver (token_suite 'mixture'
-    branch)."""
+    (asserted in tests/test_sampling.py, with a pure-Python greedy
+    prefix as the reference)."""
     budgets = derive_mixture_budgets(total_budget, proportions)
     if weight_col is None:
         docs = with_token_weights(docs, text_col)

@@ -1,12 +1,12 @@
 """Extract the geo/filter dimension *data* from the reference repo into CSVs.
 
-The ccTLD->country, ccTLD->region, country->ISO-3, ISO-2->ISO-3 lookup
-tables and the multinational-domain filter list ARE the semantics of the
-reference pipeline (cc_corpus.py:21-135, geoWAC.py:81-126, url_filter.txt,
-utilities.py:148-219).  This script parses the dict/tuple literals out of
-the reference sources with ``ast`` (no code is imported or copied) and
-freezes them as CSV files under ccspark/data/, which the Spark pipeline
-reads as broadcast dimension tables.
+The ccTLD->country and ccTLD->region lookup tables and the
+multinational-domain filter list ARE the semantics of the reference
+pipeline (cc_corpus.py:21-135, url_filter.txt, utilities.py:148-219).
+This script parses the dict/tuple literals out of the reference sources
+with ``ast`` (no code is imported or copied) and freezes them as CSV
+files under ccspark/data/, which the Spark pipeline reads as broadcast
+dimension tables.
 
 Run once:  python -m ccspark.scripts.gen_dims
 The CSVs are committed; the reference checkout is not needed at runtime.
@@ -65,23 +65,7 @@ def main() -> None:
             nc, np_ = counts.get(dom, (0, 0))
             w.writerow([dom, nc, np_])
 
-    geowac = os.path.join(REF, "geoWAC.py")
-    iso = _literal_assign(geowac, "iso_dict")
-    with open(os.path.join(OUT, "country_iso3.csv"), "w", newline="", encoding="utf-8") as fh:
-        w = csv.writer(fh)
-        w.writerow(["country", "iso3"])
-        for k, v in iso.items():
-            w.writerow([k, v])
-
-    lang = _literal_assign(geowac, "mapping_dict")
-    with open(os.path.join(OUT, "lang_iso2_iso3.csv"), "w", newline="", encoding="utf-8") as fh:
-        w = csv.writer(fh)
-        w.writerow(["iso2", "iso3"])
-        for k, v in lang.items():
-            w.writerow([k, v])
-
-    print("wrote cctld.csv(%d) url_filter.csv(%d) country_iso3.csv(%d) lang_iso2_iso3.csv(%d)"
-          % (len(names), len(mnc), len(iso), len(lang)))
+    print("wrote cctld.csv(%d) url_filter.csv(%d)" % (len(names), len(mnc)))
 
 
 if __name__ == "__main__":

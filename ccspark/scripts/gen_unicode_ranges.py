@@ -14,7 +14,7 @@ This script scans all Unicode codepoints with Python's unicodedata (same
 table the reference used at runtime) and emits contiguous ranges of
 characters that are (a) alphabetic per str.isalpha() and (b) members of each
 set.  The output is written to ``ccspark/unicode_ranges.py`` as frozen data,
-so the Spark regex path, the DuckDB oracle SQL, and the pandas test oracle
+so the Spark regex path, the Arrow/RE2 kernels and the Python kernels
 all share one deterministic definition.
 
 Run:  python -m ccspark.scripts.gen_unicode_ranges

@@ -13,6 +13,8 @@ generic phone (dotted quads would otherwise match the phone class).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ccspark import regexes as R
@@ -28,10 +30,26 @@ SCRUB_STEPS = (
 )
 
 
+# Java's \b counts every Unicode letter or digit as a word character
+# before JDK 19 (JDK-8264160); RE2 and Python's re.ASCII count only
+# [0-9A-Za-z_].  The Java rendering of a step spells \b out as that ASCII
+# boundary, so "é4111111111111111" redacts as <CC> on every engine.
+_W = "[0-9A-Za-z_]"
+_ASCII_BOUNDARY = f"(?:(?<!{_W})(?={_W})|(?<={_W})(?!{_W}))"
+
+
+def java_pattern(pat: str) -> str:
+    """*pat* for Java regex: each ``\\b`` (outside an escaped backslash)
+    becomes the ASCII word boundary."""
+    return re.sub(r"\\\\|\\b",
+                  lambda m: _ASCII_BOUNDARY if m.group() == "\\b"
+                  else m.group(), pat)
+
+
 def scrub_col(col) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     for _, pat, repl in SCRUB_STEPS:
-        c = F.regexp_replace(c, pat, repl)
+        c = F.regexp_replace(c, java_pattern(pat), repl)
     return c
 
 
@@ -41,7 +59,7 @@ def scrub(df: DataFrame, text_col: str = "text",
     out = df.withColumn(out_col, scrub_col(text_col))
     for name, pat, _ in SCRUB_STEPS:
         out = out.withColumn(
-            f"has_{name}", F.col(text_col).rlike(pat))
+            f"has_{name}", F.col(text_col).rlike(java_pattern(pat)))
     flags = [F.col(f"has_{n}").cast("int") for n, _, _ in SCRUB_STEPS]
     total = flags[0]
     for f in flags[1:]:

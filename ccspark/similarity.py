@@ -14,8 +14,8 @@ of a training-data pipeline, so implemented Spark-first:
     list; a query probes only its nprobe nearest lists.  At 10^9+ vectors
     this turns a full scan into reading ~nprobe/nlists of the table, with
     the partition layout (partitionBy(list_id)) giving partition pruning.
-  * sign-LSH bucketing (queries.q_ann_sign_lsh) - the no-training
-    alternative; kept as a SQL template for the oracle gate.
+  * sign-LSH bucketing (sign_lsh_pairs) - the no-training
+    alternative.
 """
 
 from __future__ import annotations
@@ -65,9 +65,7 @@ def sign_lsh_pairs(table: DataFrame, threshold: float = 0.9,
     """Embedding-cosine near-dup candidate pairs via sign-LSH buckets:
     the sign bits of *dims* (1-based) form the bucket key, pairs are
     compared WITHIN buckets only, kept when round(cosine, 4) >=
-    *threshold* - the module rendering of queries.q_embedding_near_dups
-    (same dims, same double cast, same rounding, so the graded suite can
-    hash-verify this path).  8 sign bits = 256 buckets keeps the
+    *threshold*.  8 sign bits = 256 buckets keeps the
     self-join near-linear; at 10^9+ vectors widen *dims* (each bit
     halves expected bucket size, recall falls off gradually - standard
     hyperplane-LSH behavior).  Returns (vec_a, vec_b, cosine).
@@ -80,8 +78,7 @@ def sign_lsh_pairs(table: DataFrame, threshold: float = 0.9,
     evaluated once.
 
     *engine*: ``exact`` (default) keeps the per-pair JVM fold whose
-    rounded cosines are bit-stable against the SQL template (the graded
-    path); ``arrow`` runs ONE BLAS matmul per bucket via applyInPandas
+    rounded cosines are bit-stable; ``arrow`` runs ONE BLAS matmul per bucket via applyInPandas
     (4x end-to-end dedup at 20k vectors, the pairs stage itself more) -
     same pairs except cosines exactly AT the
     4-decimal threshold boundary, where summation order may round the
@@ -165,8 +162,8 @@ def dedup_near_embeddings(table: DataFrame, threshold: float = 0.9,
     encodes).  Returns the surviving rows of *table* unchanged.
 
     *pre_exact* (DEFAULT since r6 - the facade default the api layer
-    already used; pass False for the direct-path parity anchor the
-    graded suite keeps for plan bit-stability): collapse byte-identical
+    already used; pass False for the direct-path parity anchor):
+    collapse byte-identical
     vectors to their min-id representative BEFORE the pair join (one
     xxhash64-keyed map-side-combining aggregate) - pair emission is
     quadratic in duplicate MULTIPLICITY (m copies = m(m-1)/2
@@ -231,10 +228,8 @@ def ivf_knn(assigned: DataFrame, centroids: DataFrame, queries: DataFrame,
     """Probe the nprobe nearest lists per query, exact rerank within.
 
     *round_digits*: rounding applied to the cosine BEFORE ranking (ranks
-    are computed on the rounded value, neighbor_id tie-break) - the
-    driver-graded full-probe pair uses 4 so rank ties are cross-engine
-    deterministic (same pattern as q_knn_cosine); default 6 for in-engine
-    use."""
+    are computed on the rounded value, neighbor_id tie-break); 4 makes
+    rank ties deterministic across summation orders, default 6."""
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("q_vec"))
     qc = (q.crossJoin(F.broadcast(centroids))

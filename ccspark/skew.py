@@ -84,9 +84,8 @@ def cap_per_key(df: DataFrame, key: str, limit: int,
     in its own sub-bucket's top-*limit*: phase 1 can never evict a
     final survivor, and the result is provably identical to the
     one-window form (``cap_per_key_window``, kept as the parity
-    anchor; equality asserted in tests).  The graded ``country_cap``
-    template keeps the window rendering - DuckDB must reproduce it -
-    but every module/facade path routes here.
+    anchor; equality asserted in tests).  Every module/facade path
+    routes here.
 
     Reserved temp columns: ``_salt`` and ``_rk`` are created via
     withColumn and dropped on exit - same-named INPUT columns would be
@@ -118,9 +117,8 @@ def cap_per_key(df: DataFrame, key: str, limit: int,
 
 def cap_per_key_window(df: DataFrame, key: str, limit: int,
                        tiebreak: str = "url") -> DataFrame:
-    """The one-window rendering of ``cap_per_key`` - the parity anchor
-    the graded ``country_cap`` SQL template mirrors (queries.py).  Do
-    NOT use on production paths: PARTITION BY key alone sorts the
+    """The one-window rendering of ``cap_per_key`` - the parity anchor.
+    Do NOT use on production paths: PARTITION BY key alone sorts the
     hottest key's entire row set in ONE task at 100x scale."""
     w = Window.partitionBy(key).orderBy(F.md5(F.col(tiebreak)), tiebreak)
     return (df.withColumn("_rk", F.row_number().over(w))

@@ -154,23 +154,23 @@ def segment_manifest(spark: SparkSession, paths_file: str) -> DataFrame:
     )
 
 
-def html_to_text_expr(d: str, col: str) -> str:
+def html_to_text_expr(col: str) -> str:
     """HTML -> visible text as a pure expression chain (the WET 'conversion'
     step for pipelines that ingest raw HTML instead of WET): drop
-    script/style/noscript blocks and comments ((?s) dot-matches-newline -
-    Java regex and RE2 both support it), break block-level closers into
-    newlines, strip remaining tags, decode the common entities, collapse
+    script/style/noscript/title blocks (one pass per tag) and comments
+    ((?s) dot-matches-newline), break block-level closers into newlines,
+    strip remaining tags, decode the common entities, collapse
     horizontal whitespace.  Order matters: blocks before tags, tags before
     entities (so literal &lt;script&gt; in text never executes as
     structure)."""
     from ccspark.sqlgen import rrep
     e = col
-    for tag in ("script", "style", "noscript", "title"):  # no backrefs in RE2 -
-        e = rrep(d, e, rf"(?is)<{tag}\b.*?</{tag}>", "")   # one per tag
-    e = rrep(d, e, r"(?s)<!--.*?-->", "")
-    e = rrep(d, e, r"(?i)</(p|div|br|li|tr|h[1-6])>", "\n")
-    e = rrep(d, e, r"(?i)<br\s*/?>", "\n")
-    e = rrep(d, e, r"(?s)<[^>]*>", " ")
+    for tag in ("script", "style", "noscript", "title"):
+        e = rrep(e, rf"(?is)<{tag}\b.*?</{tag}>", "")
+    e = rrep(e, r"(?s)<!--.*?-->", "")
+    e = rrep(e, r"(?i)</(p|div|br|li|tr|h[1-6])>", "\n")
+    e = rrep(e, r"(?i)<br\s*/?>", "\n")
+    e = rrep(e, r"(?s)<[^>]*>", " ")
     # '&amp;' must decode LAST: decoding it first turns double-escaped
     # entities ('5 &amp;lt; 6', which a browser renders as '5 &lt; 6')
     # into their single-escaped forms and then decodes those too
@@ -178,8 +178,8 @@ def html_to_text_expr(d: str, col: str) -> str:
                     ("&quot;", "'\"'"), ("&#39;", "chr(39)"),
                     ("&amp;", "'&'")):
         e = f"replace({e}, '{ent}', {ch})"
-    e = rrep(d, e, r"[ \t]+", " ")
-    e = rrep(d, e, r" ?\n ?", "\n")
-    e = rrep(d, e, r"\n{2,}", "\n")
-    e = rrep(d, e, r"^[\s]+|[\s]+$", "")   # trim() leaves \n in both engines
+    e = rrep(e, r"[ \t]+", " ")
+    e = rrep(e, r" ?\n ?", "\n")
+    e = rrep(e, r"\n{2,}", "\n")
+    e = rrep(e, r"^[\s]+|[\s]+$", "")   # trim() leaves \n
     return e

@@ -1,140 +1,26 @@
-"""Dual-dialect SQL expression generator (Spark SQL + DuckDB SQL).
+"""Spark SQL text helpers for the expression builders.
 
-The driver's correctness gate runs every ``queries()`` entry on Spark and
-its ``oracle_sql()`` twin on DuckDB and hash-compares the results.  Rather
-than hand-writing every operator twice (and letting the two copies drift),
-each operator's expression chain is defined once against this tiny dialect
-abstraction and rendered for either engine.
+Only two things here are not plain SQL:
 
-Only constructs verified to behave identically in both engines are exposed:
-
-  regexp_replace   Spark: global by default / Java regex, ``$1`` backrefs
-                   DuckDB: needs 'g' option   / RE2,      ``\\1`` backrefs
-  regexp_like      Spark ``rlike`` vs DuckDB ``regexp_matches``
-  regexp_extract   same name + signature in both
-  split            Spark ``split(e, pat)`` vs DuckDB ``string_split_regex``
-  array index      Spark ``element_at(a, i)`` vs DuckDB ``a[i]`` (1-based,
-                   negatives from the end in both)
-  hex->int         Spark ``conv(h,16,10)`` vs DuckDB ``('0x'||h)::bigint``
-  string literals  Spark escapes ``\\`` and ``'``; DuckDB only ``'``
-
-Everything else (length, replace, lower, md5, concat, ||, CASE, window
-functions, IN lists) is written as plain ANSI SQL that both engines parse
-identically.
+  string literals  Spark SQL unescapes ``\\`` inside quotes, so a regex
+                   pattern is written with its backslashes doubled and
+                   its quotes escaped;
+  regexp_replace   replace-all on Java regex; replacements are written
+                   with ``\\1`` backrefs (the Python/RE2 spelling, which
+                   the Arrow kernels use) and rendered as Java's ``$1``.
 """
 
 from __future__ import annotations
 
 import re
 
-SPARK = "spark"
-DUCK = "duck"
+
+def lit(s: str) -> str:
+    """Render a Python string as a quoted Spark SQL literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def lit(d: str, s: str) -> str:
-    """Render a Python string as a quoted SQL literal for dialect *d*."""
-    if d == SPARK:
-        s = s.replace("\\", "\\\\").replace("'", "\\'")
-    else:
-        s = s.replace("'", "''")
-    return "'" + s + "'"
-
-
-def rrep(d: str, e: str, pat: str, rep: str) -> str:
+def rrep(e: str, pat: str, rep: str) -> str:
     """regexp_replace, replace-ALL semantics.  *rep* uses ``\\1`` backrefs."""
-    if d == SPARK:
-        rep_s = re.sub(r"\\(\d)", r"$\1", rep)
-        return f"regexp_replace({e}, {lit(d, pat)}, {lit(d, rep_s)})"
-    return f"regexp_replace({e}, {lit(d, pat)}, {lit(d, rep)}, 'g')"
-
-
-def rlike(d: str, e: str, pat: str) -> str:
-    if d == SPARK:
-        return f"({e} RLIKE {lit(d, pat)})"
-    return f"regexp_matches({e}, {lit(d, pat)})"
-
-
-def rext(d: str, e: str, pat: str, group: int = 1) -> str:
-    return f"regexp_extract({e}, {lit(d, pat)}, {group})"
-
-
-def split_arr(d: str, e: str, pat: str) -> str:
-    if d == SPARK:
-        return f"split({e}, {lit(d, pat)})"
-    return f"string_split_regex({e}, {lit(d, pat)})"
-
-
-def arr_get(d: str, arr: str, idx: int) -> str:
-    """1-based indexing; negative counts from the end (both engines)."""
-    if d == SPARK:
-        return f"element_at({arr}, {idx})"
-    return f"{arr}[{idx}]"
-
-
-def arr_len(d: str, arr: str) -> str:
-    if d == SPARK:
-        return f"size({arr})"
-    return f"len({arr})"
-
-
-def rcount(d: str, e: str, pat: str) -> str:
-    """Count of non-overlapping regex matches - ONE scan of the string
-    (Spark regexp_count / DuckDB regexp_extract_all+len); the cheap
-    replacement for exploding-into-tokens-then-filtering when only a
-    count is needed."""
-    if d == SPARK:
-        return f"regexp_count({e}, {lit(d, pat)})"
-    return f"len(regexp_extract_all({e}, {lit(d, pat)}))"
-
-
-def arr_filter(d: str, arr: str, cond: str) -> str:
-    """Filter an array by a lambda condition over ``x`` (both engines use
-    the same ``x -> cond`` lambda syntax)."""
-    fn = "filter" if d == SPARK else "list_filter"
-    return f"{fn}({arr}, x -> {cond})"
-
-
-def arr_distinct(d: str, arr: str) -> str:
-    fn = "array_distinct" if d == SPARK else "list_distinct"
-    return f"{fn}({arr})"
-
-
-def arr_sum_lengths(d: str, arr: str) -> str:
-    """Total string length over an array of strings (bigint both sides)."""
-    if d == SPARK:
-        return (f"aggregate(transform({arr}, x -> length(x)), "
-                f"cast(0 as bigint), (acc, v) -> acc + v)")
-    return (f"cast(coalesce(list_sum(list_transform({arr}, "
-            f"x -> length(x))), 0) as bigint)")
-
-
-def hex_to_bigint(d: str, hex_expr: str) -> str:
-    """Interpret a hex string (<=15 chars to stay in int64) as a bigint."""
-    if d == SPARK:
-        return f"cast(conv({hex_expr}, 16, 10) as bigint)"
-    return f"(('0x' || {hex_expr})::bigint)"
-
-
-def md5_i64(d: str, e: str, seed: str = "") -> str:
-    """Deterministic cross-engine 60-bit integer hash of a string expr."""
-    inner = f"md5(concat({lit(d, seed)}, {e}))" if seed else f"md5({e})"
-    return hex_to_bigint(d, f"substr({inner}, 1, 15)")
-
-
-def count_char(e: str, ch: str, d: str = DUCK) -> str:
-    """Occurrences of a literal char: length minus length-after-removal."""
-    return f"(length({e}) - length(replace({e}, {lit(d, ch)}, '')))"
-
-
-def in_list(d: str, e: str, values) -> str:
-    vals = ", ".join(lit(d, v) for v in values)
-    return f"({e} IN ({vals}))"
-
-
-def log_fn(d: str, e: str) -> str:
-    """Natural log (Spark ``ln``; DuckDB ``ln`` too)."""
-    return f"ln({e})"
-
-
-def roundn(e: str, n: int) -> str:
-    return f"round({e}, {n})"
+    rep_s = re.sub(r"\\(\d)", r"$\1", rep)
+    return f"regexp_replace({e}, {lit(pat)}, {lit(rep_s)})"

@@ -5,11 +5,13 @@ Usage (north_rule deployment shape):
     python scripts/package.py                 # -> dist/ccspark.zip
     spark-submit --master local[8] \\
         --py-files dist/ccspark.zip \\
-        scripts/submit_job.py <sf_dir> <out_dir>
+        scripts/submit_job.py <pages_parquet> <out_dir>
 
-On a real cluster only --master and the memory/executor flags change; the
-job itself is identical.  Prints one JSON line with row counts so the
-invocation is verifiable.
+<pages_parquet> is a stored pages table with at least (url, text) and,
+for language-aware gates, lang - e.g. the materialized test pages
+(tests/fixtures.py:pages_cache_path).  On a real cluster only --master
+and the memory/executor flags change; the job itself is identical.
+Prints one JSON line with row counts so the invocation is verifiable.
 """
 
 from __future__ import annotations
@@ -21,17 +23,18 @@ from pyspark.sql import SparkSession
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    if len(sys.argv) < 2:
+        sys.exit("usage: submit_job.py <pages_parquet> [out_dir]")
+    pages_path = sys.argv[1]
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/ccspark_submit_out"
 
     spark = SparkSession.builder.appName("ccspark-submit").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     from ccspark.api import CCSparkCorpus
-    from ccspark.fixtures_sql import pages_spark
     from ccspark import pipeline
 
-    pages = pages_spark(spark, sf_dir)
+    pages = spark.read.parquet(pages_path)
     cc = CCSparkCorpus(spark)
     corpus = cc.process_pages(pages)
     pipeline.write_partitioned(corpus, out_dir)

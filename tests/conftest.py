@@ -14,10 +14,3 @@ def spark():
 
     s = get_spark("ccspark-tests", cores=4, shuffle_partitions=4)
     yield s
-
-
-@pytest.fixture(scope="session")
-def duck():
-    import duckdb
-
-    return duckdb.connect()

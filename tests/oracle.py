@@ -5,9 +5,9 @@ cc_corpus.py:237-294; gensim.parsing.preprocessing's published regexes;
 alphabet_detector's unicodedata test) *directly*, using Python ``re`` with
 its native ``\\s``/``\\S`` shorthands and ``unicodedata.name`` - i.e. NOT
 via ccspark's explicit dialect-neutral character classes.  The test suite
-asserts 4-way agreement (this oracle == ccspark.pykernel == the Spark SQL
-rendering == the DuckDB rendering), so any transcription error in the
-explicit classes shows up as a parity failure here.
+asserts agreement (this oracle == ccspark.pykernel == ccspark.arrowkernel
+== the Spark SQL rendering), so any transcription error in the explicit
+classes shows up as a parity failure here.
 
 The only shared component is the emoji codepoint table
 (ccspark.regexes.EMOJI_RANGES): the reference used the `emoji` package,
@@ -22,6 +22,7 @@ scorer are checked against a model and scores computed without them.
 
 from __future__ import annotations
 
+import hashlib
 import math
 import re
 import string
@@ -194,3 +195,232 @@ def nb_predict(model, text: str, min_len: int = 0) -> str:
         return "ukn"
     scores = nb_scores(model, text)
     return max(sorted(scores), key=lambda lg: scores[lg])
+
+
+# ---------------------------------------------------------------------
+# Pure-Python restatements of the Spark SQL operators, for the fuzz and
+# the module tests.  Java regex specifics are spelled out where they
+# differ from Python re: Java's `.` stops at every line terminator, and
+# Java's \s and (?i) are ASCII-only (re.ASCII).
+
+_JAVA_DOT = "[^\n\r\u0085\u2028\u2029]"   # Java `.` without DOTALL
+
+_TRACKING_PARAMS = ("utm_source", "utm_medium", "utm_campaign", "utm_term",
+                    "utm_content", "gclid", "fbclid", "msclkid", "mc_cid",
+                    "mc_eid", "ref", "sessionid", "phpsessid", "sid")
+
+
+def normalize_url(u: str) -> str:
+    """geo.normalize_url_expr: drop the fragment; in the query part (from
+    the first '?') drop tracking params, '?&' and '&&' runs and an empty
+    tail; lowercase scheme+authority and drop its default port; drop the
+    trailing slash of a non-root path."""
+    e = u.split("#", 1)[0]
+    pre = e.split("?", 1)[0]
+    q = e[len(pre):]
+    for p in _TRACKING_PARAMS:
+        q = re.sub(f"([?&]){p}=[^&#]*", r"\1", q)
+    q = re.sub(r"\?&", "?", q)
+    q = re.sub("&&+", "&", q)
+    q = re.sub(r"[?&]+\Z", "", q)
+    m = re.match(r"[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", pre)
+    head = m.group(0).lower() if m else ""
+    head = re.sub(r"\A(http://[^/:?#]+):80\Z", r"\1", head)
+    head = re.sub(r"\A(https://[^/:?#]+):443\Z", r"\1", head)
+    tail = pre[len(m.group(0)) if m else 0:] + q
+    tail = re.sub(rf"\A(/{_JAVA_DOT}+)/\Z", r"\1", tail)
+    return head + tail
+
+
+def tld(host: str) -> str:
+    """geo.tld_expr: the last dot-label, '' when the host ends in '.'."""
+    return host.rsplit(".", 1)[-1]
+
+
+_HTML_ENTITIES = (("&nbsp;", " "), ("&lt;", "<"), ("&gt;", ">"),
+                  ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&"))
+
+
+def html_to_text(h: str) -> str:
+    """sources.html_to_text_expr: drop script/style/noscript/title blocks
+    and comments, block closers and <br> become newlines, other tags a
+    space, decode entities (&amp; last), collapse blanks, trim."""
+    for tag in ("script", "style", "noscript", "title"):
+        h = re.sub(rf"(?is)<{tag}\b.*?</{tag}>", "", h, flags=re.ASCII)
+    h = re.sub(r"(?s)<!--.*?-->", "", h)
+    h = re.sub(r"(?i)</(p|div|br|li|tr|h[1-6])>", "\n", h, flags=re.ASCII)
+    h = re.sub(r"(?i)<br\s*/?>", "\n", h, flags=re.ASCII)
+    h = re.sub(r"<[^>]*>", " ", h)
+    for ent, ch in _HTML_ENTITIES:
+        h = h.replace(ent, ch)
+    h = re.sub(r"[ \t]+", " ", h)
+    h = re.sub(r" ?\n ?", "\n", h)
+    h = re.sub(r"\n{2,}", "\n", h)
+    return h.strip(" \t\n\x0b\f\r")
+
+
+def _demarked_lower(text: str) -> str:
+    return "".join(c for c in text.lower()
+                   if not unicodedata.category(c).startswith("M"))
+
+
+def _alnum_runs(text: str, sep: str) -> str:
+    """Every run of characters outside Unicode categories L and N
+    replaced by *sep*."""
+    out, gap = [], False
+    for c in text:
+        if unicodedata.category(c)[0] in "LN":
+            if gap:
+                out.append(sep)
+            out.append(c)
+            gap = False
+        else:
+            gap = True
+    if gap:
+        out.append(sep)
+    return "".join(out)
+
+
+def norm_words(text: str) -> list:
+    """decontam.norm_words: lowercase, drop combining marks, split on
+    every non-letter/non-digit run."""
+    return [w for w in _alnum_runs(_demarked_lower(text), " ").split(" ")
+            if w]
+
+
+def word_grams(words: list, n: int) -> list:
+    return [" ".join(words[i:i + n]) for i in range(len(words) - n + 1)]
+
+
+def char_stream(text: str) -> str:
+    """decontam.char_stream: norm_words with the separators removed."""
+    return _alnum_runs(_demarked_lower(text), "")
+
+
+def char_grams(stream: str, n: int) -> list:
+    return [stream[i:i + n] for i in range(len(stream) - n + 1)]
+
+
+def overlap_hits(doc_grams, bench_grams) -> int:
+    """Distinct benchmark grams found in a doc (decontam n_hits)."""
+    return len(set(doc_grams) & set(bench_grams))
+
+
+def scrub(text: str) -> str:
+    """scrub.SCRUB_STEPS in order through Python re with re.ASCII, so
+    \\b is the ASCII word boundary."""
+    from ccspark.scrub import SCRUB_STEPS
+    for _, pat, repl in SCRUB_STEPS:
+        text = re.sub(pat, repl, text, flags=re.ASCII)
+    return text
+
+
+def _cjkish(ch: str) -> bool:
+    """A Han/Hangul/Kana letter: alphabet_detector's name test."""
+    return ch.isalpha() and any(
+        t in unicodedata.name(ch, "")
+        for t in ("CJK", "HANGUL", "HIRAGANA", "KATAKANA"))
+
+
+def c4_line_keep(line: str) -> bool:
+    """quality.c4_line_keep_expr: ends in a Latin or ideographic
+    terminal, has >= 3 ' '-separated words or >= 6 Han/Hangul/Kana
+    letters, and does not mention javascript."""
+    return (line[-1:] in tuple('.!?"。！？」』')
+            and (line.count(" ") + 1 >= 3
+                 or sum(map(_cjkish, line)) >= 6)
+            and "javascript" not in line.lower())
+
+
+def round4(x: float) -> float:
+    """Spark round(double, 4): HALF_UP on the shortest decimal repr."""
+    from decimal import ROUND_HALF_UP, Decimal
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"),
+                                           rounding=ROUND_HALF_UP))
+
+
+def c4_sentences(text: str) -> list:
+    """quality.c4_sentences_expr: newlines, a Latin terminal followed by
+    a space (the space is dropped) and an ideographic terminal end a
+    sentence; empty sentences are kept."""
+    mark = "\x1e"
+    t = text.replace("\n", mark)
+    t = re.sub(r"([.!?]) ", r"\1" + mark, t)
+    t = re.sub("([。！？])", r"\1" + mark, t)
+    return t.split(mark)
+
+
+def c4_span_dedup(docs, span: int = 3) -> dict:
+    """quality.c4_span_dedup over (doc_id, text) pairs:
+    {(doc_id, span_idx, md5(span)): keep}, a span kept only at its
+    smallest (doc_id, span_idx)."""
+    rows = {}
+    first = {}
+    for doc_id, text in docs:
+        s = c4_sentences(text)
+        for i in range(max(len(s) - span + 1, 1)):
+            sp = " ".join(s[i:i + span])
+            if not sp:
+                continue
+            h = hashlib.md5(sp.encode("utf-8")).hexdigest()
+            rows[(doc_id, i, h)] = None
+            first[h] = min(first.get(h, (doc_id, i)), (doc_id, i))
+    return {k: first[k[2]] == (k[0], k[1]) for k in rows}
+
+
+def gopher_repetition(text: str) -> tuple:
+    """quality.gopher_repetition for one doc: (top2, top3, top4, dup5
+    fractions, rep_keep).  topN = chars of the most frequent word N-gram
+    (count desc, gram asc) x its count / len(text); dup5 = the same
+    product summed over 5-grams seen more than once."""
+    words = [w for w in re.split(r"\s+", text, flags=re.ASCII) if w]
+    denom = max(len(text), 1)
+    fr = {}
+    for n in (2, 3, 4, 5):
+        cnt = Counter(word_grams(words, n))
+        if n < 5:
+            top = min(cnt.items(), key=lambda kv: (-kv[1], kv[0]),
+                      default=None)
+            chars = top[1] * len(top[0]) if top else 0
+        else:
+            chars = sum(c * len(g) for g, c in cnt.items() if c > 1)
+        fr[n] = round4(chars * 1.0 / denom)
+    from ccspark.quality import GOPHER_REP_THRESHOLDS as t
+    keep = (fr[2] <= t["max_top2_frac"] and fr[3] <= t["max_top3_frac"]
+            and fr[4] <= t["max_top4_frac"] and fr[5] <= t["max_dup5_frac"])
+    return fr[2], fr[3], fr[4], fr[5], keep
+
+
+def winnow_md5(text: str, k: int = 4, w: int = 4) -> Counter:
+    """dedup.winnow_fingerprints(hash_family='md5') for one doc:
+    {fingerprint: n_windows}.  Shingles are md5 hex of k consecutive
+    ' '-split words (one shingle of all words when there are fewer);
+    each window of w shingle positions keeps its minimum."""
+    ws = text.split(" ")
+    wins = {}
+    for i in range(max(len(ws) - k, 0) + 1):
+        h = hashlib.md5(" ".join(ws[i:i + k]).encode("utf-8")).hexdigest()
+        wins[i // w] = min(wins.get(i // w, h), h)
+    return Counter(wins.values())
+
+
+def token_budget(docs, budget) -> dict:
+    """sampling.sample_by_token_budget / sample_by_mixture over
+    (doc_id, lang, text): {doc_id: (weight, cum, kept)}.  weight = the
+    non-empty ' '-split tokens; each lang is walked in
+    (md5(f"{lang}:{doc_id}"), doc_id) order; a doc is kept when the
+    tokens before it are under *budget* - an int, or a dict by lang
+    (0 for a lang it does not name)."""
+    by_lang = {}
+    for doc_id, lang, text in docs:
+        key = hashlib.md5(f"{lang}:{doc_id}".encode()).hexdigest()
+        weight = len([t for t in text.split(" ") if t])
+        by_lang.setdefault(lang, []).append((key, doc_id, weight))
+    out = {}
+    for lang, rows in by_lang.items():
+        cum = 0
+        for _, doc_id, weight in sorted(rows):
+            cum += weight
+            b = budget.get(lang, 0) if isinstance(budget, dict) else budget
+            out[doc_id] = (weight, cum, cum - weight < b)
+    return out

@@ -1,15 +1,17 @@
-"""Cross-engine fuzz: the dual-dialect expression operators must produce
-IDENTICAL output on adversarial inputs in Spark (Java regex) and DuckDB
-(RE2) - the class of bug the driver gate would only catch if a fixture
-happened to contain the divergent input.  Deterministic seeded corpus,
-batched through ONE query per engine."""
+"""Cross-engine fuzz: the Spark SQL operators (Java regex) must agree with
+an independent rendering on adversarial inputs - the RE2 kernels in
+ccspark.arrowgate / ccspark.arrowkernel where one exists, otherwise the
+pure-Python restatements in tests/oracle.py.  Deterministic seeded
+corpora, batched through ONE Spark query per check."""
 
 from __future__ import annotations
 
 import random
 
-from ccspark import geo, sources
-from ccspark.sqlgen import DUCK, SPARK
+import pyarrow as pa
+
+from ccspark import arrowgate, decontam, geo, quality, sources
+from tests import oracle
 
 URL_ATOMS = [
     "\n", "http://", "https://", "HTTPS://", "ftp://", "", "user:pw@",
@@ -36,42 +38,43 @@ def synth(atoms, n, seed, max_parts=8):
             for _ in range(n)]
 
 
-def run_both(spark, duck, expr_fn, inputs):
-    rows = [(i, s) for i, s in enumerate(inputs)]
-    sdf = spark.createDataFrame(rows, "i int, u string")
+def spark_eval(spark, expr_fn, inputs) -> list:
+    """``expr_fn('u')`` (a Spark SQL expression over column u) on every
+    input, in input order."""
+    sdf = spark.createDataFrame(list(enumerate(inputs)), "i int, u string")
     sdf.createOrReplaceTempView("fuzz_in")
-    got_s = dict(spark.sql(
-        f"SELECT i, {expr_fn(SPARK, 'u')} FROM fuzz_in").collect())
-    duck.execute("CREATE OR REPLACE TABLE fuzz_in AS "
-                 "SELECT * FROM (VALUES (0, '')) t(i, u) WHERE false")
-    duck.executemany("INSERT INTO fuzz_in VALUES (?, ?)", rows)
-    got_d = dict(duck.sql(
-        f"SELECT i, {expr_fn(DUCK, 'u')} FROM fuzz_in").fetchall())
-    bad = [(inputs[i], got_s[i], got_d[i]) for i in got_s
-           if got_s[i] != got_d[i]]
+    got = dict(spark.sql(f"SELECT i, {expr_fn('u')} FROM fuzz_in").collect())
+    return [got[i] for i in range(len(inputs))]
+
+
+def assert_same(inputs, got, want):
+    bad = [(x, g, w) for x, g, w in zip(inputs, got, want) if g != w]
     assert not bad, bad[:3]
 
 
-def test_fuzz_normalize_url(spark, duck):
-    run_both(spark, duck, geo.normalize_url_expr,
-             synth(URL_ATOMS, 300, seed=101))
+def test_fuzz_normalize_url(spark):
+    urls = synth(URL_ATOMS, 300, seed=101)
+    assert_same(urls, spark_eval(spark, geo.normalize_url_expr, urls),
+                [oracle.normalize_url(u) for u in urls])
 
 
-def test_fuzz_domain_and_tld(spark, duck):
+def test_fuzz_domain_and_tld(spark):
     hosts = synth(["www.", "a.", "b-c.", "x", "co.", "gov.", "uk", "de",
                    "bd", "ck", "kawasaki.jp", "sch.uk", ".", "..",
                    "xn--p1ai", "127.0.0.1", ""], 300, seed=202,
                   max_parts=5)
 
-    def both(d, col):
-        return f"concat({geo.tld_expr(d, col)}, '|', " \
-               f"{geo.domain_expr(d, col)})"
-    run_both(spark, duck, both, hosts)
+    def both(col):
+        return f"concat({geo.tld_expr(col)}, '|', {geo.domain_expr(col)})"
+    assert_same(hosts, spark_eval(spark, both, hosts),
+                [f"{oracle.tld(h)}|{geo.registrable_domain(h)}"
+                 for h in hosts])
 
 
-def test_fuzz_html_to_text(spark, duck):
-    run_both(spark, duck, sources.html_to_text_expr,
-             synth(HTML_ATOMS, 300, seed=303, max_parts=12))
+def test_fuzz_html_to_text(spark):
+    docs = synth(HTML_ATOMS, 300, seed=303, max_parts=12)
+    assert_same(docs, spark_eval(spark, sources.html_to_text_expr, docs),
+                [oracle.html_to_text(h) for h in docs])
 
 
 QUALITY_ATOMS = [
@@ -80,34 +83,69 @@ QUALITY_ATOMS = [
     "end.", "uh?", "wow!", "\t", "\r", "mixed2tok", "", "of and that",
 ]
 
+# every Gopher gate relaxed, so that one gate alone decides
+_RELAXED = dict(
+    min_words=0, max_words=10 ** 9,
+    min_mean_word_len=0.0, max_mean_word_len=1e9,
+    max_symbol_word_ratio=1e9,
+    max_bullet_frac=1e9, max_ellipsis_frac=1e9,
+    min_alpha_word_frac=0.0, min_stopword_hits=0,
+    max_dup_line_frac=1e9, max_dup_line_char_frac=1e9,
+)
+_GATE_SIGNAL = {
+    "min_words": "n_words", "max_words": "n_words",
+    "min_mean_word_len": "mean_word_len",
+    "max_mean_word_len": "mean_word_len",
+    "max_symbol_word_ratio": "symbol_word_ratio",
+    "max_bullet_frac": "bullet_frac", "max_ellipsis_frac": "ellipsis_frac",
+    "min_alpha_word_frac": "alpha_word_frac",
+    "min_stopword_hits": "stopword_hits",
+    "max_dup_line_frac": "dup_line_frac",
+    "max_dup_line_char_frac": "dup_line_char_frac",
+}
 
-def test_fuzz_gopher_signals(spark, duck):
-    """Every Gopher signal fragment must agree cross-engine on
-    adversarial text (regexp_count vs regexp_extract_all, \\p{L} classes,
-    LIKE-in-lambda, char counting)."""
-    from ccspark import quality
-    texts = synth(QUALITY_ATOMS, 250, seed=404, max_parts=15)
 
-    def all_signals(d, col):
-        sig = quality.gopher_signal_exprs(d, col)
-        parts = [f"cast({e} AS varchar)" if d == DUCK else
-                 f"cast({e} AS string)" for e in sig.values()]
-        return "concat_ws('|', " + ", ".join(parts) + ")"
-    run_both(spark, duck, all_signals, texts)
+def test_fuzz_gopher_signals(spark):
+    """The Catalyst Gopher gate (regexp_count, \\p{L} classes,
+    LIKE-in-lambda, char counting) must give the RE2 gate's verdicts on
+    adversarial text: at the default thresholds, and with each gate
+    alone deciding at a threshold equal to an observed signal value, so
+    every signal is compared on both sides of a boundary."""
+    # the second corpus repeats non-empty lines (dup_line_char_frac)
+    texts = (synth(QUALITY_ATOMS, 250, seed=404, max_parts=15)
+             + synth(QUALITY_ATOMS + ["\nsame line", "\nsame line\n"],
+                     250, seed=405, max_parts=15))
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    arr = pa.array(texts, type=pa.string())
+
+    def verdicts(th):
+        got = {r.i: r.gopher_keep for r in quality.gopher_quality(
+            df, thresholds=th, signals=False).collect()}
+        spark_keep = [got[i] for i in range(len(texts))]
+        assert_same(texts, spark_keep,
+                    arrowgate.gopher_keep_batch(arr, thresholds=th).tolist())
+        return set(spark_keep)
+
+    verdicts(None)   # short fuzz texts: the defaults reject them all
+    signals = {r.i: r for r in quality.gopher_quality(df).collect()}
+    for gate, sig in _GATE_SIGNAL.items():
+        values = sorted({signals[i][sig] for i in signals})
+        assert len(values) >= 2, sig
+        th = dict(_RELAXED, **{gate: values[len(values) // 2]})
+        assert verdicts(th) == {True, False}, gate
 
 
-def test_fuzz_c4_gates(spark, duck):
-    from ccspark import quality
+def test_fuzz_c4_gates(spark):
     texts = synth(QUALITY_ATOMS + ["First one. Second! Third?",
                                    "lorem ipsum", "{", "javascript"],
                   250, seed=505, max_parts=10)
-
-    def gates(d, col):
-        page = quality.c4_page_keep_expr(d, col)
-        line = quality.c4_line_keep_expr(d, col)
-        return (f"concat(cast({page} AS {'string' if d == SPARK else 'varchar'}), '|', "
-                f"cast({line} AS {'string' if d == SPARK else 'varchar'}))")
-    run_both(spark, duck, gates, texts)
+    page = spark_eval(spark, quality.c4_page_keep_expr, texts)
+    want = arrowgate.c4_keep_batch(pa.array(texts, type=pa.string()))
+    assert_same(texts, page, [bool(x) for x in want])
+    assert set(page) == {True, False}
+    line = spark_eval(spark, quality.c4_line_keep_expr, texts)
+    assert_same(texts, line, [oracle.c4_line_keep(t) for t in texts])
+    assert set(line) == {True, False}
 
 
 TEXT_ATOMS = [
@@ -120,22 +158,26 @@ TEXT_ATOMS = [
 ]
 
 
-def test_fuzz_decontam_norm_and_grams(spark, duck):
-    """The decontamination normalizer + gram template must agree byte
-    for byte across engines on adversarial unicode/punctuation text -
-    incl. the Turkish-İ Java-vs-ICU lower() divergence the \\p{M} strip
-    pins (found by this fuzz)."""
-    from ccspark import decontam
+def test_fuzz_decontam_norm_and_grams(spark):
+    """The decontamination normalizer + gram template must match the
+    Python restatement byte for byte on adversarial unicode/punctuation
+    text - incl. the Turkish 'İ', which the JVM lowers to i + U+0307
+    and the \\p{M} strip pins to a plain i."""
 
-    def norm_join(d, col):
-        w = decontam.norm_words(d, col)
-        g = decontam.gram_array(d, w, 3)   # 3-grams: short texts hit too
-        join = "array_join" if d == SPARK else "array_to_string"
-        return (f"concat({join}({w}, chr(7)), chr(7), chr(7), "
-                f"{join}({g}, chr(7)))")
+    def norm_join(col):
+        w = decontam.norm_words(col)
+        g = decontam.gram_array(w, 3)   # 3-grams: short texts hit too
+        return (f"concat(array_join({w}, chr(7)), chr(7), chr(7), "
+                f"array_join({g}, chr(7)))")
 
-    run_both(spark, duck, norm_join,
-             synth(TEXT_ATOMS, 250, seed=303, max_parts=12))
+    def want(t):
+        w = oracle.norm_words(t)
+        return (chr(7).join(w) + chr(7) * 2
+                + chr(7).join(oracle.word_grams(w, 3)))
+
+    texts = synth(TEXT_ATOMS, 250, seed=303, max_parts=12)
+    assert_same(texts, spark_eval(spark, norm_join, texts),
+                [want(t) for t in texts])
 
 
 PII_ATOMS = [
@@ -145,14 +187,38 @@ PII_ATOMS = [
     "999.999.999.999", "12345678901234567890", "word ", "end",
     "\n", "--", "  ", "4111-1111", "1111 1111",
 ]
+# non-ASCII letters and digits next to digit runs (Java's \b would count
+# them as word characters), overlapping classes, empty lines
+PII_ATOMS_2 = PII_ATOMS + [
+    "é", "ü", "٣", "中", "4111111111111111", "123-45-6789",
+    "10.0.42.7.1", "(555) 123-4567", "x@10.0.42.7", "\n\n", "_",
+]
+PII_CASES = [
+    "é4111111111111111", "4111111111111111é", "ü4111 1111 1111 1111",
+    "٣4111111111111111", "中4111111111111111", "a4111111111111111",
+    " 4111111111111111 ", "4111-1111-1111-1111", "", "\n", "\n\n",
+    "call 555-123-4567 or é555-123-4567", "ssn 123-45-6789 ip 10.0.0.1",
+    "mail é@x.com or ü.x@y.org", "٣٤٥ 4111 1111 1111 1111٣",
+]
 
 
-def test_fuzz_pii_chain(spark, duck):
-    """The ordered email/ssn/ip/cc/phone regexp_replace chain (now a
-    GRADED cross-engine surface via the injected pii_scrub lines) must
-    scrub adversarial digit/dash/space/at soups identically in Java
-    regex and RE2 - \b boundaries, class precedence and replace-all
-    semantics included."""
-    from ccspark.queries import pii_chain
-    run_both(spark, duck, lambda d, e: pii_chain(d, e),
-             synth(PII_ATOMS, 400, seed=777))
+def test_fuzz_pii_chain(spark):
+    """The ordered email/ssn/ip/cc/phone chain, three ways: Catalyst
+    (scrub.scrub_col, Java regex), the RE2 batch UDF
+    (arrowkernel.make_scrub_udf) and Python re.ASCII (oracle.scrub) -
+    \\b boundaries (ASCII next to é, ü, ٣, 中), class precedence and
+    replace-all semantics included."""
+    import pandas as pd
+
+    from ccspark import arrowkernel, scrub
+
+    texts = (synth(PII_ATOMS, 400, seed=777)
+             + synth(PII_ATOMS_2, 400, seed=778) + PII_CASES)
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, u string")
+    got = dict(df.select("i", scrub.scrub_col("u")).collect())
+    catalyst = [got[i] for i in range(len(texts))]
+    re2 = arrowkernel.make_scrub_udf().func(pd.Series(texts)).tolist()
+    want = [oracle.scrub(t) for t in texts]
+    assert_same(texts, re2, want)
+    assert_same(texts, catalyst, want)
+    assert oracle.scrub("é4111111111111111") == "é<CC>"

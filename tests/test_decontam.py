@@ -3,8 +3,8 @@
 Covers: planted contamination on a crafted corpus (including a verbatim
 copy and a case/punctuation-mangled copy that normalization must still
 catch), the sub-n-word degenerate path, multi-gram benchmark texts,
-the filtering form, module == SQL-template parity on the driver fixture,
-and the corpus-shuffle-free plan shape."""
+the filtering form, module == pure-Python overlap (tests/oracle.py) on
+the documents fixture, and the corpus-shuffle-free plan shape."""
 
 from __future__ import annotations
 
@@ -12,11 +12,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from ccspark import decontam
-from ccspark.queries import (DECON_CHAR_N, DECON_N, _decon_bench_sql,
-                             _decon_char_bench_sql, q_decontamination)
-from ccspark.sqlgen import SPARK
+from tests import oracle
 
 SF_DIR = "/root/testdata/sf0.01"
+DECON_N = 13
+DECON_CHAR_N = 20
 
 # 16 distinct words: every 13-gram of this text is unique to it
 _EVAL = ("alpha bravo charlie delta echo foxtrot golf hotel india "
@@ -81,33 +81,64 @@ def test_gram_array_degenerate(spark):
     n_words = len(_EVAL.split())
     df = spark.createDataFrame([(_EVAL,), ("two words",), ("",)],
                                "text string")
-    words = F.expr(decontam.norm_words(SPARK, "text"))
+    words = F.expr(decontam.norm_words("text"))
     grams = df.select(F.expr(
-        f"size({decontam.gram_array(SPARK, decontam.norm_words(SPARK, 'text'), DECON_N)})"
+        f"size({decontam.gram_array(decontam.norm_words('text'), DECON_N)})"
     ).alias("n"))
     assert [r["n"] for r in grams.collect()] == [n_words - DECON_N + 1, 0, 0]
     assert df.select(words).first()[0][:2] == ["alpha", "bravo"]
 
 
+def _fixture_benchmarks(docs):
+    """Benchmark texts planted from the fixture itself: every 29th doc
+    with >= 16 normalized words gives its words 4..16 as one 13-word
+    prompt, every 31st doc with >= 27 normalized chars gives chars 8..27
+    as one 20-char prompt - those docs (and any doc sharing the span)
+    are contaminated by construction - plus one control prompt per
+    branch that can never match."""
+    word = {" ".join(f"zzdecon{i}" for i in range(DECON_N))}
+    char = {"zqxjv" * 4}
+    for doc_id, text in docs:
+        w = oracle.norm_words(text)
+        if doc_id % 29 == 0 and len(w) >= DECON_N + 3:
+            word.add(" ".join(w[3:3 + DECON_N]))
+        cs = oracle.char_stream(text)
+        if doc_id % 31 == 0 and len(cs) >= 7 + DECON_CHAR_N:
+            char.add(cs[7:7 + DECON_CHAR_N])
+    return sorted(word), sorted(char)
+
+
 def test_module_matches_sql_template(spark):
     """Both production xxhash64 broadcast paths (word + char branch)
-    must equal the pure-SQL string-overlap rendering of the SAME
-    tag-union template on the driver fixture (the DuckDB rendering of
-    which is the graded oracle)."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    docs.createOrReplaceTempView("documents")
-    sql_out = {(r["tag"], r["doc_id"]): (r["contaminated"], r["n_hits"])
-               for r in spark.sql(q_decontamination(SPARK)).collect()}
-    d2 = docs.select("doc_id", "text")
-    word = decontam.decontaminate(d2, spark.sql(_decon_bench_sql(SPARK)))
+    must equal the pure-Python string-overlap count (tests/oracle.py)
+    on the documents fixture."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
+        .select("doc_id", "text")
+    rows = [(r.doc_id, r.text) for r in docs.collect()]
+    word_bench, char_bench = _fixture_benchmarks(rows)
+    word = decontam.decontaminate(
+        docs, spark.createDataFrame([(t,) for t in word_bench], "text string"))
     chars = decontam.decontaminate_chars(
-        d2, spark.sql(_decon_char_bench_sql(SPARK)), n=DECON_CHAR_N)
+        docs, spark.createDataFrame([(t,) for t in char_bench], "text string"),
+        n=DECON_CHAR_N)
     mod_out = {("word", r["doc_id"]): (r["contaminated"], r["n_hits"])
                for r in word.collect()}
     mod_out.update({("char", r["doc_id"]): (r["contaminated"],
                                             r["n_char_hits"])
                     for r in chars.collect()})
-    assert mod_out == sql_out
+    bench_w = [g for t in word_bench
+               for g in oracle.word_grams(oracle.norm_words(t), DECON_N)]
+    bench_c = [g for t in char_bench
+               for g in oracle.char_grams(oracle.char_stream(t), DECON_CHAR_N)]
+    want = {}
+    for doc_id, text in rows:
+        nw = oracle.overlap_hits(
+            oracle.word_grams(oracle.norm_words(text), DECON_N), bench_w)
+        nc = oracle.overlap_hits(
+            oracle.char_grams(oracle.char_stream(text), DECON_CHAR_N), bench_c)
+        want["word", doc_id] = (nw > 0, nw)
+        want["char", doc_id] = (nc > 0, nc)
+    assert mod_out == want
     # both branches really plant hits AND leave clean docs (vacuity rule)
     for tag in ("word", "char"):
         verdicts = {v[0] for (t, _), v in mod_out.items() if t == tag}
@@ -187,14 +218,14 @@ def test_char_gram_normalization_mangling(spark):
 
 def test_char_gram_array_degenerate(spark):
     """Streams shorter than n chars yield an empty gram set; exactly n
-    chars yield one gram (cross-dialect length/substring semantics are
-    code-point based, asserted on multibyte text)."""
+    chars yield one gram (length/substring count code points, asserted
+    on multibyte text)."""
     df = spark.createDataFrame(
         [(_ZH_EVAL,), ("短い",), ("",), ("0123456789abcdefghij",)],
         "text string")
     n_stream = len(_ZH_EVAL.replace(" ", ""))
     got = [r["n"] for r in df.select(F.expr(
-        f"size({decontam.char_gram_array(SPARK, decontam.char_stream(SPARK, 'text'), 20)})"
+        f"size({decontam.char_gram_array(decontam.char_stream('text'), 20)})"
     ).alias("n")).collect()]
     assert got == [n_stream - 20 + 1, 0, 0, 1]
 
@@ -236,13 +267,11 @@ def test_combined_plan_runs_word_grams_once(spark):
     assert plan.count("BroadcastHashJoin") == 4, plan
 
 
-def test_char_grams_supplementary_plane(spark, duck):
+def test_char_grams_supplementary_plane(spark):
     """CJK Extension B+ ideographs (U+20000+) ARE \\p{L}: they survive
-    normalization and must occupy exactly ONE code-point position in
-    BOTH engines (r6 ADVICE fix - the old char_gram_array comment
-    claimed astral chars never reach the stream).  Asserts stream
-    length and the full gram array agree bitwise across dialects."""
-    from ccspark.sqlgen import DUCK
+    normalization and must occupy exactly ONE code-point position.
+    Asserts stream length and the full gram array against values
+    computed in Python."""
     ext_b = "".join(chr(0x20000 + i) for i in range(12))   # 𠀀𠀁...
     texts = [
         ext_b + "春江潮水连海平海上明月共潮生",        # astral + BMP mix
@@ -250,27 +279,18 @@ def test_char_grams_supplementary_plane(spark, duck):
         ext_b,                                            # astral only
     ]
     n = 8
-    rows = [(i, t) for i, t in enumerate(texts)]
-    sdf = spark.createDataFrame(rows, "i int, t string")
+    sdf = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
     sdf.createOrReplaceTempView("sp_in")
-    expr_s = decontam.char_gram_array(
-        SPARK, decontam.char_stream(SPARK, "t"), n)
-    got_s = dict(spark.sql(
-        f"SELECT i, concat_ws('|', {expr_s}) FROM sp_in").collect())
-    len_s = dict(spark.sql(
-        f"SELECT i, length({decontam.char_stream(SPARK, 't')}) "
-        f"FROM sp_in").collect())
-    duck.execute("CREATE OR REPLACE TABLE sp_in AS "
-                 "SELECT * FROM (VALUES (0, '')) x(i, t) WHERE false")
-    duck.executemany("INSERT INTO sp_in VALUES (?, ?)", rows)
-    expr_d = decontam.char_gram_array(
-        DUCK, decontam.char_stream(DUCK, "t"), n)
-    got_d = dict(duck.sql(
-        f"SELECT i, array_to_string({expr_d}, '|') FROM sp_in").fetchall())
-    len_d = dict(duck.sql(
-        f"SELECT i, length({decontam.char_stream(DUCK, 't')}) "
-        f"FROM sp_in").fetchall())
-    assert len_s == len_d
-    assert got_s == got_d
+    stream = decontam.char_stream("t")
+    got = {r[0]: (r[1], r[2]) for r in spark.sql(
+        f"SELECT i, length({stream}), "
+        f"concat_ws('|', {decontam.char_gram_array(stream, n)}) "
+        f"FROM sp_in").collect()}
+    streams = [ext_b + "春江潮水连海平海上明月共潮生",
+               "abc" + ext_b + "xyz0123456789", ext_b]
+    assert [oracle.char_stream(t) for t in texts] == streams
+    for i, cs in enumerate(streams):
+        grams = [cs[j:j + n] for j in range(len(cs) - n + 1)]
+        assert got[i] == (len(cs), "|".join(grams)), i
     # the astral-only stream really does produce grams (12 chars, n=8)
-    assert got_s[2].count("|") == 12 - n  # 5 grams -> 4 separators
+    assert got[2][1].count("|") == 12 - n  # 5 grams -> 4 separators

@@ -1,19 +1,14 @@
-"""geo helper expressions: crawl period extraction (X6)."""
+"""geo helper expressions: crawl period extraction (X6), the PSL
+registrable domain, URL normalization."""
 
 from ccspark import geo
-from ccspark.sqlgen import DUCK, SPARK
 
 
-def test_crawl_period_expr_both_dialects(spark, duck):
-    e_s = geo.crawl_period_expr(SPARK, "seg")
-    got_s = spark.sql(
-        f"SELECT {e_s} AS p FROM (SELECT 'CC-MAIN-2022-40.1234.wet' AS seg)"
-    ).collect()[0].p
-    e_d = geo.crawl_period_expr(DUCK, "seg")
-    got_d = duck.sql(
-        f"SELECT {e_d} AS p FROM (SELECT 'CC-MAIN-2022-40.1234.wet' AS seg)"
-    ).fetchone()[0]
-    assert got_s == got_d == "2022-40"
+def test_crawl_period_expr_both_dialects(spark):
+    got = spark.sql(
+        f"SELECT {geo.crawl_period_expr('seg')} AS p "
+        f"FROM (SELECT 'CC-MAIN-2022-40.1234.wet' AS seg)").collect()[0].p
+    assert got == "2022-40"
 
 
 # tldextract's outputs on these hosts (hand-verified against the PSL
@@ -78,19 +73,14 @@ def test_psl_registrable_domain_python_twin():
         assert geo.registrable_domain(host) == want, host
 
 
-def test_psl_domain_expr_matches_twin_both_dialects(spark, duck):
+def test_psl_domain_expr_matches_twin_both_dialects(spark):
     hosts = sorted(PSL_CASES)
-    vals = ", ".join(f"('{h}')" for h in hosts)
-    q_d = (f"SELECT host, {geo.domain_expr(DUCK, 'host')} AS dom "
-           f"FROM (VALUES {vals}) t(host)")
-    got_d = dict(duck.sql(q_d).fetchall())
     sdf = spark.createDataFrame([(h,) for h in hosts], "host string")
     sdf.createOrReplaceTempView("psl_hosts")
-    q_s = (f"SELECT host, {geo.domain_expr(SPARK, 'host')} AS dom "
+    q_s = (f"SELECT host, {geo.domain_expr('host')} AS dom "
            f"FROM psl_hosts")
     got_s = dict(spark.sql(q_s).collect())
     for h in hosts:
-        assert got_d[h] == PSL_CASES[h], ("duck", h, got_d[h])
         assert got_s[h] == PSL_CASES[h], ("spark", h, got_s[h])
 
 
@@ -131,36 +121,36 @@ URL_NORM_CASES = {
 }
 
 
-def test_normalize_url_expr_both_dialects(spark, duck):
-    urls = sorted(URL_NORM_CASES)
-    vals = ", ".join(f"('{u}')" for u in urls)
-    got_d = dict(duck.sql(
-        f"SELECT u, {geo.normalize_url_expr(DUCK, 'u')} "
-        f"FROM (VALUES {vals}) t(u)").fetchall())
+def _normalize(spark, urls, nest=1):
+    """{url: normalize_url_expr applied *nest* times}."""
+    e = "u"
+    for _ in range(nest):
+        e = f"({geo.normalize_url_expr(e)})"
     spark.createDataFrame([(u,) for u in urls], "u string") \
         .createOrReplaceTempView("norm_urls")
-    got_s = dict(spark.sql(
-        f"SELECT u, {geo.normalize_url_expr(SPARK, 'u')} "
-        f"FROM norm_urls").collect())
+    return dict(spark.sql(f"SELECT u, {e} FROM norm_urls").collect())
+
+
+def test_normalize_url_expr_both_dialects(spark):
+    """The Spark rendering and the Python restatement the fuzz compares
+    it with (tests/oracle.py) both give the hand-written expectations."""
+    from tests import oracle
+    got_s = _normalize(spark, sorted(URL_NORM_CASES))
     for u, want in URL_NORM_CASES.items():
-        assert got_d[u] == want, ("duck", u, got_d[u])
         assert got_s[u] == want, ("spark", u, got_s[u])
+        assert oracle.normalize_url(u) == want, ("oracle", u)
 
 
-def test_normalize_url_is_idempotent(duck):
+def test_normalize_url_is_idempotent(spark):
     """norm(norm(u)) == norm(u) - normalized URLs are fixed points, so
     re-running the canonicalizer over already-clean data is a no-op."""
     urls = list(URL_NORM_CASES) + [
         "https://a.b/c?x=1&utm_source=s&y=2#z",
         "http://H.DE:80/", "https://h.de", "no scheme at all",
     ]
-    vals = ", ".join(f"('{u}')" for u in urls)
-    one = geo.normalize_url_expr(DUCK, "u")
-    two = geo.normalize_url_expr(DUCK, f"({one})")
-    rows = duck.sql(f"SELECT {one}, {two} FROM (VALUES {vals}) t(u)") \
-        .fetchall()
-    for a, b in rows:
-        assert a == b, (a, b)
+    one, two = _normalize(spark, urls), _normalize(spark, urls, nest=2)
+    for u in urls:
+        assert one[u] == two[u], (u, one[u], two[u])
 
 
 def test_psl_parser_rejects_malformed_rules():

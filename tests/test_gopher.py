@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import Row
 
 from ccspark import quality
+from tests import oracle
 
 GOOD_LINE = ("the quick brown fox jumps over and over that lazy dog to "
              "be of service and have fun with every word in this line")
@@ -94,23 +95,30 @@ def test_c4_page_gates(spark):
     assert kept == {0}
 
 
-def test_c4_span_dedup_module_matches_sql_twin(spark):
-    """The DataFrame op and the SQL template must mark identical
-    (doc_id, span_idx, keep) sets on the driver fixture."""
-    from ccspark import queries as Q
-    from ccspark.fixtures_sql import pages_spark
+def _fixture_pages(spark):
+    """The sf0.001 pages plus two planted docs, so both verdicts occur:
+    a replay of the first page (its spans are not first occurrences) and
+    a varied page that passes the repetition gate."""
+    from tests.fixtures import pages_spark
     sf = "/root/testdata/sf0.001"
     pages = pages_spark(spark, sf)
+    rows = [(r.doc_id, r.text)
+            for r in pages.select("doc_id", "text").collect()]
+    rows += [(10 ** 6, min(rows)[1]),
+             (10 ** 6 + 1, " ".join(f"word{i} token{i * 7 % 13} item{i}"
+                                    for i in range(120)))]
+    return spark.createDataFrame(rows, "doc_id long, text string"), rows
+
+
+def test_c4_span_dedup_module_matches_sql_twin(spark):
+    """The DataFrame op marks the same (doc_id, span_idx, span_hash,
+    keep) set as the pure-Python restatement (tests/oracle.py) on the
+    pages fixture."""
+    pages, rows = _fixture_pages(spark)
     mod = {(r.doc_id, r.span_idx, r.span_hash): r.keep
            for r in quality.c4_span_dedup(pages).collect()}
-    Q.ensure_views(spark, sf)
-    # module posexplode is 0-based; the SQL template is 1-based; the
-    # template also replays docs 0-1 under high ids (drop-side grading)
-    # - replays sort last so real docs' keepers are unchanged
-    sql = {(r.doc_id, r.span_idx - 1, r.span_hash): r.keep
-           for r in spark.sql(Q.q_c4_span_dedup(Q.SPARK)).collect()
-           if r.doc_id < 1000000}
-    assert mod == sql
+    assert mod == oracle.c4_span_dedup(rows)
+    assert set(mod.values()) == {True, False}
     # exactly one keeper per hash, and it is the (doc_id, span_idx) min
     by_hash = {}
     for (doc, idx, h), keep in mod.items():
@@ -121,19 +129,14 @@ def test_c4_span_dedup_module_matches_sql_twin(spark):
 
 
 def test_gopher_repetition_module_matches_sql_twin(spark):
-    from ccspark import queries as Q
-    from ccspark.fixtures_sql import pages_spark
-    sf = "/root/testdata/sf0.001"
-    pages = pages_spark(spark, sf)
+    """Per-doc repetition fractions and verdicts == the pure-Python
+    restatement (tests/oracle.py) on the pages fixture."""
+    pages, rows = _fixture_pages(spark)
     mod = {r.doc_id: (r.top2_frac, r.top3_frac, r.top4_frac, r.dup5_frac,
                       r.rep_keep)
            for r in quality.gopher_repetition(pages).collect()}
-    Q.ensure_views(spark, sf)
-    sql = {r.doc_id: (r.top2_frac, r.top3_frac, r.top4_frac, r.dup5_frac,
-                      r.rep_keep)
-           for r in spark.sql(Q.q_gopher_repetition(Q.SPARK)).collect()
-           if r.doc_id >= 0}   # template injects a rep_keep=True page
-    assert mod == sql
+    assert mod == {d: oracle.gopher_repetition(t) for d, t in rows}
+    assert {v[4] for v in mod.values()} == {True, False}
 
 
 def test_gopher_repetition_flags_looping_text(spark):
@@ -195,8 +198,7 @@ def test_gopher_udf_gate_matches_expression_gate(spark):
     """The pandas-UDF gate must be verdict-identical to the expression
     gate on the fixture pages, every purpose-built violating doc, nulls,
     and round(.,4) threshold-boundary cases."""
-    from ccspark.fixtures_sql import pages_spark
-    from ccspark import queries as Q
+    from tests.fixtures import pages_spark
     frames = [
         pages_spark(spark, "/root/testdata/sf0.001").select("doc_id",
                                                             "text"),
@@ -209,7 +211,7 @@ def test_gopher_udf_gate_matches_expression_gate(spark):
                Row(doc_id=202, text=" ".join(["abc"] * 60) + " x y")],
             "doc_id long, text string"),
     ]
-    for th in (None, Q.TRAINING_GOPHER_TH):
+    for th in (None, {}):
         for df in frames:
             a = {r.doc_id: r.gopher_keep for r in quality.gopher_quality(
                 df, signals=False, thresholds=th).collect()}
@@ -273,31 +275,25 @@ def test_lang_aware_gate_semantics(spark):
     assert got == ML_EXPECT
 
 
-def test_lang_aware_udf_matches_expr_and_duckdb(spark, duck):
+def test_lang_aware_udf_matches_expr_and_arrow(spark):
     """Three-way verdict parity for the language-aware gate: production
-    pandas UDF == Spark expression rendering == DuckDB rendering, incl.
-    signal values."""
-    from ccspark.sqlgen import DUCK, SPARK
+    pandas UDF == Spark expression rendering ==
+    arrowgate.gopher_keep_batch, all equal to ML_EXPECT."""
+    import pyarrow as pa
+
+    from ccspark import arrowgate
     df = _ml_df(spark)
-    expr_rows = {r.doc_id: (r.gopher_keep, r.n_words, r.stopword_hits)
-                 for r in quality.gopher_quality(
-                     df, lang_col="lang").collect()}
+    expr_rows = {r.doc_id: r.gopher_keep for r in quality.gopher_quality(
+        df, lang_col="lang").collect()}
     udf_rows = {r.doc_id: r.gopher_keep for r in quality.gopher_quality(
         df, lang_col="lang", engine="udf").collect()}
-    sig = quality.gopher_signal_exprs_ml(DUCK)
-    keep = quality.gopher_keep_ml_expr(DUCK)
-    duck.execute("CREATE OR REPLACE TABLE mlq(doc_id bigint, lang varchar,"
-                 " text varchar)")
-    duck.executemany("INSERT INTO mlq VALUES (?,?,?)",
-                     [(i, lg, tx)
-                      for i, (lg, tx) in enumerate(ML_DOCS.values())])
-    duck_rows = {r[0]: (r[1], r[2], r[3]) for r in duck.execute(
-        f"SELECT doc_id, {keep}, {sig['n_words']}, {sig['stopword_hits']} "
-        f"FROM mlq").fetchall()}
-    for i in expr_rows:
-        assert bool(expr_rows[i][0]) == udf_rows[i] == bool(duck_rows[i][0]), i
-        assert expr_rows[i][1] == duck_rows[i][1], i    # n_words
-        assert expr_rows[i][2] == duck_rows[i][2], i    # stopword_hits
+    arrow = arrowgate.gopher_keep_batch(
+        pa.array([tx for _, tx in ML_DOCS.values()], type=pa.string()),
+        pa.array([lg for lg, _ in ML_DOCS.values()], type=pa.string()))
+    for i, name in enumerate(ML_DOCS):
+        want = ML_EXPECT[name]
+        assert bool(expr_rows[i]) == udf_rows[i] == bool(arrow[i]) == want, \
+            name
 
 
 def test_facade_composite_keeps_valid_cjk_page(spark):
@@ -320,10 +316,9 @@ def test_facade_composite_keeps_valid_cjk_page(spark):
     assert all("中文页面" in r.text for r in out)
 
 
-def test_c4_line_gate_accepts_cjk_terminal_punctuation(spark, duck):
+def test_c4_line_gate_accepts_cjk_terminal_punctuation(spark):
     """C4 line gate: a CJK line ending in 。 with no spaces passes; the
-    same line without terminal punctuation fails - in both engines."""
-    from ccspark.sqlgen import DUCK, SPARK
+    same line without terminal punctuation fails."""
     cases = {
         "这是一个足够长的中文句子可以通过最小字数要求。": True,
         "这是一个足够长的中文句子可以通过最小字数要求": False,  # no terminal
@@ -333,12 +328,9 @@ def test_c4_line_gate_accepts_cjk_terminal_punctuation(spark, duck):
     }
     for line, want in cases.items():
         s = spark.sql(
-            "SELECT " + quality.c4_line_keep_expr(SPARK, "l")
+            "SELECT " + quality.c4_line_keep_expr("l")
             + f" AS k FROM (SELECT '{line}' AS l)").collect()[0].k
-        d = duck.execute(
-            "SELECT " + quality.c4_line_keep_expr(DUCK, "l")
-            + f" AS k FROM (SELECT '{line}' AS l)").fetchone()[0]
-        assert s == d == want, (line, s, d)
+        assert s == want, (line, s)
 
 
 def test_arrow_gate_matches_py_gate(spark):
@@ -388,14 +380,14 @@ def test_arrow_gate_matches_py_gate(spark):
     assert [bool(x) for x in exp_st] == [bool(x) for x in got_st]
 
 
-def test_c4_arrow_gate_matches_duckdb_expr(duck):
-    """arrowgate.c4_keep_batch == the DuckDB rendering of
-    c4_page_keep_expr on crafted boundary docs (sentence-count edges,
-    ideographic terminals, bad substrings, nulls)."""
+def test_c4_arrow_gate_matches_spark_expr(spark):
+    """arrowgate.c4_keep_batch (RE2) == the Spark rendering of
+    c4_page_keep_expr (Java regex) on crafted boundary docs
+    (sentence-count edges, ideographic terminals, bad substrings,
+    nulls)."""
     import pyarrow as pa
 
     from ccspark import arrowgate
-    from ccspark.sqlgen import DUCK
 
     s4 = "One two. Three four. Five six. Seven eight."      # 4 sentences
     s5 = s4 + " Nine ten."                                   # 5 sentences
@@ -411,14 +403,15 @@ def test_c4_arrow_gate_matches_duckdb_expr(duck):
     ]
     got = [bool(x) for x in arrowgate.c4_keep_batch(
         pa.array(docs, type=pa.string()))]
-    duck.execute("CREATE OR REPLACE TABLE c4t(i bigint, text varchar)")
-    duck.executemany("INSERT INTO c4t VALUES (?,?)",
-                     list(enumerate(docs)))
-    exp_rows = duck.execute(
-        f"SELECT i, {quality.c4_page_keep_expr(DUCK)} FROM c4t ORDER BY i"
-    ).fetchall()
+    spark.createDataFrame(list(enumerate(docs)), "i long, text string") \
+        .createOrReplaceTempView("c4t")
+    exp_rows = spark.sql(
+        f"SELECT i, {quality.c4_page_keep_expr()} FROM c4t ORDER BY i"
+    ).collect()
     exp = [bool(v) if v is not None else False for _, v in exp_rows]
     assert got == exp, list(zip(docs, got, exp))
+    assert got == [False, True, True, True, False, False, False, False,
+                   False, True]
 
 
 def _expr_rollup(df, lang_col, min_keep_frac):
@@ -438,7 +431,7 @@ def test_domain_rollup_matches_expression_gate_rollup(spark):
     keep_frac and domain_keep equal a rollup over the expression gate on
     the fixture's geo pages, language-blind and language-aware."""
     from ccspark import pipeline
-    from ccspark.fixtures_sql import pages_spark
+    from tests.fixtures import pages_spark
     geo = pipeline.with_geo(pages_spark(spark, "/root/testdata/sf0.001"))
     for lang_col in (None, "lang"):
         got = {r.domain: (r.n_pages, r.keep_frac, r.domain_keep)

@@ -1,11 +1,11 @@
-"""4-way parity of the keep/drop kernel on boundary fixtures:
+"""Parity of the keep/drop kernel on boundary fixtures:
 
     tests/oracle.py (independent Python-re + unicodedata transcription)
- == ccspark.pykernel (production pandas-UDF kernel, explicit classes)
- == Spark SQL rendering (ccspark.kernel, SPARK dialect)
- == DuckDB rendering   (ccspark.kernel, DUCK dialect)
+ == ccspark.pykernel (per-row pandas-UDF kernel, explicit classes)
+ == ccspark.arrowkernel (whole-batch Arrow/RE2 kernel)
+ == Spark SQL rendering (ccspark.kernel)
 
-plus hand-derived hard expectations so the four implementations can't all
+plus hand-derived hard expectations so the implementations can't all
 agree on wrong semantics.
 """
 
@@ -15,7 +15,6 @@ import pandas as pd
 import pytest
 
 from ccspark import kernel, pykernel
-from ccspark.sqlgen import DUCK, SPARK
 from tests import oracle
 from tests.fixtures import LINE_CASES
 
@@ -35,8 +34,8 @@ def test_pykernel_matches_oracle():
 
 
 def test_arrowkernel_matches_oracle():
-    """5th rendering: the Arrow/RE2 whole-batch kernel on the same
-    boundary fixtures (drop_reason labels included)."""
+    """The Arrow/RE2 whole-batch kernel on the same boundary fixtures
+    (drop_reason labels included)."""
     import pyarrow as pa
 
     from ccspark import arrowkernel
@@ -55,27 +54,12 @@ def test_spark_sql_kernel_matches_oracle(spark):
     got = (
         df.selectExpr(
             "case_id",
-            f"{kernel.cleaned_expr(SPARK, 'raw')} AS cleaned",
-            f"{kernel.keep_expr(SPARK, 'raw', kernel.cleaned_expr(SPARK, 'raw'))} AS keep",
+            f"{kernel.cleaned_expr('raw')} AS cleaned",
+            f"{kernel.keep_expr('raw', kernel.cleaned_expr('raw'))} AS keep",
         )
         .toPandas()
         .set_index("case_id")
     )
-    for _, r in exp.iterrows():
-        g = got.loc[r.case_id]
-        assert bool(g.keep) == r.keep, f"{r.case_id}: keep {g.keep} != {r.keep}"
-        if r.keep:
-            assert g.cleaned == r.cleaned, f"{r.case_id}: text mismatch"
-
-
-def test_duckdb_kernel_matches_oracle(duck):
-    exp = oracle_frame()
-    duck.register("lines_fixture", exp[["case_id", "raw"]])
-    c = kernel.cleaned_expr(DUCK, "raw")
-    k = kernel.keep_expr(DUCK, "raw", c)
-    got = duck.sql(
-        f"SELECT case_id, {c} AS cleaned, {k} AS keep FROM lines_fixture"
-    ).df().set_index("case_id")
     for _, r in exp.iterrows():
         g = got.loc[r.case_id]
         assert bool(g.keep) == r.keep, f"{r.case_id}: keep {g.keep} != {r.keep}"

@@ -1,12 +1,9 @@
 """M1/M2 LID verification.
 
-Three independent checks (the driver-gated lid_ngram_sql query is the
-fourth - it hash-verifies the NB math against DuckDB):
+Independent checks:
 
-  * the production Iterator-pandas-UDF path must predict IDENTICALLY to
-    the pure-SQL rendering (same vocab cutoff, smoothing, argmax);
   * a held-out accuracy floor on genuinely multilingual synthetic docs
-    (the driver's documents fixture has decorative lang labels - every
+    (the documents fixture has decorative lang labels - every
     lang draws from the same English word distribution, so accuracy
     there is pinned at the prior and says nothing about the model);
   * agreement-filter invariants (both models agree with expected lang,
@@ -30,7 +27,6 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from ccspark import lid
-from ccspark import queries as Q
 from tests import oracle
 
 WORDS = {
@@ -56,17 +52,6 @@ def synth_docs(spark, per_lang=60, words_per_doc=30, seed=11):
                                                       k=words_per_doc))))
             i += 1
     return spark.createDataFrame(rows)
-
-
-def test_udf_path_matches_sql_twin_exactly(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    model = lid.train(docs, n=3, top_k=1000)
-    mod = {r.doc_id: r.lang_pred
-           for r in lid.predict(spark, docs, model).collect()}
-    Q.ensure_views(spark, "/root/testdata/sf0.001")
-    sql = {r.doc_id: r.lang_pred
-           for r in spark.sql(Q.q_lid_ngram_sql(Q.SPARK)).collect()}
-    assert mod == sql
 
 
 def test_heldout_accuracy_floor(spark):

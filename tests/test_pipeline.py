@@ -143,7 +143,7 @@ def test_corpus_lines_observed_free_metrics(spark):
     """observe() metrics must match the standalone metrics job without a
     second kernel pass, and the observed pipeline's output must equal
     corpus_lines exactly."""
-    from ccspark.fixtures_sql import pages_spark
+    from tests.fixtures import pages_spark
     pages = pages_spark(spark, "/root/testdata/sf0.001", materialize=True)
     df, obs = pipeline.corpus_lines_observed(pages)
     rows = sorted((r.url, r.line_id, r.text) for r in df.collect())
@@ -164,7 +164,7 @@ def test_corpus_lines_with_metrics_single_pass_equivalence(spark):
     """corpus_lines_with_metrics (ONE persisted kernel pass) must be
     output-identical to running corpus_lines and cell_metrics separately
     (two kernel passes)."""
-    from ccspark.fixtures_sql import pages_spark
+    from tests.fixtures import pages_spark
     pages = pages_spark(spark, "/root/testdata/sf0.001", materialize=True)
     corpus, metrics, v = pipeline.corpus_lines_with_metrics(pages)
     got_c = sorted((r.url, r.line_id, r.text, r.hash)
@@ -185,7 +185,7 @@ def test_fused_explode_clean_matches_staged(spark):
     unicode line breaks, pages whose every line is dropped)."""
     from tests.fixtures import LINE_CASES
 
-    from ccspark.fixtures_sql import pages_spark
+    from tests.fixtures import pages_spark
 
     edge = spark.createDataFrame(
         [Row(doc_id=0, url="https://edge.de/none", text=None, lang="en"),
@@ -221,7 +221,7 @@ def test_fused_explode_clean_matches_staged(spark):
 def test_corpus_lines_arrow_py_paths_identical(spark):
     """corpus_lines under CCSPARK_KERNEL=arrow (fused) and =py (staged
     pandas UDF) return the same rows bitwise."""
-    from ccspark.fixtures_sql import pages_spark
+    from tests.fixtures import pages_spark
 
     pages = pages_spark(spark, "/root/testdata/sf0.001")
     old = os.environ.get("CCSPARK_KERNEL")
@@ -244,7 +244,7 @@ def test_composite_arrow_py_paths_identical(spark):
     posexplode) return the same rows bitwise - incl. the domain-gated
     variant."""
     from ccspark.api import CCSparkCorpus
-    from ccspark.fixtures_sql import pages_spark
+    from tests.fixtures import pages_spark
 
     pages = pages_spark(spark, "/root/testdata/sf0.001")
     cc = CCSparkCorpus(spark)
@@ -311,7 +311,7 @@ def test_domain_gate_equals_ungated_over_kept_domains(spark, monkeypatch):
     by such pages, and a page with a NULL domain (dropped)."""
     from ccspark import quality
     from ccspark.api import CCSparkCorpus
-    from ccspark.fixtures_sql import pages_spark
+    from tests.fixtures import pages_spark
 
     # with_geo never yields a NULL domain for a URL today, so the gate's
     # NULL rule is pinned by forcing one for the planted page
@@ -368,7 +368,7 @@ def test_verdict_fused_matches_staged(spark):
     """explode_verdict_fused (metrics path, arrow) is row-identical to
     verdict_lines(explode_lines(...)) - ALL lines, kept or dropped,
     with the same drop_reason labels."""
-    from ccspark.fixtures_sql import pages_spark
+    from tests.fixtures import pages_spark
 
     pages = pages_spark(spark, "/root/testdata/sf0.001")
     geo = pipeline.with_geo(pages)

@@ -12,7 +12,7 @@ from __future__ import annotations
 import re
 
 from ccspark import pipeline
-from ccspark.fixtures_sql import pages_spark
+from tests.fixtures import pages_spark
 
 
 def plan_of(df) -> str:
@@ -238,20 +238,3 @@ def test_word_hash_kgrams_single_evaluation(spark):
     # per join side (4 sides; uncached by design) - but never more
     assert folds(dedup.minhash_near_dups(docs,
                                          hash_family="xxhash64")) <= 4
-
-
-def test_duck_renderings_free_of_spark_scan_hints():
-    """The DuckDB oracle text is FROZEN (driver fingerprints it): the
-    Spark-only scan_src REPARTITION wrapper and its _rp alias must
-    never leak into a DUCK rendering (r6 regression guard - a stray
-    call-site alias once did)."""
-    from ccspark import queries as Q
-    from ccspark.sqlgen import DUCK
-    for name, fn in Q.QUERY_BUILDERS.items():
-        sql = fn(DUCK)
-        assert "REPARTITION" not in sql, name
-        assert "_rp" not in sql, name
-        assert "ccspark_kernel" not in sql and "ccspark_scrub" not in sql, \
-            name
-    for name, sql in Q.MODULE_ORACLES.items():
-        assert "REPARTITION" not in sql and "_rp" not in sql, name

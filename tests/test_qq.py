@@ -192,31 +192,6 @@ def test_qq_approx_sketch_path(spark):
             assert abs(r["theoretical_q"] - _ppf_as241(p)) < 5e-8
 
 
-def test_graded_template_qq_branch_matches_module(spark):
-    """The perplexity_outliers template's prediction='QQ' rows (the
-    graded, dual-dialect Acklam rendering via quality.norm_ppf_case_sql)
-    must agree with quality.qq_points (the Column rendering) on the
-    template's own scored distribution - module and oracle share the
-    _ACK_* constants by construction; this pins the CTE plumbing around
-    them too."""
-    from ccspark import queries as Q
-    from ccspark.sqlgen import SPARK as SPARK_D
-
-    Q.ensure_views(spark, "/root/testdata/sf0.001")
-    out = spark.sql(Q.QUERY_BUILDERS["perplexity_outliers"](SPARK_D))
-    rows = out.collect()
-    got = {(r["lang"], r["doc_id"], r["loglik"], r["z"])
-           for r in rows if r["prediction"] == "QQ"}
-    scored = [r for r in rows if r["prediction"] != "QQ"]
-    base = spark.createDataFrame(
-        [(r["lang"], r["loglik"]) for r in scored],
-        "lang string, loglik double")
-    mod = quality.qq_points(base, "loglik", ("lang",)).collect()
-    want = {(r["lang"], r["rank"], r["sample_q"],
-             round(r["theoretical_q"], 4)) for r in mod}
-    assert got == want
-
-
 def test_perplexity_qq_original_vs_cleaned(spark):
     # 60 normal-ish docs + one extreme-vocabulary outlier per cell
     docs = []

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import Row, functions as F
 
 from ccspark import sampling
+from tests import oracle
 
 
 def _docs(spark):
@@ -90,23 +91,31 @@ def test_three_stage_plan_shape(spark):
                        .split("ASC")[0] for ln in big), plan
 
 
-def test_module_matches_sql_template(spark):
-    """Production module == the Spark rendering of the oracled template
-    (budget branch) on the driver fixture."""
-    from ccspark.queries import TOKEN_BUDGET, q_token_suite, ensure_views
-    from ccspark.sqlgen import SPARK
-    ensure_views(spark, "/root/testdata/sf0.01")
+# sf0.01 fixture budgets: per-lang token totals are ~4-5k, so a 1000-token
+# budget both keeps and prunes; the mixture's en/de/fr quotas
+# (3000/1200/1800) sit below those totals and es/zh get none
+TOKEN_BUDGET = 1000
+MIXTURE_TOTAL = 6000
+MIXTURE_PROPS = {"en": 0.5, "de": 0.2, "fr": 0.3}
+
+
+def _fixture_docs(spark):
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    sql_rows = {r.doc_id: (r.a, r.b, r.c) for r in
-                spark.sql(q_token_suite(SPARK)).where("op = 'budget'")
-                .collect()}
+    rows = [(r.doc_id, r.lang, r.text)
+            for r in docs.select("doc_id", "lang", "text").collect()]
+    return docs, rows
+
+
+def test_module_matches_sql_template(spark):
+    """Production budget sampler == the pure-Python greedy-prefix
+    restatement (tests/oracle.py) on the documents fixture."""
+    docs, rows = _fixture_docs(spark)
     mod = sampling.sample_by_token_budget(docs, TOKEN_BUDGET)
-    mod_rows = {r.doc_id: (r.weight, r.cum, int(r.kept))
+    mod_rows = {r.doc_id: (r.weight, r.cum, r.kept)
                 for r in mod.collect()}
-    assert mod_rows == sql_rows
+    assert mod_rows == oracle.token_budget(rows, TOKEN_BUDGET)
     # the budget really bites on the fixture: both kept and pruned exist
-    flags = {v[2] for v in mod_rows.values()}
-    assert flags == {0, 1}
+    assert {v[2] for v in mod_rows.values()} == {True, False}
 
 
 def test_mixture_budget_derivation():
@@ -147,21 +156,16 @@ def test_mixture_equals_per_group_budget_sampler(spark):
 
 
 def test_mixture_module_matches_sql_template(spark):
-    """Production sample_by_mixture == the Spark rendering of the
-    oracled template's 'mixture' branch (budget*2 + kept packing)."""
-    from ccspark.queries import (MIXTURE_PROPS, MIXTURE_TOTAL,
-                                 q_token_suite, ensure_views)
-    from ccspark.sqlgen import SPARK
-    ensure_views(spark, "/root/testdata/sf0.01")
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    sql_rows = {r.doc_id: (r.a, r.b, r.c) for r in
-                spark.sql(q_token_suite(SPARK)).where("op = 'mixture'")
-                .collect()}
-    mod = sampling.sample_by_mixture(docs, MIXTURE_TOTAL, MIXTURE_PROPS)
-    mod_rows = {r.doc_id: (r.weight, r.cum, r.budget * 2 + int(r.kept))
-                for r in mod.collect()}
-    assert mod_rows == sql_rows
-    # vacuity: kept takes both values, and some group has budget 0
-    kept = {v[2] % 2 for v in mod_rows.values()}
-    assert kept == {0, 1}
-    assert {v[2] // 2 for v in mod_rows.values()} > {0}
+    """Production sample_by_mixture == the oracle greedy prefix under
+    per-lang quotas floor(total * p / sum(p)), 0 for unnamed langs."""
+    docs, rows = _fixture_docs(spark)
+    out = sampling.sample_by_mixture(docs, MIXTURE_TOTAL,
+                                     MIXTURE_PROPS).collect()
+    quotas = {"en": 3000, "de": 1200, "fr": 1800}
+    assert {r.doc_id: (r.weight, r.cum, r.kept) for r in out} == \
+        oracle.token_budget(rows, quotas)
+    # vacuity: some lang gets no quota; every named lang keeps AND prunes
+    assert {r.budget for r in out if r.lang not in quotas} == {0}
+    for lang, quota in quotas.items():
+        assert {r.budget for r in out if r.lang == lang} == {quota}
+        assert {r.kept for r in out if r.lang == lang} == {True, False}, lang

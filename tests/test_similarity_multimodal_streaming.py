@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from ccspark import multimodal, similarity, streaming
-from ccspark.fixtures_sql import pages_spark
+from tests.fixtures import pages_spark
 
 
 # ---------------- similarity ----------------
@@ -50,9 +50,9 @@ def test_ivf_knn_recall(spark):
 def test_ivf_partial_probe_recall_on_clustered_vectors(spark):
     """The scale-path claim: on data with real cluster structure, probing
     2 of 10 lists keeps recall@5 >= 0.9 while scanning ~20% of the table.
-    (The driver's fixture embeddings are near-uniform noise - same-label
-    neighbor fraction 0.13 - so this bar needs clustered vectors; the
-    driver-gated ivf_recall query asserts full-probe == exact instead.)"""
+    (The fixture embeddings are near-uniform noise - same-label
+    neighbor fraction 0.13 - so this bar needs clustered vectors;
+    test_ivf_knn_recall asserts full-probe == exact instead.)"""
     import numpy as np
     rng = np.random.default_rng(7)
     centers = rng.normal(size=(10, 16)) * 5.0
