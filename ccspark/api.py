@@ -27,8 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ccspark import (
-    chunker, dedup, lid as lid_mod, pipeline, quality, scrub as scrub_mod,
-    skew, sources,
+    arrowkernel, chunker, dedup, lid as lid_mod, pipeline, quality,
+    scrub as scrub_mod, skew, sources,
 )
 
 
@@ -113,10 +113,19 @@ class CCSparkCorpus:
         path still rolls up with quality.domain_quality and rejoins the
         surviving domains as a broadcast left-semi join.
 
-        Scrub runs AFTER dedup on purpose: the dedup hash keys pre-scrub
-        text (placeholders like <EMAIL> would otherwise collide distinct
-        lines, and the kernel's strip_tags would eat the placeholders if
-        scrubbed before cleaning).
+        ``scrub_pii`` runs the PII chain (scrub.SCRUB_STEPS, RE2) inside
+        the fused stage, on the kept lines with a digit or an '@'; the
+        stage emits the result beside the pre-scrub ``text`` (see
+        pipeline.explode_clean_fused).  The dedup hash still keys the
+        pre-scrub text, and the scrubbed text rides the dedup payload and
+        replaces ``text`` only AFTER the dedup: placeholders like <EMAIL>
+        would otherwise collide distinct lines, and the kernel's
+        strip_tags would eat them if scrubbed before cleaning.  The
+        output equals scrubbing the deduplicated lines: the winner is
+        still chosen by (hash, url, line_id), and the scrubbed text is a
+        function of the pre-scrub text.  The staged CCSPARK_KERNEL=py
+        path scrubs its deduplicated lines with the same RE2 function
+        (arrowkernel.make_scrub_udf).
 
         ``with_metrics=True`` returns ``(lines, metrics_fn)`` instead of
         the bare frame: lineage counters riding the SAME plan at zero
@@ -145,7 +154,7 @@ class CCSparkCorpus:
             observations = [obs]
             lines = self._fused_gated_lines(
                 df, lang_col, gopher_thresholds, gopher=gopher, c4=c4,
-                domain_min_keep=domain_min_keep, obs=obs)
+                domain_min_keep=domain_min_keep, obs=obs, scrub=scrub_pii)
         else:
             if domain_min_keep is not None:
                 # the rollup judges domains with the SAME thresholds the
@@ -171,8 +180,9 @@ class CCSparkCorpus:
                 lines = self._staged_observed_lines(df, *observations[1:])
             else:
                 lines = self._lines_from_geo(df)
-        if scrub_pii:
-            lines = lines.withColumn("text", scrub_mod.scrub_col("text"))
+            if scrub_pii:
+                lines = lines.withColumn(
+                    "text", arrowkernel.make_scrub_udf()("text"))
         if not with_metrics:
             return lines
 
@@ -213,11 +223,13 @@ class CCSparkCorpus:
                            gopher: bool = True,
                            c4: bool = True,
                            domain_min_keep: float | None = None,
-                           obs=None) -> DataFrame:
-        """Line pipeline with the Gopher/C4 document gates, and the
-        domain rollup's page verdicts, fused into the single mapInArrow
-        stage (see pipeline.explode_clean_fused); *obs* observes the
-        lineage counters on its page and line rows."""
+                           obs=None, scrub: bool = False) -> DataFrame:
+        """Line pipeline with the Gopher/C4 document gates, the domain
+        rollup's page verdicts and (*scrub*) the PII chain fused into
+        the single mapInArrow stage (see pipeline.explode_clean_fused);
+        *obs* observes the lineage counters on its page and line rows.
+        The dedup hashes the pre-scrub text and carries ``scrubbed`` in
+        its payload; ``text`` takes the scrubbed line after it."""
         from pyspark.sql.window import Window
         cols = ["domain", "tld", "country", "region", "url"]
         in_cols = cols + ([lang_col] if lang_col else [])
@@ -275,7 +287,7 @@ class CCSparkCorpus:
         page_rows = rollup or obs is not None
         df = pipeline.explode_clean_fused(
             geo_pages.select(*in_cols, "text"), page_gate=page_gate,
-            page_rows=page_rows)
+            page_rows=page_rows, scrub=scrub)
         if rollup:
             frac = quality.domain_keep_frac(
                 "gopher_keep", Window.partitionBy("domain"))
@@ -295,8 +307,13 @@ class CCSparkCorpus:
         if page_rows:
             df = df.where(F.col("line_id").isNotNull())
         df = pipeline._ordinal_and_hash(df)
-        return pipeline.dedup_keep_first(
-            df.select(*cols, "line_id", "text", "hash"))
+        payload = ["text", "scrubbed"] if scrub else ["text"]
+        out = pipeline.dedup_keep_first(
+            df.select(*cols, "line_id", *payload, "hash"))
+        if not scrub:
+            return out
+        return (out.withColumn("text", F.coalesce("scrubbed", "text"))
+                .drop("scrubbed"))
 
     def metrics(self, pages: DataFrame) -> DataFrame:
         """Per (region, country, lang) lineage metrics (north_rule)."""

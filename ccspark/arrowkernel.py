@@ -190,29 +190,53 @@ def verdict_batch(raw):
     return text, keep, reason
 
 
-def make_scrub_udf():
+# Every SCRUB_STEPS pattern needs a digit or an '@' (email: '@'; ssn, ip,
+# cc, phone: [0-9]), so the chain can change only the rows matching this
+# exact trigger.
+_PII_TRIGGER = "[0-9@]"
+
+
+def scrub_batch(raw):
     """The PII scrub chain (scrub.SCRUB_STEPS, the ONE ordered
-    definition) as a whole-batch Arrow/RE2 UDF: raw line -> scrubbed
-    line.  The replacements carry no backreferences, and RE2's ``\\b``
-    is the ASCII word boundary that scrub.java_pattern spells out for
-    Java.  Byte identity with the Catalyst chain (scrub.scrub_col) and
-    with a Python ``re.ASCII`` restatement (tests/oracle.py) is fuzzed
-    in tests/test_cross_engine_fuzz.py::test_fuzz_pii_chain."""
+    definition) over a whole StringArray: returns a StringArray holding
+    the scrubbed line where the chain changed the line, NULL elsewhere
+    (unchanged, NULL or trigger-free rows).  The five passes run only
+    on the rows matching the digit/'@' trigger, subset once like
+    ``_sub_where``; the replacements carry no backreferences.  RE2's
+    ``\\b`` is the ASCII word boundary, as in Python's ``re.ASCII``
+    (tests/oracle.py::scrub, fuzzed in
+    tests/test_cross_engine_fuzz.py::test_fuzz_pii_chain)."""
+    from ccspark.scrub import SCRUB_STEPS
+
+    out = pa.nulls(len(raw), pa.string())
+    hit = np.flatnonzero(_np_bool(pc.match_substring_regex(
+        raw, _PII_TRIGGER)))
+    if hit.size == 0:
+        return out
+    sub = before = raw.take(pa.array(hit))
+    for _, pat, repl in SCRUB_STEPS:
+        sub = _sub(sub, pat, repl)
+    changed = _np_bool(pc.not_equal(sub, before))
+    mask = np.zeros(len(raw), dtype=bool)
+    mask[hit] = changed
+    return pc.replace_with_mask(out, pa.array(mask),
+                                sub.filter(pa.array(changed)))
+
+
+def make_scrub_udf():
+    """scrub_batch as a whole-batch pandas UDF: raw line -> scrubbed
+    line (the raw line where the chain changes nothing).  The staged
+    CCSPARK_KERNEL=py composite scrubs its deduplicated lines with it."""
     import pandas
     from pyspark.sql.functions import pandas_udf
 
-    from ccspark.scrub import SCRUB_STEPS
-
-    def scrub_batch(raw: "pandas.Series") -> "pandas.Series":
+    def scrub_lines(raw: "pandas.Series") -> "pandas.Series":
         arr = pa.Array.from_pandas(raw, type=pa.string())
-        for _, pat, repl in SCRUB_STEPS:
-            arr = pc.replace_substring_regex(
-                arr, pattern=pat, replacement=repl)
-        return arr.to_pandas()
+        return pc.coalesce(scrub_batch(arr), arr).to_pandas()
 
-    scrub_batch.__annotations__ = {
+    scrub_lines.__annotations__ = {
         "raw": pandas.Series, "return": pandas.Series}
-    return pandas_udf(scrub_batch, "string")
+    return pandas_udf(scrub_lines, "string")
 
 
 def make_clean_verdict_udf():

@@ -96,7 +96,8 @@ def clean_and_filter(lines: DataFrame) -> DataFrame:
 def explode_clean_fused(geo_pages: DataFrame,
                         pages_per_chunk: int = 4096,
                         page_gate=None,
-                        page_rows: bool = False) -> DataFrame:
+                        page_rows: bool = False,
+                        scrub: bool = False) -> DataFrame:
     """F5 + F6-F13 FUSED into one ``mapInArrow`` stage (arrow-kernel
     production path): the line split (RE2 ``split_pattern_regex``, same
     dialect-neutral pattern as the JVM split), the raw-length gate, and
@@ -152,12 +153,22 @@ def explode_clean_fused(geo_pages: DataFrame,
     carry NULL in both new columns.  Page rows let the plan above judge
     pages (the facade's domain rollup) and count pages and candidate
     lines with ``observe()`` from the same single pass; filter
-    ``line_id IS NOT NULL`` to get the kept lines."""
+    ``line_id IS NOT NULL`` to get the kept lines.
+
+    *scrub*: also run the PII chain (scrub.SCRUB_STEPS, through
+    arrowkernel.scrub_batch) on the kept lines, in the same stage.
+    Output gains ``scrubbed string`` after ``text``: the scrubbed line
+    where the chain changed it, NULL otherwise and on page rows.  The
+    chain runs only on lines with a digit or an '@' (every PII pattern
+    needs one).  ``text`` stays the pre-scrub line, so a hash keyed on
+    it never sees a placeholder (see api.build_training_corpus)."""
     keep_cols = [c for c in geo_pages.columns if c != "text"]
     passthrough = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in geo_pages.schema.fields if f.name != "text")
     schema = f"{passthrough}, pos int, line_id int, text string"
+    if scrub:
+        schema += ", scrubbed string"
     if page_rows:
         schema += ", gopher_keep boolean, lines_gated int"
 
@@ -187,6 +198,8 @@ def explode_clean_fused(geo_pages: DataFrame,
         from ccspark.regexes import RE_LINE_SPLIT as pat
 
         names = keep_cols + ["pos", "line_id", "text"]
+        if scrub:
+            names.append("scrubbed")
         if page_rows:
             names += ["gopher_keep", "lines_gated"]
 
@@ -230,14 +243,15 @@ def explode_clean_fused(geo_pages: DataFrame,
                         np.maximum.accumulate(run_start, out=run_start)
                     line_id = (np.arange(len(kp), dtype=np.int64)
                                - run_start + 1)
-                    extra = ([pa.nulls(len(kp), pa.bool_()),
-                              pa.nulls(len(kp), pa.int32())]
-                             if page_rows else [])
+                    kept = pa.array(cleaned[idx], type=pa.string())
+                    extra = [arrowkernel.scrub_batch(kept)] if scrub else []
+                    if page_rows:
+                        extra += [pa.nulls(len(kp), pa.bool_()),
+                                  pa.nulls(len(kp), pa.int32())]
                     yield pa.RecordBatch.from_arrays(
                         passthrough(gated, pa.array(kp))
                         + [pa.array(pos[idx].astype(np.int32)),
-                           pa.array(line_id.astype(np.int32)),
-                           pa.array(cleaned[idx], type=pa.string())]
+                           pa.array(line_id.astype(np.int32)), kept]
                         + extra, names=names)
                 if page_rows:
                     cand = pc.utf8_length(flat).to_numpy(
@@ -248,9 +262,9 @@ def explode_clean_fused(geo_pages: DataFrame,
                     yield pa.RecordBatch.from_arrays(
                         passthrough(chunk)
                         + [pa.nulls(n_pages, pa.int32()),
-                           pa.nulls(n_pages, pa.int32()),
-                           pa.nulls(n_pages, pa.string()),
-                           pa.array(verdict, type=pa.bool_())
+                           pa.nulls(n_pages, pa.int32())]
+                        + [pa.nulls(n_pages, pa.string())] * (1 + scrub)
+                        + [pa.array(verdict, type=pa.bool_())
                            if verdict is not None
                            else pa.nulls(n_pages, pa.bool_()),
                            pa.array(n_gated)], names=names)

@@ -178,9 +178,9 @@ RE_PII_IP = (
 RE_PII_SSN = "[0-9]{3}-[0-9]{2}-[0-9]{4}"
 # 16-digit card in 4-groups (space/dash/nothing); \b guards keep longer
 # digit runs (ids, timestamps) untouched.  \b means the ASCII word
-# boundary ([0-9A-Za-z_]), as in RE2 and re.ASCII; Java's \b differs next
-# to non-ASCII letters and digits, so scrub.java_pattern spells it out
-# for the Catalyst rendering.  Regex-only (no Luhn), the standard
-# pipeline trade-off: a 16-digit 4-grouped false positive is rare and
-# redaction is the safe direction.
+# boundary ([0-9A-Za-z_]), as in RE2 (the scrub's only engine) and
+# re.ASCII (tests/oracle.py); Java's \b would differ next to non-ASCII
+# letters and digits, so the chain has no Spark SQL rendering.
+# Regex-only (no Luhn), the standard pipeline trade-off: a 16-digit
+# 4-grouped false positive is rare and redaction is the safe direction.
 RE_PII_CC = "\\b[0-9]{4}([ -]?[0-9]{4}){3}\\b"

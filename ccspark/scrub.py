@@ -2,9 +2,12 @@
 
 The reference's only scrub is url/@mention/#hashtag removal
 (utilities.py:265-270 - our kernel step 2); north_rule asks for an
-explicit PII/toxicity scrub.  Pure Catalyst ``regexp_replace`` chain +
-an optional broadcast blocklist filter - deterministic, documented
-patterns (ccspark/regexes.py), no Python in the path.
+explicit PII/toxicity scrub.  ``SCRUB_STEPS`` is the one ordered
+definition of the PII chain - deterministic, documented patterns
+(ccspark/regexes.py) - and RE2 its only engine: the whole-batch
+``arrowkernel.scrub_batch``, which the fused Arrow line stage runs (see
+api.build_training_corpus) and ``scrub()`` below wraps.  The optional
+blocklist filter is a broadcast Catalyst ``rlike``.
 
 Order matters: emails before phones (an email's digits could otherwise
 half-match the phone pattern), SSN before IP-ish digit runs, IP before
@@ -13,9 +16,7 @@ generic phone (dotted quads would otherwise match the phone class).
 
 from __future__ import annotations
 
-import re
-
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ccspark import regexes as R
 
@@ -30,41 +31,42 @@ SCRUB_STEPS = (
 )
 
 
-# Java's \b counts every Unicode letter or digit as a word character
-# before JDK 19 (JDK-8264160); RE2 and Python's re.ASCII count only
-# [0-9A-Za-z_].  The Java rendering of a step spells \b out as that ASCII
-# boundary, so "é4111111111111111" redacts as <CC> on every engine.
-_W = "[0-9A-Za-z_]"
-_ASCII_BOUNDARY = f"(?:(?<!{_W})(?={_W})|(?<={_W})(?!{_W}))"
+def _scrub_flags_udf():
+    """One whole-batch RE2 pass: raw text -> (scrubbed, has_<step>...);
+    each flag tests its step's pattern on the raw text."""
+    import pandas
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.functions import pandas_udf
 
+    from ccspark import arrowkernel
 
-def java_pattern(pat: str) -> str:
-    """*pat* for Java regex: each ``\\b`` (outside an escaped backslash)
-    becomes the ASCII word boundary."""
-    return re.sub(r"\\\\|\\b",
-                  lambda m: _ASCII_BOUNDARY if m.group() == "\\b"
-                  else m.group(), pat)
+    def scrub_flags(raw: "pandas.Series") -> "pandas.DataFrame":
+        arr = pa.Array.from_pandas(raw, type=pa.string())
+        cols = {"scrubbed": pc.coalesce(arrowkernel.scrub_batch(arr), arr)}
+        for name, pat, _ in SCRUB_STEPS:
+            cols[f"has_{name}"] = pc.match_substring_regex(arr, pat)
+        return pa.table(cols).to_pandas()
 
-
-def scrub_col(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    for _, pat, repl in SCRUB_STEPS:
-        c = F.regexp_replace(c, java_pattern(pat), repl)
-    return c
+    scrub_flags.__annotations__ = {
+        "raw": pandas.Series, "return": pandas.DataFrame}
+    schema = ", ".join(["scrubbed string"] + [
+        f"has_{name} boolean" for name, _, _ in SCRUB_STEPS])
+    return pandas_udf(scrub_flags, schema)
 
 
 def scrub(df: DataFrame, text_col: str = "text",
           out_col: str = "scrubbed_text") -> DataFrame:
     """Adds the scrubbed text plus per-row redaction flags/count."""
-    out = df.withColumn(out_col, scrub_col(text_col))
-    for name, pat, _ in SCRUB_STEPS:
-        out = out.withColumn(
-            f"has_{name}", F.col(text_col).rlike(java_pattern(pat)))
+    out = df.withColumn("_s", _scrub_flags_udf()(F.col(text_col)))
+    out = out.withColumn(out_col, F.col("_s.scrubbed"))
+    for name, _, _ in SCRUB_STEPS:
+        out = out.withColumn(f"has_{name}", F.col(f"_s.has_{name}"))
     flags = [F.col(f"has_{n}").cast("int") for n, _, _ in SCRUB_STEPS]
     total = flags[0]
     for f in flags[1:]:
         total = total + f
-    return out.withColumn("n_pii_types", total)
+    return out.drop("_s").withColumn("n_pii_types", total)
 
 
 def blocklist_filter(df: DataFrame, blocklist: DataFrame,

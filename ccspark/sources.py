@@ -165,8 +165,11 @@ def html_to_text_expr(col: str) -> str:
     structure)."""
     from ccspark.sqlgen import rrep
     e = col
+    # the tag name ends before any non-[0-9A-Za-z_] character, as \b does
+    # in RE2 and Python's re.ASCII; Java's \b (JDK < 19) counts é, ٣ or
+    # 中 as word characters and would not end '<scripté>' (JDK-8264160)
     for tag in ("script", "style", "noscript", "title"):
-        e = rrep(e, rf"(?is)<{tag}\b.*?</{tag}>", "")
+        e = rrep(e, rf"(?is)<{tag}(?![0-9A-Za-z_]).*?</{tag}>", "")
     e = rrep(e, r"(?s)<!--.*?-->", "")
     e = rrep(e, r"(?i)</(p|div|br|li|tr|h[1-6])>", "\n")
     e = rrep(e, r"(?i)<br\s*/?>", "\n")

@@ -1,8 +1,10 @@
 """Cross-engine fuzz: the Spark SQL operators (Java regex) must agree with
 an independent rendering on adversarial inputs - the RE2 kernels in
-ccspark.arrowgate / ccspark.arrowkernel where one exists, otherwise the
-pure-Python restatements in tests/oracle.py.  Deterministic seeded
-corpora, batched through ONE Spark query per check."""
+ccspark.arrowgate where one exists, otherwise the pure-Python
+restatements in tests/oracle.py.  The RE2 PII chain, which has no Spark
+SQL rendering, is checked against tests/oracle.py the same way.
+Deterministic seeded corpora, batched through ONE Spark query per
+check."""
 
 from __future__ import annotations
 
@@ -29,6 +31,12 @@ HTML_ATOMS = [
     "&gt;", "&#39;", "&nbsp;", "&quot;", "<b>bold</b>", "< notatag",
     ">", "<", "\n", "\t", "  ", "<h1>T</h1>", "<title>t</title>",
     "<ScRiPt>x</sCrIpT>", "é", "中文",
+]
+# a non-ASCII letter or digit right after a block tag's name (Java's \b
+# counts it as a word character, RE2 and re.ASCII do not)
+HTML_ATOMS_2 = HTML_ATOMS + [
+    "<scripté>", "<script٣>", "<style中>", "<noscriptü>", "<title٣ x>",
+    "</style>", "</noscript>", "</title>", "<script_>", "<style1>",
 ]
 
 
@@ -72,7 +80,10 @@ def test_fuzz_domain_and_tld(spark):
 
 
 def test_fuzz_html_to_text(spark):
-    docs = synth(HTML_ATOMS, 300, seed=303, max_parts=12)
+    docs = (synth(HTML_ATOMS, 300, seed=303, max_parts=12)
+            + synth(HTML_ATOMS_2, 300, seed=304, max_parts=12)
+            + ["a<scripté>x</script>b", "a<script٣>x</script>b",
+               "a<style中>x</style>b"])
     assert_same(docs, spark_eval(spark, sources.html_to_text_expr, docs),
                 [oracle.html_to_text(h) for h in docs])
 
@@ -199,26 +210,30 @@ PII_CASES = [
     " 4111111111111111 ", "4111-1111-1111-1111", "", "\n", "\n\n",
     "call 555-123-4567 or é555-123-4567", "ssn 123-45-6789 ip 10.0.0.1",
     "mail é@x.com or ü.x@y.org", "٣٤٥ 4111 1111 1111 1111٣",
+    # no digit and no '@' (the guard skips them), '@' only, and
+    # placeholders next to digits
+    "no pii at all here", "é中 ü٣ text", "<EMAIL> <PHONE> <CC>",
+    "user at example dot org", "@", "@@ x@", "a@b", "me@@host",
+    "x@y.co@z.org", "<EMAIL>4111111111111111", "4111111111111111<CC>",
+    "<IP>10.0.42.7<IP>", "1<SSN>123-45-6789", "<PHONE>555-123-4567",
 ]
 
 
-def test_fuzz_pii_chain(spark):
-    """The ordered email/ssn/ip/cc/phone chain, three ways: Catalyst
-    (scrub.scrub_col, Java regex), the RE2 batch UDF
-    (arrowkernel.make_scrub_udf) and Python re.ASCII (oracle.scrub) -
-    \\b boundaries (ASCII next to é, ü, ٣, 中), class precedence and
-    replace-all semantics included."""
-    import pandas as pd
-
-    from ccspark import arrowkernel, scrub
+def test_fuzz_pii_chain():
+    """arrowkernel.scrub_batch - the function the fused Arrow line stage
+    calls, digit/'@' guard included - against Python re.ASCII
+    (oracle.scrub): \\b boundaries (ASCII next to é, ü, ٣, 中), class
+    precedence and replace-all semantics included.  It returns NULL
+    exactly where the chain changes nothing."""
+    from ccspark import arrowkernel
 
     texts = (synth(PII_ATOMS, 400, seed=777)
-             + synth(PII_ATOMS_2, 400, seed=778) + PII_CASES)
-    df = spark.createDataFrame(list(enumerate(texts)), "i int, u string")
-    got = dict(df.select("i", scrub.scrub_col("u")).collect())
-    catalyst = [got[i] for i in range(len(texts))]
-    re2 = arrowkernel.make_scrub_udf().func(pd.Series(texts)).tolist()
-    want = [oracle.scrub(t) for t in texts]
-    assert_same(texts, re2, want)
-    assert_same(texts, catalyst, want)
+             + synth(PII_ATOMS_2, 400, seed=778) + PII_CASES + [None])
+    got = arrowkernel.scrub_batch(pa.array(texts, type=pa.string()))
+    want = [None if t is None else oracle.scrub(t) for t in texts]
+    assert_same(texts, [g if g is not None else t
+                        for g, t in zip(got.to_pylist(), texts)], want)
+    changed = [w != t for w, t in zip(want, texts)]
+    assert_same(texts, got.is_valid().to_pylist(), changed)
+    assert 0 < sum(changed) < len(texts)
     assert oracle.scrub("é4111111111111111") == "é<CC>"

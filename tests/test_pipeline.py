@@ -379,3 +379,82 @@ def test_verdict_fused_matches_staged(spark):
     a = sorted(map(tuple, staged.collect()))
     b = sorted(map(tuple, fused.collect()))
     assert a == b and len(a) > 0
+
+
+_PII_LINES = {
+    "phone": "please call our office at 555-123-4567 during the normal "
+             "business hours.",
+    "card_space": "my card number is 4111 1111 1111 1111 and it works fine "
+                  "today.",
+    "card_dash": "my card number is 4111-1111-1111-1111 and it works fine "
+                 "today.",
+    "ip": "the server ip is 192.168.10.250 in the main rack of the "
+          "datacenter.",
+    "non_ascii": "café number é4111111111111111 and ٣4111111111111111 and "
+                 "中4111111111111111 are cards.",
+    "german": "grüße an 4111111111111111é und ü123-45-6789 von mir heute "
+              "früh.",
+    "at": "write to me at jane@example.org or the desk @ 10.0.0.1 today "
+          "please.",
+}
+
+
+def test_composite_scrubs_after_hash(spark, monkeypatch):
+    """build_training_corpus scrubs inside the fused stage but hashes the
+    pre-scrub text: its output equals oracle.scrub applied to the
+    scrub_pii=False output row for row, and the staged
+    CCSPARK_KERNEL=py output - with and without the domain gate.  Two
+    different raw lines that scrub to the same text both survive;
+    repeated raw PII lines survive once.  The metric counters do not
+    see the scrub."""
+    from ccspark.api import CCSparkCorpus
+    from tests.fixtures import pages_spark
+
+    p = _PII_LINES
+    planted = [
+        ("https://www.piione.de/p0", "\n".join(
+            [_PASS.format(i=0), p["phone"], p["card_space"], p["ip"],
+             p["non_ascii"]]), "en"),
+        ("https://www.piitwo.de/p1", "\n".join(
+            [_PASS.format(i=1), p["card_dash"], p["ip"], p["german"]]),
+         "en"),
+        ("https://www.piitwo.de/p2", "\n".join(
+            [_PASS.format(i=2), p["ip"], p["at"]]), "en"),
+    ]
+    pages = (pages_spark(spark, "/root/testdata/sf0.001")
+             .select("url", "text", "lang")
+             .unionByName(spark.createDataFrame(
+                 planted, "url string, text string, lang string")))
+    cc = CCSparkCorpus(spark)
+
+    def run(**kwargs):
+        lines, metrics_fn = cc.build_training_corpus(
+            pages, with_metrics=True, **kwargs)
+        return [r.asDict() for r in lines.collect()], metrics_fn()
+
+    def rows(dicts):
+        return sorted(tuple(d.items()) for d in dicts)
+
+    for dmk in (None, 0.9):
+        base, base_metrics = run(scrub_pii=False, domain_min_keep=dmk)
+        got, got_metrics = run(domain_min_keep=dmk)
+        want = [dict(d, text=oracle.scrub(d["text"])) for d in base]
+        assert rows(got) == rows(want), dmk
+        assert got_metrics == base_metrics, dmk
+        monkeypatch.setenv("CCSPARK_KERNEL", "py")
+        py = cc.build_training_corpus(pages, domain_min_keep=dmk).collect()
+        monkeypatch.delenv("CCSPARK_KERNEL")
+        assert rows(r.asDict() for r in py) == rows(got), dmk
+
+        texts = [d["text"] for d in got if "pii" in d["url"]]
+        card = "my card number is <CC> and it works fine today."
+        assert texts.count(card) == 2, texts
+        assert texts.count("the server ip is <IP> in the main rack of the "
+                           "datacenter.") == 1, texts
+        assert ("café number é<CC> and ٣<CC> and 中<CC> are cards."
+                in texts), texts
+        assert "grüße an <CC>é und ü<SSN> von mir heute früh." in texts
+        assert ("write to me at jane or the desk @ <IP> today please."
+                in texts), texts
+        assert sum(t != oracle.scrub(t) for t in
+                   (d["text"] for d in base)) >= 6, dmk

@@ -169,6 +169,29 @@ def test_domain_gate_judges_pages_once(spark):
     assert n_ex(plan) == n_ex(base) + 1, (n_ex(plan), n_ex(base))
 
 
+def test_composite_scrub_fused_in_arrow_stage(spark):
+    """The PII scrub runs inside the fused Arrow line stage: the scrubbed
+    composite has one MapInArrow, no Python-UDF eval node, and the same
+    shuffle count as scrub_pii=False - with and without the domain
+    gate.  No placeholder literal reaches the physical plan (the chain
+    is not rendered as Catalyst regexp_replace calls)."""
+    from ccspark.api import CCSparkCorpus
+    from ccspark.scrub import SCRUB_STEPS
+    pages = pages_spark(spark, "/root/testdata/sf0.001", materialize=True)
+    cc = CCSparkCorpus(spark)
+    n_ex = lambda p: len(re.findall(r"\bExchange hashpartitioning", p))
+    for dmk in (None, 0.7):
+        plan = plan_of(cc.build_training_corpus(pages, domain_min_keep=dmk))
+        base = plan_of(cc.build_training_corpus(
+            pages, domain_min_keep=dmk, scrub_pii=False))
+        assert plan.count("MapInArrow") == 1, plan
+        assert "ArrowEvalPython" not in plan, plan
+        assert "BatchEvalPython" not in plan, plan
+        assert n_ex(plan) == n_ex(base), (n_ex(plan), n_ex(base))
+        for _, _, placeholder in SCRUB_STEPS:
+            assert placeholder not in plan, (placeholder, plan)
+
+
 def test_hof_lambdas_reference_bound_columns(spark):
     """Guard for the r4 HOF finding: higher-order functions run
     interpreted, so an expression inlined in the lambda BODY re-evaluates
