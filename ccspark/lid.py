@@ -12,11 +12,21 @@ Neither lidNet/fastText nor CLD2/3 is installable here, so the default
 model is a self-trained character-n-gram multinomial Naive Bayes - the
 same model family fastText's supervised mode reduces to for LID.
 
-Training is two Spark actions: one aggregation explodes the padded,
-lowercased text into char n-grams, counts per (lang, gram), rolls up per
-gram (global count plus the per-language counts) and collects the top_k
-grams; one ``groupBy(label).count()`` gives the priors.  Every label gets
-an unseen-gram value, also a label none of whose grams made the top_k.
+Training scans the docs once and runs one Spark action: one aggregation
+explodes the padded, lowercased text into char n-grams, counts per (lang,
+gram), rolls up per gram (global count plus the per-language counts) and
+collects the top_k grams.  Every labelled doc also emits the sentinel
+gram ``""`` (never an n-gram, since n >= 1); its row sorts first and
+carries the label counts, which give the priors.  Docs with a NULL label are skipped,
+and training with no labelled doc raises ValueError.  Every label gets an
+unseen-gram value, also a label none of whose grams made the top_k.
+
+Training lowercases with Spark's ``lower()``, the scorer and
+tests/oracle.py with Python's ``str.lower()``.  They agree on every code
+point except 27 newer Unicode capitals that Python 3.11 does not know
+(U+1C89, U+A7CB, U+A7CC, U+A7DA, U+A7DC and U+10D50-U+10D65): Spark
+lowercases them, Python 3.11 keeps them, so a gram holding one of them is
+trained under one spelling and scored under the other.
 
 Scoring is vectorised per text with numpy.  On first use in a Python
 worker (after the broadcast deserializes; the arrays are never pickled)
@@ -146,33 +156,52 @@ class NgramLidModel:
         return self.predict_batch([text], min_len)[0]
 
 
-def train(docs: DataFrame, n: int = 3, text_col: str = "text",
-          label_col: str = "lang", top_k: int = 4000) -> NgramLidModel:
-    """Distributed training: explode char n-grams, count per (lang, gram),
-    keep the top_k grams by global frequency, Laplace-smooth.  Two
-    actions: the vocabulary with its per-language counts, and the
-    label counts."""
-    _check_n(n)
+def _vocab_query(docs: DataFrame, n: int, text_col: str, label_col: str,
+                 top_k: int) -> DataFrame:
+    """The one query ``train`` collects: the ``""`` sentinel row (every
+    labelled doc emits ``""`` once, so its row holds the label counts),
+    then the top_k n-character grams by (global count desc, gram asc),
+    each with its per-language counts in ``by_lang``."""
     # the padded-lower text is BOUND to a projection column before the
     # lambda references it: HOFs are interpreted, so an inlined concat/
     # lower re-evaluates once per character position - O(len^2) on long
     # docs (r4; same rule as dedup.shingles)
     t = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
-    padded = docs.select(F.col(label_col).alias("lang"), t.alias("_t"))
+    padded = (docs.where(F.col(label_col).isNotNull())
+              .select(F.col(label_col).alias("lang"), t.alias("_t")))
     tcol = F.col("_t")
     idx = F.sequence(F.lit(0), F.greatest(F.length(tcol) - n, F.lit(0)))
-    grams = F.transform(idx, lambda i: F.substring(tcol, i + 1, n))
+    grams = F.concat(F.array(F.lit("")),
+                     F.transform(idx, lambda i: F.substring(tcol, i + 1, n)))
+    # the array expression stays in the generator position: exploding a
+    # projected array column would let the optimizer infer a size() > 0
+    # filter that evaluates the transform a second time
     g = (padded.select("lang", F.explode(grams).alias("gram"))
-         .where(F.length("gram") == n))
-    vocab_rows = (g.groupBy("lang", "gram").count()
-                  .groupBy("gram")
-                  .agg(F.sum("count").alias("n"),
-                       F.collect_list(F.struct("lang", "count"))
-                       .alias("by_lang"))
-                  .orderBy(F.desc("n"), "gram").limit(top_k).collect())
-    prior_rows = docs.groupBy(label_col).count().collect()
+         .where((F.length("gram") == n) | (F.col("gram") == "")))
+    return (g.groupBy("lang", "gram").count()
+            .groupBy("gram")
+            .agg(F.sum("count").alias("n"),
+                 F.collect_list(F.struct("lang", "count")).alias("by_lang"))
+            .orderBy(F.col("gram") != "", F.desc("n"), "gram")
+            .limit(top_k + 1))
+
+
+def train(docs: DataFrame, n: int = 3, text_col: str = "text",
+          label_col: str = "lang", top_k: int = 4000) -> NgramLidModel:
+    """Distributed training: explode char n-grams, count per (lang, gram),
+    keep the top_k grams by global frequency, Laplace-smooth.  One scan of
+    *docs* and one action: the label counts ride the vocabulary query as
+    the sentinel gram ``""`` (never an n-gram, since n >= 1), whose row
+    sorts first.  Docs with a NULL label are skipped; a NULL text counts
+    toward its label's prior only.  Raises ValueError when no labelled
+    doc remains."""
+    _check_n(n)
+    rows = _vocab_query(docs, n, text_col, label_col, top_k).collect()
+    if not rows:
+        raise ValueError("lid.train needs at least one doc with a label")
+    label_row, vocab_rows = rows[0], rows[1:]
     # every label gets a total, 0 when none of its grams made the vocab
-    lang_totals = {r[label_col]: 0 for r in prior_rows}
+    lang_totals = {lang: 0 for lang, _ in label_row.by_lang}
     for r in vocab_rows:
         for lang, c in r.by_lang:
             lang_totals[lang] += c
@@ -185,8 +214,7 @@ def train(docs: DataFrame, n: int = 3, text_col: str = "text",
     alpha_denom = {
         lang: math.log(1.0 / (tot + v + 1)) for lang, tot in lang_totals.items()
     }
-    n_docs = sum(r["count"] for r in prior_rows)
-    priors = {r[label_col]: math.log(r["count"] / n_docs) for r in prior_rows}
+    priors = {lang: math.log(c / label_row.n) for lang, c in label_row.by_lang}
     return NgramLidModel(n, priors, loglik, vocab, alpha_denom)
 
 

@@ -22,9 +22,13 @@ page rows inside mapInPandas.
 from __future__ import annotations
 
 import gzip as _gzip
+import re
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+# the characters Hadoop's glob syntax gives a meaning
+_GLOB_CHARS = re.compile(r"[\\{}\[\]*?]")
 
 PAGES_SCHEMA = ("url string, warc_ts string, text string, "
                 "segment string, rec_type string")
@@ -77,12 +81,30 @@ def parse_wet_bytes(blob: bytes, segment: str = ""):
             pos += 2
 
 
+def _glob_paths(spark: SparkSession, path_glob: str) -> list:
+    """The paths *path_glob* matches, expanded on the driver with Hadoop
+    ``FileSystem.globStatus`` as Spark's file sources do; an unmatched
+    glob comes back unchanged, so ``load`` still raises PATH_NOT_FOUND.
+    Loading a literal glob makes Spark stat it when probing for a
+    streaming sink's ``_spark_metadata``, which logs a
+    FileNotFoundException stack trace at WARN.  ``load`` globs each path
+    again, so glob characters in a matched name are escaped."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(path_glob)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    matched = fs.globStatus(path)
+    if not matched:
+        return [path_glob]
+    return [_GLOB_CHARS.sub(r"\\\g<0>", st.getPath().toString())
+            for st in matched]
+
+
 def read_wet(spark: SparkSession, path_glob: str,
              conversion_only: bool = True) -> DataFrame:
     """WET segment files (plain or gzip) -> pages-shaped DataFrame.
     One input file = one task (binaryFile source)."""
-    files = spark.read.format("binaryFile").load(path_glob) \
-        .select("path", "content")
+    files = spark.read.format("binaryFile") \
+        .load(_glob_paths(spark, path_glob)).select("path", "content")
 
     def batches(it: Iterator):
         import pandas as pd

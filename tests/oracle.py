@@ -146,10 +146,13 @@ def nb_train(docs, n: int, top_k: int) -> SimpleNamespace:
     """Train on (text, label) pairs: per-(label, gram) counts, the top_k
     grams by (total count desc, gram asc), Laplace smoothing over the
     vocabulary, log priors from label frequencies.  A label none of whose
-    grams made the vocabulary has total 0."""
+    grams made the vocabulary has total 0.  A doc with a None label is
+    skipped."""
     labels = Counter()
     counts = Counter()
     for text, lang in docs:
+        if lang is None:
+            continue
         labels[lang] += 1
         if text is None:
             continue

@@ -15,11 +15,13 @@ Independent checks:
     trained model equals ``oracle.nb_train``'s dict for dict, and the
     batch scorer's labels and score vectors equal the per-row loop's bit
     for bit;
-  * training runs a bounded number of Spark jobs.
+  * training reads its docs once and runs a bounded number of Spark
+    jobs.
 """
 
 from __future__ import annotations
 
+import math
 import random
 
 import numpy as np
@@ -128,14 +130,30 @@ def test_load_model_spec_errors():
 CJK = ("\u4e2d\u6587\u7f51\u9875\u7684\u8bed\u8a00\u8bc6\u522b"
        "\u6d4b\u8bd5\U00020000\U00020001\U0002000b\U0001F600")
 
+# words whose lowercasing is more than a per-character table lookup, or
+# lies outside the BMP; Spark's lower() and Python's str.lower() agree on
+# every one of them
+CASED = {
+    # 'İ' lowercases to two characters (i + U+0307)
+    "tur": "İstanbul İzmir İYİ ılık ışık".split(),
+    # 'Σ' lowercases to 'ς' at the end of a word, to 'σ' elsewhere
+    "ell": "ΟΔΟΣ ΣΟΦΙΑΣ ΛΟΓΟΣ ΚΑΙ Σ".split(),
+    # 'ẞ' lowercases to 'ß'; 'ǅ' is titlecase, between 'Ǆ' and 'ǆ'
+    "hrv": "Straße GROẞ ǅamija Ǆep ǆak".split(),
+    # Georgian Mtavruli lowercases to Mkhedruli
+    "kat": "ᲡᲐᲥᲐᲠᲗᲕᲔᲚᲝ ᲗᲑᲘᲚᲘᲡᲘ ᲛᲗᲐ".split(),
+    # Deseret and Adlam capitals (supplementary plane)
+    "dsr": "\U00010400\U00010401\U00010402 \U0001E900\U0001E901 "
+           "\U00010410\U00010411".split(),
+}
+
 
 def parity_corpus(seed: int):
     """(training docs, texts to score): the word lists plus CJK text,
-    capitalised words, supplementary-plane characters, texts shorter than
-    n, "" and None.  'İ' (whose lower() is two characters) appears only
-    in scored texts, where Python's lower() is the only one applied."""
+    the CASED words, capitalised words, supplementary-plane characters,
+    texts shorter than n, "" and None."""
     rng = random.Random(seed)
-    langs = dict(WORDS, zho=list(CJK))
+    langs = dict(WORDS, zho=list(CJK), **CASED)
     docs = []
     for lang, words in sorted(langs.items()):
         sep = "" if lang == "zho" else " "
@@ -145,19 +163,20 @@ def parity_corpus(seed: int):
             docs.append((sep.join(ws), lang))
     docs += [("", "eng"), (None, "deu"), ("a", "spa"), ("\U0001F600", "zho")]
     texts = [t for t, _ in docs[::3]]
-    texts += ["İstanbul über alles", "İİİ", "", None, "x", "ab",
-              "\U00020000", "\U0001F600\U0001F600 la maison",
+    texts += ["İstanbul über alles", "İİİ", "ΟΔΟΣ ΣΟΦΙΑΣ", "GROẞE Straße",
+              "ǅamija ᲡᲐᲥᲐᲠᲗᲕᲔᲚᲝ", "\U00010400\U00010428 x", "", None,
+              "x", "ab", "\U00020000", "\U0001F600\U0001F600 la maison",
               "Qqqq zzzz", "exactly9!"]
     return docs, texts
 
 
-@pytest.mark.parametrize("n,top_k", [(2, 150), (3, 400)])
-def test_train_and_predict_match_oracle(spark, n, top_k):
-    docs, texts = parity_corpus(seed=40 + n)
+def assert_matches_oracle(spark, docs, texts, n, top_k):
+    """Train on *docs*; the model must equal ``oracle.nb_train``'s dict
+    for dict, and score *texts* as the per-row loop does, in the driver
+    and through the served UDF.  Returns the model."""
     model = lid.train(spark.createDataFrame(docs, "text string, lang string"),
                       n=n, top_k=top_k)
     ref = oracle.nb_train(docs, n=n, top_k=top_k)
-    assert len(ref.vocab) == top_k          # the cut is exercised
     assert model.n == ref.n
     assert model.priors == ref.priors
     assert model.vocab == ref.vocab
@@ -180,6 +199,55 @@ def test_train_and_predict_match_oracle(spark, n, top_k):
            for r in lid.predict(spark, rows, model, min_len=9).collect()}
     assert got == {i: oracle.nb_predict(ref, t, 9)
                    for i, t in enumerate(texts)}
+    return model
+
+
+@pytest.mark.parametrize("n,top_k", [(1, 60), (2, 150), (3, 400)])
+def test_train_and_predict_match_oracle(spark, n, top_k):
+    docs, texts = parity_corpus(seed=40 + n)
+    model = assert_matches_oracle(spark, docs, texts, n, top_k)
+    assert len(model.vocab) == top_k          # the cut is exercised
+
+
+def test_top_k_cut_inside_a_tie_matches_oracle(spark):
+    """The grams " c", "cd" and "d " all count 1 and the cut falls among
+    them: the lowest gram wins, in Spark's order as in the oracle's."""
+    docs = [("ab", "x"), ("ab", "x"), ("cd", "y")]
+    model = assert_matches_oracle(spark, docs, ["abcd", "dc", "a"], 2, 4)
+    assert model.vocab == {" a", "ab", "b ", " c"}
+
+
+def test_label_with_only_null_text_matches_oracle(spark):
+    docs, texts = parity_corpus(seed=7)
+    docs += [(None, "kor"), (None, "kor")]
+    model = assert_matches_oracle(spark, docs, texts, 3, 300)
+    v = len(model.vocab)
+    assert model.alpha_denom["kor"] == math.log(1.0 / (v + 1))
+
+
+def test_top_k_above_vocab_size_matches_oracle(spark):
+    docs, texts = parity_corpus(seed=8)
+    model = assert_matches_oracle(spark, docs, texts, 2, 100_000)
+    assert 0 < len(model.vocab) < 100_000
+
+
+def test_null_labels_are_skipped(spark):
+    """A doc with a NULL label trains nothing, so the model has no None
+    language for the scorer to sort next to the real ones."""
+    docs, texts = parity_corpus(seed=9)
+    docs += [("the house of the lazy dog", None), (None, None)]
+    model = assert_matches_oracle(spark, docs, texts, 3, 300)
+    assert None not in model.priors
+
+
+@pytest.mark.parametrize("docs", [[], [("the lazy dog", None), (None, None)]],
+                         ids=["empty", "only_null_labels"])
+def test_no_labelled_doc_raises(spark, docs):
+    """Without a labelled doc there is no language to predict; training
+    says so instead of returning a model whose scorer fails later."""
+    df = spark.createDataFrame(docs, "text string, lang string")
+    with pytest.raises(ValueError, match="label"):
+        lid.train(df)
 
 
 def test_tie_goes_to_lower_label(spark):
@@ -228,21 +296,46 @@ def test_ngram_order_limit(spark):
 
 
 def test_train_job_count(spark):
-    """Training is one vocabulary aggregation and one label count; with
-    AQE each query stage is its own job.  A second pass over the gram
-    counts, or a separate docs.count(), pushes it past 5 (9 jobs on this
-    sample, which mirrors crawl_build's LID training set)."""
-    from perfbench import gen
-    rng = random.Random(1)
-    docs = spark.createDataFrame(
-        [(gen.text_line(rng, lang), lang) for lang in gen.LANGS
-         for _ in range(gen.LID_LINES_PER_LANG)], "text string, lang string")
+    """Training is one aggregation, collected once: two shuffle stages
+    and the final one, and with AQE each query stage is its own job.  A
+    second scan of the docs (a separate label count) pushes it to 5."""
     sc = spark.sparkContext
     group = "test_train_job_count"
     sc.setJobGroup(group, "lid.train")
     try:
-        lid.train(docs)
+        lid.train(spark.createDataFrame(bench_rows(),
+                                        "text string, lang string"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def test_train_scans_docs_once(spark):
+    """The docs source counts the partitions it is asked to read: one
+    scan reads each of its 4 partitions once."""
+    import pandas as pd
+    rows = bench_rows()
+    scans = spark.sparkContext.accumulator(0)
+
+    def read(batches):
+        scans.add(1)
+        for pdf in batches:
+            yield pd.DataFrame({"text": [rows[i][0] for i in pdf["id"]],
+                                "lang": [rows[i][1] for i in pdf["id"]]})
+
+    docs = spark.range(0, len(rows), numPartitions=4) \
+        .mapInPandas(read, "text string, lang string")
+    model = lid.train(docs)
+    assert scans.value == 4
+    ref = oracle.nb_train(rows, n=3, top_k=4000)
+    assert (model.priors, model.vocab, model.loglik, model.alpha_denom) == \
+        (ref.priors, ref.vocab, ref.loglik, ref.alpha_denom)
+
+
+def bench_rows() -> list:
+    """(text, lang) rows shaped like crawl_build's LID training sample."""
+    from perfbench import gen
+    rng = random.Random(1)
+    return [(gen.text_line(rng, lang), lang) for lang in gen.LANGS
+            for _ in range(gen.LID_LINES_PER_LANG)]

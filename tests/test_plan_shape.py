@@ -219,17 +219,18 @@ def test_hof_lambdas_reference_bound_columns(spark):
         for ln in lines:
             assert "split(" not in ln, ln
 
-    # lid.train consumes its plan internally; check the gram frame shape
-    # via the same construction it uses
-    from pyspark.sql import functions as F
-    t = F.concat(F.lit(" "), F.lower(F.col("text")), F.lit(" "))
-    padded = docs.select(F.col("lang"), t.alias("_t"))
-    idx = F.sequence(F.lit(0), F.greatest(F.length(F.col("_t")) - 3,
-                                          F.lit(0)))
-    grams = F.transform(idx, lambda i: F.substring(F.col("_t"), i + 1, 3))
-    g = padded.select("lang", F.explode(grams).alias("gram"))
-    for ln in generate_lines(g):
+    # the query lid.train collects: one scan of the docs, one lower(),
+    # bound below the Generate, and no inferred size() > 0 filter (which
+    # would evaluate the transform a second time)
+    plan = plan_of(lid._vocab_query(docs, 3, "text", "lang", 10))
+    assert plan.count("Scan ExistingRDD") == 1, plan
+    assert plan.count("lower(") == 1, plan
+    lines = [ln for ln in plan.splitlines()
+             if "Generate" in ln and "lambdafunction" in ln]
+    assert lines, plan
+    for ln in lines:
         assert "lower(" not in ln, ln
+    assert "size(" not in plan, plan
 
 
 def test_word_hash_kgrams_single_evaluation(spark):

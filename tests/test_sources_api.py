@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import Row, functions as F
 
 from ccspark import lid, sources
@@ -73,6 +75,36 @@ def test_read_wet_to_pages(spark, tmp_path):
     assert len(rows) == 4
     assert rows["https://www.beta.co.nz/2"].text.startswith(GOOD)
     assert all(r.rec_type == "conversion" for r in rows.values())
+
+
+def test_read_wet_glob_forms(spark, tmp_path):
+    """The glob is expanded on the driver: a last-component glob, a
+    directory glob and a single file each read exactly the segments they
+    name (Spark still skips the hidden ``_SUCCESS``, and a matched name
+    with glob characters is read as itself), and a glob that
+    matches nothing still raises PATH_NOT_FOUND."""
+    for sub in ("a", "b"):
+        os.makedirs(tmp_path / sub)
+        for i in range(2):
+            (tmp_path / sub / f"s{i}.wet.gz").write_bytes(
+                sources.make_wet_bytes([(f"https://x.de/{sub}{i}", "2022",
+                                         GOOD)], gzip_out=True))
+    (tmp_path / "a" / "_SUCCESS").write_bytes(b"")
+    # a matched name that is itself a glob pattern (matching b/s1.wet.gz)
+    (tmp_path / "b" / "s[1].wet.gz").write_bytes(
+        (tmp_path / "b" / "s0.wet.gz").read_bytes())
+    segs = {
+        "a/*": ["a/s0.wet.gz", "a/s1.wet.gz"],
+        "*/*.gz": ["a/s0.wet.gz", "a/s1.wet.gz", "b/s0.wet.gz", "b/s1.wet.gz",
+                   "b/s[1].wet.gz"],
+        "b/s1.wet.gz": ["b/s1.wet.gz"],
+    }
+    for glob, want in segs.items():
+        got = {r.segment
+               for r in sources.read_wet(spark, f"{tmp_path}/{glob}").collect()}
+        assert got == {f"file:{tmp_path}/{w}" for w in want}, glob
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        sources.read_wet(spark, f"{tmp_path}/none*/*.gz")
 
 
 def test_facade_process_wet_end_to_end(spark, tmp_path):
@@ -343,8 +375,7 @@ def _wet_expected_rows():
 
 def _write_wet_demo(tmp_path) -> str:
     """Write the two synthetic segments into one directory; binaryFile
-    reads every file in it, and a literal path spares the noisy
-    FileStreamSink glob probe."""
+    reads every file in it."""
     d = tmp_path / "wet_demo"
     os.makedirs(d, exist_ok=True)
     (d / "plain.wet").write_bytes(sources.make_wet_bytes(WET_DEMO_PLAIN))
