@@ -27,9 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ccspark import (
-    arrowkernel, chunker, dedup, lid as lid_mod, pipeline, quality,
-    scrub as scrub_mod, skew, sources,
+    chunker, dedup, lid as lid_mod, pipeline, quality, scrub as scrub_mod,
+    skew, sources,
 )
+
+_LINE_COLS = ["domain", "tld", "country", "region", "url"]
 
 
 class CCSparkCorpus:
@@ -50,21 +52,14 @@ class CCSparkCorpus:
                                                    .cast("string")))
 
     def process_pages(self, pages: DataFrame) -> DataFrame:
-        """pages table -> geo gate -> clean/keep kernel -> line ordinal ->
-        keep-first dedup (corpus_lines schema)."""
-        return self._lines_from_geo(
-            pipeline.with_geo(pages, self.url_filter,
-                              self.countries_to_skip))
-
-    def _lines_from_geo(self, geo_pages: DataFrame) -> DataFrame:
-        """Line pipeline over an already-geo-gated frame (fused
-        explode+kernel Arrow stage -> ordinal -> keep-first dedup; see
-        pipeline.exploded_kept_lines for the CCSPARK_KERNEL dispatch)."""
-        cols = ["domain", "tld", "country", "region", "url"]
-        df = pipeline.exploded_kept_lines(geo_pages, cols)
-        df = pipeline._ordinal_and_hash(df)
-        return pipeline.dedup_keep_first(
-            df.select(*cols, "line_id", "text", "hash"))
+        """pages table -> geo gate -> fused split + clean/keep kernel +
+        line ordinal -> keep-first dedup (corpus_lines schema without
+        lang).  One row per url is assumed: with duplicate urls each row
+        numbers its own lines (see pipeline.explode_clean_fused)."""
+        geo_pages = pipeline.with_geo(pages, self.url_filter,
+                                      self.countries_to_skip)
+        return pipeline.dedup_lines(pipeline.explode_clean_fused(
+            geo_pages.select(*_LINE_COLS, "text")), _LINE_COLS)
 
     def build_training_corpus(self, pages: DataFrame,
                               gopher: bool = True, c4: bool = True,
@@ -109,9 +104,7 @@ class CCSparkCorpus:
         is one long task.  It replaces a second scan, a second geo pass
         and a second Python gate pass over every page.  The kernel also
         runs on gate-passing pages of domains that fail the rollup; their
-        lines are dropped after the window.  The CCSPARK_KERNEL=py staged
-        path still rolls up with quality.domain_quality and rejoins the
-        surviving domains as a broadcast left-semi join.
+        lines are dropped after the window.
 
         ``scrub_pii`` runs the PII chain (scrub.SCRUB_STEPS, RE2) inside
         the fused stage, on the kept lines with a digit or an '@'; the
@@ -123,9 +116,7 @@ class CCSparkCorpus:
         strip_tags would eat them if scrubbed before cleaning.  The
         output equals scrubbing the deduplicated lines: the winner is
         still chosen by (hash, url, line_id), and the scrubbed text is a
-        function of the pre-scrub text.  The staged CCSPARK_KERNEL=py
-        path scrubs its deduplicated lines with the same RE2 function
-        (arrowkernel.make_scrub_udf).
+        function of the pre-scrub text (pipeline.dedup_lines).
 
         ``with_metrics=True`` returns ``(lines, metrics_fn)`` instead of
         the bare frame: lineage counters riding the SAME plan at zero
@@ -134,13 +125,14 @@ class CCSparkCorpus:
         (geo-gated pages entering the composite, after the domain gate),
         lines_gated (kernel-candidate lines of those pages that pass the
         document gates), lines_kept (pre-dedup kept lines),
-        docs_kept_approx (HLL distinct urls among kept lines)}.  On the
-        fused path the first two are read from the stage's page rows.
-        The per-(region, country, lang) cube remains
-        checkpoint/cell_metrics territory."""
-        import os
+        docs_kept_approx (HLL distinct urls among kept lines)}.  The
+        first two are read from the stage's page rows.  The per-(region,
+        country, lang) cube remains checkpoint/cell_metrics territory.
 
+        ``gopher_thresholds`` keys outside quality.GOPHER_THRESHOLDS
+        raise ValueError here, before any job runs."""
         from pyspark.sql import Observation
+        quality.gopher_thresholds(gopher_thresholds)
         lang_col = "lang" if (lang_aware and "lang" in pages.columns) \
             else None
         # geo gate FIRST: host/ccTLD/MNC is a cheap projection + two
@@ -149,73 +141,13 @@ class CCSparkCorpus:
         # unchanged; the oracle twin has always been geo-first)
         df = pipeline.with_geo(pages, self.url_filter,
                                self.countries_to_skip)
-        if os.environ.get("CCSPARK_KERNEL", "arrow") == "arrow":
-            obs = Observation() if with_metrics else None
-            observations = [obs]
-            lines = self._fused_gated_lines(
-                df, lang_col, gopher_thresholds, gopher=gopher, c4=c4,
-                domain_min_keep=domain_min_keep, obs=obs, scrub=scrub_pii)
-        else:
-            if domain_min_keep is not None:
-                # the rollup judges domains with the SAME thresholds the
-                # page gate runs with
-                rollup = quality.domain_quality(
-                    df, lang_col=lang_col, min_keep_frac=domain_min_keep,
-                    thresholds=gopher_thresholds)
-                good = rollup.where("domain_keep").select("domain")
-                df = df.join(F.broadcast(good), "domain", "left_semi")
-            observations = [Observation() for _ in range(3)]
-            if with_metrics:
-                df = df.observe(observations[0],
-                                F.count(F.lit(1)).alias("docs_seen"))
-            if c4:
-                df = quality.c4_page_filter(df)
-            if gopher:
-                df = (quality.gopher_quality(df, signals=False,
-                                             thresholds=gopher_thresholds,
-                                             engine="udf",
-                                             lang_col=lang_col)
-                      .where("gopher_keep").drop("gopher_keep"))
-            if with_metrics:
-                lines = self._staged_observed_lines(df, *observations[1:])
-            else:
-                lines = self._lines_from_geo(df)
-            if scrub_pii:
-                lines = lines.withColumn(
-                    "text", arrowkernel.make_scrub_udf()("text"))
+        obs = Observation() if with_metrics else None
+        lines = self._fused_gated_lines(
+            df, lang_col, gopher_thresholds, gopher=gopher, c4=c4,
+            domain_min_keep=domain_min_keep, obs=obs, scrub=scrub_pii)
         if not with_metrics:
             return lines
-
-        def metrics_fn() -> dict:
-            out = {}
-            for obs in observations:
-                out.update(obs.get)
-            return out
-        return lines, metrics_fn
-
-    def _staged_observed_lines(self, geo_pages: DataFrame, obs_gated,
-                               obs_lines) -> DataFrame:
-        """The CCSPARK_KERNEL=py line pipeline with the lineage counters
-        observed in-plan (clean_and_filter's stages inlined so the
-        observation points sit exactly at the gate and the kernel
-        output)."""
-        cols = ["domain", "tld", "country", "region", "url"]
-        lf = pipeline.explode_lines(geo_pages.select(*cols, "text"))
-        lf = lf.filter(F.length("raw_line") > 15)
-        lf = lf.observe(obs_gated,
-                        F.count(F.lit(1)).alias("lines_gated"))
-        from ccspark import pykernel
-        udf = pykernel.make_clean_verdict_udf()
-        lf = (lf.withColumn("_v", udf("raw_line"))
-              .filter(F.col("_v.keep"))
-              .select(*cols, "pos", F.col("_v.text").alias("text")))
-        lf = lf.observe(
-            obs_lines,
-            F.count(F.lit(1)).alias("lines_kept"),
-            F.approx_count_distinct("url").alias("docs_kept_approx"))
-        lf = pipeline._ordinal_and_hash(lf)
-        return pipeline.dedup_keep_first(
-            lf.select(*cols, "line_id", "text", "hash"))
+        return lines, lambda: dict(obs.get)
 
     def _fused_gated_lines(self, geo_pages: DataFrame,
                            lang_col: str | None,
@@ -228,11 +160,9 @@ class CCSparkCorpus:
         rollup's page verdicts and (*scrub*) the PII chain fused into
         the single mapInArrow stage (see pipeline.explode_clean_fused);
         *obs* observes the lineage counters on its page and line rows.
-        The dedup hashes the pre-scrub text and carries ``scrubbed`` in
-        its payload; ``text`` takes the scrubbed line after it."""
+        The dedup hashes the pre-scrub text (pipeline.dedup_lines)."""
         from pyspark.sql.window import Window
-        cols = ["domain", "tld", "country", "region", "url"]
-        in_cols = cols + ([lang_col] if lang_col else [])
+        in_cols = _LINE_COLS + ([lang_col] if lang_col else [])
         rollup = domain_min_keep is not None
 
         def page_gate(chunk):
@@ -306,14 +236,7 @@ class CCSparkCorpus:
                 .alias("docs_kept_approx"))
         if page_rows:
             df = df.where(F.col("line_id").isNotNull())
-        df = pipeline._ordinal_and_hash(df)
-        payload = ["text", "scrubbed"] if scrub else ["text"]
-        out = pipeline.dedup_keep_first(
-            df.select(*cols, "line_id", *payload, "hash"))
-        if not scrub:
-            return out
-        return (out.withColumn("text", F.coalesce("scrubbed", "text"))
-                .drop("scrubbed"))
+        return pipeline.dedup_lines(df, _LINE_COLS)
 
     def metrics(self, pages: DataFrame) -> DataFrame:
         """Per (region, country, lang) lineage metrics (north_rule)."""
@@ -356,7 +279,12 @@ class CCSparkCorpus:
                  dedup_strategy: str = "keep_first") -> DataFrame:
         """final_cc + geoWAC merge: per-country cap (W4, deterministic),
         text dedup (keep_first = geoWAC.py:171; keep_none = :209), word
-        counts, optional 100k-sharded partitioned write."""
+        counts, optional 100k-sharded partitioned write.  Any other
+        *dedup_strategy* raises ValueError."""
+        if dedup_strategy not in ("keep_first", "keep_none"):
+            raise ValueError(
+                f"unknown dedup_strategy {dedup_strategy!r}; expected "
+                "'keep_first' or 'keep_none'")
         df = skew.cap_per_key(lid_pages, "country", country_limit, "url")
         df = df.withColumn("_th", F.xxhash64("text"))
         if dedup_strategy == "keep_none":

@@ -1,14 +1,14 @@
 """Arrow/RE2-vectorized rendering of the Gopher document gate.
 
-Whole-batch twin of ``quality.make_gopher_keep_udf`` (static stopword
-set) and ``quality.make_gopher_keep_ml_udf`` (language-aware dispatch:
-per-lang stopword sets, CJK char-counted words, token-shape gates
-bypassed for space-free scripts).  Same approach as
-``ccspark.arrowkernel``: every per-doc signal becomes a batch
-pyarrow.compute kernel, so the per-row Python loop - the measured
-throughput ceiling of the composite pipeline - disappears.
+The one Python rendering of the Gopher gate: the static stopword set,
+or the language-aware dispatch (per-lang stopword sets, CJK
+char-counted words, token-shape gates bypassed for space-free scripts).
+Same approach as ``ccspark.arrowkernel``: every per-doc signal becomes
+a batch pyarrow.compute kernel, so no per-row Python loop - the
+measured throughput ceiling of the composite pipeline - runs.
 
-Signal-by-signal equivalences with the per-row loop (quality.keep_one):
+Signal-by-signal equivalences with the per-row restatement
+(tests/oracle.py::gopher_keep):
 
 * token count   = ``count_substring_regex(text, '[^ ]+')`` == number of
   non-empty ``split(' ')`` tokens (newlines stay inside tokens).
@@ -36,8 +36,9 @@ Signal-by-signal equivalences with the per-row loop (quality.keep_one):
   through the scalar ``quality._round4`` (Decimal-on-repr), so boundary
   docs agree with the Spark expression gate bit-for-bit.
 
-Parity with the per-row UDFs is asserted on the boundary fixtures and
-under hypothesis in tests/test_gopher.py.
+Parity with tests/oracle.py::gopher_keep and with the Spark expression
+gate (quality.gopher_quality) is asserted on boundary fixtures and a
+seeded adversarial batch in tests/test_gopher.py.
 """
 
 from __future__ import annotations
@@ -126,15 +127,16 @@ def _stopword_hits(padded: pa.Array, stops) -> np.ndarray:
 
 def gopher_keep_batch(texts, langs=None, thresholds: dict | None = None,
                       stopwords: tuple | None = None) -> np.ndarray:
-    """Batch keep verdicts.  With ``langs`` -> the language-aware gate
-    (make_gopher_keep_ml_udf semantics); without -> the static gate with
-    ``stopwords`` (make_gopher_keep_udf semantics)."""
+    """Batch keep verdicts.  With ``langs`` -> the language-aware gate;
+    without -> the static gate with ``stopwords`` (default
+    GOPHER_STOPWORDS).  A NULL text fails.  Unknown *thresholds* keys
+    raise ValueError (quality.gopher_thresholds)."""
     from ccspark import regexes as R
     from ccspark.quality import (
-        GOPHER_STOPWORDS, GOPHER_STOPWORDS_BY_LANG, GOPHER_THRESHOLDS,
-        SPACE_FREE_LANGS,
+        GOPHER_STOPWORDS, GOPHER_STOPWORDS_BY_LANG, SPACE_FREE_LANGS,
+        gopher_thresholds,
     )
-    t = dict(GOPHER_THRESHOLDS, **(thresholds or {}))
+    t = gopher_thresholds(thresholds)
     ml = langs is not None
 
     if not isinstance(texts, (pa.Array, pa.ChunkedArray)):
@@ -208,7 +210,7 @@ def gopher_keep_batch(texts, langs=None, thresholds: dict | None = None,
            <= t["max_dup_line_char_frac"])
 
     # expensive late stages run only on still-alive rows (the batch
-    # analog of the per-row loop's early exits: on real crawls the
+    # analog of a per-row loop's early exits: on real crawls the
     # cheap shape gates above kill 30-70% of docs first)
     alpha_frac = np.full(n, np.inf, dtype=np.float64)
     nonsf = np.flatnonzero(~sf & ok)
@@ -296,7 +298,8 @@ def c4_keep_batch(texts, min_sentences: int = 5) -> np.ndarray:
 
 def make_gopher_keep_udf(thresholds: dict | None = None,
                          stopwords: tuple | None = None):
-    """Arrow twin of quality.make_gopher_keep_udf (static stopword set)."""
+    """gopher_keep_batch as a pandas UDF: text -> keep (static stopword
+    set)."""
     import pandas
     from pyspark.sql.functions import pandas_udf
 
@@ -310,7 +313,8 @@ def make_gopher_keep_udf(thresholds: dict | None = None,
 
 
 def make_gopher_keep_ml_udf(thresholds: dict | None = None):
-    """Arrow twin of quality.make_gopher_keep_ml_udf (language-aware)."""
+    """gopher_keep_batch as a pandas UDF: (text, lang) -> keep
+    (language-aware)."""
     import pandas
     from pyspark.sql.functions import pandas_udf
 

@@ -1,8 +1,8 @@
 """Arrow/RE2-vectorized rendering of the keep/drop + clean kernel.
 
-Same semantics as ``ccspark.pykernel`` (the reference chain,
-cc_corpus.py:254-293), but evaluated as WHOLE-BATCH pyarrow.compute
-kernels instead of a per-row Python loop.  pyarrow's string-regex kernels
+The one implementation of the reference chain (cc_corpus.py:254-293)
+in ccspark, evaluated as WHOLE-BATCH pyarrow.compute kernels instead of
+a per-row Python loop.  pyarrow's string-regex kernels
 (``replace_substring_regex`` / ``match_substring_regex``) are backed by
 RE2 in C++ - precisely the "different regex engine" the round-2
 kernel-throughput experiment named as the only thing worth revisiting
@@ -15,10 +15,10 @@ Why this is byte-identical by construction:
   classes, no backreferences-in-pattern, no lookaround), and the kernel
   renderings are checked against the Python-re oracle (tests/oracle.py)
   row for row.
-* The per-row guards in ``pykernel.clean_line`` ("skip the url pass when
-  'http' absent") are exact - a pattern cannot match without its trigger
-  substring - so a guarded pass and an unconditional pass produce the
-  same bytes.  Here the guards become BATCH SUBSETS: each pass runs via
+* Each pass is guarded by an exact trigger ("the url pass needs
+  'http'") - a pattern cannot match without its trigger substring - so
+  a guarded pass and an unconditional pass produce the same bytes.  The
+  guards are BATCH SUBSETS: each pass runs via
   take -> replace -> replace_with_mask on only the rows whose trigger
   fires (trigger rates on crawl text are 5-40%), with a density cutoff
   above which the whole-array pass is cheaper than take+scatter.
@@ -29,9 +29,10 @@ Why this is byte-identical by construction:
   equivalence the SQL renderings rely on, fuzz-tested cross-engine in
   tests/test_cross_engine_fuzz.py).
 
-Parity with pykernel.verdict is asserted row-for-row in
-tests/test_kernel_parity.py (boundary fixtures) and
-tests/test_kernel_properties.py (hypothesis adversarial batches).
+Parity with the independent transcription tests/oracle.py (``verdict``,
+``clean``) is asserted row-for-row in tests/test_kernel_parity.py
+(boundary fixtures) and tests/test_kernel_properties.py (hypothesis
+adversarial batches).
 
 The first-failing-rule evaluation order (rawlen, postlen, illegal,
 alphamass, cjklen, punct) is replicated with ``np.select`` over the rule
@@ -113,7 +114,7 @@ def _sub_where(arr, trigger_mask, pattern: str, repl: str):
 
 
 def _clean_batch(c):
-    """Steps 2-6 of the reference chain (pykernel.clean_line), whole-batch,
+    """Steps 2-6 of the reference chain (oracle.clean), whole-batch,
     each pass subset-guarded by its trigger."""
     c = _sub_where(c, pc.match_substring(c, "http"), R.RE_URL, "")
     c = _sub_where(c, pc.match_substring(c, "@"), R.RE_AT, "")
@@ -132,8 +133,8 @@ def verdict_batch(raw):
     """Whole-batch kernel: StringArray -> (text, keep, drop_reason)
     numpy arrays (object/bool/object), row-aligned with ``raw``.
 
-    Matches ``[pykernel.verdict(x) for x in batch]`` exactly, including
-    None inputs and drop_reason labels."""
+    Matches ``[oracle.verdict(x) for x in batch]`` (tests/oracle.py)
+    exactly, including None inputs and drop_reason labels."""
     if not isinstance(raw, (pa.Array, pa.ChunkedArray)):
         raw = pa.array(raw, type=pa.string())
     if isinstance(raw, pa.ChunkedArray):
@@ -223,25 +224,10 @@ def scrub_batch(raw):
                                 sub.filter(pa.array(changed)))
 
 
-def make_scrub_udf():
-    """scrub_batch as a whole-batch pandas UDF: raw line -> scrubbed
-    line (the raw line where the chain changes nothing).  The staged
-    CCSPARK_KERNEL=py composite scrubs its deduplicated lines with it."""
-    import pandas
-    from pyspark.sql.functions import pandas_udf
-
-    def scrub_lines(raw: "pandas.Series") -> "pandas.Series":
-        arr = pa.Array.from_pandas(raw, type=pa.string())
-        return pc.coalesce(scrub_batch(arr), arr).to_pandas()
-
-    scrub_lines.__annotations__ = {
-        "raw": pandas.Series, "return": pandas.Series}
-    return pandas_udf(scrub_lines, "string")
-
-
 def make_clean_verdict_udf():
-    """Drop-in replacement for pykernel.make_clean_verdict_udf: same
-    output struct, whole-batch Arrow/RE2 evaluation."""
+    """verdict_batch as a pandas UDF: raw_line -> struct<text string,
+    keep boolean, drop_reason string> - the staged line kernel
+    (pipeline.clean_and_filter / verdict_lines)."""
     import pandas
     from pyspark.sql.functions import pandas_udf
 

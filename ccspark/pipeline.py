@@ -7,18 +7,20 @@ download_and_process_wet_segment :296-317 -> _process_wet_record :237-294
 -> _deduplicate_cc :338-349):
 
   read pages -> F2 host/tld/domain (pure regex exprs) -> J1 broadcast join
-  ccTLD dim -> J2 broadcast anti-join MNC filter -> F5 posexplode lines ->
-  F6 cheap raw-length gate *before* the regex chain (reference order,
-  cc_corpus.py:256) -> F7-F13 clean + keep rules (whole-stage codegen) ->
-  W1 per-page line ordinal -> F14 stable hash -> D1 deterministic
-  keep-first dedup.
+  ccTLD dim -> J2 broadcast anti-join MNC filter -> ONE fused Arrow stage:
+  F5 line split, F6 cheap raw-length gate *before* the regex chain
+  (reference order, cc_corpus.py:256), F7-F13 clean + keep rules
+  (arrowkernel), W1 per-page kept-line ordinal -> F14 stable hash -> D1
+  deterministic keep-first dedup.
 
-Shuffle profile: exactly two exchanges - one by `url` for the line-ordinal
-window, one by `hash` for dedup.  Everything upstream (scan, joins, explode,
-regex chain) is a single WholeStageCodegen stage: the dimension joins are
-broadcast (295 / 971 rows), so no shuffle before the window.  At 10^12-doc
-scale the same plan holds; AQE (skew-join + coalesce) handles giant domains,
-and dedup keys are 8-byte xxhash64 values rather than full lines.
+Shuffle profile: exactly one exchange, by `hash` for dedup.  The
+dimension joins are broadcast (295 / 971 rows) and the line ordinal is
+computed inside the fused stage, so nothing shuffles before the dedup.
+At 10^12-doc scale the same plan holds; AQE (skew-join + coalesce)
+handles giant domains, and dedup keys are 8-byte xxhash64 values rather
+than full lines.  The staged helpers (explode_lines, clean_and_filter,
+verdict_lines, number_and_hash) serve streaming and the metrics
+renderings.
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from ccspark import geo, kernel, pykernel
+from ccspark import arrowkernel, geo
 from ccspark.regexes import RE_LINE_SPLIT
 from ccspark.sqlgen import lit as sql_lit
 
@@ -81,10 +83,11 @@ def clean_and_filter(lines: DataFrame) -> DataFrame:
     """F6-F13: the kernel.  A cheap JVM-side raw-length gate first
     (reference order, and it keeps ~half the lines out of the Arrow
     transfer), then one vectorized pandas UDF computing cleaned text +
-    verdict in a single pass per line (see ccspark.pykernel for why this
-    beats the pure-Catalyst rendering)."""
+    verdict in a single pass per line (arrowkernel; a UDF output column
+    is an optimizer barrier, so the clean chain runs once per line
+    instead of once per keep rule)."""
     df = lines.filter(F.length("raw_line") > 15)
-    udf = pykernel.make_clean_verdict_udf()
+    udf = arrowkernel.make_clean_verdict_udf()
     df = df.withColumn("_v", udf("raw_line"))
     keep_cols = [c for c in lines.columns if c != "raw_line"]
     return (
@@ -119,14 +122,20 @@ def explode_clean_fused(geo_pages: DataFrame,
 
     Output columns: every non-``text`` input column + (pos int,
     line_id int, text string) - identical rows (asserted bitwise in
-    tests) to ``clean_and_filter(explode_lines(geo_pages))`` plus the
-    kept-line ordinal.  line_id is computed IN-STAGE: a page's lines
-    are all local to the chunk that split it, so the per-url kept-line
-    ordinal needs NO url-window shuffle - the flagship drops from two
-    exchanges to one (dedup only), eliminating the full-corpus-text
-    shuffle at 100TB.  (Contract: one input row per url - the pages
-    table's natural key, same assumption the reference makes; the
-    staged py path keeps the general window form.)
+    tests) to ``number_and_hash(clean_and_filter(explode_lines(...)))``
+    without the hash.  line_id is computed IN-STAGE: a page's lines are
+    all local to the chunk that split it, so the per-url kept-line
+    ordinal needs NO url-window shuffle - the flagship has one exchange
+    (dedup only), with no full-corpus-text shuffle at 100TB.
+
+    Contract: one input row per url (the pages table's natural key, the
+    same assumption the reference makes).  With duplicate urls the
+    result is defined but per ROW, not per url: each row numbers its own
+    kept lines from 1, so two rows with url ``u`` give two lines with
+    ``(url, line_id) = (u, 1)``.  ``CCSPARK_CHECK_UNIQUE_URLS=1`` turns
+    on an eager guard that raises ValueError on a duplicate url (one
+    extra aggregate job, so it is off by default); aggregate the pages
+    by url first where duplicates can occur.
 
     CALLER MUST PRUNE FIRST: ``mapInArrow`` is a projection barrier, so
     select only the columns the downstream plan needs (in particular not
@@ -172,12 +181,7 @@ def explode_clean_fused(geo_pages: DataFrame,
     if page_rows:
         schema += ", gopher_keep boolean, lines_gated int"
 
-    # the in-stage ordinal's contract is ONE input row per url (the pages
-    # table's natural key); with duplicate urls the ordinal restarts per
-    # page row and tie-breaks of dedup_keep_first silently shift vs the
-    # CCSPARK_KERNEL=py window form.  CCSPARK_CHECK_UNIQUE_URLS=1 turns on
-    # an eager guard for caller-supplied frames (debug-only: it runs one
-    # extra aggregate job, so it is not the production default).
+    # the unique-url guard (see the docstring's contract)
     import os as _os
     if _os.environ.get("CCSPARK_CHECK_UNIQUE_URLS") == "1" \
             and "url" in geo_pages.columns:
@@ -186,8 +190,8 @@ def explode_clean_fused(geo_pages: DataFrame,
         if dup:
             raise ValueError(
                 f"explode_clean_fused: duplicate url {dup[0]['url']!r} - "
-                "the in-stage line ordinal requires one row per url "
-                "(pre-aggregate or use CCSPARK_KERNEL=py)")
+                "the in-stage line ordinal requires one row per url; "
+                "aggregate the pages by url first")
 
     def fused(batches):
         import numpy as np
@@ -272,81 +276,11 @@ def explode_clean_fused(geo_pages: DataFrame,
     return geo_pages.mapInArrow(fused, schema)
 
 
-def explode_verdict_fused(geo_pages: DataFrame,
-                          pages_per_chunk: int = 4096) -> DataFrame:
-    """The metrics-path twin of explode_clean_fused: ONE mapInArrow
-    stage emitting EVERY line (kept or not) with its verdict -
-    row-identical to ``verdict_lines(explode_lines(geo_pages))`` minus
-    the raw_line column (asserted in tests).
-
-    NOT the production default: measured 0.76x vs the staged form on
-    the all-lines metrics path (see verdict_lines_from_geo for why -
-    every-line output re-transfers the passthrough columns).  Kept as
-    the measured-experiment record and for pipelines that want the
-    verdict frame without a JVM explode."""
-    keep_cols = [c for c in geo_pages.columns if c != "text"]
-    passthrough = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in geo_pages.schema.fields if f.name != "text")
-    schema = (f"{passthrough}, pos int, text string, keep boolean, "
-              f"drop_reason string")
-
-    def fused(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ccspark import arrowkernel
-        from ccspark.regexes import RE_LINE_SPLIT as pat
-
-        for batch in batches:
-            for start in range(0, batch.num_rows, pages_per_chunk):
-                chunk = batch.slice(start, pages_per_chunk)
-                text = chunk.column(chunk.schema.get_field_index("text"))
-                ll = pc.split_pattern_regex(text, pat)
-                flat = pc.list_flatten(ll)
-                parents = pc.list_parent_indices(ll).to_numpy(
-                    zero_copy_only=False)
-                lens = pc.fill_null(pc.list_value_length(ll), 0).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                starts = np.zeros(len(lens) + 1, dtype=np.int64)
-                np.cumsum(lens, out=starts[1:])
-                pos = np.arange(len(flat), dtype=np.int64) - starts[parents]
-                cleaned, keep, reason = arrowkernel.verdict_batch(flat)
-                take = pa.array(parents)
-                cols = [chunk.column(chunk.schema.get_field_index(c))
-                        .take(take) for c in keep_cols]
-                yield pa.RecordBatch.from_arrays(
-                    cols + [pa.array(pos.astype(np.int32)),
-                            pa.array(cleaned, type=pa.string()),
-                            pa.array(keep),
-                            pa.array(reason, type=pa.string())],
-                    names=keep_cols + ["pos", "text", "keep",
-                                       "drop_reason"])
-
-    return geo_pages.mapInArrow(fused, schema)
-
-
 def _corpus_line_cols(df: DataFrame) -> list[str]:
     cols = ["domain", "tld", "country", "region", "url"]
     if "lang" in df.columns:
         cols.insert(4, "lang")
     return cols
-
-
-def exploded_kept_lines(geo_pages: DataFrame,
-                        cols: list[str] | None = None) -> DataFrame:
-    """The explode -> clean -> keep front-end of the flagship, with the
-    implementation chosen by CCSPARK_KERNEL: the fused mapInArrow stage
-    (arrow, default) or the staged posexplode + pandas-UDF form (py).
-    *cols* = passthrough columns to carry (pruned BEFORE the Python
-    barrier); returns cols + (pos, text)."""
-    import os
-    cols = cols if cols is not None else _corpus_line_cols(geo_pages)
-    if os.environ.get("CCSPARK_KERNEL", "arrow") == "arrow":
-        return explode_clean_fused(geo_pages.select(*cols, "text"))
-    df = clean_and_filter(explode_lines(geo_pages))
-    return df.select(*cols, "pos", "text")   # line_id comes from the window
 
 
 def verdict_lines_from_geo(geo_pages: DataFrame,
@@ -356,10 +290,10 @@ def verdict_lines_from_geo(geo_pages: DataFrame,
     keep, drop_reason).
 
     MEASURED CHOICE (don't re-fuse without re-measuring): this path
-    stays STAGED (JVM explode + the arrow-kernel pandas UDF) even under
-    CCSPARK_KERNEL=arrow.  The fused mapInArrow twin
-    (explode_verdict_fused) was measured 0.76x here (7.8s -> 10.2s,
-    cell_metrics at 3M docs/16 cores): when EVERY line must come back
+    stays STAGED (JVM explode + the arrow-kernel pandas UDF).  A fused
+    mapInArrow form emitting every line with its verdict was measured
+    0.76x here (7.8s -> 10.2s, cell_metrics at 3M docs/16 cores): when
+    EVERY line must come back
     with its passthrough columns, the Python stage re-emits those
     columns duplicated per line through Arrow, while the staged UDF
     receives one string column and returns three small ones with the
@@ -374,7 +308,7 @@ def verdict_lines(lines: DataFrame) -> DataFrame:
     """Like clean_and_filter but keeps every raw line, adding
     (keep boolean, drop_reason string) - feeds the metrics/lineage tables
     and the F1-vs-oracle tests."""
-    udf = pykernel.make_clean_verdict_udf()
+    udf = arrowkernel.make_clean_verdict_udf()
     df = lines.withColumn("_v", udf("raw_line"))
     return (
         df.select("*", F.col("_v.text").alias("text"),
@@ -417,31 +351,37 @@ def corpus_lines(pages: DataFrame) -> DataFrame:
     plus region/tld.
 
     Plan shape: scan -> broadcast joins -> ONE fused Arrow stage
-    (RE2 line split + clean + verdict, kept lines only - see
-    explode_clean_fused; CCSPARK_KERNEL=py reverts to the staged
-    posexplode + flat-struct pandas UDF) -> url-window ordinal ->
-    hash-aggregate dedup.  A page-at-a-time UDF returning array<struct>
-    was measured 4.6x slower than the staged form (Arrow nested-return
+    (RE2 line split + clean + verdict + in-stage line ordinal, kept
+    lines only - see explode_clean_fused) -> hash-aggregate dedup.  A
+    page-at-a-time UDF returning array<struct> was measured 4.6x slower
+    than a staged posexplode + pandas UDF (Arrow nested-return
     serialization dominates); the fused form instead emits flat
     RecordBatches and beats both."""
     df = with_geo(pages)
     cols = _corpus_line_cols(df)
     # the explicit projection here doubles as the html-pruning barrier:
-    # only these columns + text enter the Python stage, and only these +
-    # (line_id, text, hash) reach the dedup aggregate's payload struct
-    df = exploded_kept_lines(df, cols)
-    df = _ordinal_and_hash(df)
-    return dedup_keep_first(df.select(*cols, "line_id", "text", "hash"))
+    # only these columns + text enter the Python stage
+    return dedup_lines(explode_clean_fused(df.select(*cols, "text")), cols)
 
 
-def _ordinal_and_hash(df: DataFrame) -> DataFrame:
-    """W1+F14 for an exploded_kept_lines frame: the fused stage already
-    carries the in-stage line_id (page-local ordinal, NO url-window
-    shuffle); the staged form computes it with the window.  Either way
-    the stable xxhash64 line hash is added here."""
-    if "line_id" in df.columns:
-        return df.withColumn("hash", F.xxhash64("text"))
-    return number_and_hash(df)
+def dedup_lines(lines: DataFrame, cols: list[str]) -> DataFrame:
+    """F14 + D1 over explode_clean_fused output (its page rows filtered
+    out): the stable xxhash64 of the cleaned ``text``, then keep-first
+    dedup carrying *cols* + (line_id, text).  Output columns: hash, url,
+    line_id, the rest of *cols*, text.
+
+    When the stage ran with ``scrub=True``, ``scrubbed`` rides the
+    dedup payload and replaces ``text`` after it: the hash keys the
+    pre-scrub line, so placeholders like <EMAIL> never collide
+    distinct lines, and the output equals scrubbing the deduplicated
+    lines (the scrubbed text is a function of the pre-scrub text)."""
+    payload = [c for c in ("text", "scrubbed") if c in lines.columns]
+    df = lines.withColumn("hash", F.xxhash64("text"))
+    out = dedup_keep_first(df.select(*cols, "line_id", *payload, "hash"))
+    if "scrubbed" not in payload:
+        return out
+    return (out.withColumn("text", F.coalesce("scrubbed", "text"))
+            .drop("scrubbed"))
 
 
 def cell_metrics(pages: DataFrame) -> DataFrame:
@@ -528,7 +468,7 @@ def corpus_lines_observed(pages: DataFrame):
     df = with_geo(pages)
     df = explode_lines(df)
     obs = Observation("corpus_metrics")
-    udf = pykernel.make_clean_verdict_udf()
+    udf = arrowkernel.make_clean_verdict_udf()
     df = df.filter(F.length("raw_line") > 15).withColumn("_v", udf("raw_line"))
     df = df.observe(
         obs,

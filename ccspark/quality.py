@@ -286,8 +286,9 @@ GOPHER_STOPWORDS = GOPHER_STOPWORDS_BY_LANG["en"]
 # page is ONE "word"), so the language-aware gate counts Han/Hangul/Kana
 # CHARACTERS as words instead and bypasses the token-shape gates
 # (mean_word_len, token-alpha-fraction, stopwords) - mirroring the line
-# kernel's F12 CJK handling (cc_corpus.py:276-284 -> pykernel.py:98-107),
-# which the language-BLIND document gate used to contradict.
+# kernel's F12 CJK handling (cc_corpus.py:276-284, the cjklen rule of
+# arrowkernel.verdict_batch), which the language-BLIND document gate used
+# to contradict.
 SPACE_FREE_LANGS = ("ja", "ko", "zh")
 
 GOPHER_THRESHOLDS = dict(
@@ -298,6 +299,19 @@ GOPHER_THRESHOLDS = dict(
     min_alpha_word_frac=0.8, min_stopword_hits=2,
     max_dup_line_frac=0.3, max_dup_line_char_frac=0.2,
 )
+
+
+def gopher_thresholds(overrides: dict | None = None) -> dict:
+    """GOPHER_THRESHOLDS with *overrides* merged in - the one merge every
+    Gopher gate uses.  Raises ValueError on a key outside
+    GOPHER_THRESHOLDS: a misspelt key ("min_word") would otherwise be
+    merged, never read, and leave the default rule in force."""
+    unknown = sorted(set(overrides or ()) - set(GOPHER_THRESHOLDS))
+    if unknown:
+        raise ValueError(
+            f"unknown Gopher threshold key(s) {unknown}; known keys: "
+            f"{sorted(GOPHER_THRESHOLDS)}")
+    return dict(GOPHER_THRESHOLDS, **(overrides or {}))
 
 
 # a token carrying at least one letter: one regexp_count scan
@@ -441,7 +455,7 @@ def gopher_keep_ml_expr(text: str = "text", lang: str = "lang",
     derives keep from them, keeping each signal inside its own codegen
     method)."""
     from ccspark.sqlgen import lit
-    t = dict(GOPHER_THRESHOLDS, **(th or {}))
+    t = gopher_thresholds(th)
     s = s or gopher_signal_exprs_ml(text, lang)
     sf = _space_free(lang)
     known = (f"({lang} IN "
@@ -463,102 +477,6 @@ def gopher_keep_ml_expr(text: str = "text", lang: str = "lang",
     return "(" + " AND ".join(checks) + ")"
 
 
-def make_gopher_keep_ml_udf(thresholds: dict | None = None):
-    """The language-aware Gopher gate, one vectorized pass per
-    (text, lang) pair.  Dispatches on CCSPARK_KERNEL like the line
-    kernel (ccspark.pykernel.make_clean_verdict_udf): 'arrow' (default)
-    -> whole-batch pyarrow.compute rendering in ccspark.arrowgate;
-    'py' -> the per-row loop below (the parity anchor)."""
-    import os
-    if os.environ.get("CCSPARK_KERNEL", "arrow") == "arrow":
-        from ccspark import arrowgate
-        return arrowgate.make_gopher_keep_ml_udf(thresholds)
-    return make_gopher_keep_ml_udf_py(thresholds)
-
-
-def make_gopher_keep_ml_udf_py(thresholds: dict | None = None):
-    """Per-row rendering of the language-aware gate (see
-    make_gopher_keep_ml_udf) - the production fast path before round 3
-    (same economics as make_gopher_keep_udf: each doc is scanned once
-    instead of once per Catalyst check).  Verdict-identical to
-    gopher_keep_ml_expr, parity-tested per row on a mixed-language
-    boundary fixture incl. the round(.,4) HALF_UP threshold edges."""
-    import re as _re
-
-    import pandas  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
-
-    from ccspark import regexes as R
-
-    t = dict(GOPHER_THRESHOLDS, **(thresholds or {}))
-    cjk_rx = _re.compile(R.CJKISH_CLASS)
-    sf_set = frozenset(SPACE_FREE_LANGS)
-    stops_by_lang = {k: tuple(v) for k, v in GOPHER_STOPWORDS_BY_LANG.items()}
-
-    def keep_one(text, lang) -> bool:
-        if text is None:
-            return False
-        sf = lang in sf_set
-        tokens = [w for w in text.split(" ") if w]
-        n_words = len(cjk_rx.findall(text)) if sf else len(tokens)
-        if not (t["min_words"] <= n_words <= t["max_words"]):
-            return False
-        word_chars = len(text.replace(" ", ""))
-        if not sf:
-            mwl = _round4(word_chars / max(n_words, 1))
-            if not (t["min_mean_word_len"] <= mwl
-                    <= t["max_mean_word_len"]):
-                return False
-        n_sym = (text.count("#") + text.count("…") + text.count("..."))
-        if _round4(n_sym / max(n_words, 1)) > t["max_symbol_word_ratio"]:
-            return False
-        lines = text.split("\n")
-        n_lines = len(lines)
-        n_bullet = sum(1 for ln in lines
-                       if ln.startswith(("- ", "* ", "• ")))
-        if _round4(n_bullet / max(n_lines, 1)) > t["max_bullet_frac"]:
-            return False
-        n_ellip = sum(1 for ln in lines if ln.endswith(("...", "…")))
-        if _round4(n_ellip / max(n_lines, 1)) > t["max_ellipsis_frac"]:
-            return False
-        if sf:
-            n_alpha_chars = sum(1 for c in text if c.isalpha())
-            if _round4(n_alpha_chars / max(word_chars, 1)) \
-                    < t["min_alpha_word_frac"]:
-                return False
-        else:
-            n_alpha = sum(1 for w in tokens if any(c.isalpha() for c in w))
-            if _round4(n_alpha / max(len(tokens), 1)) \
-                    < t["min_alpha_word_frac"]:
-                return False
-        stops = stops_by_lang.get(lang)
-        if stops is not None:
-            padded = " " + text.lower().replace("\n", " ") + " "
-            hits = sum(1 for w in stops if f" {w} " in padded)
-            if hits < t["min_stopword_hits"]:
-                return False
-        distinct = set(lines)
-        if _round4((n_lines - len(distinct)) / max(n_lines, 1)) \
-                > t["max_dup_line_frac"]:
-            return False
-        line_chars = len(text) - (n_lines - 1)
-        dup_chars = max(line_chars - sum(len(ln) for ln in distinct), 0)
-        if _round4(dup_chars / max(line_chars, 1)) \
-                > t["max_dup_line_char_frac"]:
-            return False
-        return True
-
-    def batches(texts: "pandas.Series",
-                langs: "pandas.Series") -> "pandas.Series":
-        return pandas.Series(
-            [keep_one(x, lg) for x, lg in zip(texts, langs)])
-
-    batches.__annotations__ = {"texts": pandas.Series,
-                               "langs": pandas.Series,
-                               "return": pandas.Series}
-    return pandas_udf(batches, "boolean")
-
-
 def gopher_quality(docs: DataFrame, text_col: str = "text",
                    thresholds: dict | None = None,
                    signals: bool = True,
@@ -576,8 +494,13 @@ def gopher_quality(docs: DataFrame, text_col: str = "text",
 
     With *lang_col* the gate is LANGUAGE-AWARE (see
     gopher_signal_exprs_ml): per-row stopword sets, CJK-safe word
-    counting, token-shape gates bypassed for space-free scripts."""
-    t = dict(GOPHER_THRESHOLDS, **(thresholds or {}))
+    counting, token-shape gates bypassed for space-free scripts.
+
+    ``engine="udf"`` computes ``gopher_keep`` with the whole-batch Arrow
+    gate (arrowgate.gopher_keep_batch) instead of the expression; the
+    verdicts are equal (tests/test_gopher.py).  Unknown *thresholds*
+    keys raise ValueError here, when the plan is built."""
+    t = gopher_thresholds(thresholds)
     sig = (gopher_signal_exprs_ml(text_col, lang_col)
            if lang_col is not None
            else gopher_signal_exprs(text_col, stopwords))
@@ -603,14 +526,15 @@ def gopher_quality(docs: DataFrame, text_col: str = "text",
             & (F.col("dup_line_char_frac") <= t["max_dup_line_char_frac"])
         )
     if engine == "udf":
-        # the gate-only fast path: one vectorized Python pass per doc
+        # the gate-only fast path: one whole-batch Arrow pass per doc
         # (verdict-identical, parity-tested; ~10x the expression gate)
+        from ccspark import arrowgate
         if lang_col is not None:
-            udf = make_gopher_keep_ml_udf(thresholds)
+            udf = arrowgate.make_gopher_keep_ml_udf(thresholds)
             out = out.withColumn("gopher_keep",
                                  udf(F.col(text_col), F.col(lang_col)))
         else:
-            udf = make_gopher_keep_udf(thresholds, stopwords)
+            udf = arrowgate.make_gopher_keep_udf(thresholds, stopwords)
             out = out.withColumn("gopher_keep", udf(F.col(text_col)))
     else:
         out = out.withColumn("gopher_keep", keep)
@@ -844,79 +768,3 @@ def _round4(x: float) -> float:
     from decimal import ROUND_HALF_UP, Decimal
     return float(Decimal(repr(x)).quantize(Decimal("0.0001"),
                                            rounding=ROUND_HALF_UP))
-
-
-def make_gopher_keep_udf(thresholds: dict | None = None,
-                         stopwords: tuple = GOPHER_STOPWORDS):
-    """The static-stopword Gopher gate, one vectorized pass per document.
-    Dispatches on CCSPARK_KERNEL like the line kernel: 'arrow' (default)
-    -> whole-batch pyarrow.compute rendering in ccspark.arrowgate;
-    'py' -> the per-row loop below (the parity anchor)."""
-    import os
-    if os.environ.get("CCSPARK_KERNEL", "arrow") == "arrow":
-        from ccspark import arrowgate
-        return arrowgate.make_gopher_keep_udf(thresholds, stopwords)
-    return make_gopher_keep_udf_py(thresholds, stopwords)
-
-
-def make_gopher_keep_udf_py(thresholds: dict | None = None,
-                            stopwords: tuple = GOPHER_STOPWORDS):
-    """Per-row rendering (see make_gopher_keep_udf) - the same lesson the
-    line kernel taught (CLAUDE.md): Spark 4 evaluates a
-    many-regex/HOF expression chain per check with no sharing (measured
-    26s for the expression gate over 3M docs vs ~2s here), while a single
-    Python pass computes every signal once.  Verdict-identical to the
-    expression gate in gopher_quality (parity-tested per row incl. the
-    round(.,4) HALF_UP threshold boundaries)."""
-    import pandas  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
-
-    t = dict(GOPHER_THRESHOLDS, **(thresholds or {}))
-    stops = tuple(stopwords)
-
-    def keep_one(text) -> bool:
-        if text is None:
-            return False
-        tokens = [w for w in text.split(" ") if w]
-        n_words = len(tokens)
-        if not (t["min_words"] <= n_words <= t["max_words"]):
-            return False
-        word_chars = len(text.replace(" ", ""))
-        mwl = _round4(word_chars / max(n_words, 1))
-        if not (t["min_mean_word_len"] <= mwl <= t["max_mean_word_len"]):
-            return False
-        n_sym = (text.count("#") + text.count("…") + text.count("..."))
-        if _round4(n_sym / max(n_words, 1)) > t["max_symbol_word_ratio"]:
-            return False
-        lines = text.split("\n")
-        n_lines = len(lines)
-        n_bullet = sum(1 for ln in lines
-                       if ln.startswith(("- ", "* ", "• ")))
-        if _round4(n_bullet / max(n_lines, 1)) > t["max_bullet_frac"]:
-            return False
-        n_ellip = sum(1 for ln in lines if ln.endswith(("...", "…")))
-        if _round4(n_ellip / max(n_lines, 1)) > t["max_ellipsis_frac"]:
-            return False
-        n_alpha = sum(1 for w in tokens if any(c.isalpha() for c in w))
-        if _round4(n_alpha / max(n_words, 1)) < t["min_alpha_word_frac"]:
-            return False
-        padded = " " + text.lower().replace("\n", " ") + " "
-        hits = sum(1 for w in stops if f" {w} " in padded)
-        if hits < t["min_stopword_hits"]:
-            return False
-        distinct = set(lines)
-        if _round4((n_lines - len(distinct)) / max(n_lines, 1)) \
-                > t["max_dup_line_frac"]:
-            return False
-        line_chars = len(text) - (n_lines - 1)
-        dup_chars = max(line_chars - sum(len(ln) for ln in distinct), 0)
-        if _round4(dup_chars / max(line_chars, 1)) \
-                > t["max_dup_line_char_frac"]:
-            return False
-        return True
-
-    def batches(s: "pandas.Series") -> "pandas.Series":
-        return pandas.Series([keep_one(x) for x in s])
-
-    batches.__annotations__ = {"s": pandas.Series, "return": pandas.Series}
-    return pandas_udf(batches, "boolean")

@@ -1,18 +1,25 @@
 """Frozen, independent transcription of the reference keep/drop kernel.
 
-This module re-derives the reference semantics (/root/reference
+This module re-derives the reference semantics (reference
 cc_corpus.py:237-294; gensim.parsing.preprocessing's published regexes;
 alphabet_detector's unicodedata test) *directly*, using Python ``re`` with
 its native ``\\s``/``\\S`` shorthands and ``unicodedata.name`` - i.e. NOT
-via ccspark's explicit dialect-neutral character classes.  The test suite
-asserts agreement (this oracle == ccspark.pykernel == ccspark.arrowkernel
-== the Spark SQL rendering), so any transcription error in the explicit
-classes shows up as a parity failure here.
+via ccspark's explicit dialect-neutral character classes.  It is the one
+independent reference for ccspark's single kernel implementation: the
+test suite asserts ``verdict`` / ``clean`` == ccspark.arrowkernel row for
+row, and the fused production stage == ``process_page`` end to end, so
+any transcription error in the explicit classes shows up as a parity
+failure here.
 
 The only shared component is the emoji codepoint table
 (ccspark.regexes.EMOJI_RANGES): the reference used the `emoji` package,
 which is unavailable in this environment, so its behavior is pinned by that
 frozen approximation on all sides (documented in ccspark/regexes.py).
+
+The Gopher and C4 document gates are restated per row as well
+(``gopher_keep``, ``c4_page_keep``), with CJK detection by
+``unicodedata.name`` rather than ccspark.regexes' code-point classes;
+they check ccspark.arrowgate and, through the composite, the facade.
 
 It also restates the char-n-gram Naive Bayes LID of ccspark.lid
 (``nb_train``, ``nb_scores``, ``nb_predict``) with ``collections.Counter``
@@ -333,6 +340,73 @@ def c4_line_keep(line: str) -> bool:
             and (line.count(" ") + 1 >= 3
                  or sum(map(_cjkish, line)) >= 6)
             and "javascript" not in line.lower())
+
+
+def c4_page_keep(text: str, min_sentences: int = 5) -> bool:
+    """quality.c4_page_keep_expr: at least *min_sentences* non-empty
+    c4_sentences and neither 'lorem ipsum' nor '{' in the lowercased
+    text.  A None text fails."""
+    if text is None:
+        return False
+    low = text.lower()
+    return (sum(1 for s in c4_sentences(text) if s) >= min_sentences
+            and "lorem ipsum" not in low and "{" not in low)
+
+
+def gopher_keep(text: str, lang: str = None, thresholds: dict = None,
+                stopwords: tuple = None) -> bool:
+    """The Gopher document gate (Rae et al. 2021, table A1) for one doc,
+    with quality.GOPHER_THRESHOLDS overridden by *thresholds*.
+
+    *stopwords* given: the static gate with that stopword set (*lang* is
+    ignored).  *stopwords* None: the language-aware gate - *lang* picks
+    the stopword set from quality.GOPHER_STOPWORDS_BY_LANG (no set, no
+    stopword rule), and for a space-free language (zh/ja/ko) a word is
+    one Han/Hangul/Kana letter, the mean-word-length rule is skipped and
+    the alpha fraction counts letters over non-space characters.
+    Tokens are the non-empty ' '-split pieces; lines split on '\\n';
+    every ratio is rounded HALF_UP to 4 places.  A None text fails."""
+    from ccspark.quality import (
+        GOPHER_STOPWORDS_BY_LANG, GOPHER_THRESHOLDS, SPACE_FREE_LANGS,
+    )
+    if text is None:
+        return False
+    t = dict(GOPHER_THRESHOLDS, **(thresholds or {}))
+    sf = stopwords is None and lang in SPACE_FREE_LANGS
+    stops = (stopwords if stopwords is not None
+             else GOPHER_STOPWORDS_BY_LANG.get(lang))
+    tokens = [w for w in text.split(" ") if w]
+    n_words = sum(map(_cjkish, text)) if sf else len(tokens)
+    nw = max(n_words, 1)
+    word_chars = len(text.replace(" ", ""))
+    lines = text.split("\n")
+    n_lines = len(lines)
+    distinct = set(lines)
+    line_chars = len(text) - (n_lines - 1)
+    dup_chars = max(line_chars - sum(len(ln) for ln in distinct), 0)
+    if sf:
+        alpha = round4(sum(c.isalpha() for c in text) / max(word_chars, 1))
+    else:
+        alpha = round4(sum(any(c.isalpha() for c in w) for w in tokens)
+                       / max(len(tokens), 1))
+    n_sym = text.count("#") + text.count("…") + text.count("...")
+    n_bullet = sum(ln.startswith(("- ", "* ", "• ")) for ln in lines)
+    n_ellip = sum(ln.endswith(("...", "…")) for ln in lines)
+    padded = " " + text.lower().replace("\n", " ") + " "
+    return (t["min_words"] <= n_words <= t["max_words"]
+            and (sf or t["min_mean_word_len"] <= round4(word_chars / nw)
+                 <= t["max_mean_word_len"])
+            and round4(n_sym / nw) <= t["max_symbol_word_ratio"]
+            and round4(n_bullet / n_lines) <= t["max_bullet_frac"]
+            and round4(n_ellip / n_lines) <= t["max_ellipsis_frac"]
+            and alpha >= t["min_alpha_word_frac"]
+            and (stops is None
+                 or sum(f" {w} " in padded for w in stops)
+                 >= t["min_stopword_hits"])
+            and round4((n_lines - len(distinct)) / n_lines)
+            <= t["max_dup_line_frac"]
+            and round4(dup_chars / max(line_chars, 1))
+            <= t["max_dup_line_char_frac"])
 
 
 def round4(x: float) -> float:

@@ -64,6 +64,30 @@ def test_signals_point_at_the_right_rule(spark):
     assert c.dup_line_frac == 0.0 and c.bullet_frac == 0.0
 
 
+def test_unknown_threshold_key_raises(spark):
+    """A misspelt Gopher threshold key raises ValueError in every gate -
+    arrowgate, the expression and UDF renderings of gopher_quality and
+    domain_quality - while the plan is built, not in a task; the real
+    key is honoured."""
+    import pyarrow as pa
+    import pytest
+
+    from ccspark import arrowgate
+    doc = pa.array([GOOD], type=pa.string())
+    assert arrowgate.gopher_keep_batch(doc).tolist() == [True]
+    assert arrowgate.gopher_keep_batch(
+        doc, thresholds={"min_words": 10**6}).tolist() == [False]
+    with pytest.raises(ValueError, match="min_word"):
+        arrowgate.gopher_keep_batch(doc, thresholds={"min_word": 10**6})
+    df = spark.createDataFrame([Row(domain="a.de", lang="en", text=GOOD)])
+    for kw in ({}, {"engine": "udf"}, {"lang_col": "lang"},
+               {"lang_col": "lang", "engine": "udf"}):
+        with pytest.raises(ValueError, match="min_word"):
+            quality.gopher_quality(df, thresholds={"min_word": 1}, **kw)
+    with pytest.raises(ValueError, match="min_word"):
+        quality.domain_quality(df, thresholds={"min_word": 1})
+
+
 def test_thresholds_are_overridable(spark):
     df = spark.createDataFrame([Row(name="short", text=DOCS["too_short"])])
     relaxed = quality.gopher_quality(df, thresholds={"min_words": 5})
@@ -333,21 +357,26 @@ def test_c4_line_gate_accepts_cjk_terminal_punctuation(spark):
         assert s == want, (line, s)
 
 
+# loose enough that most fuzz docs reach the late rules (alpha fraction,
+# stopwords, duplicate lines) instead of failing on length or shape
+_LOOSE = dict(min_words=20, min_mean_word_len=2.0, max_mean_word_len=12.0,
+              max_symbol_word_ratio=0.3, max_bullet_frac=0.5,
+              max_ellipsis_frac=0.3, min_alpha_word_frac=0.6,
+              min_stopword_hits=2, max_dup_line_frac=0.5,
+              max_dup_line_char_frac=0.5)
+
+
 def test_arrow_gate_matches_py_gate(spark):
-    """The Arrow/RE2 whole-batch gate (ccspark.arrowgate, the
-    CCSPARK_KERNEL=arrow default) is verdict-identical to the per-row
-    loop (the parity anchor) - static AND language-aware renderings -
-    on every purpose-built violating doc, the multilingual fixture,
+    """The Arrow/RE2 whole-batch gate (ccspark.arrowgate) is
+    verdict-identical to the per-row restatement oracle.gopher_keep -
+    static AND language-aware renderings, default and loose thresholds
+    - on every purpose-built violating doc, the multilingual fixture,
     nulls, boundary docs, and a seeded adversarial batch."""
     import random
 
-    import pandas as pd
     import pyarrow as pa
 
     from ccspark import arrowgate
-
-    py_ml = quality.make_gopher_keep_ml_udf_py().func
-    py_st = quality.make_gopher_keep_udf_py().func
 
     texts = ([tx for _, tx in ML_DOCS.values()] + list(DOCS.values())
              + [None, "", " ".join(["abc"] * 60) + " x y",
@@ -367,17 +396,31 @@ def test_arrow_gate_matches_py_gate(spark):
         parts = [frag[rng.randint(0, len(frag) - 1):] for _ in range(k)]
         texts.append(" ".join(parts)[: rng.randint(0, 2000)])
         langs.append(rng.choice(["en", "de", "zh", "ja", "ko", "fi", None]))
+    atoms = ["the", "and", "der", "und", "of", "that", "中文", "한국어",
+             "ひらがな", "カタカナ", "々", "ー", "#", "…", "...", "- ", "* ",
+             "• ", "12345", "supercalifragilistic", "\n", "  ", "İ", "ß",
+             "\u3000", "\t", "e\u0301", "\U00020000", "ǅ", "Ⅳ", "²"]
+    for _ in range(600):
+        line = " ".join(rng.choice(atoms)
+                        for _ in range(rng.randint(1, 20)))
+        texts.append("\n".join([line] * rng.randint(1, 3) + [" ".join(
+            rng.choice(atoms) for _ in range(rng.randint(0, 200)))]))
+        langs.append(rng.choice(["en", "de", "zh", "ja", "ko", "fi", None]))
 
-    exp_ml = py_ml(pd.Series(texts), pd.Series(langs)).tolist()
-    got_ml = arrowgate.gopher_keep_batch(
-        pa.array(texts, type=pa.string()),
-        pa.array(langs, type=pa.string())).tolist()
-    assert [bool(x) for x in exp_ml] == [bool(x) for x in got_ml]
-
-    exp_st = py_st(pd.Series(texts)).tolist()
-    got_st = arrowgate.gopher_keep_batch(
-        pa.array(texts, type=pa.string())).tolist()
-    assert [bool(x) for x in exp_st] == [bool(x) for x in got_st]
+    for th in (None, _LOOSE):
+        got_ml = arrowgate.gopher_keep_batch(
+            pa.array(texts, type=pa.string()),
+            pa.array(langs, type=pa.string()), thresholds=th).tolist()
+        exp_ml = [oracle.gopher_keep(t, lg, th)
+                  for t, lg in zip(texts, langs)]
+        assert [bool(x) for x in got_ml] == exp_ml, th
+        got_st = arrowgate.gopher_keep_batch(
+            pa.array(texts, type=pa.string()), thresholds=th).tolist()
+        exp_st = [oracle.gopher_keep(t, thresholds=th,
+                                     stopwords=quality.GOPHER_STOPWORDS)
+                  for t in texts]
+        assert [bool(x) for x in got_st] == exp_st, th
+        assert 0 < sum(exp_ml) < len(texts) and 0 < sum(exp_st), th
 
 
 def test_c4_arrow_gate_matches_spark_expr(spark):

@@ -1,70 +1,30 @@
 """Parity of the keep/drop kernel on boundary fixtures:
 
     tests/oracle.py (independent Python-re + unicodedata transcription)
- == ccspark.pykernel (per-row pandas-UDF kernel, explicit classes)
- == ccspark.arrowkernel (whole-batch Arrow/RE2 kernel)
- == Spark SQL rendering (ccspark.kernel)
+ == ccspark.arrowkernel (whole-batch Arrow/RE2 kernel, explicit classes)
 
-plus hand-derived hard expectations so the implementations can't all
-agree on wrong semantics.
+plus hand-derived hard expectations so the two can't agree on wrong
+semantics.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-import pytest
+import pyarrow as pa
 
-from ccspark import kernel, pykernel
+from ccspark import arrowkernel
 from tests import oracle
 from tests.fixtures import LINE_CASES
-
-
-def oracle_frame() -> pd.DataFrame:
-    rows = []
-    for case_id, raw in LINE_CASES:
-        cleaned, keep, reason = oracle.verdict(raw)
-        rows.append((case_id, raw, cleaned, keep, reason))
-    return pd.DataFrame(
-        rows, columns=["case_id", "raw", "cleaned", "keep", "reason"])
-
-
-def test_pykernel_matches_oracle():
-    for case_id, raw in LINE_CASES:
-        assert pykernel.verdict(raw) == oracle.verdict(raw), case_id
 
 
 def test_arrowkernel_matches_oracle():
     """The Arrow/RE2 whole-batch kernel on the same boundary fixtures
     (drop_reason labels included)."""
-    import pyarrow as pa
-
-    from ccspark import arrowkernel
-
     raws = [raw for _, raw in LINE_CASES]
     text, keep, reason = arrowkernel.verdict_batch(
         pa.array(raws, type=pa.string()))
     for i, (case_id, raw) in enumerate(LINE_CASES):
         assert (text[i], bool(keep[i]), reason[i]) == oracle.verdict(raw), \
             case_id
-
-
-def test_spark_sql_kernel_matches_oracle(spark):
-    exp = oracle_frame()
-    df = spark.createDataFrame(exp[["case_id", "raw"]])
-    got = (
-        df.selectExpr(
-            "case_id",
-            f"{kernel.cleaned_expr('raw')} AS cleaned",
-            f"{kernel.keep_expr('raw', kernel.cleaned_expr('raw'))} AS keep",
-        )
-        .toPandas()
-        .set_index("case_id")
-    )
-    for _, r in exp.iterrows():
-        g = got.loc[r.case_id]
-        assert bool(g.keep) == r.keep, f"{r.case_id}: keep {g.keep} != {r.keep}"
-        if r.keep:
-            assert g.cleaned == r.cleaned, f"{r.case_id}: text mismatch"
 
 
 # ---- hand-derived hard expectations (guard against collective drift) ----
@@ -121,13 +81,18 @@ def test_clean_strips_social_and_tags():
 
 
 def test_clean_idempotent_on_fixtures():
-    for case_id, raw in LINE_CASES:
-        c = pykernel.clean_line(raw)
-        assert pykernel.clean_line(c) == c or True  # documented below
-        # NOTE: full idempotence doesn't hold in general (an '@' revealed by
-        # tag-stripping can trigger a second-pass deletion); assert only
-        # that a second pass is stable for our fixture pool:
-        assert pykernel.clean_line(pykernel.clean_line(c)) == pykernel.clean_line(c), case_id
+    """arrowkernel._clean_batch equals oracle.clean on every fixture, and
+    a second pass reaches a fixpoint.  Full idempotence doesn't hold in
+    general (an '@' revealed by tag-stripping can trigger a second-pass
+    deletion), so only pass-3 == pass-2 is asserted."""
+    raws = [raw for _, raw in LINE_CASES]
+    c1 = arrowkernel._clean_batch(pa.array(raws, type=pa.string()))
+    c2 = arrowkernel._clean_batch(c1)
+    c3 = arrowkernel._clean_batch(c2)
+    for i, (case_id, raw) in enumerate(LINE_CASES):
+        assert c1[i].as_py() == oracle.clean(raw), case_id
+        assert c2[i].as_py() == oracle.clean(oracle.clean(raw)), case_id
+    assert c3.equals(c2)
 
 
 def test_line_counter_over_kept_lines_only():

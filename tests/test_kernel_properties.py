@@ -1,12 +1,14 @@
 """Property-based cross-validation of the kernel (no Spark needed):
 random unicode lines through the independent oracle and the production
-pykernel must always agree, and structural invariants must hold."""
+Arrow/RE2 kernel must always agree, and structural invariants must
+hold."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
-from ccspark import pykernel
+from ccspark import arrowkernel
 from tests import oracle
 
 # A text alphabet biased toward the interesting classes: ascii, punctuation,
@@ -23,14 +25,10 @@ LINES = st.lists(CHUNKS, min_size=0, max_size=30).map("".join)
 
 @settings(max_examples=300, deadline=None)
 @given(LINES)
-def test_pykernel_equals_oracle(line):
-    assert pykernel.verdict(line) == oracle.verdict(line)
-
-
-@settings(max_examples=300, deadline=None)
-@given(LINES)
 def test_kept_line_invariants(line):
-    cleaned, keep, reason = pykernel.verdict(line)
+    text, keep, reason = arrowkernel.verdict_batch([line])
+    cleaned, keep, reason = text[0], bool(keep[0]), reason[0]
+    assert (cleaned, keep, reason) == oracle.verdict(line)
     if keep:
         assert reason is None
         assert len(cleaned) > 15
@@ -46,12 +44,16 @@ def test_kept_line_invariants(line):
 @settings(max_examples=200, deadline=None)
 @given(LINES)
 def test_clean_second_pass_stable(line):
-    c1 = pykernel.clean_line(line)
-    c2 = pykernel.clean_line(c1)
+    def clean(s):
+        return arrowkernel._clean_batch(pa.array([s], type=pa.string()))[
+            0].as_py()
+    c1 = clean(line)
+    assert c1 == oracle.clean(line)
+    c2 = clean(c1)
     # cleaning is not strictly idempotent (tag-stripping can expose new
     # @/# tokens) but must reach a fixpoint by the second pass for any
     # realistic input; assert pass-3 == pass-2.
-    assert pykernel.clean_line(c2) == c2
+    assert clean(c2) == c2
 
 
 @settings(max_examples=200, deadline=None)
@@ -63,15 +65,11 @@ def test_page_counter_dense(text):
 
 @settings(max_examples=150, deadline=None)
 @given(st.lists(LINES | st.none(), min_size=0, max_size=40))
-def test_arrowkernel_batch_equals_pykernel(lines):
+def test_arrowkernel_batch_equals_oracle(lines):
     """The Arrow/RE2 whole-batch kernel is row-for-row identical to the
-    per-row Python kernel (which itself equals the independent oracle
-    above) - including None inputs and the drop_reason label."""
-    import pyarrow as pa
-
-    from ccspark import arrowkernel
-
+    independent oracle - including None inputs and the drop_reason
+    label."""
     text, keep, reason = arrowkernel.verdict_batch(
         pa.array(lines, type=pa.string()))
     for i, line in enumerate(lines):
-        assert (text[i], bool(keep[i]), reason[i]) == pykernel.verdict(line)
+        assert (text[i], bool(keep[i]), reason[i]) == oracle.verdict(line)

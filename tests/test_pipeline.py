@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import Row, functions as F
 
-from ccspark import pipeline
+from ccspark import pipeline, quality
 from tests import oracle
 
 GOOD = "this line is long enough to pass every filter in the chain easily"
@@ -218,56 +218,6 @@ def test_fused_explode_clean_matches_staged(spark):
         assert a or pages is edge
 
 
-def test_corpus_lines_arrow_py_paths_identical(spark):
-    """corpus_lines under CCSPARK_KERNEL=arrow (fused) and =py (staged
-    pandas UDF) return the same rows bitwise."""
-    from tests.fixtures import pages_spark
-
-    pages = pages_spark(spark, "/root/testdata/sf0.001")
-    old = os.environ.get("CCSPARK_KERNEL")
-    try:
-        os.environ["CCSPARK_KERNEL"] = "py"
-        a = sorted(map(tuple, pipeline.corpus_lines(pages).collect()))
-        os.environ["CCSPARK_KERNEL"] = "arrow"
-        b = sorted(map(tuple, pipeline.corpus_lines(pages).collect()))
-    finally:
-        if old is None:
-            os.environ.pop("CCSPARK_KERNEL", None)
-        else:
-            os.environ["CCSPARK_KERNEL"] = old
-    assert a == b and len(a) > 0
-
-
-def test_composite_arrow_py_paths_identical(spark):
-    """build_training_corpus under CCSPARK_KERNEL=arrow (Gopher gate
-    fused into the mapInArrow line stage) and =py (staged gate UDF +
-    posexplode) return the same rows bitwise - incl. the domain-gated
-    variant."""
-    from ccspark.api import CCSparkCorpus
-    from tests.fixtures import pages_spark
-
-    pages = pages_spark(spark, "/root/testdata/sf0.001")
-    cc = CCSparkCorpus(spark)
-    old = os.environ.get("CCSPARK_KERNEL")
-    try:
-        for kwargs in ({}, {"domain_min_keep": 0.7},
-                       {"domain_min_keep": 0.9}, {"lang_aware": False}):
-            os.environ["CCSPARK_KERNEL"] = "py"
-            a = sorted(map(tuple,
-                           cc.build_training_corpus(pages, **kwargs)
-                           .collect()))
-            os.environ["CCSPARK_KERNEL"] = "arrow"
-            b = sorted(map(tuple,
-                           cc.build_training_corpus(pages, **kwargs)
-                           .collect()))
-            assert a == b and len(a) > 0, kwargs
-    finally:
-        if old is None:
-            os.environ.pop("CCSPARK_KERNEL", None)
-        else:
-            os.environ["CCSPARK_KERNEL"] = old
-
-
 _SENT = ("the quick brown fox jumps over and over that lazy dog to be "
          "of service and have fun with every word in this line")
 # >= 5 sentences: passes Gopher and C4
@@ -364,23 +314,6 @@ def test_domain_gate_equals_ungated_over_kept_domains(spark, monkeypatch):
         assert not out & {"nulllang", "conly", None}, cfg
 
 
-def test_verdict_fused_matches_staged(spark):
-    """explode_verdict_fused (metrics path, arrow) is row-identical to
-    verdict_lines(explode_lines(...)) - ALL lines, kept or dropped,
-    with the same drop_reason labels."""
-    from tests.fixtures import pages_spark
-
-    pages = pages_spark(spark, "/root/testdata/sf0.001")
-    geo = pipeline.with_geo(pages)
-    cols = ["region", "country", "lang", "url"]
-    staged = (pipeline.verdict_lines(pipeline.explode_lines(geo))
-              .select(*cols, "pos", "text", "keep", "drop_reason"))
-    fused = pipeline.explode_verdict_fused(geo.select(*cols, "text"))
-    a = sorted(map(tuple, staged.collect()))
-    b = sorted(map(tuple, fused.collect()))
-    assert a == b and len(a) > 0
-
-
 _PII_LINES = {
     "phone": "please call our office at 555-123-4567 during the normal "
              "business hours.",
@@ -399,19 +332,11 @@ _PII_LINES = {
 }
 
 
-def test_composite_scrubs_after_hash(spark, monkeypatch):
-    """build_training_corpus scrubs inside the fused stage but hashes the
-    pre-scrub text: its output equals oracle.scrub applied to the
-    scrub_pii=False output row for row, and the staged
-    CCSPARK_KERNEL=py output - with and without the domain gate.  Two
-    different raw lines that scrub to the same text both survive;
-    repeated raw PII lines survive once.  The metric counters do not
-    see the scrub."""
-    from ccspark.api import CCSparkCorpus
-    from tests.fixtures import pages_spark
-
+def _pii_pages():
+    """Three pages passing every gate whose other lines carry PII: two
+    different card lines that scrub alike, an ip line on every page."""
     p = _PII_LINES
-    planted = [
+    return [
         ("https://www.piione.de/p0", "\n".join(
             [_PASS.format(i=0), p["phone"], p["card_space"], p["ip"],
              p["non_ascii"]]), "en"),
@@ -421,10 +346,22 @@ def test_composite_scrubs_after_hash(spark, monkeypatch):
         ("https://www.piitwo.de/p2", "\n".join(
             [_PASS.format(i=2), p["ip"], p["at"]]), "en"),
     ]
+
+
+def test_composite_scrubs_after_hash(spark):
+    """build_training_corpus scrubs inside the fused stage but hashes the
+    pre-scrub text: its output equals oracle.scrub applied to the
+    scrub_pii=False output row for row - with and without the domain
+    gate.  Two different raw lines that scrub to the same text both
+    survive; repeated raw PII lines survive once.  The metric counters
+    do not see the scrub."""
+    from ccspark.api import CCSparkCorpus
+    from tests.fixtures import pages_spark
+
     pages = (pages_spark(spark, "/root/testdata/sf0.001")
              .select("url", "text", "lang")
              .unionByName(spark.createDataFrame(
-                 planted, "url string, text string, lang string")))
+                 _pii_pages(), "url string, text string, lang string")))
     cc = CCSparkCorpus(spark)
 
     def run(**kwargs):
@@ -441,10 +378,6 @@ def test_composite_scrubs_after_hash(spark, monkeypatch):
         want = [dict(d, text=oracle.scrub(d["text"])) for d in base]
         assert rows(got) == rows(want), dmk
         assert got_metrics == base_metrics, dmk
-        monkeypatch.setenv("CCSPARK_KERNEL", "py")
-        py = cc.build_training_corpus(pages, domain_min_keep=dmk).collect()
-        monkeypatch.delenv("CCSPARK_KERNEL")
-        assert rows(r.asDict() for r in py) == rows(got), dmk
 
         texts = [d["text"] for d in got if "pii" in d["url"]]
         card = "my card number is <CC> and it works fine today."
@@ -458,3 +391,157 @@ def test_composite_scrubs_after_hash(spark, monkeypatch):
                 in texts), texts
         assert sum(t != oracle.scrub(t) for t in
                    (d["text"] for d in base)) >= 6, dmk
+
+
+def _oracle_corpus(pages, geo, page_keep=None, scrub=False):
+    """The line composite restated in Python: *pages* (url, text) rows
+    of the geo-gated urls (*geo*: url -> with_geo row) whose
+    *page_keep* holds -> oracle.process_page -> keep-first dedup on the
+    cleaned text in (url, line_id) order -> oracle.scrub when *scrub*.
+    Returns ((url, line_id, domain, tld, country, region, text) rows,
+    pre-dedup kept-line count)."""
+    lines = sorted((r.url, line_id, cleaned) for r in pages
+                   if page_keep is None or page_keep(r)
+                   for line_id, cleaned in oracle.process_page(r.text or ""))
+    seen, out = set(), []
+    for url, line_id, cleaned in lines:
+        if cleaned not in seen:
+            seen.add(cleaned)
+            g = geo[url]
+            out.append((url, line_id, g.domain, g.tld, g.country, g.region,
+                        oracle.scrub(cleaned) if scrub else cleaned))
+    return sorted(out), len(lines)
+
+
+def _geo_rows(pages):
+    """url -> with_geo row, and the (url, text, lang) rows of the
+    geo-gated pages - one per url."""
+    geo = {r.url: r for r in pipeline.with_geo(pages).select(
+        "url", "domain", "tld", "country", "region").collect()}
+    rows = [r for r in pages.select("url", "text", "lang").collect()
+            if r.url in geo]
+    assert len(rows) == len(geo) > 0
+    return geo, rows
+
+
+def test_corpus_lines_matches_oracle(spark):
+    """corpus_lines over the sf0.001 pages (one fused Arrow stage, the
+    in-stage line ordinal, the hash dedup) equals the Python composite:
+    with_geo's url set -> oracle.process_page -> keep-first dedup in
+    (url, line_id) order; the hash is xxhash64 of the text."""
+    from tests.fixtures import pages_spark
+
+    pages = pages_spark(spark, "/root/testdata/sf0.001", materialize=True)
+    geo, rows = _geo_rows(pages)
+    want, _ = _oracle_corpus(rows, geo)
+    out = pipeline.corpus_lines(pages)
+    got = sorted((r.url, r.line_id, r.domain, r.tld, r.country, r.region,
+                  r.text) for r in out.collect())
+    assert got == want and len(got) > 100
+    assert out.where(F.col("hash") != F.xxhash64("text")).count() == 0
+    lang = {r.url: r.lang for r in rows}
+    assert all(r.lang == lang[r.url]
+               for r in out.select("url", "lang").collect())
+
+
+def test_composite_matches_oracle(spark):
+    """build_training_corpus equals a Python composite built from the
+    oracle - oracle.gopher_keep (language-aware or static, with the
+    config's thresholds), oracle.c4_page_keep, the domain keep fraction
+    over every geo page's Gopher verdict (round4 >= the minimum, NULL
+    domain dropped), oracle.process_page, keep-first dedup in (url,
+    line_id) order and oracle.scrub - on the sf0.001 pages plus the
+    planted gate and PII pages.  Under each config its docs_seen,
+    lines_gated and lines_kept counters equal the Python counts."""
+    from collections import defaultdict
+
+    from ccspark.api import CCSparkCorpus
+    from tests.fixtures import pages_spark
+
+    planted = spark.createDataFrame(_planted() + _pii_pages(),
+                                    "url string, text string, lang string")
+    pages = (pages_spark(spark, "/root/testdata/sf0.001")
+             .select("url", "text", "lang").unionByName(planted))
+    geo, rows = _geo_rows(pages)
+    cc = CCSparkCorpus(spark)
+    outputs = set()
+    for cfg in ({}, {"lang_aware": False},
+                {"domain_min_keep": 0.7},
+                {"domain_min_keep": DOMAIN_MIN_KEEP},
+                {"gopher_thresholds": {"min_alpha_word_frac": 0.9,
+                                       "min_stopword_hits": 3}}):
+        th = cfg.get("gopher_thresholds")
+        if cfg.get("lang_aware", True):
+            gk = {r.url: oracle.gopher_keep(r.text, r.lang, th)
+                  for r in rows}
+        else:
+            gk = {r.url: oracle.gopher_keep(
+                r.text, thresholds=th,
+                stopwords=quality.GOPHER_STOPWORDS) for r in rows}
+        seen = rows
+        if "domain_min_keep" in cfg:
+            verdicts = defaultdict(list)
+            for r in rows:
+                verdicts[geo[r.url].domain].append(gk[r.url])
+            kept = {d for d, v in verdicts.items() if d is not None
+                    and oracle.round4(sum(v) / len(v))
+                    >= cfg["domain_min_keep"]}
+            assert 0 < len(kept) < len(verdicts), cfg
+            seen = [r for r in rows if geo[r.url].domain in kept]
+
+        def page_keep(r):
+            return gk[r.url] and oracle.c4_page_keep(r.text)
+        want, n_kept = _oracle_corpus(seen, geo, page_keep, scrub=True)
+        want_metrics = {
+            "docs_seen": len(seen),
+            "lines_gated": sum(len(ln) > 15 for r in seen if page_keep(r)
+                               for ln in (r.text or "").splitlines()),
+            "lines_kept": n_kept}
+
+        lines, metrics_fn = cc.build_training_corpus(
+            pages, with_metrics=True, **cfg)
+        got = sorted((r.url, r.line_id, r.domain, r.tld, r.country,
+                      r.region, r.text) for r in lines.collect())
+        assert got == want and got, cfg
+        metrics = metrics_fn()
+        assert {k: metrics[k] for k in want_metrics} == want_metrics, cfg
+        assert any("<CC>" in row[-1] for row in got), cfg
+        outputs.add(tuple(got))
+    assert len(outputs) == 5            # every config changes the output
+
+
+def test_unique_url_guard_raises_on_duplicate_url(spark, monkeypatch):
+    """CCSPARK_CHECK_UNIQUE_URLS=1 makes explode_clean_fused (and so
+    process_pages) raise on a duplicate url before any stage runs."""
+    from ccspark.api import CCSparkCorpus
+    pages = make_pages(spark, [("https://www.a.de/1", GOOD),
+                               ("https://www.a.de/1", GOOD2),
+                               ("https://www.a.de/2", GOOD)])
+    monkeypatch.setenv("CCSPARK_CHECK_UNIQUE_URLS", "1")
+    geo = pipeline.with_geo(pages)
+    with pytest.raises(ValueError, match="aggregate the pages by url"):
+        pipeline.explode_clean_fused(geo.select("url", "text"))
+    with pytest.raises(ValueError, match="https://www.a.de/1"):
+        CCSparkCorpus(spark).process_pages(pages)
+    unique = pipeline.explode_clean_fused(
+        geo.where(F.col("url") != "https://www.a.de/1").select("url", "text"))
+    assert [(r.url, r.line_id) for r in unique.collect()] == [
+        ("https://www.a.de/2", 1)]
+
+
+def test_duplicate_url_numbers_lines_per_row(spark, monkeypatch):
+    """With the guard off, two rows sharing a url each number their own
+    kept lines from 1: two (url, line_id) = (u, 1) lines, both kept by
+    the dedup when their texts differ."""
+    from ccspark.api import CCSparkCorpus
+    monkeypatch.delenv("CCSPARK_CHECK_UNIQUE_URLS", raising=False)
+    pages = make_pages(spark, [("https://www.a.de/1", GOOD),
+                               ("https://www.a.de/1", GOOD2)])
+    fused = pipeline.explode_clean_fused(
+        pipeline.with_geo(pages).select("url", "text"))
+    assert sorted((r.url, r.line_id, r.text) for r in fused.collect()) == \
+        sorted(("https://www.a.de/1", 1, oracle.verdict(t)[0])
+               for t in (GOOD, GOOD2))
+    out = CCSparkCorpus(spark).process_pages(pages)
+    assert sorted((r.url, r.line_id) for r in out.collect()) == [
+        ("https://www.a.de/1", 1), ("https://www.a.de/1", 1)]

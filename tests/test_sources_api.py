@@ -153,6 +153,41 @@ def test_facade_lid_and_finalize(spark):
     assert final_all.count() == 20       # all texts unique -> all kept
 
 
+def test_finalize_rejects_unknown_dedup_strategy(spark):
+    """finalize runs only the two named strategies: on two pages with the
+    same text keep_first keeps one and keep_none none; any other name
+    (a misspelling like "keep-none") raises ValueError instead of
+    silently running keep_first."""
+    lid_pages = spark.createDataFrame(
+        [Row(url=f"https://www.s.de/p{i}", domain="s", country="Germany",
+             region="europe_west", text=GOOD, language="en")
+         for i in range(2)])
+    cc = CCSparkCorpus(spark)
+    assert cc.finalize(lid_pages).count() == 1
+    assert cc.finalize(lid_pages, dedup_strategy="keep_none").count() == 0
+    for bad in ("keep-none", "keep_last", ""):
+        with pytest.raises(ValueError, match="dedup_strategy"):
+            cc.finalize(lid_pages, dedup_strategy=bad)
+
+
+def test_build_training_corpus_rejects_unknown_threshold_key(spark):
+    """A misspelt gopher_thresholds key raises ValueError when the
+    composite's plan is built - with or without the domain gate, with
+    the Gopher gate off too - instead of leaving the default in force
+    (the page gate itself runs in the Python worker)."""
+    pages = spark.createDataFrame(
+        [Row(url="https://www.a.de/1", text=GOOD, lang="en")])
+    cc = CCSparkCorpus(spark)
+    for kw in ({}, {"domain_min_keep": 0.5}, {"gopher": False},
+               {"lang_aware": False}):
+        with pytest.raises(ValueError, match="min_word"):
+            cc.build_training_corpus(
+                pages, gopher_thresholds={"min_word": 10**6}, **kw)
+    kept = cc.build_training_corpus(
+        pages, gopher_thresholds={"min_words": 10**6}, c4=False)
+    assert kept.count() == 0
+
+
 def test_facade_mine_url_filters(spark):
     from ccspark import pipeline
     pages = spark.createDataFrame(
@@ -203,12 +238,10 @@ def test_build_training_corpus_composite(spark):
 
 def test_build_training_corpus_with_metrics(spark):
     """r3 verdict item 5: the composite surfaces (docs_seen, lines_gated,
-    lines_kept, docs_kept_approx) in the SAME pass - and the fused path's
-    page-row observation agrees exactly with the py path's in-plan
-    observation, so the two metric mechanisms pin each other.  Under
-    the domain gate both count only the pages of surviving domains."""
-    import os
-
+    lines_kept, docs_kept_approx) in the SAME pass.  Under the domain
+    gate they count only the pages of surviving domains.  (The exact
+    counts are checked against Python in
+    tests/test_pipeline.py::test_composite_matches_oracle.)"""
     from ccspark.api import CCSparkCorpus
     from tests.fixtures import pages_spark
     pages = pages_spark(spark, "/root/testdata/sf0.001", materialize=True)
@@ -221,32 +254,17 @@ def test_build_training_corpus_with_metrics(spark):
         n_out = lines.count()
         return n_out, metrics_fn()
 
-    got = {}
-    old = os.environ.get("CCSPARK_KERNEL")
-    try:
-        for kernel in ("arrow", "py"):
-            os.environ["CCSPARK_KERNEL"] = kernel
-            for dmk in (None, 0.7, 0.9):
-                got[kernel, dmk] = run(domain_min_keep=dmk)
-    finally:
-        if old is None:
-            os.environ.pop("CCSPARK_KERNEL", None)
-        else:
-            os.environ["CCSPARK_KERNEL"] = old
-    for dmk in (None, 0.7, 0.9):
-        (n_arrow, m_arrow), (n_py, m_py) = got["arrow", dmk], got["py", dmk]
-        assert n_arrow == n_py, dmk
-        for k in ("docs_seen", "lines_gated", "lines_kept"):
-            assert m_arrow[k] == m_py[k], (dmk, k, m_arrow, m_py)
-        assert 0 < m_arrow["lines_kept"] <= m_arrow["lines_gated"]
-        assert n_arrow <= m_arrow["lines_kept"]       # dedup only removes
-        assert m_arrow["docs_seen"] > 0
-        assert m_arrow["docs_kept_approx"] > 0
+    got = {dmk: run(domain_min_keep=dmk) for dmk in (None, 0.7, 0.9)}
+    for dmk, (n_out, m) in got.items():
+        assert 0 < m["lines_kept"] <= m["lines_gated"], dmk
+        assert n_out <= m["lines_kept"], dmk       # dedup only removes
+        assert m["docs_seen"] > 0, dmk
+        assert m["docs_kept_approx"] > 0, dmk
     # every fixture domain keeps >= 0.75 of its pages, so 0.7 drops
     # none; 0.9 drops whole domains, so every counter falls
-    assert got["arrow", 0.7] == got["arrow", None]
+    assert got[0.7] == got[None]
     for k in ("docs_seen", "lines_gated", "lines_kept"):
-        assert got["arrow", 0.9][1][k] < got["arrow", None][1][k], k
+        assert got[0.9][1][k] < got[None][1][k], k
 
 
 def test_segment_manifest_parses_wet_paths(spark, tmp_path):
