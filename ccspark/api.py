@@ -127,7 +127,8 @@ class CCSparkCorpus:
         document gates), lines_kept (pre-dedup kept lines),
         docs_kept_approx (HLL distinct urls among kept lines)}.  The
         first two are read from the stage's page rows.  The per-(region,
-        country, lang) cube remains checkpoint/cell_metrics territory.
+        country, lang) cube is ``metrics`` (pipeline.cell_metrics), an
+        aggregate over the same kind of page rows.
 
         ``gopher_thresholds`` keys outside quality.GOPHER_THRESHOLDS
         raise ValueError here, before any job runs."""
@@ -239,10 +240,11 @@ class CCSparkCorpus:
         return pipeline.dedup_lines(df, _LINE_COLS)
 
     def metrics(self, pages: DataFrame) -> DataFrame:
-        """Per (region, country, lang) lineage metrics (north_rule)."""
-        return pipeline.cell_metrics(
-            pages if "lang" in pages.columns
-            else pages.withColumn("lang", F.lit("und")))
+        """Per (region, country, lang) lineage metrics (north_rule):
+        pipeline.cell_metrics - lines seen, kept and dropped and docs
+        seen per cell, from one pass of the fused line stage; a missing
+        lang column counts as 'und'."""
+        return pipeline.cell_metrics(pages)
 
     # ---- LID pass (stage 3.2) ----
 

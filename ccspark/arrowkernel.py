@@ -145,9 +145,8 @@ def verdict_batch(raw):
     keep = np.zeros(n, dtype=bool)
     reason = np.full(n, None, dtype=object)
 
-    # rawlen gate first: the whole chain runs only on survivors (in the
-    # verdict_lines/metrics path about half the exploded lines die here
-    # before any regex work).
+    # rawlen gate first: the whole chain runs only on survivors (about
+    # half the split lines die here before any regex work).
     alive_np = ~_np_bool(pc.or_kleene(
         pc.is_null(raw), pc.less_equal(pc.utf8_length(raw), 15)))
     reason[~alive_np] = "rawlen"
@@ -222,22 +221,3 @@ def scrub_batch(raw):
     mask[hit] = changed
     return pc.replace_with_mask(out, pa.array(mask),
                                 sub.filter(pa.array(changed)))
-
-
-def make_clean_verdict_udf():
-    """verdict_batch as a pandas UDF: raw_line -> struct<text string,
-    keep boolean, drop_reason string> - the staged line kernel
-    (pipeline.clean_and_filter / verdict_lines)."""
-    import pandas
-    from pyspark.sql.functions import pandas_udf
-
-    def clean_verdict(raw: "pandas.Series") -> "pandas.DataFrame":
-        text, keep, reason = verdict_batch(
-            pa.Array.from_pandas(raw, type=pa.string()))
-        return pandas.DataFrame(
-            {"text": text, "keep": keep, "drop_reason": reason})
-
-    clean_verdict.__annotations__ = {
-        "raw": pandas.Series, "return": pandas.DataFrame}
-    return pandas_udf(clean_verdict,
-                      "text string, keep boolean, drop_reason string")

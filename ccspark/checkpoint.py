@@ -8,9 +8,11 @@ resume after failure.
 
 The unit of work is a *bucket*: ``xxhash64(url) % n_buckets`` (the scale
 analogue of a WET segment - at 10^12 docs you'd use the crawl's natural
-segment/file partitioning).  Each bucket batch is processed by the full
-corpus pipeline; its data AND metrics are each written to their own
-bucket=<i> partition directory with overwrite semantics, THEN its
+segment/file partitioning).  Each bucket batch runs the fused line
+stage once (pipeline.explode_clean_fused with page rows, persisted): the
+corpus is its deduplicated line rows, the metrics the cell_metrics
+aggregation of the same rows.  Its data AND metrics are each written to
+their own bucket=<i> partition directory with overwrite semantics, THEN its
 lineage row is appended (the commit point) - so a crash anywhere before
 the lineage commit leaves only orphan directories that the resumed run
 overwrites (metrics used to be a plain append, which double-counted a
@@ -31,6 +33,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ccspark import pipeline
@@ -68,22 +71,28 @@ def build_resumable(spark: SparkSession, pages: DataFrame, root: str,
     (data + metrics written, lineage not) - both used by resume tests."""
     done = completed_buckets(spark, root)
     todo = [b for b in range(n_buckets) if b not in done]
+    if "lang" not in pages.columns:
+        pages = pages.withColumn("lang", F.lit("und"))
     staged = pages.withColumn("_bucket", _bucket_col(n_buckets))
+    cols = ["domain", "tld", "country", "region", "lang", "url"]
     n_processed = 0
     for b in todo:
         part = staged.where(F.col("_bucket") == b).drop("_bucket")
-        # ONE kernel pass per bucket: corpus + metrics both derive from
-        # the same persisted verdict frame (running cell_metrics
-        # standalone used to re-run the pandas-UDF kernel - the single
-        # most expensive stage - a second time per bucket)
-        out, metrics, verdicts = pipeline.corpus_lines_with_metrics(part)
+        # ONE fused-stage pass per bucket: the corpus (line rows) and the
+        # metrics (page rows + line rows) both derive from the persisted
+        # stage output, so the bucket's pages are read once
+        rows = pipeline.explode_clean_fused(
+            pipeline.with_geo(part).select(*cols, "text"), page_rows=True)
+        rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
+        out = pipeline.dedup_lines(
+            rows.where(F.col("line_id").isNotNull()), cols)
         data_path = os.path.join(root, "data", f"bucket={b}")
         out.write.mode("overwrite").parquet(data_path)
         n_rows = spark.read.parquet(data_path).count()
 
-        metrics.write.mode("overwrite").parquet(
+        pipeline.cell_metrics_from_rows(rows).write.mode("overwrite").parquet(
             os.path.join(root, "metrics", f"bucket={b}"))
-        verdicts.unpersist()
+        rows.unpersist()
 
         if fail_before_lineage is not None and \
                 n_processed + 1 >= fail_before_lineage:

@@ -18,19 +18,17 @@ dimension joins are broadcast (295 / 971 rows) and the line ordinal is
 computed inside the fused stage, so nothing shuffles before the dedup.
 At 10^12-doc scale the same plan holds; AQE (skew-join + coalesce)
 handles giant domains, and dedup keys are 8-byte xxhash64 values rather
-than full lines.  The staged helpers (explode_lines, clean_and_filter,
-verdict_lines, number_and_hash) serve streaming and the metrics
-renderings.
+than full lines.  The fused stage is the only line split and kernel in
+ccspark: the per-cell metrics (cell_metrics, checkpoint.build_resumable)
+read its page rows, and the stream (streaming.stream_corpus_build) runs
+it per micro-batch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
 
-from ccspark import arrowkernel, geo
-from ccspark.regexes import RE_LINE_SPLIT
-from ccspark.sqlgen import lit as sql_lit
+from ccspark import geo
 
 
 def with_geo(pages: DataFrame,
@@ -70,45 +68,21 @@ def with_geo(pages: DataFrame,
     return df
 
 
-def explode_lines(pages_geo: DataFrame) -> DataFrame:
-    """F5: one row per raw line, preserving original order via `pos`."""
-    split_expr = f"split(text, {sql_lit(RE_LINE_SPLIT)})"
-    cols = [c for c in pages_geo.columns if c != "text"]
-    return pages_geo.select(
-        *cols, F.posexplode(F.expr(split_expr)).alias("pos", "raw_line")
-    )
-
-
-def clean_and_filter(lines: DataFrame) -> DataFrame:
-    """F6-F13: the kernel.  A cheap JVM-side raw-length gate first
-    (reference order, and it keeps ~half the lines out of the Arrow
-    transfer), then one vectorized pandas UDF computing cleaned text +
-    verdict in a single pass per line (arrowkernel; a UDF output column
-    is an optimizer barrier, so the clean chain runs once per line
-    instead of once per keep rule)."""
-    df = lines.filter(F.length("raw_line") > 15)
-    udf = arrowkernel.make_clean_verdict_udf()
-    df = df.withColumn("_v", udf("raw_line"))
-    keep_cols = [c for c in lines.columns if c != "raw_line"]
-    return (
-        df.filter(F.col("_v.keep"))
-        .select(*keep_cols, F.col("_v.text").alias("text"))
-    )
-
-
 def explode_clean_fused(geo_pages: DataFrame,
                         pages_per_chunk: int = 4096,
                         page_gate=None,
                         page_rows: bool = False,
                         scrub: bool = False) -> DataFrame:
-    """F5 + F6-F13 FUSED into one ``mapInArrow`` stage (arrow-kernel
-    production path): the line split (RE2 ``split_pattern_regex``, same
-    dialect-neutral pattern as the JVM split), the raw-length gate, and
-    the whole-batch clean/verdict kernel all run inside a single
-    Arrow-native Python stage, and only KEPT lines come back out.
+    """F5 + F6-F13 FUSED into one ``mapInArrow`` stage, the one line
+    split and kernel in ccspark: the line split (RE2
+    ``split_pattern_regex`` over ``regexes.RE_LINE_SPLIT``), the
+    raw-length gate, and the whole-batch clean/verdict kernel all run
+    inside a single Arrow-native Python stage, and only KEPT lines come
+    back out.
 
-    Why this beats explode-then-UDF (measured 1.34x on the full flagship,
-    1.6x on explode+kernel alone at 3M docs):
+    Why this beat the staged JVM posexplode + pandas-UDF form it
+    replaced (measured 1.34x on the full flagship, 1.6x on
+    explode+kernel alone at 3M docs):
 
       * pages cross the JVM->Python Arrow boundary ONCE - the staged
         form transfers every line with its url/domain/... columns
@@ -121,12 +95,15 @@ def explode_clean_fused(geo_pages: DataFrame,
         emits flat RecordBatches, so no Arrow nested-type serialization.
 
     Output columns: every non-``text`` input column + (pos int,
-    line_id int, text string) - identical rows (asserted bitwise in
-    tests) to ``number_and_hash(clean_and_filter(explode_lines(...)))``
-    without the hash.  line_id is computed IN-STAGE: a page's lines are
-    all local to the chunk that split it, so the per-url kept-line
-    ordinal needs NO url-window shuffle - the flagship has one exchange
-    (dedup only), with no full-corpus-text shuffle at 100TB.
+    line_id int, text string): ``pos`` is the 0-based piece index of
+    the line split (empty and trailing pieces count), ``line_id`` the
+    1-based ordinal over the page's kept lines (the reference's
+    line_num counter, cc_corpus.py:252,292), rows equal to a Python
+    split plus tests/oracle.py::verdict (asserted in tests).  line_id is
+    computed IN-STAGE: a page's lines are all local to the chunk that
+    split it, so the ordinal needs NO url-window shuffle - the flagship
+    has one exchange (dedup only), with no full-corpus-text shuffle at
+    100TB.
 
     Contract: one input row per url (the pages table's natural key, the
     same assumption the reference makes).  With duplicate urls the
@@ -154,15 +131,18 @@ def explode_clean_fused(geo_pages: DataFrame,
 
     *page_rows*: also emit ONE page row per input page, after that
     chunk's line rows.  Output gains (gopher_keep boolean, lines_gated
-    int): a page row carries the passthrough columns, the page_gate's
-    ``verdict`` as ``gopher_keep`` (NULL when it returned None) and its
-    kernel-candidate line count as ``lines_gated`` (split lines passing
-    the raw >15-char gate, the population corpus_lines_observed counts;
-    0 for a gated-out page), with NULL pos, line_id and text.  Line rows
-    carry NULL in both new columns.  Page rows let the plan above judge
-    pages (the facade's domain rollup) and count pages and candidate
-    lines with ``observe()`` from the same single pass; filter
-    ``line_id IS NOT NULL`` to get the kept lines.
+    int, lines_seen int): a page row carries the passthrough columns,
+    the page_gate's ``verdict`` as ``gopher_keep`` (NULL when it
+    returned None), its kernel-candidate line count as ``lines_gated``
+    (split lines passing the raw >15-char gate) and the number of
+    pieces the line split made as ``lines_seen`` (empty and trailing
+    pieces count; 0 for NULL text); both counts are 0 for a gated-out
+    page.  Its pos, line_id and text are NULL.  Line rows carry NULL in
+    the three new columns.  Page rows let the plan above judge pages
+    (the facade's domain rollup) and count pages and lines with
+    ``observe()`` or an aggregate from the same single pass
+    (cell_metrics); filter ``line_id IS NOT NULL`` to get the kept
+    lines.
 
     *scrub*: also run the PII chain (scrub.SCRUB_STEPS, through
     arrowkernel.scrub_batch) on the kept lines, in the same stage.
@@ -179,12 +159,13 @@ def explode_clean_fused(geo_pages: DataFrame,
     if scrub:
         schema += ", scrubbed string"
     if page_rows:
-        schema += ", gopher_keep boolean, lines_gated int"
+        schema += ", gopher_keep boolean, lines_gated int, lines_seen int"
 
-    # the unique-url guard (see the docstring's contract)
+    # the unique-url guard (see the docstring's contract); an eager job
+    # cannot run on a stream
     import os as _os
     if _os.environ.get("CCSPARK_CHECK_UNIQUE_URLS") == "1" \
-            and "url" in geo_pages.columns:
+            and "url" in geo_pages.columns and not geo_pages.isStreaming:
         dup = (geo_pages.groupBy("url").count()
                .where(F.col("count") > 1).limit(1).collect())
         if dup:
@@ -205,7 +186,7 @@ def explode_clean_fused(geo_pages: DataFrame,
         if scrub:
             names.append("scrubbed")
         if page_rows:
-            names += ["gopher_keep", "lines_gated"]
+            names += ["gopher_keep", "lines_gated", "lines_seen"]
 
         def passthrough(chunk, take=None):
             cols = [chunk.column(chunk.schema.get_field_index(c))
@@ -250,8 +231,8 @@ def explode_clean_fused(geo_pages: DataFrame,
                     kept = pa.array(cleaned[idx], type=pa.string())
                     extra = [arrowkernel.scrub_batch(kept)] if scrub else []
                     if page_rows:
-                        extra += [pa.nulls(len(kp), pa.bool_()),
-                                  pa.nulls(len(kp), pa.int32())]
+                        extra += [pa.nulls(len(kp), pa.bool_())] + \
+                            [pa.nulls(len(kp), pa.int32())] * 2
                     yield pa.RecordBatch.from_arrays(
                         passthrough(gated, pa.array(kp))
                         + [pa.array(pos[idx].astype(np.int32)),
@@ -263,6 +244,8 @@ def explode_clean_fused(geo_pages: DataFrame,
                     n_gated = np.zeros(n_pages, dtype=np.int32)
                     n_gated[gidx] = np.bincount(
                         parents, weights=cand, minlength=gidx.size)
+                    n_seen = np.zeros(n_pages, dtype=np.int32)
+                    n_seen[gidx] = lens
                     yield pa.RecordBatch.from_arrays(
                         passthrough(chunk)
                         + [pa.nulls(n_pages, pa.int32()),
@@ -271,7 +254,8 @@ def explode_clean_fused(geo_pages: DataFrame,
                         + [pa.array(verdict, type=pa.bool_())
                            if verdict is not None
                            else pa.nulls(n_pages, pa.bool_()),
-                           pa.array(n_gated)], names=names)
+                           pa.array(n_gated), pa.array(n_seen)],
+                        names=names)
 
     return geo_pages.mapInArrow(fused, schema)
 
@@ -281,53 +265,6 @@ def _corpus_line_cols(df: DataFrame) -> list[str]:
     if "lang" in df.columns:
         cols.insert(4, "lang")
     return cols
-
-
-def verdict_lines_from_geo(geo_pages: DataFrame,
-                           cols: list[str]) -> DataFrame:
-    """Every line with its verdict, straight from a geo-gated pages
-    frame.  *cols* = passthrough columns; returns cols + (pos, text,
-    keep, drop_reason).
-
-    MEASURED CHOICE (don't re-fuse without re-measuring): this path
-    stays STAGED (JVM explode + the arrow-kernel pandas UDF).  A fused
-    mapInArrow form emitting every line with its verdict was measured
-    0.76x here (7.8s -> 10.2s, cell_metrics at 3M docs/16 cores): when
-    EVERY line must come back
-    with its passthrough columns, the Python stage re-emits those
-    columns duplicated per line through Arrow, while the staged UDF
-    receives one string column and returns three small ones with the
-    passthrough staying JVM-side.  Fusion wins only where the output is
-    kept-lines-only (explode_clean_fused - most of the transfer never
-    happens)."""
-    df = verdict_lines(explode_lines(geo_pages))
-    return df.select(*cols, "pos", "text", "keep", "drop_reason")
-
-
-def verdict_lines(lines: DataFrame) -> DataFrame:
-    """Like clean_and_filter but keeps every raw line, adding
-    (keep boolean, drop_reason string) - feeds the metrics/lineage tables
-    and the F1-vs-oracle tests."""
-    udf = arrowkernel.make_clean_verdict_udf()
-    df = lines.withColumn("_v", udf("raw_line"))
-    return (
-        df.select("*", F.col("_v.text").alias("text"),
-                  F.col("_v.keep").alias("keep"),
-                  F.col("_v.drop_reason").alias("drop_reason"))
-        .drop("_v")
-    )
-
-
-def number_and_hash(kept: DataFrame) -> DataFrame:
-    """W1 + F14: per-page kept-line ordinal (reference line_num counter,
-    cc_corpus.py:252,292) and a *stable* 64-bit line hash.  The reference
-    used Python's builtin hash() (PYTHONHASHSEED-salted - a documented
-    reference bug); we use xxhash64, stable across executors and runs."""
-    w = Window.partitionBy("url").orderBy("pos")
-    return (
-        kept.withColumn("line_id", F.row_number().over(w))
-        .withColumn("hash", F.xxhash64("text"))
-    )
 
 
 def dedup_keep_first(lines: DataFrame, key: str = "hash") -> DataFrame:
@@ -385,57 +322,35 @@ def dedup_lines(lines: DataFrame, cols: list[str]) -> DataFrame:
 
 
 def cell_metrics(pages: DataFrame) -> DataFrame:
-    """A5/north_rule metrics: per (region, country, lang) cell - lines seen,
-    kept, dropped, with seen = kept + dropped by construction.  Pages
-    without a lang column (e.g. raw sources.read_wet output) fall back to
-    'und' so direct callers (checkpoint.build_resumable) don't need the
-    api facade's guard."""
+    """A5/north_rule metrics: per (region, country, lang) cell - lines
+    seen, kept, dropped and docs seen, in one pass: the fused stage's
+    page rows count the split pieces, its line rows are the kept lines
+    (see cell_metrics_from_rows).  Pages without a lang column (e.g. raw
+    sources.read_wet output) fall back to 'und'."""
     if "lang" not in pages.columns:
         pages = pages.withColumn("lang", F.lit("und"))
-    df = verdict_lines_from_geo(
-        with_geo(pages), ["region", "country", "lang", "url"])
+    df = with_geo(pages).select("region", "country", "lang", "url", "text")
+    return cell_metrics_from_rows(explode_clean_fused(df, page_rows=True))
+
+
+def cell_metrics_from_rows(rows: DataFrame) -> DataFrame:
+    """The cell_metrics aggregation over ``explode_clean_fused(...,
+    page_rows=True)`` output carrying (region, country, lang, url):
+    lines_seen sums the page rows' split pieces, lines_kept counts the
+    line rows (before dedup), lines_dropped = seen - kept, and docs_seen
+    counts the distinct urls of pages with at least one piece.  A cell
+    whose pages all have NULL text split into no lines and gets no row."""
+    seen, kept = F.col("lines_seen"), F.col("lines_kept")
     return (
-        df.groupBy("region", "country", "lang")
-        .agg(
-            F.count("*").alias("lines_seen"),
-            F.sum(F.col("keep").cast("long")).alias("lines_kept"),
-            F.sum((~F.col("keep")).cast("long")).alias("lines_dropped"),
-            F.countDistinct("url").alias("docs_seen"),
-        )
+        rows.groupBy("region", "country", "lang")
+        .agg(F.sum("lines_seen").alias("lines_seen"),
+             F.count("line_id").alias("lines_kept"),
+             F.countDistinct(F.when(seen > 0, F.col("url")))
+             .alias("docs_seen"))
+        .where(seen > 0)
+        .select("region", "country", "lang", seen, kept,
+                (seen - kept).alias("lines_dropped"), "docs_seen")
     )
-
-
-def corpus_lines_with_metrics(pages: DataFrame):
-    """ONE kernel pass for BOTH the corpus and the per-cell metrics.
-
-    cell_metrics standalone re-runs the pandas-UDF kernel - at crawl
-    scale that doubles the single most expensive stage.  Here the
-    verdict frame is computed once and persisted (memory-and-disk; on a
-    real cluster use DISK_ONLY or a staging table for the same effect),
-    and both outputs derive from it.  Returns (corpus, metrics,
-    verdicts); the caller unpersists *verdicts* after its actions
-    (checkpoint.build_resumable does).  Output-identical to
-    (corpus_lines(pages), cell_metrics(pages)) - asserted in tests."""
-    from pyspark import StorageLevel
-    if "lang" not in pages.columns:
-        pages = pages.withColumn("lang", F.lit("und"))
-    v = verdict_lines_from_geo(
-        with_geo(pages),
-        ["domain", "tld", "country", "region", "lang", "url"])
-    v = v.persist(StorageLevel.MEMORY_AND_DISK)
-    kept = (v.where("keep")
-            .drop("raw_line", "keep", "drop_reason"))
-    kept = number_and_hash(kept)
-    cols = ["domain", "tld", "country", "region", "lang", "url",
-            "line_id", "text", "hash"]
-    corpus = dedup_keep_first(kept.select(*cols))
-    metrics = (
-        v.groupBy("region", "country", "lang")
-        .agg(F.count("*").alias("lines_seen"),
-             F.sum(F.col("keep").cast("long")).alias("lines_kept"),
-             F.sum((~F.col("keep")).cast("long")).alias("lines_dropped"),
-             F.countDistinct("url").alias("docs_seen")))
-    return corpus, metrics, v
 
 
 def write_partitioned(df: DataFrame, path: str,
@@ -453,35 +368,3 @@ def write_partitioned(df: DataFrame, path: str,
        .option("maxRecordsPerFile", max_records_per_file)
        .partitionBy(*partition_cols)
        .parquet(path))
-
-
-def corpus_lines_observed(pages: DataFrame):
-    """corpus_lines + FREE global lineage metrics via ``observe()``: the
-    kernel's verdict is observed in the SAME pass that builds the corpus,
-    so the lines_seen / lines_kept / docs_seen numbers cost zero extra
-    jobs - at crawl scale running the pandas-UDF kernel a second time
-    just to count (what cell_metrics does standalone) doubles the single
-    most expensive stage.  Returns (df, observation); read
-    ``observation.get`` AFTER an action on df.  cell_metrics remains the
-    per-(region, country, lang) breakdown when the full cube is needed."""
-    from pyspark.sql import Observation
-    df = with_geo(pages)
-    df = explode_lines(df)
-    obs = Observation("corpus_metrics")
-    udf = arrowkernel.make_clean_verdict_udf()
-    df = df.filter(F.length("raw_line") > 15).withColumn("_v", udf("raw_line"))
-    df = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("lines_gated"),
-        F.sum(F.col("_v.keep").cast("long")).alias("lines_kept"),
-        F.approx_count_distinct("url").alias("docs_seen_approx"),
-    )
-    keep_cols = [c for c in df.columns if c not in ("raw_line", "_v")]
-    df = df.filter(F.col("_v.keep")) \
-           .select(*keep_cols, F.col("_v.text").alias("text"))
-    df = number_and_hash(df)
-    cols = ["domain", "tld", "country", "region", "url",
-            "line_id", "text", "hash"]
-    if "lang" in df.columns:
-        cols.insert(4, "lang")
-    return dedup_keep_first(df.select(*cols)), obs

@@ -303,15 +303,21 @@ GOPHER_THRESHOLDS = dict(
 
 def gopher_thresholds(overrides: dict | None = None) -> dict:
     """GOPHER_THRESHOLDS with *overrides* merged in - the one merge every
-    Gopher gate uses.  Raises ValueError on a key outside
-    GOPHER_THRESHOLDS: a misspelt key ("min_word") would otherwise be
+    Gopher gate uses (see _merge_thresholds)."""
+    return _merge_thresholds(GOPHER_THRESHOLDS, overrides, "Gopher")
+
+
+def _merge_thresholds(defaults: dict, overrides: dict | None,
+                      what: str) -> dict:
+    """*defaults* with *overrides* merged in.  Raises ValueError on a key
+    outside *defaults*: a misspelt key ("min_word") would otherwise be
     merged, never read, and leave the default rule in force."""
-    unknown = sorted(set(overrides or ()) - set(GOPHER_THRESHOLDS))
+    unknown = sorted(set(overrides or ()) - set(defaults))
     if unknown:
         raise ValueError(
-            f"unknown Gopher threshold key(s) {unknown}; known keys: "
-            f"{sorted(GOPHER_THRESHOLDS)}")
-    return dict(GOPHER_THRESHOLDS, **(overrides or {}))
+            f"unknown {what} threshold key(s) {unknown}; known keys: "
+            f"{sorted(defaults)}")
+    return dict(defaults, **(overrides or {}))
 
 
 # a token carrying at least one letter: one regexp_count scan
@@ -656,7 +662,8 @@ def gopher_repetition(docs: DataFrame, text_col: str = "text",
     (8 exchanges -> 4).  Asserted equal to a pure-Python restatement
     (tests/oracle.py) in tests/test_gopher.py."""
     from pyspark.sql.window import Window
-    t = dict(GOPHER_REP_THRESHOLDS, **(thresholds or {}))
+    t = _merge_thresholds(GOPHER_REP_THRESHOLDS, thresholds,
+                          "Gopher repetition")
     base = docs.select(F.col(id_col).alias("doc_id"),
                        F.col(text_col).alias("text"))
     # words bound once below the explodes (interpreted HOFs re-evaluate

@@ -4,15 +4,16 @@ The reference is pure batch (SURVEY par.2.10) - its "streaming" is
 resume-from-marker-files.  These demos show the same pipeline running
 incrementally, the natural shape for continuous crawl ingestion at scale:
 
-  * stream_corpus_build - file-source pages stream -> geo gate -> explode
-    -> clean/keep kernel (the pandas UDF works unchanged in streaming) ->
-    stable hash -> streaming dropDuplicates -> parquet sink with
-    checkpointing.  Trigger.AvailableNow processes the backlog and stops,
-    giving exactly-once file-granular progress via the checkpoint dir
-    (the streaming twin of ccspark.checkpoint).
-    NOTE: the per-page line ordinal (a window) is not stream-computable;
-    the stream emits (url, pos) and ordinals are assigned at read time or
-    by the batch compactor.
+  * stream_corpus_build - file-source pages stream -> geo gate -> the
+    fused Arrow line stage (pipeline.explode_clean_fused: split, kernel
+    and per-page kept-line ordinal; mapInArrow runs unchanged in
+    streaming) -> stable hash -> streaming dropDuplicates -> parquet sink
+    with checkpointing.  Trigger.AvailableNow processes the backlog and
+    stops, giving exactly-once file-granular progress via the checkpoint
+    dir (the streaming twin of ccspark.checkpoint).  A page is one row,
+    so its line ordinal (line_id) is computed within one micro-batch and
+    is exact; only the global keep-first dedup needs the batch compactor
+    (compact_stream_output).
   * windowed_event_counts - event-time tumbling window + watermark over
     the events table (late-data handling demo).
 """
@@ -22,6 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ccspark import pipeline
+
+# the passthrough columns of the stream's line rows
+_GEO_COLS = ("domain", "tld", "country", "region", "url")
 
 
 def stream_corpus_build(spark: SparkSession, in_dir: str, out_dir: str,
@@ -38,7 +42,13 @@ def stream_corpus_build(spark: SparkSession, in_dir: str, out_dir: str,
     global keep-first to compact_stream_output, whose deterministic
     (url, line_id) tie-break then reproduces the batch pipeline EXACTLY -
     stream-side dedup keeps whichever copy arrives first, which is cheaper
-    but arrival-order-dependent."""
+    but arrival-order-dependent.
+
+    Sink columns: domain, tld, country, region, url, pos, line_id, text,
+    hash.  line_id is the page's kept-line ordinal computed before any
+    dedup, so on a stream-deduped sink it keeps its page value (a page
+    whose line 1 lost to an earlier copy starts at line_id 2); the sink
+    is not renumbered over what the stream kept."""
     reader = spark.readStream
     if schema is None:
         static = spark.read.parquet(in_dir)
@@ -47,12 +57,10 @@ def stream_corpus_build(spark: SparkSession, in_dir: str, out_dir: str,
         reader = reader.schema(schema)
     pages = reader.parquet(in_dir)
 
-    df = pipeline.with_geo(pages)
-    df = pipeline.explode_lines(df)
-    df = pipeline.clean_and_filter(df)
-    df = (df.withColumn("hash", F.xxhash64("text"))
-            .select("domain", "tld", "country", "region", "url",
-                    "pos", "text", "hash"))
+    geo = pipeline.with_geo(pages).select(*_GEO_COLS, "text")
+    df = (pipeline.explode_clean_fused(geo)
+          .withColumn("hash", F.xxhash64("text"))
+          .select(*_GEO_COLS, "pos", "line_id", "text", "hash"))
     if not dedup:
         pass
     elif dedup_watermark is not None:
@@ -228,16 +236,12 @@ def windowed_event_counts(spark: SparkSession, events: DataFrame,
 
 
 def compact_stream_output(spark: SparkSession, stream_dir: str) -> DataFrame:
-    """The batch compactor the stream docstring promises: stream output
-    rows (url, pos, text, ...) get their per-page kept-line ordinal (a
-    window - not stream-computable) and a final global keep-first dedup,
-    yielding exactly the batch pipeline's corpus_lines schema.  Run it
+    """The batch compactor the stream docstring promises: a final global
+    keep-first dedup over the stream's own (hash, url, line_id), yielding
+    the batch pipeline's corpus_lines schema (without lang).  Run it
     over the streaming sink periodically (or as the Iceberg maintenance
-    job); stream + compactor == batch pipeline is asserted in tests."""
+    job); a dedup=False stream + compactor == batch pipeline is asserted
+    in tests."""
     df = spark.read.parquet(stream_dir)
-    df = pipeline.number_and_hash(df)
-    cols = ["domain", "tld", "country", "region", "url",
-            "line_id", "text", "hash"]
-    if "lang" in df.columns:
-        cols.insert(4, "lang")
-    return pipeline.dedup_keep_first(df.select(*cols))
+    return pipeline.dedup_keep_first(
+        df.select(*_GEO_COLS, "line_id", "text", "hash"))

@@ -138,6 +138,17 @@ def process_page(text: str):
     return out
 
 
+# every str.splitlines boundary, with \r\n as one break
+_RE_LINE_BREAK = re.compile("\r\n|[\n\r\x0b\x0c\x1c\x1d\x1e\x85\u2028\u2029]")
+
+
+def split_lines(text: str) -> list:
+    """The pieces of the line split, empty and trailing ones included
+    ("a\\n" -> ["a", ""], where str.splitlines drops the last piece);
+    NULL text gives no pieces."""
+    return [] if text is None else _RE_LINE_BREAK.split(text)
+
+
 # ---------------------------------------------------------------------
 # char-n-gram multinomial Naive Bayes LID (ccspark.lid), restated with
 # Counter and per-row loops

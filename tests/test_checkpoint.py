@@ -126,3 +126,61 @@ def test_reads_between_crash_and_resume_exclude_uncommitted(spark, tmp_path):
     orphan_urls = {r.url for r in data.where(
         ~data.bucket.isin(list(done))).select("url").collect()}
     assert not (seen & orphan_urls)
+
+
+def test_build_resumable_matches_corpus_lines_and_cell_metrics(
+        spark, tmp_path):
+    """One persisted fused-stage pass per bucket gives the same tables
+    as the standalone plans: with one bucket, read_corpus ==
+    corpus_lines(pages); with one or three buckets, read_metrics ==
+    cell_metrics(pages) (a url's lines all land in its bucket, so the
+    per-bucket cells add up), and the per-bucket corpus == corpus_lines
+    of that bucket's pages."""
+    from pyspark.sql import functions as F
+
+    from ccspark import pipeline
+    from tests.fixtures import pages_spark
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    pages = pages_spark(spark, "/root/testdata/sf0.001", materialize=True)
+    want_m = rows(pipeline.cell_metrics(pages))
+    for n in (1, 3):
+        root = str(tmp_path / f"b{n}")
+        checkpoint.build_resumable(spark, pages, root, n_buckets=n)
+        assert rows(checkpoint.read_metrics(spark, root)) == want_m
+        bucket = F.pmod(F.xxhash64("url"), F.lit(n))
+        want_c = sorted(
+            r for b in range(n)
+            for r in rows(pipeline.corpus_lines(pages.where(bucket == b))))
+        assert rows(checkpoint.read_corpus(spark, root)) == want_c
+        assert want_c and want_m
+
+
+def test_build_resumable_reads_each_bucket_once(spark, tmp_path):
+    """The page source counts the partitions it is asked to read: each
+    bucket's corpus AND metrics come from one read of its 4 source
+    partitions."""
+    import pandas as pd
+    rows = [(f"https://www.site{i % 7}.de/p{i}",
+             f"{GOOD} variant {i}\nshort\n{GOOD} again variant {i}")
+            for i in range(40)]
+    scans = spark.sparkContext.accumulator(0)
+
+    def read(batches):
+        scans.add(1)
+        for pdf in batches:
+            yield pd.DataFrame({"url": [rows[i][0] for i in pdf["id"]],
+                                "text": [rows[i][1] for i in pdf["id"]],
+                                "lang": "en"})
+
+    pages = spark.range(0, len(rows), numPartitions=4).mapInPandas(
+        read, "url string, text string, lang string")
+    root = str(tmp_path / "once")
+    checkpoint.build_resumable(spark, pages, root, n_buckets=2)
+    assert scans.value == 2 * 4
+    assert checkpoint.completed_buckets(spark, root) == {0, 1}
+    m = checkpoint.read_metrics(spark, root).collect()
+    assert sum(r.docs_seen for r in m) == 40
+    assert sum(r.lines_kept for r in m) == 80

@@ -46,26 +46,30 @@ def test_keep_drop_f1_vs_reference_labels(spark):
         for i in range(len(lines) // 5)
     ]
     df = spark.createDataFrame(pages)
-    verdicts = pipeline.verdict_lines(
-        pipeline.explode_lines(pipeline.with_geo(df)))
-    got = {(r.url, r.pos): r for r in verdicts.collect()}
+    # the fused stage emits only the kept lines: a split line whose
+    # (url, pos) is missing from its output counts as dropped
+    kept = pipeline.explode_clean_fused(
+        pipeline.with_geo(df).select("url", "text"))
+    got = {(r.url, r.pos): r.text
+           for r in kept.select("url", "pos", "text").collect()}
 
     tp = fp = fn = tn = 0
     mism_text = 0
     for p in pages:
-        for pos, raw in enumerate(p.text.split("\n")):
+        for pos, raw in enumerate(oracle.split_lines(p.text)):
             cleaned, keep, _ = oracle.verdict(raw)
-            g = got[(p.url, pos)]
-            if keep and g.keep:
+            g = got.pop((p.url, pos), None)
+            if keep and g is not None:
                 tp += 1
-                if g.text != cleaned:
+                if g != cleaned:
                     mism_text += 1
-            elif keep and not g.keep:
+            elif keep:
                 fn += 1
-            elif not keep and g.keep:
+            elif g is not None:
                 fp += 1
             else:
                 tn += 1
+    assert not got                         # no line outside the split
     precision = tp / (tp + fp) if tp + fp else 1.0
     recall = tp / (tp + fn) if tp + fn else 1.0
     f1 = (2 * precision * recall / (precision + recall)

@@ -176,6 +176,20 @@ def test_gopher_repetition_flags_looping_text(spark):
     assert got[1].dup5_frac == 0.0
 
 
+def test_gopher_repetition_unknown_threshold_key_raises(spark):
+    """A misspelt repetition threshold key raises ValueError while the
+    plan is built (it used to be merged and never read, leaving
+    rep_keep True); the real key is honoured."""
+    import pytest
+    varied = spark.createDataFrame([Row(doc_id=0, text=" ".join(
+        f"w{i}" for i in range(200)))])
+    assert quality.gopher_repetition(varied).collect()[0].rep_keep
+    assert not quality.gopher_repetition(
+        varied, thresholds={"max_top2_frac": 0.0}).collect()[0].rep_keep
+    with pytest.raises(ValueError, match="max_top2"):
+        quality.gopher_repetition(varied, thresholds={"max_top2": 0.0})
+
+
 def test_quality_ops_null_and_empty_safe(spark):
     """NULL / empty / whitespace-only text must not crash any quality
     operator; NULL-text docs never pass a gate."""

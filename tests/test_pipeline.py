@@ -86,9 +86,8 @@ def test_dedup_keep_none(spark):
         ("https://www.b.de/3", GOOD2),
     ])
     df = pipeline.with_geo(pages)
-    df = pipeline.explode_lines(df)
-    df = pipeline.clean_and_filter(df)
-    df = pipeline.number_and_hash(df)
+    df = (pipeline.explode_clean_fused(df.select("url", "text"))
+          .withColumn("hash", F.xxhash64("text")))
     from ccspark.dedup import dedup_keep_none
     out = dedup_keep_none(df).collect()
     assert [r.text for r in out] == [oracle.verdict(GOOD2)[0]]
@@ -139,83 +138,103 @@ def test_partitioned_write_includes_lang_dirs(spark, tmp_path):
     assert any(d.startswith("lang=") for d in os.listdir(country))
 
 
-def test_corpus_lines_observed_free_metrics(spark):
-    """observe() metrics must match the standalone metrics job without a
-    second kernel pass, and the observed pipeline's output must equal
-    corpus_lines exactly."""
-    from tests.fixtures import pages_spark
-    pages = pages_spark(spark, "/root/testdata/sf0.001", materialize=True)
-    df, obs = pipeline.corpus_lines_observed(pages)
-    rows = sorted((r.url, r.line_id, r.text) for r in df.collect())
-    want = sorted((r.url, r.line_id, r.text)
-                  for r in pipeline.corpus_lines(pages).collect())
-    assert rows == want
-    got = obs.get
-    cm = pipeline.cell_metrics(pages).collect()
-    # cell_metrics counts ALL lines incl. the raw-length-gated ones; the
-    # observed pass counts after the cheap JVM gate (the Arrow boundary),
-    # so compare kept (identical) and gated <= seen
-    assert got["lines_kept"] == sum(r.lines_kept for r in cm)
-    assert got["lines_gated"] <= sum(r.lines_seen for r in cm)
-    assert got["docs_seen_approx"] > 0
-
-
-def test_corpus_lines_with_metrics_single_pass_equivalence(spark):
-    """corpus_lines_with_metrics (ONE persisted kernel pass) must be
-    output-identical to running corpus_lines and cell_metrics separately
-    (two kernel passes)."""
-    from tests.fixtures import pages_spark
-    pages = pages_spark(spark, "/root/testdata/sf0.001", materialize=True)
-    corpus, metrics, v = pipeline.corpus_lines_with_metrics(pages)
-    got_c = sorted((r.url, r.line_id, r.text, r.hash)
-                   for r in corpus.collect())
-    got_m = sorted(map(tuple, metrics.collect()))
-    v.unpersist()
-    want_c = sorted((r.url, r.line_id, r.text, r.hash)
-                    for r in pipeline.corpus_lines(pages).collect())
-    want_m = sorted(map(tuple, pipeline.cell_metrics(pages).collect()))
-    assert got_c == want_c
-    assert got_m == want_m
-
-
-def test_fused_explode_clean_matches_staged(spark):
-    """The fused mapInArrow explode+kernel stage (arrow production path)
-    is ROW-IDENTICAL to the staged posexplode + UDF form - on the
-    fixture corpus AND on crafted edge pages (null/empty text, CRLF,
-    unicode line breaks, pages whose every line is dropped)."""
+def _edge_pages(spark):
+    """Crafted edge pages: NULL and empty text, CRLF with a trailing
+    break, unicode line breaks, a page whose every line is dropped,
+    every LINE_CASES line, a duplicate url, a NULL lang, and a cell
+    (France, en) whose only page has NULL text."""
     from tests.fixtures import LINE_CASES
-
-    from tests.fixtures import pages_spark
-
-    edge = spark.createDataFrame(
-        [Row(doc_id=0, url="https://edge.de/none", text=None, lang="en"),
-         Row(doc_id=1, url="https://edge.de/empty", text="", lang="en"),
-         Row(doc_id=2, url="https://edge.de/crlf",
-             text=f"{GOOD}\r\n{GOOD2}\rshort\n\n{GOOD}", lang="en"),
-         Row(doc_id=3, url="https://edge.de/uni",
-             text=GOOD + "\u2028" + GOOD2 + "\u0085" + GOOD, lang="en"),
-         Row(doc_id=4, url="https://edge.de/alldrop",
-             text="short\n|||| bad pipes line that is long enough here",
-             lang="en"),
-         Row(doc_id=5, url="https://edge.de/cases",
-             text="\n".join(raw for _, raw in LINE_CASES), lang="en")],
+    rows = [
+        ("https://edge.de/none", None, "en"),
+        ("https://edge.de/empty", "", "en"),
+        ("https://edge.de/crlf",
+         f"{GOOD}\r\n{GOOD2}\rshort\n\n{GOOD}\r\n", "en"),
+        ("https://edge.de/uni",
+         GOOD + "\u2028" + GOOD2 + "\u0085" + GOOD + "\u2029", "en"),
+        ("https://edge.de/alldrop",
+         "short\n|||| bad pipes line that is long enough here", "en"),
+        ("https://edge.de/cases", "\n".join(raw for _, raw in LINE_CASES),
+         "en"),
+        ("https://edge.de/cases", f"{GOOD2}\n{GOOD}\n", "en"),
+        ("https://edge.de/nolang", f"{GOOD2}\nshort", None),
+        ("https://www.edge.fr/nulltext", None, "en"),
+    ]
+    return spark.createDataFrame(
+        [Row(doc_id=i, url=u, text=t, lang=lg)
+         for i, (u, t, lg) in enumerate(rows)],
         "doc_id long, url string, text string, lang string")
-    frames = [pages_spark(spark, "/root/testdata/sf0.001"), edge]
-    for pages in frames:
+
+
+def _geo_page_rows(pages):
+    return pipeline.with_geo(pages).select(
+        "region", "country", "lang", "url", "text").collect()
+
+
+def test_fused_explode_clean_matches_oracle(spark):
+    """The fused mapInArrow stage's line rows (url, pos, line_id, text)
+    equal a pure-Python line split (oracle.split_lines) run through
+    oracle.verdict, with line_id the 1-based kept-line ordinal per page
+    row; its page rows carry the split's piece count as lines_seen - on
+    the fixture corpus AND on crafted edge pages."""
+    from tests.fixtures import pages_spark
+    for pages in (pages_spark(spark, "/root/testdata/sf0.001"),
+                  _edge_pages(spark)):
         geo = pipeline.with_geo(pages)
         cols = pipeline._corpus_line_cols(geo)
-        # staged twin WITH the window ordinal, so the fused in-stage
-        # line_id (no url shuffle) is checked against the general form
-        staged = (pipeline.number_and_hash(
-            pipeline.clean_and_filter(pipeline.explode_lines(geo)))
-            .select(*cols, "pos", "line_id", "text"))
-        fused = pipeline.explode_clean_fused(
-            geo.select(*cols, "text")).select(
-            *cols, "pos", "line_id", "text")
-        a = sorted(map(tuple, staged.collect()))
-        b = sorted(map(tuple, fused.collect()))
-        assert a == b, (len(a), len(b))
-        assert a or pages is edge
+        out = pipeline.explode_clean_fused(
+            geo.select(*cols, "text"), page_rows=True)
+        lines, seen = [], []
+        for r in _geo_page_rows(pages):
+            pieces = oracle.split_lines(r.text)
+            seen.append((r.url, len(pieces)))
+            n = 0
+            for pos, raw in enumerate(pieces):
+                cleaned, keep, _ = oracle.verdict(raw)
+                if keep:
+                    n += 1
+                    lines.append((r.url, pos, n, cleaned))
+        got = out.where("line_id IS NOT NULL").select(
+            "url", "pos", "line_id", "text")
+        assert sorted(map(tuple, got.collect())) == sorted(lines)
+        got = out.where("line_id IS NULL").select("url", "lines_seen")
+        assert sorted(map(tuple, got.collect())) == sorted(seen)
+        assert lines and seen
+
+
+def test_cell_metrics_matches_oracle(spark):
+    """Every column of every cell_metrics cell equals a pure-Python
+    count over the with_geo pages: lines_seen = oracle.split_lines
+    pieces, lines_kept = oracle.process_page lines, docs_seen = distinct
+    urls with at least one piece.  A cell whose only page has NULL text
+    gets no row.  Column names, order and types are pinned."""
+    from tests.fixtures import pages_spark
+    edge = _edge_pages(spark)
+    for pages in (pages_spark(spark, "/root/testdata/sf0.001"), edge):
+        want = {}
+        for r in _geo_page_rows(pages):
+            cell = want.setdefault((r.region, r.country, r.lang),
+                                   [0, 0, set()])
+            pieces = oracle.split_lines(r.text)
+            cell[0] += len(pieces)
+            if pieces:
+                cell[1] += len(oracle.process_page(r.text))
+                cell[2].add(r.url)
+        want = {k: (seen, kept, seen - kept, len(urls))
+                for k, (seen, kept, urls) in want.items() if seen}
+        m = pipeline.cell_metrics(pages)
+        assert m.dtypes == [
+            ("region", "string"), ("country", "string"),
+            ("lang", "string"), ("lines_seen", "bigint"),
+            ("lines_kept", "bigint"), ("lines_dropped", "bigint"),
+            ("docs_seen", "bigint")]
+        got = {(r.region, r.country, r.lang): tuple(r[3:])
+               for r in m.collect()}
+        assert got == want and got
+    # the NULL-text-only (France, en) page passes the geo gate, but its
+    # cell gets no row
+    assert "https://www.edge.fr/nulltext" in {
+        r.url for r in _geo_page_rows(edge)}
+    assert not any(k[1] == "France" for k in got)
 
 
 _SENT = ("the quick brown fox jumps over and over that lazy dog to be "

@@ -4,7 +4,8 @@
   column even though the input table carries it;
 - the dimension joins are broadcast, not shuffled;
 - the flagship plan contains exactly one real exchange (the dedup
-  aggregate) plus the line-ordinal window exchange - no accidental extras.
+  aggregate) - no accidental extras, and no line-ordinal window;
+- the line split has one rendering (the fused Arrow stage).
 """
 
 from __future__ import annotations
@@ -48,6 +49,45 @@ def test_flagship_exchange_count(spark):
     shuffles = len(re.findall(r"Exchange (?:hash|range)partitioning", plan))
     assert shuffles == 1, f"unexpected shuffles ({shuffles}):\n{plan}"
     assert "Window" not in plan, plan
+
+
+def test_cell_metrics_one_fused_stage(spark):
+    """cell_metrics is one pass: one page scan, one MapInArrow (split,
+    kernel and per-page counts), no pandas UDF, no line-ordinal Window.
+    Its only Generates are with_geo's two one-element explode(array(...))
+    evaluation barriers - no posexplode of the lines."""
+    pages = pages_spark(spark, "/root/testdata/sf0.001", materialize=True)
+    plan = plan_of(pipeline.cell_metrics(pages))
+    assert len(re.findall(r"\bFileScan ", plan)) == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan and "Window" not in plan, plan
+    assert re.findall(r"Generate (\w+\(\w+)", plan) == \
+        ["explode(array"] * 2, plan
+
+
+def test_one_line_split_inventory():
+    """The line split has one rendering: in ccspark, RE_LINE_SPLIT is
+    referenced only in regexes.py (its definition) and inside
+    pipeline.explode_clean_fused.  A second split rendering has to
+    change this test on purpose."""
+    import ast
+    import pathlib
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "ccspark"
+    fused = next(
+        n for n in ast.walk(ast.parse((pkg / "pipeline.py").read_text()))
+        if isinstance(n, ast.FunctionDef)
+        and n.name == "explode_clean_fused")
+    found = set()
+    for path in sorted(pkg.rglob("*.py")):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if "RE_LINE_SPLIT" not in line:
+                continue
+            name = path.relative_to(pkg).as_posix()
+            if name == "pipeline.py" and \
+                    fused.lineno <= i <= fused.end_lineno:
+                name = "pipeline.py::explode_clean_fused"
+            found.add(name)
+    assert found == {"regexes.py", "pipeline.py::explode_clean_fused"}
 
 
 def test_composite_doc_gates_run_before_explode(spark):

@@ -263,7 +263,10 @@ def test_sample_frames_fanout(spark):
 
 # ---------------- streaming ----------------
 
-def test_stream_corpus_matches_batch(spark, tmp_path):
+def test_stream_corpus_matches_batch(spark, tmp_path, monkeypatch):
+    # the eager unique-url guard cannot run on a stream; the stream
+    # must still build with it switched on
+    monkeypatch.setenv("CCSPARK_CHECK_UNIQUE_URLS", "1")
     pages = pages_spark(spark, "/root/testdata/sf0.001", materialize=True)
     in_dir = str(tmp_path / "in")
     pages.limit(100).repartition(4).write.parquet(in_dir)
@@ -275,8 +278,8 @@ def test_stream_corpus_matches_batch(spark, tmp_path):
 
     from ccspark import pipeline
     batch_in = spark.read.parquet(in_dir)
-    df = pipeline.clean_and_filter(
-        pipeline.explode_lines(pipeline.with_geo(batch_in)))
+    df = pipeline.explode_clean_fused(
+        pipeline.with_geo(batch_in).select("url", "text"))
     batch_hashes = {r.hash for r in
                     df.withColumn("hash", F.xxhash64("text"))
                       .select("hash").distinct().collect()}
@@ -381,7 +384,9 @@ def test_stream_plus_compactor_equals_batch_pipeline(spark, tmp_path):
     """The incremental path end-to-end.  dedup=False stream (defer dedup
     to the compactor's deterministic tie-break) must equal the one-shot
     batch pipeline EXACTLY; a stream-deduped sink (arrival-order
-    keep-first) must still yield the identical distinct-text set."""
+    keep-first) must still yield the identical distinct-text set, and
+    its line_id stays the page's kept-line ordinal (not renumbered over
+    what the stream kept)."""
     from ccspark import pipeline
     src = pages_spark(spark, "/root/testdata/sf0.001")
     in_dir = str(tmp_path / "pages")
@@ -403,6 +408,9 @@ def test_stream_plus_compactor_equals_batch_pipeline(spark, tmp_path):
     c2 = streaming.compact_stream_output(spark, out2)
     assert sorted(r.text for r in c2.collect()) == sorted(
         r.text for r in batch.collect())
+    every = {(r.url, r.line_id, r.text)
+             for r in spark.read.parquet(out).collect()}
+    assert {(r.url, r.line_id, r.text) for r in c2.collect()} <= every
 
 
 def test_stream_screen_new_crawl_matches_batch(spark, tmp_path):
