@@ -16,7 +16,8 @@ directories):
   final_cc                                  -> finalize()
   deduplication.aggregate                   -> aggregate_samples()
   deduplication.deduplicate (keep none)     -> dedup strategies on finalize()
-  geoWAC dual-LID agreement + country cap   -> lid_pass(agreement=...) /
+  geoWAC dual-LID agreement + country cap   -> lid_pass(second_model=...,
+                                                 expected_col=...) /
                                                finalize(country_limit=...)
   outlier_detection.process_file            -> outlier_pass()
   scan_url_filters (stub, cc_corpus.py:405) -> mine_url_filters()
@@ -255,10 +256,23 @@ class CCSparkCorpus:
                  min_len: int = 0) -> DataFrame:
         """Reassemble pages (A1: newline-join in line order, word count -
         cc_corpus.py:167-175), score LID page-at-a-time (M1); optionally
-        require dual-model agreement with an expected language (M2)."""
+        require dual-model agreement with an expected language (M2,
+        geoWAC.py:62-67): with *second_model* and *expected_col* (a
+        per-page column of *corpus_lines*, e.g. ``lang``, carried onto
+        the reassembled page) a page is kept only when both models'
+        labels equal its *expected_col* value, so a page of at most
+        *min_len* chars ('ukn') is dropped.  Passing only one of the two
+        raises ValueError before any job runs."""
+        if (second_model is None) != (expected_col is None):
+            raise ValueError(
+                "lid_pass agreement needs both second_model and "
+                "expected_col")
+        keys = ["url", "domain", "country", "region"]
+        if expected_col is not None and expected_col not in keys:
+            keys.append(expected_col)
         w = F.struct("line_id", "text")
         pages = (corpus_lines
-                 .groupBy("url", "domain", "country", "region")
+                 .groupBy(*keys)
                  .agg(F.concat_ws(
                      "\n",
                      F.transform(F.array_sort(F.collect_list(w)),
@@ -267,7 +281,7 @@ class CCSparkCorpus:
             "n_words", F.size(F.split("text", " ")))
         out = lid_mod.predict(self.spark, pages, model,
                               out_col="language", min_len=min_len)
-        if second_model is not None and expected_col is not None:
+        if second_model is not None:
             out = lid_mod.predict(self.spark, out, second_model,
                                   out_col="language2", min_len=min_len)
             out = out.where((F.col("language") == F.col(expected_col))
@@ -403,18 +417,6 @@ class CCSparkCorpus:
                 out, history_sig, threshold=near_threshold,
                 text_col=text_col, id_col=id_col)
         return out
-
-    def dedup_semantic(self, embeddings: DataFrame,
-                       threshold: float = 0.9, pre_exact: bool = True,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
-        """Embedding-space near-dup removal
-        (ccspark.similarity.dedup_near_embeddings): sign-LSH bucketed
-        cosine pairs -> connected components -> cluster-min survivors."""
-        from ccspark import similarity
-        return similarity.dedup_near_embeddings(
-            embeddings, threshold=threshold, pre_exact=pre_exact,
-            id_col=id_col, vec_col=vec_col)
 
     def sample_by_budget(self, docs: DataFrame, budget: int,
                          group_col: str = "lang",

@@ -16,11 +16,12 @@ depended on file order; here it is pinned with an explicit deterministic
 tiebreak.
 
 Near-dup extensions (not in the reference beyond a docstring stub,
-WET_processor.py:125-132): MinHash-LSH, SimHash, and n-gram Jaccard -
-the standard toolkit for web-scale corpus dedup.  The md5 hash family
-is reproducible outside Spark (hashlib), so tests check it value for
-value; ``hash_family='xxhash64'`` is the fast path at production scale
-(the plan shape is identical).
+WET_processor.py:125-132): MinHash-LSH candidates, exact word-k-gram
+Jaccard verification and connected components - the standard toolkit
+for web-scale corpus dedup.  The md5 hash family is reproducible
+outside Spark (hashlib), so tests check it value for value;
+``hash_family='xxhash64'`` is the fast path at production scale (the
+plan shape is identical).
 """
 
 from __future__ import annotations
@@ -171,54 +172,6 @@ def shingle_hashes(docs: DataFrame, text_col: str = "text", k: int = 3,
         id_col, F.explode(F.array_distinct(grams)).alias("_h64"))
 
 
-def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
-                        k: int = 4, w: int = 4,
-                        id_col: str = "doc_id",
-                        hash_family: str = "md5") -> DataFrame:
-    """Winnowing-style document fingerprints (Schleimer et al. 2003
-    family): hash every positional word *k*-gram, keep the minimum per
-    window of *w* consecutive positions, emit the distinct fingerprint
-    set per document as (doc_id, fingerprint, n_windows).
-
-    The md5 family is the reproducible form (equal to a hashlib
-    restatement in tests/test_operators.py);
-    ``hash_family='xxhash64'`` is the production fast path (8-byte
-    fingerprints, and the k-gram is hashed compositionally from per-word
-    hashes - no gram STRING is ever built; see ``_word_hash_kgrams``,
-    ~2x at sf1).  One explode + two map-side-combining aggregations on
-    (doc, win) then (doc, fingerprint) - no join, no window function,
-    scale-safe."""
-    if hash_family == "xxhash64":
-        wh, grams = _word_hash_kgrams(
-            docs.select(F.col(id_col).alias("doc_id"), text_col),
-            text_col, k, "doc_id")
-        ex = wh.select("doc_id",
-                       F.posexplode(grams).alias("pos", "_h"))
-        hashed = ex.select(
-            "doc_id", F.floor(F.col("pos") / w).cast("int").alias("win"),
-            "_h")
-        wins = (hashed.groupBy("doc_id", "win")
-                .agg(F.min("_h").alias("fingerprint")))
-        return (wins.groupBy("doc_id", "fingerprint")
-                .agg(F.count("*").cast("bigint").alias("n_windows")))
-    from ccspark.skew import ensure_min_partitions
-    docs = ensure_min_partitions(docs, key=id_col)
-    words = docs.select(F.col(id_col).alias("doc_id"),
-                        F.split(F.col(text_col), " ").alias("_w"))
-    wcol = F.col("_w")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(wcol) - k, F.lit(0)))
-    sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(wcol, i + 1, k)))
-    ex = words.select("doc_id",
-                      F.posexplode(sh).alias("pos", "shingle"))
-    hashed = ex.select(
-        "doc_id", F.floor(F.col("pos") / w).cast("int").alias("win"),
-        F.md5("shingle").alias("_h"))
-    wins = (hashed.groupBy("doc_id", "win")
-            .agg(F.min("_h").alias("fingerprint")))
-    return (wins.groupBy("doc_id", "fingerprint")
-            .agg(F.count("*").cast("bigint").alias("n_windows")))
-
-
 def minhash_signatures(sh: DataFrame, num_hashes: int = 16,
                        id_col: str = "doc_id",
                        hash_family: str = "md5") -> DataFrame:
@@ -255,45 +208,6 @@ def minhash_signatures(sh: DataFrame, num_hashes: int = 16,
         for i in range(num_hashes)
     ]
     return hashed.groupBy(id_col).agg(*mins)
-
-
-def lsh_candidate_pairs(sig: DataFrame, bands: int = 4,
-                        id_col: str = "doc_id",
-                        hash_family: str = "md5") -> DataFrame:
-    """Band the wide signature (rows_per_band = num_hashes/bands), bucket
-    by the band digest, emit candidate pairs sharing any bucket.
-    ``hash_family='xxhash64'`` digests the band columns directly
-    (multi-arg xxhash64, an 8-byte join key) instead of md5-of-concat."""
-    mcols = [c for c in sig.columns if c.startswith("m")]
-    rows_per_band = max(1, len(mcols) // bands)
-    # ONE posexplode of the per-band digest array instead of a bands-way
-    # union: the union re-plans (and re-shuffles) the signature aggregate
-    # once per band; the explode computes it once per join side
-    band_digests = []
-    for bi in range(bands):
-        cols = mcols[bi * rows_per_band:(bi + 1) * rows_per_band]
-        if cols:
-            if hash_family == "xxhash64":
-                band_digests.append(
-                    F.xxhash64(*[F.col(c) for c in cols]).cast("string"))
-            else:
-                band_digests.append(F.md5(F.concat_ws(",", *cols)))
-    digests = sig.select(
-        id_col, F.posexplode(F.array(*band_digests))
-        .alias("band", "digest"))
-    # bucket + stacked explodes instead of a self-join: the join planned
-    # (and ran) the signature chain once per side - broadcast build +
-    # streamed - while the grouped form references it ONCE (r6).  Pairs
-    # stream row-at-a-time, so memory per bucket row is O(bucket size).
-    buckets = (digests.groupBy("band", "digest")
-               .agg(F.collect_list(id_col).alias("ds")))
-    return (buckets
-            .select("ds", F.explode("ds").alias("_a"))
-            .select(F.col("_a").alias("doc_a"),
-                    F.explode(F.filter(
-                        F.col("ds"),
-                        lambda b: b > F.col("_a"))).alias("doc_b"))
-            .distinct())
 
 
 def minhash_near_dups(docs: DataFrame, text_col: str = "text", k: int = 3,
@@ -333,8 +247,7 @@ def minhash_near_dups(docs: DataFrame, text_col: str = "text", k: int = 3,
     # posexplode so the band INDEX rides along: candidates must agree on
     # (band, digest), not digest alone - a cross-band digest coincidence
     # (doc A's band-i tuple hashing like doc B's band-j tuple) must not
-    # pair, matching lsh_candidate_pairs'
-    # a.band = b.band AND a.digest = b.digest.
+    # pair.
     dg = sig.select(id_col, *mcols,
                     F.posexplode(F.array(*digs)).alias("band", "digest"))
     # r6: bucket + stacked explodes instead of the band self-join - the
@@ -367,106 +280,6 @@ def minhash_near_dups(docs: DataFrame, text_col: str = "text", k: int = 3,
             .agg(F.max("jaccard_est").alias("jaccard_est")))
 
 
-def simhash(docs: DataFrame, text_col: str = "text", bits: int = 16,
-            id_col: str = "doc_id",
-            hash_family: str = "md5") -> DataFrame:
-    """SimHash fingerprint: bit i of the fingerprint is the majority vote
-    of hex digit i of md5(word) being >= 8 (the digit's high bit), over
-    all words.  16 hex digits -> 16-bit fingerprint, reproducible with
-    hashlib.
-
-    ``hash_family='xxhash64'`` is the production fast path: bit i is
-    read straight off the word's xxhash64 long (shiftright + mask, all
-    whole-stage codegen, no hex string) and *bits* may go up to 63.
-    Same majority-vote structure, different concrete fingerprints -
-    near-dup behavior (small Hamming distance for similar docs) is
-    family-independent and pytest-asserted."""
-    from ccspark.skew import ensure_min_partitions
-    docs = ensure_min_partitions(docs, key=id_col)
-    words = docs.select(
-        id_col, F.explode(F.split(F.col(text_col), " ")).alias("w"))
-    if hash_family == "xxhash64":
-        words = words.where(F.length("w") > 0).withColumn(
-            "h", F.xxhash64("w"))
-        bit_votes = words.select(
-            id_col,
-            *[
-                (F.when(F.shiftright(F.col("h"), i).bitwiseAND(1) == 1, 1)
-                  .otherwise(-1)).alias(f"b{i}")
-                for i in range(bits)
-            ],
-        )
-        agg = bit_votes.groupBy(id_col).agg(
-            *[F.sum(f"b{i}").alias(f"s{i}") for i in range(bits)])
-        return agg.select(
-            id_col,
-            sum(
-                (F.when(F.col(f"s{i}") > 0, 1).otherwise(0) * (2 ** i)
-                 for i in range(bits)),
-                start=F.lit(0),
-            ).cast("long").alias("simhash"),
-        )
-    words = words.where(F.length("w") > 0).withColumn("h", F.md5("w"))
-    bit_votes = words.select(
-        id_col,
-        *[
-            (F.when(F.substring("h", i + 1, 1).isin(*"89abcdef"), 1)
-              .otherwise(-1)).alias(f"b{i}")
-            for i in range(bits)
-        ],
-    )
-    agg = bit_votes.groupBy(id_col).agg(
-        *[F.sum(f"b{i}").alias(f"s{i}") for i in range(bits)])
-    fp = agg.select(
-        id_col,
-        sum(
-            (F.when(F.col(f"s{i}") > 0, 1).otherwise(0) * (2 ** i)
-             for i in range(bits)),
-            start=F.lit(0),
-        ).cast("long").alias("simhash"),
-    )
-    return fp
-
-
-def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", k: int = 3,
-                        id_col: str = "doc_id",
-                        bucket_col=None) -> DataFrame:
-    """Exact pairwise Jaccard over word-k-gram shingle sets.  Quadratic -
-    restrict with *bucket_col* (e.g. lang) so the self-join stays within
-    buckets; at production scale run it only on LSH candidate pairs."""
-    sh = shingles(docs, text_col, k, id_col)
-    if bucket_col is not None:
-        sh = sh.join(docs.select(id_col, bucket_col), id_col)
-        join_keys = ["shingle", bucket_col]
-    else:
-        join_keys = ["shingle"]
-    a = sh.select(*[F.col(c).alias(f"a_{c}") if c == id_col else F.col(c)
-                    for c in sh.columns])
-    b = sh.select(*[F.col(c).alias(f"b_{c}") if c == id_col else F.col(c)
-                    for c in sh.columns])
-    inter = (
-        a.join(b, join_keys)
-        .where(F.col(f"a_{id_col}") < F.col(f"b_{id_col}"))
-        .groupBy(f"a_{id_col}", f"b_{id_col}")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    sa = sizes.select(F.col(id_col).alias(f"a_{id_col}"),
-                      F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias(f"b_{id_col}"),
-                      F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, f"a_{id_col}").join(sb, f"b_{id_col}")
-        .select(
-            F.col(f"a_{id_col}").alias("doc_a"),
-            F.col(f"b_{id_col}").alias("doc_b"),
-            (F.col("n_common")
-             / (F.col("n_a") + F.col("n_b") - F.col("n_common")))
-            .alias("jaccard"),
-        )
-    )
-
-
 def jaccard_on_candidates(docs: DataFrame, pairs: DataFrame,
                           text_col: str = "text", k: int = 3,
                           id_col: str = "doc_id",
@@ -474,11 +287,10 @@ def jaccard_on_candidates(docs: DataFrame, pairs: DataFrame,
     """EXACT word-k-gram Jaccard computed ONLY for the given candidate
     pairs (doc_a, doc_b) - the verification stage of a production
     near-dup pipeline (LSH candidates -> exact verify -> threshold ->
-    cluster).  ``ngram_jaccard_pairs`` is quadratic in the corpus; this
-    is linear in the candidate set: the gram table is left-semi
-    restricted to documents that appear in any pair before the
-    intersection join, so corpus size only enters through the one
-    shingle pass.  Pairs with empty intersection come back at 0.0
+    cluster).  It is linear in the candidate set, not quadratic in the
+    corpus: the gram table is left-semi restricted to documents that
+    appear in any pair before the intersection join, so corpus size
+    only enters through the one shingle pass.  Pairs with empty intersection come back at 0.0
     (LSH can propose false positives - that is exactly what this op is
     for).  Output: (doc_a, doc_b, jaccard double)."""
     gcol = "_g"
@@ -689,9 +501,10 @@ def minhash_signature_table(docs: DataFrame, text_col: str = "text",
                             hash_family: str = "xxhash64") -> DataFrame:
     """The persistable per-document MinHash signature table
     (id_col, m0..m{num_hashes-1}) - compute it once per crawl and save
-    it (parquet / catalog.save_bucketed on a band digest) so later
-    crawls can be near-dup screened against HISTORY without ever
-    re-reading historical text.  At 10^12 docs the signature table is
+    it (parquet, or ``banded_signatures`` written with
+    ``DataFrameWriter.bucketBy`` on the band digest) so later crawls can
+    be near-dup screened against HISTORY without ever re-reading
+    historical text.  At 10^12 docs the signature table is
     ~100 bytes/doc - the only history state incremental near-dup
     needs."""
     sh = (shingle_hashes(docs, text_col, k, id_col)
@@ -713,7 +526,7 @@ def banded_signatures(sig: DataFrame, bands: int = 4,
     """Explode a ``minhash_signature_table`` into its band-digest form
     (id_col, m0.., digest) - one row per (doc, band).  This is the
     PERSISTED layout for cross-crawl screening at scale: write history
-    with ``catalog.save_bucketed(spark, banded, tbl, "digest")`` and
+    with ``banded.write.bucketBy(n, "digest").saveAsTable(tbl)`` and
     ``incremental_near_dups`` probes it with the history-side exchange
     gone (asserted in tests/test_operators.py) - only the new crawl's
     (much smaller) digest stream shuffles.
@@ -796,7 +609,7 @@ def incremental_near_dups(new_docs: DataFrame, history_sig: DataFrame,
     inferred from the m-columns).  Only the NEW crawl's text is read;
     history enters as ~100 bytes/doc of signatures.  The band-digest
     join is new-vs-history (no self-join): with the banded history
-    bucketed on digest (catalog.save_bucketed) the probe reads it
+    bucketed on digest (``DataFrameWriter.bucketBy``) the probe reads it
     pre-shuffled and only the new crawl's digest stream moves.  Dedup
     WITHIN the new crawl itself is ``dedup_near``'s job, run separately
     - composing screen-then-self keeps each stage's state bounded.
@@ -853,7 +666,7 @@ def incremental_new_rows(new: DataFrame, seen: DataFrame,
     """Cross-crawl incremental dedup: keep only *new* rows whose key never
     appeared in the historical *seen* table (left_anti on the 8-byte
     hash).  At warehouse scale, bucket BOTH tables by the key
-    (catalog.save_bucketed) and the anti-join runs shuffle-free; the
+    (``DataFrameWriter.bucketBy``) and the anti-join runs shuffle-free; the
     monthly crawl then costs one scan of itself plus a co-located probe
     of history, never a re-dedup of the union."""
     return new.join(seen.select(key).distinct(), key, "left_anti")

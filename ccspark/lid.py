@@ -224,8 +224,8 @@ class FastTextLidModel:
     supervised LID model (e.g. lid.176.bin) behind the SAME
     ``predict(text, min_len) -> lang`` and ``predict_batch(texts,
     min_len) -> [lang]`` interface as NgramLidModel, so
-    ``predict``/``agreement_filter`` and the Iterator-UDF serving path
-    need zero changes to swap models.
+    ``predict`` (and so ``CCSparkCorpus.lid_pass``) and the Iterator-UDF
+    serving path need zero changes to swap models.
 
     Pickles only the model path (``__getstate__``): the broadcast ships
     the path, and each executor python worker lazy-loads the binary model
@@ -302,16 +302,3 @@ def predict(spark, docs: DataFrame, model,
             min_len: int = 0) -> DataFrame:
     return docs.withColumn(out_col,
                            make_predict_udf(spark, model, min_len)(text_col))
-
-
-def agreement_filter(spark, docs: DataFrame, model_a,
-                     model_b, expected_col: str = "lang",
-                     text_col: str = "text",
-                     min_len: int = 150) -> DataFrame:
-    """M2 (geoWAC.py:62-67): keep rows where BOTH detectors agree with the
-    expected language; rows shorter than min_len score 'ukn' and are
-    dropped (geoWAC.py:19-22 threshold semantics)."""
-    df = predict(spark, docs, model_a, text_col, "lid_a", min_len)
-    df = predict(spark, df, model_b, text_col, "lid_b", min_len)
-    return df.where((F.col("lid_a") == F.col(expected_col))
-                    & (F.col("lid_b") == F.col(expected_col)))

@@ -20,8 +20,7 @@ At 10^12-doc scale the same plan holds; AQE (skew-join + coalesce)
 handles giant domains, and dedup keys are 8-byte xxhash64 values rather
 than full lines.  The fused stage is the only line split and kernel in
 ccspark: the per-cell metrics (cell_metrics, checkpoint.build_resumable)
-read its page rows, and the stream (streaming.stream_corpus_build) runs
-it per micro-batch.
+read its page rows.
 """
 
 from __future__ import annotations

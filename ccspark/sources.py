@@ -121,37 +121,6 @@ def read_wet(spark: SparkSession, path_glob: str,
     return pages
 
 
-# ---------------------------------------------------------------------
-# Test/demo helper: build a valid WET byte stream (the synthetic stand-in
-# for a crawl segment; no external data).
-
-def make_wet_bytes(records, gzip_out: bool = False,
-                   warcinfo: bool = True) -> bytes:
-    """records: iterable of (url, date, text) -> WET-format bytes."""
-    out = bytearray()
-
-    def emit(rtype: str, hdrs: dict, body: bytes):
-        out.extend(b"WARC/1.0\r\n")
-        out.extend(f"WARC-Type: {rtype}\r\n".encode())
-        for k, v in hdrs.items():
-            out.extend(f"{k}: {v}\r\n".encode())
-        out.extend(f"Content-Length: {len(body)}\r\n".encode())
-        out.extend(b"\r\n")
-        out.extend(body)
-        out.extend(b"\r\n\r\n")
-
-    if warcinfo:
-        emit("warcinfo", {"WARC-Record-ID": "<urn:uuid:info>"},
-             b"software: ccspark-test\r\n")
-    for url, date, text in records:
-        emit("conversion",
-             {"WARC-Target-URI": url, "WARC-Date": date,
-              "WARC-Record-ID": "<urn:uuid:x>"},
-             text.encode("utf-8"))
-    data = bytes(out)
-    return _gzip.compress(data) if gzip_out else data
-
-
 def segment_manifest(spark: SparkSession, paths_file: str) -> DataFrame:
     """S1 (cc_corpus.py:321-334): the crawl's ``wet.paths(.gz)`` manifest
     as a DataFrame of work units.  The public manifest format is one

@@ -1,16 +1,20 @@
-"""Build dist/ccspark.zip for spark-submit --py-files."""
+"""Build ccspark.zip for spark-submit --py-files.
+
+Usage: python scripts/package.py [OUT_DIR]   (OUT_DIR defaults to dist/)
+"""
 
 from __future__ import annotations
 
 import os
+import sys
 import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
-    os.makedirs(os.path.join(ROOT, "dist"), exist_ok=True)
-    out = os.path.join(ROOT, "dist", "ccspark.zip")
+def main(out_dir: str = os.path.join(ROOT, "dist")) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    out = os.path.join(out_dir, "ccspark.zip")
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
         pkg = os.path.join(ROOT, "ccspark")
         for dirpath, _, files in os.walk(pkg):
@@ -24,4 +28,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(*sys.argv[1:2])

@@ -1,5 +1,6 @@
 """Test fixtures: the boundary-case line pool for the keep/drop kernel
-(FIXTURES.md par.2) and the synthesized `pages` table (``pages_spark``).
+(FIXTURES.md par.2), the synthesized `pages` table (``pages_spark``) and
+a WET segment writer (``make_wet_bytes``).
 
 Each line case pins the behavior of one rule at its threshold; expected
 verdicts in tests come from tests/oracle.py (the frozen reference
@@ -252,3 +253,32 @@ def pages_spark(spark, sf_dir: str, materialize: bool = True):
         nfiles = max(8, int(spark.conf.get("spark.sql.shuffle.partitions")))
         full.repartition(nfiles, "doc_id").write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
+
+
+def make_wet_bytes(records, gzip_out: bool = False,
+                   warcinfo: bool = True) -> bytes:
+    """records: iterable of (url, date, text) -> WET-format bytes (the
+    synthetic stand-in for a crawl segment; no external data)."""
+    import gzip
+    out = bytearray()
+
+    def emit(rtype: str, hdrs: dict, body: bytes):
+        out.extend(b"WARC/1.0\r\n")
+        out.extend(f"WARC-Type: {rtype}\r\n".encode())
+        for k, v in hdrs.items():
+            out.extend(f"{k}: {v}\r\n".encode())
+        out.extend(f"Content-Length: {len(body)}\r\n".encode())
+        out.extend(b"\r\n")
+        out.extend(body)
+        out.extend(b"\r\n\r\n")
+
+    if warcinfo:
+        emit("warcinfo", {"WARC-Record-ID": "<urn:uuid:info>"},
+             b"software: ccspark-test\r\n")
+    for url, date, text in records:
+        emit("conversion",
+             {"WARC-Target-URI": url, "WARC-Date": date,
+              "WARC-Record-ID": "<urn:uuid:x>"},
+             text.encode("utf-8"))
+    data = bytes(out)
+    return gzip.compress(data) if gzip_out else data

@@ -479,17 +479,18 @@ def gopher_repetition(text: str) -> tuple:
     return fr[2], fr[3], fr[4], fr[5], keep
 
 
-def winnow_md5(text: str, k: int = 4, w: int = 4) -> Counter:
-    """dedup.winnow_fingerprints(hash_family='md5') for one doc:
-    {fingerprint: n_windows}.  Shingles are md5 hex of k consecutive
-    ' '-split words (one shingle of all words when there are fewer);
-    each window of w shingle positions keeps its minimum."""
-    ws = text.split(" ")
-    wins = {}
-    for i in range(max(len(ws) - k, 0) + 1):
-        h = hashlib.md5(" ".join(ws[i:i + k]).encode("utf-8")).hexdigest()
-        wins[i // w] = min(wins.get(i // w, h), h)
-    return Counter(wins.values())
+def word_shingle_jaccard(a: str, b: str, k: int = 3) -> float:
+    """Jaccard of two docs' dedup.shingles sets: the distinct ' '-joined
+    word k-grams of the ' '-split words (one shingle of all words when
+    there are fewer than k), empty shingles dropped; 0.0 when both sets
+    are empty."""
+    def grams(text):
+        ws = text.split(" ")
+        return {g for g in (" ".join(ws[i:i + k])
+                            for i in range(max(len(ws) - k, 0) + 1)) if g}
+    sa, sb = grams(a), grams(b)
+    union = len(sa | sb)
+    return len(sa & sb) / union if union else 0.0
 
 
 def token_budget(docs, budget) -> dict:

@@ -1,0 +1,79 @@
+"""Inventory of what the package ships, and its --py-files shape.
+
+The module set and the public ``CCSparkCorpus`` methods are pinned
+here, so adding a module or a facade method means updating this test
+on purpose.  The zip test builds ``ccspark.zip`` with
+``scripts/package.py`` and imports every module from it in a fresh
+interpreter that cannot see the source tree, as a Spark executor
+given ``--py-files`` does."""
+
+from __future__ import annotations
+
+import ast
+import json
+import pathlib
+import subprocess
+import sys
+import zipfile
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+
+MODULES = {
+    "__init__", "_zipstat", "api", "arrowgate", "arrowkernel",
+    "checkpoint", "chunker", "decontam", "dedup", "geo", "lid",
+    "pipeline", "quality", "regexes", "sampling", "scrub", "session",
+    "skew", "sources", "sqlgen", "unicode_ranges",
+}
+
+FACADE_METHODS = {
+    "process_wet", "process_pages", "build_training_corpus", "metrics",
+    "lid_pass", "finalize", "aggregate_samples", "outlier_pass",
+    "qq_diagnostics", "decontaminate", "dedup_near", "screen_new_crawl",
+    "sample_by_budget", "sample_mixture", "scrub", "mine_url_filters",
+}
+
+
+def test_module_inventory():
+    found = {p.stem for p in (ROOT / "ccspark").glob("*.py")}
+    assert found == MODULES, found ^ MODULES
+
+
+def test_facade_method_inventory():
+    tree = ast.parse((ROOT / "ccspark" / "api.py").read_text())
+    cls = next(n for n in tree.body
+               if isinstance(n, ast.ClassDef) and n.name == "CCSparkCorpus")
+    found = {n.name for n in cls.body
+             if isinstance(n, ast.FunctionDef) and not n.name.startswith("_")}
+    assert found == FACADE_METHODS, found ^ FACADE_METHODS
+
+
+IMPORT_ALL = """
+import importlib, importlib.util, json, sys
+zip_path, names = sys.argv[1], json.loads(sys.argv[2])
+assert importlib.util.find_spec("ccspark") is None, sys.path
+sys.path.insert(0, zip_path)
+for name in names:
+    mod = importlib.import_module(name)
+    assert mod.__file__.startswith(zip_path), (name, mod.__file__)
+print(len(names))
+"""
+
+
+def test_py_files_zip_imports_every_module(tmp_path):
+    subprocess.run([sys.executable, str(ROOT / "scripts" / "package.py"),
+                    str(tmp_path)], check=True, capture_output=True)
+    zip_path = tmp_path / "ccspark.zip"
+    with zipfile.ZipFile(zip_path) as zf:
+        files = [n for n in zf.namelist() if n.endswith(".py")]
+    assert {pathlib.PurePosixPath(n).stem for n in files
+            if n.count("/") == 1} == MODULES
+    names = sorted(n[:-3].replace("/", ".").removesuffix(".__init__")
+                   for n in files)
+    # -I: no PYTHONPATH, no user site and neither the cwd nor a script
+    # dir on sys.path, so the source tree cannot serve ccspark
+    out = subprocess.run(
+        [sys.executable, "-I", "-c", IMPORT_ALL, str(zip_path),
+         json.dumps(names)],
+        cwd=tmp_path, capture_output=True, text=True)
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split()[-1] == str(len(names))

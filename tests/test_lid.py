@@ -6,8 +6,9 @@ Independent checks:
     (the documents fixture has decorative lang labels - every
     lang draws from the same English word distribution, so accuracy
     there is pinned at the prior and says nothing about the model);
-  * agreement-filter invariants (both models agree with expected lang,
-    min_len gate drops short rows);
+  * the facade's dual-model agreement (lid_pass): exactly the pages
+    both models label with the expected lang, the min_len gate drops
+    short pages, a half-specified agreement raises;
   * the fastText seam: a fake fasttext module shipped via addPyFile
     serves through the same broadcast + Iterator-UDF path with zero
     pipeline changes;
@@ -66,25 +67,82 @@ def test_heldout_accuracy_floor(spark):
     assert acc >= 0.95, acc
 
 
-def test_agreement_filter_invariants(spark):
+def _page_lines(rows):
+    """corpus_lines rows for CCSparkCorpus.lid_pass: each doc is one page
+    whose words split over two lines (one line under 21 words)."""
+    out = []
+    for r in rows:
+        words = r.text.split(" ")
+        for line_id, part in enumerate((words[:20], words[20:])):
+            if part:
+                out.append(Row(url=f"https://p{r.doc_id}.de/",
+                               domain=f"p{r.doc_id}", country="Germany",
+                               region="europe_west", line_id=line_id,
+                               text=" ".join(part), lang=r.lang))
+    return out
+
+
+def _agreement_run(spark, extra_rows):
+    """lid_pass with dual-model agreement on synth_docs plus
+    *extra_rows*, the models trained on the docs alone; returns the kept
+    rows and the urls the oracle's two models both label as the page's
+    lang (min_len 150)."""
+    from ccspark.api import CCSparkCorpus
     docs = synth_docs(spark, per_lang=30, words_per_doc=40)
-    short = spark.createDataFrame(
-        [Row(doc_id=10_000, lang="eng", text="too short")])
-    docs = docs.unionByName(short)
     m2 = lid.train(docs, n=2, top_k=800)
     m3 = lid.train(docs, n=3, top_k=2000)
-    kept = lid.agreement_filter(spark, docs, m2, m3, min_len=150).collect()
+    doc_rows = docs.collect()
+    train_rows = [(r.text, r.lang) for r in doc_rows]
+    o2 = oracle.nb_train(train_rows, n=2, top_k=800)
+    o3 = oracle.nb_train(train_rows, n=3, top_k=2000)
+    line_rows = _page_lines(doc_rows + extra_rows)
+    kept = CCSparkCorpus(spark).lid_pass(
+        spark.createDataFrame(line_rows), m2, second_model=m3,
+        expected_col="lang", min_len=150).collect()
+    pages = {}
+    for r in line_rows:               # in line_id order
+        pages.setdefault((r.url, r.lang), []).append(r.text)
+    want = {url for (url, lang), lines in pages.items()
+            if oracle.nb_predict(o2, "\n".join(lines), 150) == lang
+            and oracle.nb_predict(o3, "\n".join(lines), 150) == lang}
+    return kept, want
+
+
+def test_agreement_filter_invariants(spark):
+    """The facade's M2 path: the output is exactly the pages both models
+    label with the page's expected lang (the conjunction, checked
+    against tests/oracle.py), and a page of at most min_len chars
+    scores 'ukn' and is dropped."""
+    short = Row(doc_id=10_000, lang="eng", text="too short")
+    kept, want = _agreement_run(spark, [short])
     assert kept
     for r in kept:
-        assert r.lid_a == r.lang and r.lid_b == r.lang
+        assert r.language == r.lang and r.language2 == r.lang
         assert len(r.text) > 150          # the 'ukn' gate
-    assert all(r.doc_id != 10_000 for r in kept)
-    # the filter is the conjunction, nothing more: recompute expectations
-    scored = lid.predict(spark, docs, m2, out_col="a", min_len=150)
-    scored = lid.predict(spark, scored, m3, out_col="b", min_len=150)
-    want = {r.doc_id for r in scored.collect()
-            if r.a == r.lang and r.b == r.lang}
-    assert {r.doc_id for r in kept} == want
+    assert all(r.url != "https://p10000.de/" for r in kept)
+    assert {r.url for r in kept} == want
+
+
+def test_lid_pass_rejects_half_agreement(spark):
+    """second_model without expected_col, or expected_col without
+    second_model, raises ValueError before any Spark job runs."""
+    from ccspark.api import CCSparkCorpus
+    model = lid.train(synth_docs(spark, per_lang=5), n=2, top_k=100)
+    lines = spark.createDataFrame(_page_lines(
+        [Row(doc_id=0, lang="eng", text=" ".join(WORDS["eng"]))]))
+    cc = CCSparkCorpus(spark)
+    sc = spark.sparkContext
+    group = "test_lid_pass_rejects_half_agreement"
+    sc.setJobGroup(group, "lid_pass")
+    try:
+        for kw in ({"second_model": model}, {"expected_col": "lang"}):
+            with pytest.raises(ValueError, match="second_model and "
+                                                 "expected_col"):
+                cc.lid_pass(lines, model, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 FAKE_FASTTEXT = '''

@@ -1,5 +1,6 @@
 """Module-level operator tests: greedy chunker, trainable LID +
-agreement filter, perplexity outliers, PII scrub."""
+dual-model agreement, perplexity outliers, PII scrub, near-duplicate
+dedup."""
 
 from __future__ import annotations
 
@@ -90,6 +91,10 @@ def test_lid_min_len_threshold_ukn(spark):
 
 
 def test_agreement_filter(spark):
+    """M2 through the facade: a long English page labelled de is dropped
+    by CCSparkCorpus.lid_pass's dual-model agreement, while most
+    correctly labelled pages survive it."""
+    from ccspark.api import CCSparkCorpus
     docs = lang_docs(spark)
     m2 = lid.train(docs, n=2, top_k=500)
     m3 = lid.train(docs, n=3, top_k=500)
@@ -101,11 +106,17 @@ def test_agreement_filter(spark):
                    "minimum for scoring"),
              lang="de")])
     good = docs.where(F.length("text") > 150)
-    kept = lid.agreement_filter(spark, good.union(mislabeled), m2, m3,
-                                min_len=100)
-    ids = {r.doc_id for r in kept.collect()}
-    assert 999 not in ids
-    assert len(ids) >= good.count() * 0.9
+    lines = good.union(mislabeled).select(
+        F.concat(F.lit("https://p"), "doc_id", F.lit(".de/")).alias("url"),
+        F.col("doc_id").cast("string").alias("domain"),
+        F.lit("Germany").alias("country"),
+        F.lit("europe_west").alias("region"),
+        F.lit(0).alias("line_id"), "text", "lang")
+    kept = CCSparkCorpus(spark).lid_pass(lines, m2, second_model=m3,
+                                         expected_col="lang", min_len=100)
+    urls = {r.url for r in kept.collect()}
+    assert "https://p999.de/" not in urls
+    assert len(urls) >= good.count() * 0.9
 
 
 # ---------------- quality / outliers (M3-M5) ----------------
@@ -261,11 +272,16 @@ def test_minhash_near_dups_module(spark):
     assert not any(2 in p for p in got)
     est = {(r.doc_a, r.doc_b): r.jaccard_est for r in pairs}
     assert est[(0, 1)] >= 0.5
-    # explode-based banding: bands rows per doc, bands distinct band ids
-    sh = dedup.shingles(docs)
-    sig = dedup.minhash_signatures(sh, num_hashes=16)
-    cand = dedup.lsh_candidate_pairs(sig, bands=4)
-    assert {(r.doc_a, r.doc_b) for r in cand.collect()} >= {(0, 1)}
+    # the persisted banded layout of the same md5 signatures: bands rows
+    # per doc, and the pair is the one sharing a band digest
+    sig = dedup.minhash_signature_table(docs, num_hashes=16,
+                                        hash_family="md5")
+    digests = {}
+    for r in dedup.banded_signatures(sig, bands=4).collect():
+        digests.setdefault(r.doc_id, []).append(r.digest)
+    assert {d: len(v) for d, v in digests.items()} == {0: 4, 1: 4, 2: 4}
+    assert set(digests[0]) & set(digests[1])
+    assert not set(digests[2]) & (set(digests[0]) | set(digests[1]))
 
 
 def test_minhash_xxhash64_fast_path(spark):
@@ -379,77 +395,14 @@ def test_near_dup_removal_end_to_end(spark):
     assert all_kept == {0, 1, 2, 3, 4, 5}
 
 
-def test_simhash_and_ngram_jaccard_modules(spark):
-    """Module paths for D5's other members: identical docs share a
-    simhash fingerprint and score jaccard 1.0; near-dups differ in few
-    bits; unrelated docs' jaccard is 0 (no pair emitted)."""
-    from ccspark import dedup
-    base = ("the quick brown fox jumps over the lazy dog and then runs "
-            "far away to the deep green forest before nightfall today")
-    docs = spark.createDataFrame([
-        Row(doc_id=0, text=base),
-        Row(doc_id=1, text=base),                               # exact dup
-        Row(doc_id=2, text=base.replace("today", "tomorrow")),  # near-dup
-        Row(doc_id=3, text=" ".join(f"tok{i}" for i in range(40))),
-    ])
-    fp = {r.doc_id: r.simhash for r in dedup.simhash(docs).collect()}
-    assert fp[0] == fp[1]
-    hamming = bin(fp[0] ^ fp[2]).count("1")
-    assert hamming <= 6, hamming
-    assert bin(fp[0] ^ fp[3]).count("1") > hamming
-    jac = {(r.doc_a, r.doc_b): r.jaccard
-           for r in dedup.ngram_jaccard_pairs(docs).collect()}
-    assert jac[(0, 1)] == 1.0
-    assert 0.5 <= jac[(0, 2)] < 1.0
-    assert (0, 3) not in jac and (1, 3) not in jac
-
-
-def test_winnow_fingerprints_module(spark):
-    """dedup.winnow_fingerprints (production winnowing op): the md5
-    family must equal the pure-Python restatement (tests/oracle.py) row
-    for row on the documents fixture, and the xxhash64 fast path must
-    keep the same structure (same (doc, window-count) profile, identical
-    fingerprints for identical docs)."""
+def test_jaccard_on_candidates_exact(spark):
+    """dedup.jaccard_on_candidates (the LSH->verify stage): every pair's
+    value must be IDENTICAL to the pure-Python word-shingle Jaccard
+    (tests/oracle.py: same gram sets, same arithmetic); a pair with
+    empty intersection must come back 0.0 rather than dropped; and both
+    hash families must agree (gram identity is family-independent)."""
     from ccspark import dedup
     from tests import oracle
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    want_rows = {(r.doc_id, fp): n
-                for r in docs.select("doc_id", "text").collect()
-                for fp, n in oracle.winnow_md5(r.text).items()}
-    mod_rows = {(r.doc_id, r.fingerprint): r.n_windows
-                for r in dedup.winnow_fingerprints(docs).collect()}
-    assert mod_rows == want_rows
-
-    fast = dedup.winnow_fingerprints(docs, hash_family="xxhash64")
-    prof_fast = {r.doc_id: r.n for r in
-                 fast.groupBy("doc_id")
-                 .agg(F.sum("n_windows").alias("n")).collect()}
-    prof_md5 = {}
-    for (d, _), n in want_rows.items():
-        prof_md5[d] = prof_md5.get(d, 0) + n
-    assert prof_fast == prof_md5
-    # identical docs -> identical fingerprint sets (exact-dup detection)
-    from collections import defaultdict
-    by_doc = defaultdict(set)
-    for r in fast.collect():
-        by_doc[r.doc_id].add(r.fingerprint)
-    texts = {r.doc_id: r.text for r in docs.select("doc_id", "text")
-             .collect()}
-    import itertools
-    dup_pair = next(((a, b) for a, b in itertools.combinations(texts, 2)
-                     if texts[a] == texts[b]), None)
-    if dup_pair:
-        assert by_doc[dup_pair[0]] == by_doc[dup_pair[1]]
-
-
-def test_jaccard_on_candidates_exact(spark):
-    """dedup.jaccard_on_candidates (the LSH->verify stage): for pairs the
-    quadratic ngram_jaccard_pairs also emits, the values must be
-    IDENTICAL (same gram sets, same arithmetic); a pair with empty
-    intersection must come back 0.0 rather than dropped; and both hash
-    families must agree (gram identity is family-independent)."""
-    from ccspark import dedup
     base = ("the quick brown fox jumps over the lazy dog and then runs "
             "far away to the deep green forest before nightfall today")
     docs = spark.createDataFrame([
@@ -458,17 +411,18 @@ def test_jaccard_on_candidates_exact(spark):
         Row(doc_id=2, text=" ".join(f"token{i}" for i in range(40))),
         Row(doc_id=3, text=base),
     ])
-    brute = {(r.doc_a, r.doc_b): r.jaccard
-             for r in dedup.ngram_jaccard_pairs(docs).collect()}
+    texts = {r.doc_id: r.text for r in docs.collect()}
     cand = spark.createDataFrame(
         [Row(doc_a=0, doc_b=1), Row(doc_a=0, doc_b=3),
          Row(doc_a=1, doc_b=2)])  # (1,2) shares nothing
+    want = {(a, b): oracle.word_shingle_jaccard(texts[a], texts[b])
+            for a, b in ((0, 1), (0, 3), (1, 2))}
+    assert want[(0, 3)] == 1.0 and 0.5 <= want[(0, 1)] < 1.0
     for fam in ("md5", "xxhash64"):
         got = {(r.doc_a, r.doc_b): r.jaccard
                for r in dedup.jaccard_on_candidates(
                    docs, cand, hash_family=fam).collect()}
-        assert got[(0, 3)] == 1.0, fam
-        assert got[(0, 1)] == brute[(0, 1)], fam
+        assert got == want, fam
         assert got[(1, 2)] == 0.0, fam
 
 
@@ -498,30 +452,6 @@ def test_dedup_near_verify_exact(spark):
                                   verify_exact=True)
     assert {r.doc_id for r in ver.collect()} <= \
         {r.doc_id for r in est.collect()}
-
-
-def test_simhash_xxhash64_family(spark):
-    """The xxhash64 simhash family (bits straight off the word hash, no
-    hex strings): identical docs get identical fingerprints, near-dups
-    are within a small Hamming distance, and unrelated docs are not -
-    the same behavioral bars the md5 family meets."""
-    from ccspark import dedup
-    base = " ".join(f"word{i}" for i in range(60))
-    docs = spark.createDataFrame([
-        Row(doc_id=0, text=base),
-        Row(doc_id=1, text=base),                                # exact
-        Row(doc_id=2, text=base.replace("word3 ", "changed ")),  # near
-        Row(doc_id=3, text=" ".join(f"zz{i}" for i in range(60))),
-    ])
-    for bits in (16, 32):
-        fp = {r.doc_id: r.simhash for r in
-              dedup.simhash(docs, bits=bits,
-                            hash_family="xxhash64").collect()}
-        ham = lambda a, b: bin(fp[a] ^ fp[b]).count("1")
-        assert fp[0] == fp[1]
-        assert ham(0, 2) <= bits // 4
-        assert ham(0, 3) > ham(0, 2)
-        assert all(0 <= v < 2 ** bits for v in fp.values())
 
 
 def test_dedup_near_pre_exact_identical_survivors(spark):
@@ -592,7 +522,6 @@ def test_incremental_near_dups_banded_history(spark):
     import re
     import shutil
 
-    from ccspark import catalog as cat
     from ccspark import dedup
     texts = [" ".join(f"w{i}x{j}" for j in range(40)) for i in range(30)]
     hist = spark.createDataFrame(
@@ -607,7 +536,7 @@ def test_incremental_near_dups_banded_history(spark):
         .replace("file:", "")
     spark.sql("DROP TABLE IF EXISTS b_hist_sig")
     shutil.rmtree(f"{warehouse}/b_hist_sig", ignore_errors=True)
-    cat.save_bucketed(spark, banded, "b_hist_sig", "digest", n_buckets=8)
+    banded.write.bucketBy(8, "digest").saveAsTable("b_hist_sig")
 
     old_th = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

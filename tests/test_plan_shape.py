@@ -274,8 +274,8 @@ def test_word_hash_kgrams_single_evaluation(spark):
 
     # single-branch plans: the fold must appear EXACTLY once
     assert folds(dedup.shingle_hashes(docs)) == 1
-    assert folds(dedup.winnow_fingerprints(docs,
-                                           hash_family="xxhash64")) == 1
+    assert folds(dedup.minhash_signature_table(
+        docs, hash_family="xxhash64")) == 1
     # the pair query legitimately re-derives the signature subtree once
     # per join side (4 sides; uncached by design) - but never more
     assert folds(dedup.minhash_near_dups(docs,

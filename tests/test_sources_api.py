@@ -10,6 +10,7 @@ from pyspark.sql import Row, functions as F
 
 from ccspark import lid, sources
 from ccspark.api import CCSparkCorpus
+from tests.fixtures import make_wet_bytes
 
 GOOD = "this line is long enough to pass every filter in the chain easily"
 GOOD2 = "another line that is long enough to pass every filter easily too"
@@ -28,23 +29,23 @@ def write_wet_files(tmp_path):
     ]
     d = tmp_path / "wet"
     os.makedirs(d, exist_ok=True)
-    (d / "seg-00000.warc.wet").write_bytes(sources.make_wet_bytes(recs_a))
+    (d / "seg-00000.warc.wet").write_bytes(make_wet_bytes(recs_a))
     (d / "seg-00001.warc.wet.gz").write_bytes(
-        sources.make_wet_bytes(recs_b, gzip_out=True))
+        make_wet_bytes(recs_b, gzip_out=True))
     return str(d)
 
 
 def test_parse_wet_bytes_roundtrip():
     recs = [("https://a.de/1", "2022-01-01T00:00:00Z", "hello\nworld"),
             ("https://b.fr/2", "2022-01-01T00:00:01Z", "text with\r\nCRLF")]
-    blob = sources.make_wet_bytes(recs)
+    blob = make_wet_bytes(recs)
     got = list(sources.parse_wet_bytes(blob))
     conv = [g for g in got if g[4] == "conversion"]
     assert [(g[0], g[1], g[2]) for g in conv] == recs
     assert got[0][4] == "warcinfo"       # non-conversion records visible
     # gzip round trip
     conv_gz = [g for g in
-               sources.parse_wet_bytes(sources.make_wet_bytes(
+               sources.parse_wet_bytes(make_wet_bytes(
                    recs, gzip_out=True)) if g[4] == "conversion"]
     assert conv_gz == conv
 
@@ -61,8 +62,8 @@ def test_parse_wet_bytes_negative_content_length_ends():
            b"WARC-Target-URI: https://b.de/2\r\n"
            b"WARC-Date: 2022-01-01T00:00:01Z\r\n"
            b"Content-Length: -200\r\n\r\nsecond page\r\n\r\n")
-    blob = (sources.make_wet_bytes(good[:1], warcinfo=False) + bad
-            + sources.make_wet_bytes(good[1:], warcinfo=False))
+    blob = (make_wet_bytes(good[:1], warcinfo=False) + bad
+            + make_wet_bytes(good[1:], warcinfo=False))
     got = list(itertools.islice(sources.parse_wet_bytes(blob), 10))
     assert [(g[0], g[1], g[2]) for g in got] == [
         good[0], ("https://b.de/2", "2022-01-01T00:00:01Z", ""), good[1]]
@@ -87,7 +88,7 @@ def test_read_wet_glob_forms(spark, tmp_path):
         os.makedirs(tmp_path / sub)
         for i in range(2):
             (tmp_path / sub / f"s{i}.wet.gz").write_bytes(
-                sources.make_wet_bytes([(f"https://x.de/{sub}{i}", "2022",
+                make_wet_bytes([(f"https://x.de/{sub}{i}", "2022",
                                          GOOD)], gzip_out=True))
     (tmp_path / "a" / "_SUCCESS").write_bytes(b"")
     # a matched name that is itself a glob pattern (matching b/s1.wet.gz)
@@ -318,8 +319,8 @@ def test_html_to_text_extraction(spark):
 
 
 def test_facade_dedup_hygiene_methods(spark):
-    """The r4 facade trio: dedup_near, screen_new_crawl (exact+near vs
-    history state), dedup_semantic - thin delegations, so this just
+    """The facade's hygiene pair: dedup_near and screen_new_crawl
+    (exact+near vs history state) - thin delegations, so this just
     drives each end-to-end on crafted frames."""
     from pyspark.sql import Row, functions as F
 
@@ -344,13 +345,6 @@ def test_facade_dedup_hygiene_methods(spark):
     both = cc.screen_new_crawl(new, history_hashes=hashes,
                                history_sig=sig, near_threshold=0.9)
     assert {r.doc_id for r in both.collect()} == {3}
-
-    emb = spark.createDataFrame([
-        Row(vec_id=0, embedding=[1.0] * 64),
-        Row(vec_id=1, embedding=[2.0] * 64),            # cosine 1.0
-        Row(vec_id=2, embedding=[(-1.0) ** i for i in range(64)]),
-    ])
-    assert {r.vec_id for r in cc.dedup_semantic(emb).collect()} == {0, 2}
 
 
 # Two synthetic WET segments (one plain, one gzipped) built from literal
@@ -396,9 +390,9 @@ def _write_wet_demo(tmp_path) -> str:
     reads every file in it."""
     d = tmp_path / "wet_demo"
     os.makedirs(d, exist_ok=True)
-    (d / "plain.wet").write_bytes(sources.make_wet_bytes(WET_DEMO_PLAIN))
+    (d / "plain.wet").write_bytes(make_wet_bytes(WET_DEMO_PLAIN))
     (d / "gz.wet.gz").write_bytes(
-        sources.make_wet_bytes(WET_DEMO_GZ, gzip_out=True))
+        make_wet_bytes(WET_DEMO_GZ, gzip_out=True))
     return str(d)
 
 
