@@ -70,14 +70,14 @@ class CCSparkCorpus:
                               domain_min_keep: float | None = None,
                               with_metrics: bool = False):
         """The quality_filter composite a modern training-data pipeline
-        runs: document gates FIRST (Gopher + C4 page rules - scan-speed
-        array projections that prune whole pages before the expensive
-        explode), then the reference line kernel + geo gate + dedup
-        (process_pages), then the PII scrub over the surviving lines.
+        runs: document gates FIRST (Gopher + C4 page rules - whole-batch
+        Arrow gates that prune whole pages before the line split), then
+        the reference line kernel + geo gate + dedup (process_pages),
+        then the PII scrub over the surviving lines.
 
         The Gopher gate is LANGUAGE-AWARE by default when the pages carry
-        a ``lang`` column (per-row stopword sets, CJK-safe word counts -
-        quality.gopher_signal_exprs_ml); a language-blind English gate
+        a ``lang`` column (per-row stopword sets, CJK-safe word counts;
+        see arrowgate.gopher_keep_batch); a language-blind English gate
         over a multilingual geo corpus structurally drops every valid
         CJK page and demands English stopwords of German ones.  Pass
         ``lang_aware=False`` for the static single-language gate.

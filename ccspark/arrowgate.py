@@ -1,11 +1,13 @@
-"""Arrow/RE2-vectorized rendering of the Gopher document gate.
+"""Arrow/RE2-vectorized rendering of the Gopher and C4 document gates.
 
-The one Python rendering of the Gopher gate: the static stopword set,
+The one rendering of the Gopher gate: the static English stopword set,
 or the language-aware dispatch (per-lang stopword sets, CJK
 char-counted words, token-shape gates bypassed for space-free scripts).
-Same approach as ``ccspark.arrowkernel``: every per-doc signal becomes
-a batch pyarrow.compute kernel, so no per-row Python loop - the
-measured throughput ceiling of the composite pipeline - runs.
+The composite's fused page stage (api.build_training_corpus) and
+quality.domain_quality run it.  Same approach as ``ccspark.arrowkernel``:
+every per-doc signal becomes a batch pyarrow.compute kernel, so no
+per-row Python loop - the measured throughput ceiling of the composite
+pipeline - runs.
 
 Signal-by-signal equivalences with the per-row restatement
 (tests/oracle.py::gopher_keep):
@@ -24,9 +26,9 @@ Signal-by-signal equivalences with the per-row restatement
   re-match without consuming a real newline, so each line counts at
   most once - exactly the per-line startswith/endswith semantics.
 * alpha tokens  = count of ``' [^ \\p{L}]*\\p{L}'`` over ``' ' + text``
-  (same re-anchoring dodge: the Spark SQL ``(?:^| )`` alternation
-  overcounts under resume-re-anchoring, the space-sentinel form is
-  count-equal to the token-level Python loop).
+  (same re-anchoring dodge: a ``(?:^| )`` alternation overcounts under
+  resume-re-anchoring, the space-sentinel form is count-equal to the
+  token-level Python loop).
 * duplicate-line signals = split into a ListArray, ``dictionary_encode``
   the flattened lines (one C-side hash of every line in the batch), then
   integer-only numpy: per-doc distinct-line counts and distinct-line
@@ -34,11 +36,12 @@ Signal-by-signal equivalences with the per-row restatement
 * round(x, 4)   = vectorized HALF_UP with a guard band: rows whose
   scaled value lies within 1e-9 of the .5 rounding boundary are re-done
   through the scalar ``quality._round4`` (Decimal-on-repr), so boundary
-  docs agree with the Spark expression gate bit-for-bit.
+  docs agree with Spark's ``round(x, 4)`` bit-for-bit.
 
-Parity with tests/oracle.py::gopher_keep and with the Spark expression
-gate (quality.gopher_quality) is asserted on boundary fixtures and a
-seeded adversarial batch in tests/test_gopher.py.
+Parity with tests/oracle.py (``gopher_keep``, ``gopher_signals``,
+``c4_page_keep``) is asserted on boundary fixtures, the sf0.001 pages
+and seeded adversarial batches in tests/test_gopher.py and
+tests/test_cross_engine_fuzz.py.
 """
 
 from __future__ import annotations
@@ -125,11 +128,11 @@ def _stopword_hits(padded: pa.Array, stops) -> np.ndarray:
     return hits
 
 
-def gopher_keep_batch(texts, langs=None, thresholds: dict | None = None,
-                      stopwords: tuple | None = None) -> np.ndarray:
+def gopher_keep_batch(texts, langs=None,
+                      thresholds: dict | None = None) -> np.ndarray:
     """Batch keep verdicts.  With ``langs`` -> the language-aware gate;
-    without -> the static gate with ``stopwords`` (default
-    GOPHER_STOPWORDS).  A NULL text fails.  Unknown *thresholds* keys
+    without -> the static gate with the English stopword set
+    (GOPHER_STOPWORDS).  A NULL text fails.  Unknown *thresholds* keys
     raise ValueError (quality.gopher_thresholds)."""
     from ccspark import regexes as R
     from ccspark.quality import (
@@ -245,8 +248,7 @@ def gopher_keep_batch(texts, langs=None, thresholds: dict | None = None,
     else:
         idx = np.flatnonzero(ok)
         if idx.size:
-            hits = _stopword_hits(
-                _padded(idx), stopwords or GOPHER_STOPWORDS)
+            hits = _stopword_hits(_padded(idx), GOPHER_STOPWORDS)
             ok[idx] &= hits >= t["min_stopword_hits"]
 
     keep_all[valid] = ok
@@ -258,11 +260,12 @@ def _np_null(arr: pa.Array) -> np.ndarray:
 
 
 def c4_keep_batch(texts, min_sentences: int = 5) -> np.ndarray:
-    """Batch twin of quality.c4_page_keep_expr: >= min_sentences
-    non-empty sentences (same mark-and-split sentence splitter, same
-    patterns - newline/Latin-terminal+space/ideographic-terminal
-    boundaries) and none of C4_BAD_SUBSTRINGS.  Verdict-parity with the
-    Spark expression rendering is asserted in tests."""
+    """Batch C4 page verdicts: >= min_sentences non-empty sentences
+    (mark-and-split: a newline, a Latin terminal followed by a space and
+    an ideographic terminal each end a sentence) and none of
+    C4_BAD_SUBSTRINGS in the lowercased text.  A NULL text fails.
+    Verdict-parity with tests/oracle.py::c4_page_keep is asserted in
+    tests."""
     from ccspark.quality import C4_BAD_SUBSTRINGS, SENT_MARK
     if not isinstance(texts, (pa.Array, pa.ChunkedArray)):
         texts = pa.array(texts, type=pa.string())
@@ -295,37 +298,3 @@ def c4_keep_batch(texts, min_sentences: int = 5) -> np.ndarray:
     keep_all[valid] = ok
     return keep_all
 
-
-def make_gopher_keep_udf(thresholds: dict | None = None,
-                         stopwords: tuple | None = None):
-    """gopher_keep_batch as a pandas UDF: text -> keep (static stopword
-    set)."""
-    import pandas
-    from pyspark.sql.functions import pandas_udf
-
-    def batches(s: "pandas.Series") -> "pandas.Series":
-        return pandas.Series(gopher_keep_batch(
-            pa.Array.from_pandas(s, type=pa.string()),
-            thresholds=thresholds, stopwords=stopwords))
-
-    batches.__annotations__ = {"s": pandas.Series, "return": pandas.Series}
-    return pandas_udf(batches, "boolean")
-
-
-def make_gopher_keep_ml_udf(thresholds: dict | None = None):
-    """gopher_keep_batch as a pandas UDF: (text, lang) -> keep
-    (language-aware)."""
-    import pandas
-    from pyspark.sql.functions import pandas_udf
-
-    def batches(texts: "pandas.Series",
-                langs: "pandas.Series") -> "pandas.Series":
-        return pandas.Series(gopher_keep_batch(
-            pa.Array.from_pandas(texts, type=pa.string()),
-            pa.Array.from_pandas(langs, type=pa.string()),
-            thresholds=thresholds))
-
-    batches.__annotations__ = {"texts": pandas.Series,
-                               "langs": pandas.Series,
-                               "return": pandas.Series}
-    return pandas_udf(batches, "boolean")

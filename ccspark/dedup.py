@@ -30,28 +30,6 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 
-def str_hash_expr(col: str = "text") -> str:
-    """X7 bit-compatible: the reference's ``str_hash`` (deduplication.py:
-    88-94) is ``np.frombuffer(sha1(utf8(s)).digest()[:8], '<u8')`` - the
-    FIRST 8 bytes of the SHA-1 digest read LITTLE-endian as uint64.  This
-    SQL expression reproduces it exactly, so hash files produced by the
-    reference join against ours: reverse the first 8 hex-pairs of
-    ``sha1()`` into big-endian order, then ``conv(.., 16, 10)`` (unsigned,
-    so the full uint64 range survives as a decimal string).  Verified
-    byte-for-byte against hashlib - the reference's own implementation -
-    in tests/test_operators.py."""
-    h = f"sha1({col})"
-    le = "||".join(f"substring({h}, {i}, 2)" for i in range(15, 0, -2))
-    return f"conv({le}, 16, 10)"
-
-
-def str_hash(df: DataFrame, col: str = "text",
-             out_col: str = "hash_u64") -> DataFrame:
-    """Adds the reference-bit-compatible uint64 hash (as a decimal string:
-    uint64 does not fit bigint; cast to decimal(20,0) for numeric joins)."""
-    return df.withColumn(out_col, F.expr(str_hash_expr(col)))
-
-
 def dedup_keep_first(df: DataFrame, key: str = "hash",
                      order: tuple[str, ...] = ("url", "line_id")) -> DataFrame:
     """D1/D3/D4: keep exactly one row per key - the first under *order*

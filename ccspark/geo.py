@@ -86,9 +86,9 @@ PSL_EXACT, PSL_WILDCARD_PARENTS, PSL_EXCEPTIONS = _load_psl()
 
 
 def _by_depth(rules) -> dict[int, tuple[str, ...]]:
-    """Partition a rule set by label count (depth); consumed both by the
-    Python twin and by the SQL CASE generator, so EVERY depth present in
-    the data file is handled - no hard-coded 2/3-label tiers."""
+    """Partition a rule set by label count (depth) for the SQL CASE
+    generator, so EVERY depth present in the data file is handled - no
+    hard-coded 2/3-label tiers."""
     out: dict[int, list[str]] = {}
     for r in rules:
         out.setdefault(r.count(".") + 1, []).append(r)
@@ -102,34 +102,6 @@ _EXC_BY_DEPTH = _by_depth(PSL_EXCEPTIONS)
 # yields a suffix of depth k+1)
 _MAX_SUFFIX_DEPTH = max(
     [0] + list(_EXACT_BY_DEPTH) + [k + 1 for k in _WILD_BY_DEPTH])
-
-
-def registrable_domain(host: str) -> str:
-    """Python twin of domain_expr (tldextract's ``domain`` field) - the
-    PSL algorithm on the same vendored rules; used by tests to pin the
-    SQL rendering and as the reference semantics documentation.
-
-    PSL spec order: a matching exception rule prevails (its suffix is the
-    exception minus its leftmost label, so the domain is that label);
-    otherwise the LONGEST matching rule wins, where ``*.parent`` matches
-    any suffix one label deeper than ``parent``."""
-    labels = host.split(".")
-    n = len(labels)
-    for k in sorted(_EXC_BY_DEPTH, reverse=True):   # longest exception wins
-        if n >= k and ".".join(labels[-k:]) in _EXC_BY_DEPTH[k]:
-            return labels[-k]                        # !www.ck, !city.kawasaki.jp
-    for depth in range(_MAX_SUFFIX_DEPTH, 0, -1):    # longest suffix wins
-        if n < depth + 1:
-            continue
-        if depth in _EXACT_BY_DEPTH and \
-                ".".join(labels[-depth:]) in _EXACT_BY_DEPTH[depth]:
-            return labels[-(depth + 1)]              # co.uk, schools.nsw.edu.au
-        if depth - 1 in _WILD_BY_DEPTH and \
-                ".".join(labels[-(depth - 1):]) in _WILD_BY_DEPTH[depth - 1]:
-            return labels[-(depth + 1)]              # *.ck, *.sch.uk, *.kobe.jp
-    if n >= 2:
-        return labels[-2]
-    return host
 
 
 # --------------------------------------------------------------------------
@@ -154,10 +126,11 @@ def tld_expr(host: str) -> str:
 def domain_expr(host: str) -> str:
     """Registrable domain label (tldextract's ``domain`` field): the PSL
     algorithm rendered as one CASE over the vendored rule sets - exception
-    rules first (they beat wildcards), then longest match.  Mirrors
-    ``registrable_domain`` exactly (asserted in tests/test_geo_helpers.py);
-    the IN-lists compile to Catalyst OptimizedInSet, so this stays a pure
-    projection - no join, no UDF.  Arms are GENERATED per rule depth
+    rules first (they beat wildcards), then longest match.  Equal to
+    the Python PSL walk tests/oracle.py::registrable_domain (asserted in
+    tests/test_geo_helpers.py and the domain fuzz); the IN-lists compile
+    to Catalyst OptimizedInSet, so this stays a pure projection - no
+    join, no UDF.  Arms are GENERATED per rule depth
     found in the data file (not fixed 2/3-label tiers), so dropping in
     the full public_suffix_list.dat - which carries 4+-label exact rules
     and 3-label wildcards - renders a complete CASE."""
@@ -192,45 +165,6 @@ def domain_expr(host: str) -> str:
                         f"THEN {label(-(depth + 1))}")
     arms.append(f"WHEN {n} >= 2 THEN {label(-2)}")
     return "(CASE " + " ".join(arms) + f" ELSE {host} END)"
-
-
-# crawl URLs routinely carry tracking params / fragments / default ports
-# that make byte-identical pages look distinct to a URL dedup (D3); the
-# normalizer is deliberately conservative - it never changes which
-# resource a URL names
-_TRACKING_PARAMS = ("utm_source", "utm_medium", "utm_campaign", "utm_term",
-                    "utm_content", "gclid", "fbclid", "msclkid", "mc_cid",
-                    "mc_eid", "ref", "sessionid", "phpsessid", "sid")
-
-
-def normalize_url_expr(url: str) -> str:
-    """Canonical URL for dedup keys: lowercase scheme+authority (path case
-    preserved), strip the fragment, default ports (:80 http / :443 https),
-    well-known tracking query params (utm_*, gclid, ...), a then-empty
-    '?', and the trailing slash of non-root paths.  Pinned against a
-    Python restatement (tests/oracle.py) by the fuzz.
-
-    Param-stripping is anchored to the QUERY portion (everything from the
-    first '?'): '&' is a legal *path* character (RFC 3986), so a path like
-    '/a&ref=b/page' must survive untouched - the normalizer never changes
-    which resource a URL names."""
-    e = rrep(url, "#[\\s\\S]*", "")                 # fragment (to end)
-    # split at the FIRST '?': pre = scheme+authority+path, q = '?...' | ''
-    pre = f"regexp_extract({e}, {lit('^[^?]*')}, 0)"
-    q = f"substr({e}, length({pre}) + 1)"
-    for p in _TRACKING_PARAMS:
-        q = rrep(q, f"([?&]){p}=[^&#]*", "\\1")      # the param value
-    q = rrep(q, r"\?&", "?")                         # '?&x' -> '?x'
-    q = rrep(q, "&&+", "&")                          # '&&' runs
-    q = rrep(q, "[?&]+\\z", "")                     # empty query tail
-    head_pat = "^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)"
-    head = f"lower(regexp_extract({pre}, {lit(head_pat)}, 1))"
-    head = rrep(head, "^(http://[^/:?#]+):80\\z", "\\1")
-    head = rrep(head, "^(https://[^/:?#]+):443\\z", "\\1")
-    path = rrep(pre, head_pat, "")
-    tail = f"concat({path}, {q})"
-    tail = rrep(tail, "^(/.+)/\\z", "\\1")          # trailing slash
-    return f"concat({head}, {tail})"
 
 
 # --------------------------------------------------------------------------
@@ -292,10 +226,3 @@ def write_url_filter_csv(df, path: str) -> None:
                    " AS line")
        .coalesce(1).write.mode("overwrite").text(path))
 
-
-def crawl_period_expr(col: str) -> str:
-    """X6 (cc_corpus.py:159-162): crawl period from a segment id/filename -
-    strip the 'CC-MAIN-' prefix, keep the first 7 chars ('2022-40').
-    Real event time comes from warc_ts; this labels outputs by crawl."""
-    stripped = rrep(col, "CC-MAIN-", "")
-    return f"substring({stripped}, 1, 7)"

@@ -12,9 +12,7 @@ Where skew lives in this workload and what handles it:
   * per-DOMAIN sequential operators (the greedy chunker) - a mega-domain
     must be processed by one task; the mitigations are the deterministic
     per-key cap below (the reference's own answer: country_limit=150,
-    geoWAC.py:149-152) or pre-splitting by url prefix;
-  * pathological groupBy-collect patterns - the salted two-phase
-    aggregation below.
+    geoWAC.py:149-152) or pre-splitting by url prefix.
 """
 
 from __future__ import annotations
@@ -49,21 +47,6 @@ def ensure_min_partitions(df: DataFrame, key: str | None = None,
     return df.repartition(n, key) if key else df.repartition(n)
 
 
-def salted_counts(df: DataFrame, keys: list[str], salt_n: int = 16,
-                  count_col: str = "n") -> DataFrame:
-    """Two-phase salted count per key: phase 1 aggregates (key, salt)
-    locally (splitting a hot key across salt_n reducers), phase 2 merges
-    the partials.  Equivalent to groupBy(keys).count() - the salt only
-    changes the shuffle layout."""
-    salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()),
-                  F.lit(salt_n)).alias("_salt")
-    partial = (df.select(*keys, salt)
-               .groupBy(*keys, "_salt")
-               .agg(F.count("*").alias("_pc")))
-    return (partial.groupBy(*keys)
-            .agg(F.sum("_pc").alias(count_col)))
-
-
 def cap_per_key(df: DataFrame, key: str, limit: int,
                 tiebreak: str = "url", salt_n: int = 16) -> DataFrame:
     """W4 (geoWAC.py:149-152): deterministically keep at most *limit*
@@ -89,8 +72,8 @@ def cap_per_key(df: DataFrame, key: str, limit: int,
 
     Reserved temp columns: ``_salt`` and ``_rk`` are created via
     withColumn and dropped on exit - same-named INPUT columns would be
-    silently clobbered (``salted_counts`` shares the ``_salt``
-    convention).  Rename such columns before calling (r6 ADVICE note).
+    silently clobbered.  Rename such columns before calling (r6 ADVICE
+    note).
 
     Determinism precondition: *tiebreak* must be unique within a key.
     Rows sharing a tiebreak value share the entire sort key (and the

@@ -1,10 +1,9 @@
 """Sources: WET (WARC conversion) segment files -> pages DataFrame.
 
 Re-expression of the reference's ingestion (S1-S4):
-  * S1 index download (cc_corpus.py:321-334) - at scale the wet.paths
-    manifest becomes a DataFrame of segment paths; Spark tasks read their
-    own splits, so the ThreadPool downloader (common_crawl_processing.py:
-    37-59) disappears;
+  * S1 index download (cc_corpus.py:321-334) - ``read_wet`` takes the
+    segment files as a glob and Spark tasks read their own files, so the
+    ThreadPool downloader (common_crawl_processing.py:37-59) disappears;
   * S2/S3 WET record iteration (cc_corpus.py:296-317, WET_processor.py:
     24-38): ``warcio.ArchiveIterator`` over a (gzipped) WET stream,
     keeping ``conversion`` records (F1), URL from WARC-Target-URI,
@@ -120,60 +119,3 @@ def read_wet(spark: SparkSession, path_glob: str,
         pages = pages.where("rec_type = 'conversion'")
     return pages
 
-
-def segment_manifest(spark: SparkSession, paths_file: str) -> DataFrame:
-    """S1 (cc_corpus.py:321-334): the crawl's ``wet.paths(.gz)`` manifest
-    as a DataFrame of work units.  The public manifest format is one
-    segment path per line:
-
-        crawl-data/CC-MAIN-2022-40/segments/<seg>/wet/<file>.warc.wet.gz
-
-    Parsed into (crawl, segment, filename, path) so a driver can
-    partition-prune by crawl/segment (the unit of resume in
-    ccspark.checkpoint) and distribute reads one-task-per-segment-file -
-    the reference's ThreadPool(8) downloader becomes Spark task
-    scheduling over this table."""
-    from pyspark.sql import functions as F
-    lines = spark.read.text(paths_file).withColumnRenamed("value", "path")
-    lines = lines.where(F.length(F.trim("path")) > 0) \
-                 .withColumn("path", F.trim("path"))
-    return lines.select(
-        F.regexp_extract("path", r"crawl-data/([^/]+)/", 1).alias("crawl"),
-        F.regexp_extract("path", r"segments/([^/]+)/", 1).alias("segment"),
-        F.regexp_extract("path", r"([^/]+)$", 1).alias("filename"),
-        "path",
-    )
-
-
-def html_to_text_expr(col: str) -> str:
-    """HTML -> visible text as a pure expression chain (the WET 'conversion'
-    step for pipelines that ingest raw HTML instead of WET): drop
-    script/style/noscript/title blocks (one pass per tag) and comments
-    ((?s) dot-matches-newline), break block-level closers into newlines,
-    strip remaining tags, decode the common entities, collapse
-    horizontal whitespace.  Order matters: blocks before tags, tags before
-    entities (so literal &lt;script&gt; in text never executes as
-    structure)."""
-    from ccspark.sqlgen import rrep
-    e = col
-    # the tag name ends before any non-[0-9A-Za-z_] character, as \b does
-    # in RE2 and Python's re.ASCII; Java's \b (JDK < 19) counts é, ٣ or
-    # 中 as word characters and would not end '<scripté>' (JDK-8264160)
-    for tag in ("script", "style", "noscript", "title"):
-        e = rrep(e, rf"(?is)<{tag}(?![0-9A-Za-z_]).*?</{tag}>", "")
-    e = rrep(e, r"(?s)<!--.*?-->", "")
-    e = rrep(e, r"(?i)</(p|div|br|li|tr|h[1-6])>", "\n")
-    e = rrep(e, r"(?i)<br\s*/?>", "\n")
-    e = rrep(e, r"(?s)<[^>]*>", " ")
-    # '&amp;' must decode LAST: decoding it first turns double-escaped
-    # entities ('5 &amp;lt; 6', which a browser renders as '5 &lt; 6')
-    # into their single-escaped forms and then decodes those too
-    for ent, ch in (("&nbsp;", "' '"), ("&lt;", "'<'"), ("&gt;", "'>'"),
-                    ("&quot;", "'\"'"), ("&#39;", "chr(39)"),
-                    ("&amp;", "'&'")):
-        e = f"replace({e}, '{ent}', {ch})"
-    e = rrep(e, r"[ \t]+", " ")
-    e = rrep(e, r" ?\n ?", "\n")
-    e = rrep(e, r"\n{2,}", "\n")
-    e = rrep(e, r"^[\s]+|[\s]+$", "")   # trim() leaves \n
-    return e

@@ -219,65 +219,33 @@ def nb_predict(model, text: str, min_len: int = 0) -> str:
 
 
 # ---------------------------------------------------------------------
-# Pure-Python restatements of the Spark SQL operators, for the fuzz and
-# the module tests.  Java regex specifics are spelled out where they
-# differ from Python re: Java's `.` stops at every line terminator, and
-# Java's \s and (?i) are ASCII-only (re.ASCII).
-
-_JAVA_DOT = "[^\n\r\u0085\u2028\u2029]"   # Java `.` without DOTALL
-
-_TRACKING_PARAMS = ("utm_source", "utm_medium", "utm_campaign", "utm_term",
-                    "utm_content", "gclid", "fbclid", "msclkid", "mc_cid",
-                    "mc_eid", "ref", "sessionid", "phpsessid", "sid")
-
-
-def normalize_url(u: str) -> str:
-    """geo.normalize_url_expr: drop the fragment; in the query part (from
-    the first '?') drop tracking params, '?&' and '&&' runs and an empty
-    tail; lowercase scheme+authority and drop its default port; drop the
-    trailing slash of a non-root path."""
-    e = u.split("#", 1)[0]
-    pre = e.split("?", 1)[0]
-    q = e[len(pre):]
-    for p in _TRACKING_PARAMS:
-        q = re.sub(f"([?&]){p}=[^&#]*", r"\1", q)
-    q = re.sub(r"\?&", "?", q)
-    q = re.sub("&&+", "&", q)
-    q = re.sub(r"[?&]+\Z", "", q)
-    m = re.match(r"[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", pre)
-    head = m.group(0).lower() if m else ""
-    head = re.sub(r"\A(http://[^/:?#]+):80\Z", r"\1", head)
-    head = re.sub(r"\A(https://[^/:?#]+):443\Z", r"\1", head)
-    tail = pre[len(m.group(0)) if m else 0:] + q
-    tail = re.sub(rf"\A(/{_JAVA_DOT}+)/\Z", r"\1", tail)
-    return head + tail
-
+# Pure-Python restatements of the Spark SQL operators and the Arrow
+# gates, for the fuzz and the module tests.
 
 def tld(host: str) -> str:
     """geo.tld_expr: the last dot-label, '' when the host ends in '.'."""
     return host.rsplit(".", 1)[-1]
 
 
-_HTML_ENTITIES = (("&nbsp;", " "), ("&lt;", "<"), ("&gt;", ">"),
-                  ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&"))
-
-
-def html_to_text(h: str) -> str:
-    """sources.html_to_text_expr: drop script/style/noscript/title blocks
-    and comments, block closers and <br> become newlines, other tags a
-    space, decode entities (&amp; last), collapse blanks, trim."""
-    for tag in ("script", "style", "noscript", "title"):
-        h = re.sub(rf"(?is)<{tag}\b.*?</{tag}>", "", h, flags=re.ASCII)
-    h = re.sub(r"(?s)<!--.*?-->", "", h)
-    h = re.sub(r"(?i)</(p|div|br|li|tr|h[1-6])>", "\n", h, flags=re.ASCII)
-    h = re.sub(r"(?i)<br\s*/?>", "\n", h, flags=re.ASCII)
-    h = re.sub(r"<[^>]*>", " ", h)
-    for ent, ch in _HTML_ENTITIES:
-        h = h.replace(ent, ch)
-    h = re.sub(r"[ \t]+", " ", h)
-    h = re.sub(r" ?\n ?", "\n", h)
-    h = re.sub(r"\n{2,}", "\n", h)
-    return h.strip(" \t\n\x0b\f\r")
+def registrable_domain(host: str) -> str:
+    """geo.domain_expr (tldextract's ``domain`` field): the PSL walk over
+    geo's vendored rule sets.  A matching exception rule prevails (the
+    domain is its leftmost label); otherwise the longest matching suffix
+    wins, where a wildcard ``*.parent`` matches any suffix one label
+    deeper than ``parent``, and the domain is the label left of it.  No
+    match: the second-from-last label, or the host itself."""
+    from ccspark.geo import PSL_EXACT, PSL_EXCEPTIONS, PSL_WILDCARD_PARENTS
+    labels = host.split(".")
+    n = len(labels)
+    for k in range(n, 0, -1):
+        if ".".join(labels[-k:]) in PSL_EXCEPTIONS:
+            return labels[-k]
+    for depth in range(n - 1, 0, -1):
+        if (".".join(labels[-depth:]) in PSL_EXACT
+                or (depth > 1 and ".".join(labels[-(depth - 1):])
+                    in PSL_WILDCARD_PARENTS)):
+            return labels[-(depth + 1)]
+    return labels[-2] if n >= 2 else host
 
 
 def _demarked_lower(text: str) -> str:
@@ -343,20 +311,10 @@ def _cjkish(ch: str) -> bool:
         for t in ("CJK", "HANGUL", "HIRAGANA", "KATAKANA"))
 
 
-def c4_line_keep(line: str) -> bool:
-    """quality.c4_line_keep_expr: ends in a Latin or ideographic
-    terminal, has >= 3 ' '-separated words or >= 6 Han/Hangul/Kana
-    letters, and does not mention javascript."""
-    return (line[-1:] in tuple('.!?"。！？」』')
-            and (line.count(" ") + 1 >= 3
-                 or sum(map(_cjkish, line)) >= 6)
-            and "javascript" not in line.lower())
-
-
 def c4_page_keep(text: str, min_sentences: int = 5) -> bool:
-    """quality.c4_page_keep_expr: at least *min_sentences* non-empty
-    c4_sentences and neither 'lorem ipsum' nor '{' in the lowercased
-    text.  A None text fails."""
+    """arrowgate.c4_keep_batch for one doc: at least *min_sentences*
+    non-empty c4_sentences and neither 'lorem ipsum' nor '{' in the
+    lowercased text.  A None text fails."""
     if text is None:
         return False
     low = text.lower()
@@ -364,25 +322,20 @@ def c4_page_keep(text: str, min_sentences: int = 5) -> bool:
             and "lorem ipsum" not in low and "{" not in low)
 
 
-def gopher_keep(text: str, lang: str = None, thresholds: dict = None,
-                stopwords: tuple = None) -> bool:
-    """The Gopher document gate (Rae et al. 2021, table A1) for one doc,
-    with quality.GOPHER_THRESHOLDS overridden by *thresholds*.
+def gopher_signals(text: str, lang: str = None,
+                   stopwords: tuple = None) -> dict:
+    """The Gopher document signals (Rae et al. 2021, table A1) of one
+    non-None doc, named after the thresholds that read them.
 
-    *stopwords* given: the static gate with that stopword set (*lang* is
-    ignored).  *stopwords* None: the language-aware gate - *lang* picks
-    the stopword set from quality.GOPHER_STOPWORDS_BY_LANG (no set, no
-    stopword rule), and for a space-free language (zh/ja/ko) a word is
-    one Han/Hangul/Kana letter, the mean-word-length rule is skipped and
-    the alpha fraction counts letters over non-space characters.
-    Tokens are the non-empty ' '-split pieces; lines split on '\\n';
-    every ratio is rounded HALF_UP to 4 places.  A None text fails."""
-    from ccspark.quality import (
-        GOPHER_STOPWORDS_BY_LANG, GOPHER_THRESHOLDS, SPACE_FREE_LANGS,
-    )
-    if text is None:
-        return False
-    t = dict(GOPHER_THRESHOLDS, **(thresholds or {}))
+    *stopwords* given: the static gate's signals with that stopword set
+    (*lang* is ignored).  *stopwords* None: the language-aware signals -
+    *lang* picks the stopword set from quality.GOPHER_STOPWORDS_BY_LANG
+    (no set: ``stopword_hits`` is None), and for a space-free language
+    (zh/ja/ko, ``space_free`` True) a word is one Han/Hangul/Kana
+    letter and the alpha fraction counts letters over non-space
+    characters.  Tokens are the non-empty ' '-split pieces; lines split
+    on '\\n'; every ratio is rounded HALF_UP to 4 places."""
+    from ccspark.quality import GOPHER_STOPWORDS_BY_LANG, SPACE_FREE_LANGS
     sf = stopwords is None and lang in SPACE_FREE_LANGS
     stops = (stopwords if stopwords is not None
              else GOPHER_STOPWORDS_BY_LANG.get(lang))
@@ -404,20 +357,57 @@ def gopher_keep(text: str, lang: str = None, thresholds: dict = None,
     n_bullet = sum(ln.startswith(("- ", "* ", "• ")) for ln in lines)
     n_ellip = sum(ln.endswith(("...", "…")) for ln in lines)
     padded = " " + text.lower().replace("\n", " ") + " "
-    return (t["min_words"] <= n_words <= t["max_words"]
-            and (sf or t["min_mean_word_len"] <= round4(word_chars / nw)
+    return {
+        "space_free": sf,
+        "n_words": n_words,
+        "mean_word_len": round4(word_chars / nw),
+        "symbol_word_ratio": round4(n_sym / nw),
+        "bullet_frac": round4(n_bullet / n_lines),
+        "ellipsis_frac": round4(n_ellip / n_lines),
+        "alpha_word_frac": alpha,
+        "stopword_hits": (None if stops is None
+                          else sum(f" {w} " in padded for w in stops)),
+        "dup_line_frac": round4((n_lines - len(distinct)) / n_lines),
+        "dup_line_char_frac": round4(dup_chars / max(line_chars, 1)),
+    }
+
+
+# every Gopher rule relaxed: override a subset of these keys and only
+# the rules left at their defaults decide
+GOPHER_RELAXED = dict(
+    min_words=0, max_words=10 ** 9,
+    min_mean_word_len=0.0, max_mean_word_len=1e9,
+    max_symbol_word_ratio=1e9,
+    max_bullet_frac=1e9, max_ellipsis_frac=1e9,
+    min_alpha_word_frac=0.0, min_stopword_hits=0,
+    max_dup_line_frac=1e9, max_dup_line_char_frac=1e9,
+)
+
+
+def gopher_keep(text: str, lang: str = None, thresholds: dict = None,
+                stopwords: tuple = None) -> bool:
+    """The Gopher document gate for one doc: its gopher_signals (same
+    *lang* and *stopwords* modes) against quality.GOPHER_THRESHOLDS
+    overridden by *thresholds*.  A space-free doc skips the
+    mean-word-length rule, a doc without a stopword set the stopword
+    rule.  A None text fails."""
+    from ccspark.quality import GOPHER_THRESHOLDS
+    if text is None:
+        return False
+    t = dict(GOPHER_THRESHOLDS, **(thresholds or {}))
+    s = gopher_signals(text, lang, stopwords)
+    return (t["min_words"] <= s["n_words"] <= t["max_words"]
+            and (s["space_free"]
+                 or t["min_mean_word_len"] <= s["mean_word_len"]
                  <= t["max_mean_word_len"])
-            and round4(n_sym / nw) <= t["max_symbol_word_ratio"]
-            and round4(n_bullet / n_lines) <= t["max_bullet_frac"]
-            and round4(n_ellip / n_lines) <= t["max_ellipsis_frac"]
-            and alpha >= t["min_alpha_word_frac"]
-            and (stops is None
-                 or sum(f" {w} " in padded for w in stops)
-                 >= t["min_stopword_hits"])
-            and round4((n_lines - len(distinct)) / n_lines)
-            <= t["max_dup_line_frac"]
-            and round4(dup_chars / max(line_chars, 1))
-            <= t["max_dup_line_char_frac"])
+            and s["symbol_word_ratio"] <= t["max_symbol_word_ratio"]
+            and s["bullet_frac"] <= t["max_bullet_frac"]
+            and s["ellipsis_frac"] <= t["max_ellipsis_frac"]
+            and s["alpha_word_frac"] >= t["min_alpha_word_frac"]
+            and (s["stopword_hits"] is None
+                 or s["stopword_hits"] >= t["min_stopword_hits"])
+            and s["dup_line_frac"] <= t["max_dup_line_frac"]
+            and s["dup_line_char_frac"] <= t["max_dup_line_char_frac"])
 
 
 def round4(x: float) -> float:
@@ -428,55 +418,14 @@ def round4(x: float) -> float:
 
 
 def c4_sentences(text: str) -> list:
-    """quality.c4_sentences_expr: newlines, a Latin terminal followed by
-    a space (the space is dropped) and an ideographic terminal end a
+    """The C4 sentence split: newlines, a Latin terminal followed by a
+    space (the space is dropped) and an ideographic terminal end a
     sentence; empty sentences are kept."""
     mark = "\x1e"
     t = text.replace("\n", mark)
     t = re.sub(r"([.!?]) ", r"\1" + mark, t)
     t = re.sub("([。！？])", r"\1" + mark, t)
     return t.split(mark)
-
-
-def c4_span_dedup(docs, span: int = 3) -> dict:
-    """quality.c4_span_dedup over (doc_id, text) pairs:
-    {(doc_id, span_idx, md5(span)): keep}, a span kept only at its
-    smallest (doc_id, span_idx)."""
-    rows = {}
-    first = {}
-    for doc_id, text in docs:
-        s = c4_sentences(text)
-        for i in range(max(len(s) - span + 1, 1)):
-            sp = " ".join(s[i:i + span])
-            if not sp:
-                continue
-            h = hashlib.md5(sp.encode("utf-8")).hexdigest()
-            rows[(doc_id, i, h)] = None
-            first[h] = min(first.get(h, (doc_id, i)), (doc_id, i))
-    return {k: first[k[2]] == (k[0], k[1]) for k in rows}
-
-
-def gopher_repetition(text: str) -> tuple:
-    """quality.gopher_repetition for one doc: (top2, top3, top4, dup5
-    fractions, rep_keep).  topN = chars of the most frequent word N-gram
-    (count desc, gram asc) x its count / len(text); dup5 = the same
-    product summed over 5-grams seen more than once."""
-    words = [w for w in re.split(r"\s+", text, flags=re.ASCII) if w]
-    denom = max(len(text), 1)
-    fr = {}
-    for n in (2, 3, 4, 5):
-        cnt = Counter(word_grams(words, n))
-        if n < 5:
-            top = min(cnt.items(), key=lambda kv: (-kv[1], kv[0]),
-                      default=None)
-            chars = top[1] * len(top[0]) if top else 0
-        else:
-            chars = sum(c * len(g) for g, c in cnt.items() if c > 1)
-        fr[n] = round4(chars * 1.0 / denom)
-    from ccspark.quality import GOPHER_REP_THRESHOLDS as t
-    keep = (fr[2] <= t["max_top2_frac"] and fr[3] <= t["max_top3_frac"]
-            and fr[4] <= t["max_top4_frac"] and fr[5] <= t["max_dup5_frac"])
-    return fr[2], fr[3], fr[4], fr[5], keep
 
 
 def word_shingle_jaccard(a: str, b: str, k: int = 3) -> float:

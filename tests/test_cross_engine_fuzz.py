@@ -1,10 +1,9 @@
-"""Cross-engine fuzz: the Spark SQL operators (Java regex) must agree with
-an independent rendering on adversarial inputs - the RE2 kernels in
-ccspark.arrowgate where one exists, otherwise the pure-Python
-restatements in tests/oracle.py.  The RE2 PII chain, which has no Spark
-SQL rendering, is checked against tests/oracle.py the same way.
-Deterministic seeded corpora, batched through ONE Spark query per
-check."""
+"""Cross-engine fuzz: the Spark SQL operators that production runs (Java
+regex: geo host/TLD/domain, the decontam normalizer and grams) and the
+RE2 kernels of the fused Arrow stage (the Gopher and C4 gates, the PII
+chain) must agree with the pure-Python restatements in tests/oracle.py
+on adversarial inputs.  Deterministic seeded corpora; each Spark check
+runs as ONE Spark query."""
 
 from __future__ import annotations
 
@@ -12,32 +11,8 @@ import random
 
 import pyarrow as pa
 
-from ccspark import arrowgate, decontam, geo, quality, sources
+from ccspark import arrowgate, decontam, geo, quality
 from tests import oracle
-
-URL_ATOMS = [
-    "\n", "http://", "https://", "HTTPS://", "ftp://", "", "user:pw@",
-    "WWW.",
-    "example", ".co.uk", ".de", ".com", ".bd", ".kawasaki.jp", ":8080",
-    ":443", ":80", "/path", "/Path/Case", "/", "?", "?utm_source=x",
-    "&utm_medium=y", "&keep=1", "&gclid=9", "#frag", "#", "..", "a b",
-    "%20", "?&", "&&", "?utm_term=", "xn--bcher-kva",
-]
-
-HTML_ATOMS = [
-    "<p>", "</p>", "<div>", "</div>", "<br>", "<br/>", "<BR >", "text",
-    "more words", "<script>", "</script>", "<script>var x=1<2;</script>",
-    "<style>a{}</style>", "<!-- c -->", "<!--", "-->", "&amp;", "&lt;",
-    "&gt;", "&#39;", "&nbsp;", "&quot;", "<b>bold</b>", "< notatag",
-    ">", "<", "\n", "\t", "  ", "<h1>T</h1>", "<title>t</title>",
-    "<ScRiPt>x</sCrIpT>", "é", "中文",
-]
-# a non-ASCII letter or digit right after a block tag's name (Java's \b
-# counts it as a word character, RE2 and re.ASCII do not)
-HTML_ATOMS_2 = HTML_ATOMS + [
-    "<scripté>", "<script٣>", "<style中>", "<noscriptü>", "<title٣ x>",
-    "</style>", "</noscript>", "</title>", "<script_>", "<style1>",
-]
 
 
 def synth(atoms, n, seed, max_parts=8):
@@ -60,12 +35,6 @@ def assert_same(inputs, got, want):
     assert not bad, bad[:3]
 
 
-def test_fuzz_normalize_url(spark):
-    urls = synth(URL_ATOMS, 300, seed=101)
-    assert_same(urls, spark_eval(spark, geo.normalize_url_expr, urls),
-                [oracle.normalize_url(u) for u in urls])
-
-
 def test_fuzz_domain_and_tld(spark):
     hosts = synth(["www.", "a.", "b-c.", "x", "co.", "gov.", "uk", "de",
                    "bd", "ck", "kawasaki.jp", "sch.uk", ".", "..",
@@ -75,17 +44,8 @@ def test_fuzz_domain_and_tld(spark):
     def both(col):
         return f"concat({geo.tld_expr(col)}, '|', {geo.domain_expr(col)})"
     assert_same(hosts, spark_eval(spark, both, hosts),
-                [f"{oracle.tld(h)}|{geo.registrable_domain(h)}"
+                [f"{oracle.tld(h)}|{oracle.registrable_domain(h)}"
                  for h in hosts])
-
-
-def test_fuzz_html_to_text(spark):
-    docs = (synth(HTML_ATOMS, 300, seed=303, max_parts=12)
-            + synth(HTML_ATOMS_2, 300, seed=304, max_parts=12)
-            + ["a<scripté>x</script>b", "a<script٣>x</script>b",
-               "a<style中>x</style>b"])
-    assert_same(docs, spark_eval(spark, sources.html_to_text_expr, docs),
-                [oracle.html_to_text(h) for h in docs])
 
 
 QUALITY_ATOMS = [
@@ -94,15 +54,6 @@ QUALITY_ATOMS = [
     "end.", "uh?", "wow!", "\t", "\r", "mixed2tok", "", "of and that",
 ]
 
-# every Gopher gate relaxed, so that one gate alone decides
-_RELAXED = dict(
-    min_words=0, max_words=10 ** 9,
-    min_mean_word_len=0.0, max_mean_word_len=1e9,
-    max_symbol_word_ratio=1e9,
-    max_bullet_frac=1e9, max_ellipsis_frac=1e9,
-    min_alpha_word_frac=0.0, min_stopword_hits=0,
-    max_dup_line_frac=1e9, max_dup_line_char_frac=1e9,
-)
 _GATE_SIGNAL = {
     "min_words": "n_words", "max_words": "n_words",
     "min_mean_word_len": "mean_word_len",
@@ -116,47 +67,45 @@ _GATE_SIGNAL = {
 }
 
 
-def test_fuzz_gopher_signals(spark):
-    """The Catalyst Gopher gate (regexp_count, \\p{L} classes,
-    LIKE-in-lambda, char counting) must give the RE2 gate's verdicts on
+def test_fuzz_gopher_signals():
+    """The RE2 Gopher gate (regex counts, \\p{L} classes, dictionary-
+    encoded lines, vectorized round4) must give the oracle's verdicts on
     adversarial text: at the default thresholds, and with each gate
-    alone deciding at a threshold equal to an observed signal value, so
-    every signal is compared on both sides of a boundary."""
+    alone deciding at a threshold equal to an observed oracle signal
+    value, so every signal is compared on both sides of a boundary."""
     # the second corpus repeats non-empty lines (dup_line_char_frac)
     texts = (synth(QUALITY_ATOMS, 250, seed=404, max_parts=15)
              + synth(QUALITY_ATOMS + ["\nsame line", "\nsame line\n"],
                      250, seed=405, max_parts=15))
-    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
     arr = pa.array(texts, type=pa.string())
+    stops = quality.GOPHER_STOPWORDS
 
     def verdicts(th):
-        got = {r.i: r.gopher_keep for r in quality.gopher_quality(
-            df, thresholds=th, signals=False).collect()}
-        spark_keep = [got[i] for i in range(len(texts))]
-        assert_same(texts, spark_keep,
-                    arrowgate.gopher_keep_batch(arr, thresholds=th).tolist())
-        return set(spark_keep)
+        want = [oracle.gopher_keep(t, thresholds=th, stopwords=stops)
+                for t in texts]
+        assert_same(texts,
+                    arrowgate.gopher_keep_batch(arr, thresholds=th).tolist(),
+                    want)
+        return set(want)
 
     verdicts(None)   # short fuzz texts: the defaults reject them all
-    signals = {r.i: r for r in quality.gopher_quality(df).collect()}
+    signals = [oracle.gopher_signals(t, stopwords=stops) for t in texts]
     for gate, sig in _GATE_SIGNAL.items():
-        values = sorted({signals[i][sig] for i in signals})
+        values = sorted({s[sig] for s in signals})
         assert len(values) >= 2, sig
-        th = dict(_RELAXED, **{gate: values[len(values) // 2]})
+        th = dict(oracle.GOPHER_RELAXED, **{gate: values[len(values) // 2]})
         assert verdicts(th) == {True, False}, gate
 
 
-def test_fuzz_c4_gates(spark):
+def test_fuzz_c4_gates():
+    """The RE2 C4 page gate gives the oracle's verdicts."""
     texts = synth(QUALITY_ATOMS + ["First one. Second! Third?",
                                    "lorem ipsum", "{", "javascript"],
                   250, seed=505, max_parts=10)
-    page = spark_eval(spark, quality.c4_page_keep_expr, texts)
-    want = arrowgate.c4_keep_batch(pa.array(texts, type=pa.string()))
-    assert_same(texts, page, [bool(x) for x in want])
+    page = [bool(x) for x in arrowgate.c4_keep_batch(
+        pa.array(texts, type=pa.string()))]
+    assert_same(texts, page, [oracle.c4_page_keep(t) for t in texts])
     assert set(page) == {True, False}
-    line = spark_eval(spark, quality.c4_line_keep_expr, texts)
-    assert_same(texts, line, [oracle.c4_line_keep(t) for t in texts])
-    assert set(line) == {True, False}
 
 
 TEXT_ATOMS = [

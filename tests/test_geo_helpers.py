@@ -1,14 +1,9 @@
-"""geo helper expressions: crawl period extraction (X6), the PSL
-registrable domain, URL normalization."""
+"""geo helpers: the PSL registrable domain (the Spark SQL rendering and
+its Python restatement in tests/oracle.py), the PSL parser, the ccTLD
+table and the url_filter writer."""
 
 from ccspark import geo
-
-
-def test_crawl_period_expr_both_dialects(spark):
-    got = spark.sql(
-        f"SELECT {geo.crawl_period_expr('seg')} AS p "
-        f"FROM (SELECT 'CC-MAIN-2022-40.1234.wet' AS seg)").collect()[0].p
-    assert got == "2022-40"
+from tests import oracle
 
 
 # tldextract's outputs on these hosts (hand-verified against the PSL
@@ -70,7 +65,7 @@ PSL_CASES = {
 
 def test_psl_registrable_domain_python_twin():
     for host, want in PSL_CASES.items():
-        assert geo.registrable_domain(host) == want, host
+        assert oracle.registrable_domain(host) == want, host
 
 
 def test_psl_domain_expr_matches_twin_both_dialects(spark):
@@ -99,58 +94,6 @@ def test_write_url_filter_csv_roundtrip(spark, tmp_path):
     got = {r.domain: (r.num_of_countries, r.num_of_pages)
            for r in back.collect()}
     assert got == {"hotel": (9, 253383), "kayak": (4, 1000)}
-
-
-URL_NORM_CASES = {
-    "https://www.Hotel.de/p0?utm_source=x&keep=1#frag":
-        "https://www.hotel.de/p0?keep=1",
-    "HTTPS://WWW.HOTEL.DE:443/p0?keep=1":
-        "https://www.hotel.de/p0?keep=1",
-    "http://site.fr:80/a/b/": "http://site.fr/a/b",
-    "https://www.hotel.de/p0/?utm_source=a&utm_medium=b&fbclid=z":
-        "https://www.hotel.de/p0",
-    "https://h.de/p?gclid=1&x=2&utm_term=3": "https://h.de/p?x=2",
-    "https://h.de/Path/Case": "https://h.de/Path/Case",  # path case kept
-    # '&' is a legal PATH character (RFC 3986): param-stripping must be
-    # anchored to the query portion and never rewrite the path
-    "http://x.com/a&ref=b/page": "http://x.com/a&ref=b/page",
-    "http://x.com/a&ref=b/page?ref=c&keep=1":
-        "http://x.com/a&ref=b/page?keep=1",
-    "http://x.com/a&utm_source=p?utm_source=q":
-        "http://x.com/a&utm_source=p",
-}
-
-
-def _normalize(spark, urls, nest=1):
-    """{url: normalize_url_expr applied *nest* times}."""
-    e = "u"
-    for _ in range(nest):
-        e = f"({geo.normalize_url_expr(e)})"
-    spark.createDataFrame([(u,) for u in urls], "u string") \
-        .createOrReplaceTempView("norm_urls")
-    return dict(spark.sql(f"SELECT u, {e} FROM norm_urls").collect())
-
-
-def test_normalize_url_expr_both_dialects(spark):
-    """The Spark rendering and the Python restatement the fuzz compares
-    it with (tests/oracle.py) both give the hand-written expectations."""
-    from tests import oracle
-    got_s = _normalize(spark, sorted(URL_NORM_CASES))
-    for u, want in URL_NORM_CASES.items():
-        assert got_s[u] == want, ("spark", u, got_s[u])
-        assert oracle.normalize_url(u) == want, ("oracle", u)
-
-
-def test_normalize_url_is_idempotent(spark):
-    """norm(norm(u)) == norm(u) - normalized URLs are fixed points, so
-    re-running the canonicalizer over already-clean data is a no-op."""
-    urls = list(URL_NORM_CASES) + [
-        "https://a.b/c?x=1&utm_source=s&y=2#z",
-        "http://H.DE:80/", "https://h.de", "no scheme at all",
-    ]
-    one, two = _normalize(spark, urls), _normalize(spark, urls, nest=2)
-    for u in urls:
-        assert one[u] == two[u], (u, one[u], two[u])
 
 
 def test_psl_parser_rejects_malformed_rules():

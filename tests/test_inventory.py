@@ -77,3 +77,33 @@ def test_py_files_zip_imports_every_module(tmp_path):
         cwd=tmp_path, capture_output=True, text=True)
     assert out.returncode == 0, out.stderr
     assert out.stdout.split()[-1] == str(len(names))
+
+
+def test_perfbench_trace_targets_resolve():
+    """Every name the traced benchmark run (``--trace 1``) wraps by
+    getattr resolves: the layer functions and facade methods of
+    perfbench/trace.py and the batch functions perfbench/pyhook.py wraps
+    in the Python workers (read from its ``wrap(module, name, ...)``
+    calls)."""
+    import importlib
+
+    from ccspark.api import CCSparkCorpus
+    from perfbench import trace
+
+    # this is why quality.domain_quality stays: LAYER_FUNCS wraps it
+    for mod, fname, _ in trace.LAYER_FUNCS:
+        assert callable(getattr(importlib.import_module(mod), fname, None)), \
+            (mod, fname)
+    for name in trace.API_METHODS:
+        assert callable(getattr(CCSparkCorpus, name, None)), name
+    hook = ast.parse((ROOT / "perfbench" / "pyhook.py").read_text())
+    wrapped = {(c.args[0].id, c.args[1].value) for c in ast.walk(hook)
+               if isinstance(c, ast.Call) and getattr(c.func, "id", "")
+               == "wrap"}
+    assert wrapped >= {("arrowkernel", "verdict_batch"),
+                       ("arrowgate", "c4_keep_batch"),
+                       ("arrowgate", "gopher_keep_batch"),
+                       ("sources", "parse_wet_bytes")}, wrapped
+    for mod, name in wrapped:
+        assert callable(getattr(importlib.import_module(f"ccspark.{mod}"),
+                                name, None)), (mod, name)

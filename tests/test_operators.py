@@ -219,27 +219,6 @@ def test_blocklist_filter(spark):
     assert kept == {0, 2}
 
 
-def test_str_hash_bit_compatible_with_reference(spark):
-    """X7: dedup.str_hash must equal the reference's
-    np.frombuffer(sha1(utf8(s)).digest()[:8], '<u8') exactly -
-    deduplication.py:88-94 - including unicode, empty, and long inputs,
-    so existing reference hash files join against ours."""
-    import hashlib
-
-    import numpy as np
-
-    from ccspark import dedup
-    cases = ["", "abc", "héllo wörld", "日本語テキスト", "emoji 🙂 test",
-             "a" * 1000, "line\nwith\nnewlines", "tab\tand\rcr"]
-    df = spark.createDataFrame(
-        [Row(i=i, text=t) for i, t in enumerate(cases)])
-    got = {r.i: r.hash_u64 for r in dedup.str_hash(df).collect()}
-    for i, t in enumerate(cases):
-        want = np.frombuffer(
-            hashlib.sha1(t.encode("utf-8")).digest()[:8], "<u8").item(0)
-        assert got[i] == str(want), (t[:20], want, got[i])
-
-
 def test_blocklist_terms_are_literals_not_patterns(spark):
     """Regex metacharacters in a term must match literally (and must not
     crash pattern compilation)."""

@@ -220,7 +220,7 @@ def test_hof_lambdas_reference_bound_columns(spark):
     fresh split()/lower() call."""
     from pyspark.sql import Row
 
-    from ccspark import dedup, lid, quality
+    from ccspark import dedup, lid
     docs = spark.createDataFrame(
         [Row(doc_id=0, lang="en",
              text="alpha bravo charlie delta echo foxtrot golf hotel")])
@@ -229,13 +229,11 @@ def test_hof_lambdas_reference_bound_columns(spark):
         return [ln for ln in plan_of(df).splitlines()
                 if "Generate" in ln and "lambdafunction" in ln]
 
-    for df in (dedup.shingles(docs),
-               quality.c4_span_dedup(docs),
-               quality.gopher_repetition(docs)):
-        lines = generate_lines(df)
-        assert lines, plan_of(df)
-        for ln in lines:
-            assert "split(" not in ln, ln
+    df = dedup.shingles(docs)
+    lines = generate_lines(df)
+    assert lines, plan_of(df)
+    for ln in lines:
+        assert "split(" not in ln, ln
 
     # the query lid.train collects: one scan of the docs, one lower(),
     # bound below the Generate, and no inferred size() > 0 filter (which

@@ -268,56 +268,6 @@ def test_build_training_corpus_with_metrics(spark):
         assert got[0.9][1][k] < got[None][1][k], k
 
 
-def test_segment_manifest_parses_wet_paths(spark, tmp_path):
-    """S1: the public wet.paths manifest format -> prunable work units."""
-    paths = "\n".join([
-        "crawl-data/CC-MAIN-2022-40/segments/1664030336674.94/wet/"
-        "CC-MAIN-20221001132802-20221001162802-00000.warc.wet.gz",
-        "crawl-data/CC-MAIN-2022-40/segments/1664030336674.94/wet/"
-        "CC-MAIN-20221001132802-20221001162802-00001.warc.wet.gz",
-        "crawl-data/CC-MAIN-2023-06/segments/1674764494826.88/wet/"
-        "CC-MAIN-20230206105004-20230206135004-00000.warc.wet.gz",
-        "",
-    ])
-    f = tmp_path / "wet.paths"
-    f.write_text(paths)
-    from ccspark import sources
-    m = sources.segment_manifest(spark, str(f))
-    rows = m.collect()
-    assert len(rows) == 3
-    assert {r.crawl for r in rows} == {"CC-MAIN-2022-40", "CC-MAIN-2023-06"}
-    one = m.where("crawl = 'CC-MAIN-2023-06'").collect()
-    assert len(one) == 1
-    assert one[0].segment == "1674764494826.88"
-    assert one[0].filename.endswith("00000.warc.wet.gz")
-
-
-def test_html_to_text_extraction(spark):
-    """Visible-text invariant on controlled markup: script/style/title/
-    comments vanish, block closers become newlines, entities decode,
-    whitespace collapses."""
-    html = ("<html><head><title>ignored</title>"
-            "<style>p { color: red }</style>"
-            "<script>if (1 < 2) { alert('x'); }</script></head>"
-            "<body><!-- nav boilerplate -->"
-            "<h1>Head &amp; Line</h1>"
-            "<p>First   paragraph with &lt;tag&gt; text.</p>"
-            "<div>Second block</div><br>"
-            "it&#39;s a &quot;quote&quot;"
-            "<p>math: 5 &amp;lt; 6 and A &amp;amp; B</p></body></html>")
-    # double-escaped entities decode exactly ONCE ('&amp;' is replaced
-    # last): a browser renders '5 &amp;lt; 6' as '5 &lt; 6', never '5 < 6'
-    want = ("Head & Line\nFirst paragraph with <tag> text.\n"
-            "Second block\nit's a \"quote\" "
-            "math: 5 &lt; 6 and A &amp; B")
-    spark.createDataFrame([(html,)], "h string") \
-        .createOrReplaceTempView("html_rows")
-    got_s = spark.sql(
-        f"SELECT {sources.html_to_text_expr('h')} AS t "
-        f"FROM html_rows").collect()[0].t
-    assert got_s == want, repr(got_s)
-
-
 def test_facade_dedup_hygiene_methods(spark):
     """The facade's hygiene pair: dedup_near and screen_new_crawl
     (exact+near vs history state) - thin delegations, so this just
