@@ -315,7 +315,7 @@ class CCSparkCorpus:
             pipeline.write_partitioned(df, out_path, partition_cols=pcols)
         return df
 
-    # ---- sampling + outliers ----
+    # ---- samples + outliers ----
 
     def aggregate_samples(self, corpus_lines: DataFrame,
                           chunksize: int = 5000,
@@ -370,21 +370,16 @@ class CCSparkCorpus:
                   text_col=text_col)
 
     def dedup_near(self, docs: DataFrame, threshold: float = 0.5,
-                   pre_exact: bool = True, verify_exact: bool = False,
+                   verify_exact: bool = False,
                    text_col: str = "text",
                    id_col: str = "doc_id") -> DataFrame:
         """End-to-end near-duplicate removal (ccspark.dedup.dedup_near):
-        MinHash-LSH candidates -> (optional exact-Jaccard verify) ->
-        connected components -> keep cluster-min canonical + singletons.
-        ``pre_exact`` defaults ON here - raw crawls are copy-heavy and
-        pair emission is quadratic in copy multiplicity; survivors are
-        provably identical."""
-        from ccspark import dedup
+        exact copies (NULL texts included) collapse to their minimum id,
+        then MinHash-LSH candidates -> (optional exact-Jaccard verify) ->
+        connected components -> keep cluster-min canonical + singletons."""
         return dedup.dedup_near(docs, threshold=threshold,
-                                hash_family="xxhash64",
                                 verify_exact=verify_exact,
-                                pre_exact=pre_exact, text_col=text_col,
-                                id_col=id_col)
+                                text_col=text_col, id_col=id_col)
 
     def screen_new_crawl(self, new_docs: DataFrame,
                          history_hashes: DataFrame | None = None,
@@ -398,7 +393,7 @@ class CCSparkCorpus:
         *history_sig*, a ``dedup.minhash_signature_table`` output or its
         pre-banded bucketed form).  History is consumed as hashes and
         ~100 B/doc signatures only - its text is never re-read.  The
-        near screen's k/bands/hash_family must match the parameters the
+        near screen's k/bands must match the parameters the
         history signatures were built with - tables written by
         ``minhash_signature_table``/``banded_signatures`` carry them as
         column metadata and a mismatch raises (dedup.incremental_near_dups
@@ -417,40 +412,6 @@ class CCSparkCorpus:
                 out, history_sig, threshold=near_threshold,
                 text_col=text_col, id_col=id_col)
         return out
-
-    def sample_by_budget(self, docs: DataFrame, budget: int,
-                         group_col: str = "lang",
-                         text_col: str = "text",
-                         flags_only: bool = False) -> DataFrame:
-        """Token-budget sampling (ccspark.sampling): deterministic
-        hash-ordered greedy prefix per *group_col* up to *budget* tokens
-        (data mixing).  Returns the sampled rows, or every row with
-        (weight, cum, kept) when ``flags_only``."""
-        from ccspark import sampling
-        out = sampling.sample_by_token_budget(docs, budget,
-                                              group_col=group_col,
-                                              text_col=text_col)
-        return out if flags_only else \
-            out.where("kept").drop("cum", "kept")
-
-    def sample_mixture(self, docs: DataFrame, total_budget: int,
-                       proportions: dict[str, float],
-                       group_col: str = "lang",
-                       text_col: str = "text",
-                       flags_only: bool = False) -> DataFrame:
-        """Mixture sampling (ccspark.sampling.sample_by_mixture): split
-        one global *total_budget* across groups by target *proportions*
-        ("30% lang A / 70% lang B of a 1T-token budget"), then fill each
-        group's derived quota with the deterministic hash-ordered greedy
-        prefix.  Groups absent from *proportions* are excluded.  Returns
-        the sampled rows, or every row with (weight, cum, budget, kept)
-        when ``flags_only``."""
-        from ccspark import sampling
-        out = sampling.sample_by_mixture(docs, total_budget, proportions,
-                                         group_col=group_col,
-                                         text_col=text_col)
-        return out if flags_only else \
-            out.where("kept").drop("cum", "budget", "kept")
 
     # ---- scrub + filter mining ----
 

@@ -75,7 +75,7 @@ def gram_array(words: str, n: int = DEFAULT_N) -> str:
     *words* MUST be a bound COLUMN (projection/CTE), never an inline
     split expression: it is referenced inside the transform LAMBDA BODY,
     and HOF lambdas are interpreted - an inlined expression re-evaluates
-    once per array element (see dedup.shingles, r4).
+    once per array element (see dedup._word_hash_kgrams, r4).
 
     Docs shorter than *n* words yield an empty set: the guarded sequence
     emits one degenerate short slice which the space-count filter drops.

@@ -18,10 +18,9 @@ tiebreak.
 Near-dup extensions (not in the reference beyond a docstring stub,
 WET_processor.py:125-132): MinHash-LSH candidates, exact word-k-gram
 Jaccard verification and connected components - the standard toolkit
-for web-scale corpus dedup.  The md5 hash family is reproducible
-outside Spark (hashlib), so tests check it value for value;
-``hash_family='xxhash64'`` is the fast path at production scale (the
-plan shape is identical).
+for web-scale corpus dedup.  One hash family throughout: xxhash64
+word-k-gram hashes (``shingle_hashes``), checked value for value against
+a pure-Python XXH64 in tests/oracle.py.
 """
 
 from __future__ import annotations
@@ -69,44 +68,26 @@ def dedup_keep_none(df: DataFrame, key: str = "hash") -> DataFrame:
 # ------------------------------------------------------------------
 # Near-duplicate detection over a document table (doc_id, text)
 
-def shingles(df: DataFrame, text_col: str = "text", k: int = 3,
-             id_col: str = "doc_id") -> DataFrame:
-    """Word k-gram shingle set per document (distinct).
-
-    The split is BOUND to a projection column before the ``transform``
-    lambda references it: higher-order functions are interpreted (not
-    whole-stage codegen), so an expression inlined into the lambda body
-    re-evaluates once PER ARRAY ELEMENT - with ~50-word docs that was a
-    measured 3.6x slowdown (r4; the words array was re-split ~50 times
-    per doc).  Same rule for every HOF in the SQL templates: compute the
-    array in a CTE, reference the column."""
-    from ccspark.skew import ensure_min_partitions
-    df = ensure_min_partitions(df, key=id_col)
-    words = df.select(id_col, F.split(F.col(text_col), " ").alias("_w"))
-    wcol = F.col("_w")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(wcol) - k, F.lit(0)))
-    sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(wcol, i + 1, k)))
-    return (words.select(id_col,
-                         F.explode(F.array_distinct(sh)).alias("shingle"))
-            .where(F.length("shingle") > 0))
-
-
 def _word_hash_kgrams(docs: DataFrame, text_col: str, k: int,
                       id_col: str):
-    """Shared core of the xxhash64 near-dup family: the positional array
-    of word-k-gram hashes per document WITHOUT materializing any k-gram
-    string.  Each word is xxhash64'd ONCE (one interpreted-lambda pass
-    over the words array), then k consecutive word hashes are folded
-    with pairwise ``xxhash64(x, y)`` mixing over aligned ``zip_with``
-    slices - full 64-bit, order-sensitive, and ~2.6x faster at sf1 than
-    hashing ``concat_ws`` shingle strings (BENCH r4: the string
-    materialization, not the hash, dominated the signature stage).
-    Gram counts match the string family exactly: ``greatest(n_words-k+1,
-    1)`` positions, short docs collapsing to one composite of their
-    available words (``xxhash64`` skips the null padding a short slice
-    produces, mirroring how ``concat_ws`` joins a short slice).  HOF
-    rule respected: the split and word-hash arrays are bound to
-    projection columns before any lambda references them.
+    """Core of the near-dup family: the positional array of word-k-gram
+    hashes per document WITHOUT materializing any k-gram string.  Each
+    word is xxhash64'd ONCE (one interpreted-lambda pass over the words
+    array), then k consecutive word hashes are folded with pairwise
+    ``xxhash64(x, y)`` mixing over aligned ``zip_with`` slices - full
+    64-bit, order-sensitive, and ~2.6x faster at sf1 than hashing
+    ``concat_ws`` shingle strings (BENCH r4: the string materialization,
+    not the hash, dominated the signature stage).  A doc has
+    ``greatest(n_words-k+1, 1)`` gram positions; a short doc collapses
+    to one composite of its available words (the null padding a short
+    slice produces is skipped by ``xxhash64``, which then rehashes the
+    accumulator alone).
+
+    HOF rule: the split and word-hash arrays are bound to projection
+    columns before any lambda references them.  Higher-order functions
+    are interpreted (not whole-stage codegen), so an expression inlined
+    into a lambda body re-evaluates once PER ARRAY ELEMENT - with
+    ~50-word docs that was a measured 3.6x slowdown (r4).
 
     Returns ``(frame, gram_array_expr)`` - the per-word-hash frame and
     the k-gram hash array EXPRESSION over it.  Callers MUST place the
@@ -136,14 +117,11 @@ def _word_hash_kgrams(docs: DataFrame, text_col: str, k: int,
 
 def shingle_hashes(docs: DataFrame, text_col: str = "text", k: int = 3,
                    id_col: str = "doc_id") -> DataFrame:
-    """Distinct word-k-gram HASH set per document - the production
-    (xxhash64-family) drop-in for ``shingles`` wherever only the hash of
-    the shingle is consumed (MinHash signatures never look at the gram
-    text).  Output: (id_col, _h64 long).  Doc-level parity with the
-    string family: ``shingles`` drops only the zero-length shingle,
-    which arises exactly from an empty ``text`` - mirrored here by the
-    length filter (whitespace-only docs keep their degenerate gram in
-    BOTH families)."""
+    """Distinct word-k-gram HASH set per document (MinHash signatures
+    and the exact verification only ever need the hash of a gram, never
+    its text).  Output: (id_col, _h64 long).  Empty and NULL texts have
+    no grams; a whitespace-only doc keeps its degenerate gram of empty
+    words."""
     src = docs.where(F.length(F.col(text_col)) > 0)
     wh, grams = _word_hash_kgrams(src, text_col, k, id_col)
     return wh.select(
@@ -151,35 +129,16 @@ def shingle_hashes(docs: DataFrame, text_col: str = "text", k: int = 3,
 
 
 def minhash_signatures(sh: DataFrame, num_hashes: int = 16,
-                       id_col: str = "doc_id",
-                       hash_family: str = "md5") -> DataFrame:
-    """Wide MinHash signature: ONE base hash per shingle reduced to a
-    31-bit int h, then num_hashes affine hashes h_i = (a_i*h + b_i) mod
-    (2^31-1) aggregated as min() COLUMNS in a single groupBy - no
-    per-seed row explosion, one shuffle.  31-bit values keep a_i*h
-    inside int64 (Spark 4 ANSI mode raises on bigint overflow).
-
-    *hash_family*: ``md5`` (default) is reproducible with hashlib, so
-    tests verify signatures value-for-value; ``xxhash64`` is the
-    PRODUCTION fast path (JVM long straight from codegen - no hex
-    string materialization/parse per shingle).  Either family is a
-    uniform hash, so near-dup quality is identical; only the concrete
-    signature values differ (pair-level equivalence on duplicate-heavy
-    fixtures is pytest-asserted).
-
-    Accepts either ``shingles`` output (a ``shingle`` string column) or
-    the ``shingle_hashes`` fast-path output (``_h64`` long - already
-    hashed; preferred with the xxhash64 family, where gram strings never
-    need to exist)."""
+                       id_col: str = "doc_id") -> DataFrame:
+    """Wide MinHash signature over ``shingle_hashes`` output: each gram
+    hash reduced to a 31-bit int h, then num_hashes affine hashes h_i =
+    (a_i*h + b_i) mod (2^31-1) aggregated as min() COLUMNS in a single
+    groupBy - no per-seed row explosion, one shuffle.  31-bit values
+    keep a_i*h inside int64 (Spark 4 ANSI mode raises on bigint
+    overflow)."""
     P = 2147483647
-    if "_h64" in sh.columns:
-        h = F.pmod(F.col("_h64"), F.lit(P)).cast("long")
-    elif hash_family == "xxhash64":
-        h = F.pmod(F.xxhash64("shingle"), F.lit(P)).cast("long")
-    else:
-        h = (F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10)
-             .cast("long"))
-    hashed = sh.select(id_col, h.alias("_h"))
+    hashed = sh.select(id_col,
+                       F.pmod(F.col("_h64"), F.lit(P)).alias("_h"))
     mins = [
         F.min((F.lit(1103515245 + 2 * i) * F.col("_h")
                + F.lit(12345 + 7 * i)) % P).alias(f"m{i}")
@@ -188,54 +147,42 @@ def minhash_signatures(sh: DataFrame, num_hashes: int = 16,
     return hashed.groupBy(id_col).agg(*mins)
 
 
+def _band_digests(mcols: list, bands: int) -> list:
+    """One xxhash64 digest per LSH band over consecutive signature
+    columns (``len(mcols) // bands`` per band; leftover columns are in
+    no band)."""
+    per = max(1, len(mcols) // bands)
+    return [F.xxhash64(*[F.col(c) for c in mcols[bi * per:(bi + 1) * per]])
+            for bi in range(bands) if mcols[bi * per:(bi + 1) * per]]
+
+
 def minhash_near_dups(docs: DataFrame, text_col: str = "text", k: int = 3,
                       num_hashes: int = 16, bands: int = 4,
-                      id_col: str = "doc_id",
-                      hash_family: str = "md5") -> DataFrame:
-    """End-to-end MinHash-LSH near-dup candidate pairs with estimated
-    Jaccard (fraction of agreeing minhash columns).  Pass
-    ``hash_family='xxhash64'`` for the production fast path (same
-    candidate quality, no hashlib-reproducible values; gram strings
-    are never materialized - ``shingle_hashes``).
+                      id_col: str = "doc_id") -> DataFrame:
+    """End-to-end MinHash-LSH near-dup candidate pairs (doc_a < doc_b)
+    with estimated Jaccard ``jaccard_est`` (fraction of agreeing minhash
+    columns).
 
-    The signature COLUMNS ride through the banding explode, so the
-    band-bucket self-join's two sides already carry both documents'
-    signatures and the Jaccard estimate is computed inline - the plan
-    derives the signature aggregate twice (the two join sides), not
-    four times as the earlier rejoin-against-``sa``/``sb`` form did.
-    At corpus scale that removes two full signature passes and two wide
-    joins for the price of ``num_hashes`` extra longs per banding-
-    shuffle row; measured faster at sf1 too.  Results are identical
-    (same pairs, same estimates - asserted in tests when this form
-    replaced the rejoin form)."""
-    sh = (shingle_hashes(docs, text_col, k, id_col)
-          if hash_family == "xxhash64"
-          else shingles(docs, text_col, k, id_col))
-    sig = minhash_signatures(sh, num_hashes, id_col, hash_family)
-    mcols = [c for c in sig.columns if c.startswith("m")]
-    rows_per_band = max(1, len(mcols) // bands)
-    digs = []
-    for bi in range(bands):
-        cols = mcols[bi * rows_per_band:(bi + 1) * rows_per_band]
-        if cols:
-            if hash_family == "xxhash64":
-                digs.append(F.xxhash64(*[F.col(c) for c in cols]))
-            else:
-                digs.append(F.md5(F.concat_ws(",", *cols)))
+    The signature COLUMNS ride through the banding explode, so each
+    band bucket already carries its documents' signatures and the
+    Jaccard estimate is computed inline, with no rejoin against the
+    signature table."""
+    sig = minhash_signatures(shingle_hashes(docs, text_col, k, id_col),
+                             num_hashes, id_col)
+    mcols = _sig_cols(sig)
     # posexplode so the band INDEX rides along: candidates must agree on
     # (band, digest), not digest alone - a cross-band digest coincidence
     # (doc A's band-i tuple hashing like doc B's band-j tuple) must not
     # pair.
     dg = sig.select(id_col, *mcols,
-                    F.posexplode(F.array(*digs)).alias("band", "digest"))
+                    F.posexplode(F.array(*_band_digests(mcols, bands)))
+                    .alias("band", "digest"))
     # r6: bucket + stacked explodes instead of the band self-join - the
     # join computed the signature chain once per side (broadcast build +
     # streamed); the grouped form references it ONCE.  Pairs stream
     # row-at-a-time (no quadratic array is ever materialized); memory
     # per bucket row is O(bucket size), bounded by per-band duplicate
-    # multiplicity (pre_exact collapses exact copies first on the
-    # production path).  Pair set and estimates identical (asserted in
-    # tests when this form replaced the join form).
+    # multiplicity (dedup_near collapses exact copies first).
     entry = F.struct(F.col(id_col).alias("i"),
                      *[F.col(c) for c in mcols])
     buckets = (dg.groupBy("band", "digest")
@@ -260,24 +207,19 @@ def minhash_near_dups(docs: DataFrame, text_col: str = "text", k: int = 3,
 
 def jaccard_on_candidates(docs: DataFrame, pairs: DataFrame,
                           text_col: str = "text", k: int = 3,
-                          id_col: str = "doc_id",
-                          hash_family: str = "md5") -> DataFrame:
-    """EXACT word-k-gram Jaccard computed ONLY for the given candidate
-    pairs (doc_a, doc_b) - the verification stage of a production
-    near-dup pipeline (LSH candidates -> exact verify -> threshold ->
-    cluster).  It is linear in the candidate set, not quadratic in the
-    corpus: the gram table is left-semi restricted to documents that
-    appear in any pair before the intersection join, so corpus size
-    only enters through the one shingle pass.  Pairs with empty intersection come back at 0.0
-    (LSH can propose false positives - that is exactly what this op is
-    for).  Output: (doc_a, doc_b, jaccard double)."""
-    gcol = "_g"
-    if hash_family == "xxhash64":
-        sh = shingle_hashes(docs, text_col, k, id_col).select(
-            id_col, F.col("_h64").alias(gcol))
-    else:
-        sh = shingles(docs, text_col, k, id_col).select(
-            id_col, F.col("shingle").alias(gcol))
+                          id_col: str = "doc_id") -> DataFrame:
+    """EXACT word-k-gram Jaccard (over the ``shingle_hashes`` sets)
+    computed ONLY for the given candidate pairs (doc_a, doc_b) - the
+    verification stage of a production near-dup pipeline (LSH
+    candidates -> exact verify -> threshold -> cluster).  It is linear
+    in the candidate set, not quadratic in the corpus: the gram table is
+    left-semi restricted to documents that appear in any pair before the
+    intersection join, so corpus size only enters through the one gram
+    pass.  Pairs with empty intersection come back at 0.0 (LSH can
+    propose false positives - that is exactly what this op is for).
+    Output: (doc_a, doc_b, jaccard double)."""
+    gcol = "_h64"
+    sh = shingle_hashes(docs, text_col, k, id_col)
     cand_ids = (pairs.select(F.col("doc_a").alias(id_col))
                 .union(pairs.select(F.col("doc_b").alias(id_col)))
                 .distinct())
@@ -297,10 +239,9 @@ def jaccard_on_candidates(docs: DataFrame, pairs: DataFrame,
                       F.col("_n").alias("_nb"))
     # sizes joins are LEFT joins with coalesce-to-0: this is a public
     # verification API accepting arbitrary pairs, and a doc producing no
-    # shingles (empty text in the xxhash64 family, or shorter than k
-    # words) must yield jaccard 0.0, not a silently dropped pair.  The
-    # 0/0 case (both docs shingle-less) is guarded explicitly - Spark 4
-    # ANSI mode raises on it.
+    # grams (empty or NULL text) must yield jaccard 0.0, not a silently
+    # dropped pair.  The 0/0 case (both docs gram-less) is guarded
+    # explicitly - Spark 4 ANSI mode raises on it.
     common = F.coalesce(F.col("_common"), F.lit(0))
     union_n = (F.coalesce(F.col("_na"), F.lit(0))
                + F.coalesce(F.col("_nb"), F.lit(0)) - common)
@@ -386,7 +327,6 @@ def near_dup_clusters(docs: DataFrame, threshold: float = 0.5,
                       num_hashes: int = 12, bands: int = 4,
                       id_col: str = "doc_id",
                       max_iter: int = 50,
-                      hash_family: str = "md5",
                       verify_exact: bool = False) -> DataFrame:
     """Connected components over the MinHash-LSH near-dup graph
     (r3 verdict item 6: candidate PAIRS alone don't dedup anything - a
@@ -409,11 +349,9 @@ def near_dup_clusters(docs: DataFrame, threshold: float = 0.5,
     (id_col, cluster_id = min doc id reachable, survivor = doc IS the
     cluster minimum).  Documents with no near-dup are absent (trivially
     survivors)."""
-    cand = minhash_near_dups(docs, text_col, k, num_hashes, bands,
-                             id_col, hash_family)
+    cand = minhash_near_dups(docs, text_col, k, num_hashes, bands, id_col)
     if verify_exact:
-        pairs = (jaccard_on_candidates(docs, cand, text_col, k, id_col,
-                                       hash_family)
+        pairs = (jaccard_on_candidates(docs, cand, text_col, k, id_col)
                  .where(F.col("jaccard") >= threshold)
                  .select("doc_a", "doc_b"))
     else:
@@ -430,53 +368,45 @@ def dedup_near(docs: DataFrame, threshold: float = 0.5,
                text_col: str = "text", k: int = 3,
                num_hashes: int = 12, bands: int = 4,
                id_col: str = "doc_id",
-               hash_family: str = "md5",
-               verify_exact: bool = False,
-               pre_exact: bool = False) -> DataFrame:
-    """End-to-end near-duplicate REMOVAL: keep one canonical document
-    (the cluster-minimum id) per near-dup cluster, plus every document
-    with no near-dup.  The non-survivor set is small relative to the
-    corpus (it is the duplicates), so the removal join broadcasts when
-    Spark's threshold allows and anti-joins on the 8-byte id otherwise.
+               verify_exact: bool = False) -> DataFrame:
+    """End-to-end near-duplicate REMOVAL in two steps:
+
+    1. EXACT copies - documents whose texts are equal (keyed on the
+       text's xxhash64; every NULL text shares one key) - collapse to
+       their minimum id.  So of n empty, n NULL or n identical
+       whitespace-only documents one survives.  LSH pair emission is
+       quadratic in duplicate multiplicity - a doc with m exact copies
+       would yield m(m-1)/2 candidate pairs, all at Jaccard 1.0, and
+       web crawls are full of such groups (measured: a 120x-replicated
+       600k-doc fixture emits 40.6M pairs, ~2,900x the 14k pairs its
+       5k distinct texts warrant).
+    2. NEAR copies among the representatives - the MinHash-LSH
+       clusters of ``near_dup_clusters`` keep their minimum id.
+       Documents with no k-gram (empty or NULL text) never pair.
+
     *verify_exact* thresholds on the true k-gram Jaccard of each LSH
     candidate pair instead of the minhash estimate (see
-    ``near_dup_clusters``).
-
-    *pre_exact* collapses EXACT duplicates (same text bytes) to their
-    min-id representative BEFORE the LSH stage.  LSH pair emission is
-    quadratic in duplicate multiplicity - a doc with m exact copies
-    yields m(m-1)/2 candidate pairs, all at Jaccard 1.0, and web crawls
-    are full of such groups (measured: a 120x-replicated 600k-doc
-    fixture emits 40.6M pairs, ~2,900x the 14k pairs its 5k distinct
-    texts warrant).  The survivor set is PROVABLY identical to the
-    direct form: a group's representative is its min id, an exact-dup
-    group always joins its representative's cluster (Jaccard 1.0 >= any
-    threshold), and min over a cluster = min over its groups' minima -
-    asserted in tests.  This is the production default for raw crawls
-    (the facade's dedup_near turns it on)."""
-    if pre_exact:
-        th = F.xxhash64(F.col(text_col))
-        rep = (docs.select(th.alias("_th"), F.col(id_col))
-               .groupBy("_th").agg(F.min(id_col).alias(id_col)))
-        rep_docs = docs.join(rep.select(id_col), id_col, "left_semi")
-        clusters = near_dup_clusters(rep_docs, threshold, text_col, k,
-                                     num_hashes, bands, id_col,
-                                     hash_family=hash_family,
-                                     verify_exact=verify_exact)
-        losers = clusters.where(~F.col("survivor")).select(id_col)
-        return rep_docs.join(losers, id_col, "left_anti")
-    clusters = near_dup_clusters(docs, threshold, text_col, k,
+    ``near_dup_clusters``).  The non-survivor set is small relative to
+    the corpus (it is the duplicates), so the removal join broadcasts
+    when Spark's threshold allows and anti-joins on the 8-byte id
+    otherwise."""
+    th = F.xxhash64(F.col(text_col))
+    rep = (docs.select(th.alias("_th"), F.col(id_col))
+           .groupBy("_th").agg(F.min(id_col).alias(id_col)))
+    rep_docs = docs.join(rep.select(id_col), id_col, "left_semi")
+    clusters = near_dup_clusters(rep_docs, threshold, text_col, k,
                                  num_hashes, bands, id_col,
-                                 hash_family=hash_family,
                                  verify_exact=verify_exact)
     losers = clusters.where(~F.col("survivor")).select(id_col)
-    return docs.join(losers, id_col, "left_anti")
+    return rep_docs.join(losers, id_col, "left_anti")
+
+
+_HASH_FAMILY = "xxhash64"
 
 
 def minhash_signature_table(docs: DataFrame, text_col: str = "text",
                             k: int = 3, num_hashes: int = 12,
-                            id_col: str = "doc_id",
-                            hash_family: str = "xxhash64") -> DataFrame:
+                            id_col: str = "doc_id") -> DataFrame:
     """The persistable per-document MinHash signature table
     (id_col, m0..m{num_hashes-1}) - compute it once per crawl and save
     it (parquet, or ``banded_signatures`` written with
@@ -485,65 +415,50 @@ def minhash_signature_table(docs: DataFrame, text_col: str = "text",
     historical text.  At 10^12 docs the signature table is
     ~100 bytes/doc - the only history state incremental near-dup
     needs."""
-    sh = (shingle_hashes(docs, text_col, k, id_col)
-          if hash_family == "xxhash64"
-          else shingles(docs, text_col, k, id_col))
-    sig = minhash_signatures(sh, num_hashes, id_col, hash_family)
+    sig = minhash_signatures(shingle_hashes(docs, text_col, k, id_col),
+                             num_hashes, id_col)
     # Stamp the build parameters into m0's column METADATA (Spark
     # persists StructField metadata through parquet / saveAsTable), so
     # a later crawl probing this table can detect a k / num_hashes /
-    # hash_family mismatch instead of silently matching nothing.
+    # hash-family mismatch instead of silently matching nothing.
     return sig.withColumn("m0", F.col("m0").alias("m0", metadata={
         "ccspark_k": k, "ccspark_num_hashes": num_hashes,
-        "ccspark_hash_family": hash_family}))
+        "ccspark_hash_family": _HASH_FAMILY}))
+
+
+def _check_family(sig: DataFrame) -> None:
+    """Signature tables built elsewhere (e.g. an md5-family table) give
+    band digests no probe built here can match: refuse them."""
+    stamped = _sig_meta(sig).get("ccspark_hash_family", _HASH_FAMILY)
+    if stamped != _HASH_FAMILY:
+        raise ValueError(
+            f"signature table stamped hash family {stamped!r}; ccspark "
+            f"builds and probes {_HASH_FAMILY!r} signatures only - its "
+            "band digests would match nothing")
 
 
 def banded_signatures(sig: DataFrame, bands: int = 4,
-                      id_col: str = "doc_id",
-                      hash_family: str | None = None) -> DataFrame:
+                      id_col: str = "doc_id") -> DataFrame:
     """Explode a ``minhash_signature_table`` into its band-digest form
     (id_col, m0.., digest) - one row per (doc, band).  This is the
     PERSISTED layout for cross-crawl screening at scale: write history
     with ``banded.write.bucketBy(n, "digest").saveAsTable(tbl)`` and
     ``incremental_near_dups`` probes it with the history-side exchange
     gone (asserted in tests/test_operators.py) - only the new crawl's
-    (much smaller) digest stream shuffles.
-
-    *hash_family* defaults to the family STAMPED on the signature
-    table (``minhash_signature_table`` metadata), falling back to
-    xxhash64 for unstamped tables; passing a family that contradicts
-    the stamp raises rather than silently re-stamping the banded
-    layout with the wrong family (which would make every later
-    ``incremental_near_dups`` probe pass validation and match
-    nothing)."""
-    stamped = _sig_meta(sig).get("ccspark_hash_family")
-    if hash_family is None:
-        hash_family = stamped or "xxhash64"
-    elif stamped is not None and hash_family != stamped:
-        raise ValueError(
-            f"banded_signatures(hash_family={hash_family!r}) on a "
-            f"signature table stamped hash_family={stamped!r}: band "
-            "digests would not match any probe built from these "
-            "signatures")
+    (much smaller) digest stream shuffles.  A table stamped with
+    another hash family raises ValueError."""
+    _check_family(sig)
     mcols = _sig_cols(sig)
-    rows_per_band = max(1, len(mcols) // bands)
-    digs = []
-    for bi in range(bands):
-        cols = mcols[bi * rows_per_band:(bi + 1) * rows_per_band]
-        if cols:
-            if hash_family == "xxhash64":
-                digs.append(F.xxhash64(*[F.col(c) for c in cols]))
-            else:
-                digs.append(F.md5(F.concat_ws(",", *cols)))
     # Carry the signature table's build metadata forward and add the
     # banding parameters, stamped on the digest column - the persisted
     # cross-crawl layout is self-describing so a probe with different
-    # bands/hash_family fails loudly (incremental_near_dups validates).
+    # bands fails loudly (incremental_near_dups validates).
     meta = dict(_sig_meta(sig))
-    meta.update({"ccspark_bands": bands, "ccspark_hash_family": hash_family,
+    meta.update({"ccspark_bands": bands, "ccspark_hash_family": _HASH_FAMILY,
                  "ccspark_num_hashes": len(mcols)})
     out = sig.select(id_col, *mcols,
-                     F.explode(F.array(*digs)).alias("digest"))
+                     F.explode(F.array(*_band_digests(mcols, bands)))
+                     .alias("digest"))
     # metadata must be stamped on a plain attribute - an alias directly
     # on the generator expression loses it
     return out.withColumn("digest",
@@ -574,8 +489,8 @@ def _sig_cols(sig: DataFrame) -> list:
 def incremental_near_dups(new_docs: DataFrame, history_sig: DataFrame,
                           threshold: float = 0.9,
                           text_col: str = "text", k: int = 3,
-                          bands: int = 4, id_col: str = "doc_id",
-                          hash_family: str = "xxhash64") -> DataFrame:
+                          bands: int = 4,
+                          id_col: str = "doc_id") -> DataFrame:
     """Cross-crawl incremental NEAR-dup screen: drop every *new_docs*
     row whose text is a near-duplicate (minhash estimate >= *threshold*)
     of anything in the historical signature table - the monthly-crawl
@@ -583,11 +498,11 @@ def incremental_near_dups(new_docs: DataFrame, history_sig: DataFrame,
 
     *history_sig* is a ``minhash_signature_table`` output, or its
     pre-banded ``banded_signatures`` form (detected by the ``digest``
-    column; same num_hashes/k/hash_family/bands - num_hashes is
-    inferred from the m-columns).  Only the NEW crawl's text is read;
-    history enters as ~100 bytes/doc of signatures.  The band-digest
-    join is new-vs-history (no self-join): with the banded history
-    bucketed on digest (``DataFrameWriter.bucketBy``) the probe reads it
+    column; same num_hashes/k/bands - num_hashes is inferred from the
+    m-columns).  Only the NEW crawl's text is read; history enters as
+    ~100 bytes/doc of signatures.  The band-digest join is
+    new-vs-history (no self-join): with the banded history bucketed on
+    digest (``DataFrameWriter.bucketBy``) the probe reads it
     pre-shuffled and only the new crawl's digest stream moves.  Dedup
     WITHIN the new crawl itself is ``dedup_near``'s job, run separately
     - composing screen-then-self keeps each stage's state bounded.
@@ -598,10 +513,10 @@ def incremental_near_dups(new_docs: DataFrame, history_sig: DataFrame,
     silently match nothing.  History tables written by
     ``minhash_signature_table`` / ``banded_signatures`` carry their
     build parameters as column metadata (persisted through parquet);
-    any stamped parameter that disagrees with the caller's raises
-    ValueError here.  Unstamped (externally built) tables fall back to
-    the structural check: num_hashes is inferred from the m-columns and
-    must be >= *bands*."""
+    any stamped parameter that disagrees with the caller's, or a hash
+    family other than xxhash64, raises ValueError here.  Unstamped
+    (externally built) tables fall back to the structural check:
+    num_hashes is inferred from the m-columns and must be >= *bands*."""
     mcols = _sig_cols(history_sig)
     if not mcols:
         raise ValueError("history_sig has no m<i> signature columns")
@@ -609,9 +524,9 @@ def incremental_near_dups(new_docs: DataFrame, history_sig: DataFrame,
         raise ValueError(
             f"history_sig carries {len(mcols)} hashes but bands={bands}: "
             "every band needs at least one hash")
+    _check_family(history_sig)
     stamped = _sig_meta(history_sig)
     for key, ours in (("ccspark_k", k), ("ccspark_bands", bands),
-                      ("ccspark_hash_family", hash_family),
                       ("ccspark_num_hashes", len(mcols))):
         theirs = stamped.get(key)
         if theirs is not None and theirs != ours:
@@ -620,12 +535,10 @@ def incremental_near_dups(new_docs: DataFrame, history_sig: DataFrame,
                 f"probe passed {key[8:]}={ours!r} - matches would be "
                 "silently empty/wrong")
     sig_new = minhash_signature_table(new_docs, text_col, k, len(mcols),
-                                      id_col, hash_family)
-    a = banded_signatures(sig_new, bands, id_col,
-                          hash_family).alias("a")     # new crawl
+                                      id_col)
+    a = banded_signatures(sig_new, bands, id_col).alias("a")   # new crawl
     b = (history_sig if "digest" in history_sig.columns
-         else banded_signatures(history_sig, bands, id_col,
-                                hash_family)).alias("b")   # history
+         else banded_signatures(history_sig, bands, id_col)).alias("b")
     agree = None
     for c in mcols:
         t = (F.col(f"a.{c}") == F.col(f"b.{c}")).cast("int")

@@ -165,7 +165,7 @@ def _vocab_query(docs: DataFrame, n: int, text_col: str, label_col: str,
     # the padded-lower text is BOUND to a projection column before the
     # lambda references it: HOFs are interpreted, so an inlined concat/
     # lower re-evaluates once per character position - O(len^2) on long
-    # docs (r4; same rule as dedup.shingles)
+    # docs (r4; same rule as dedup._word_hash_kgrams)
     t = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
     padded = (docs.where(F.col(label_col).isNotNull())
               .select(F.col(label_col).alias("lang"), t.alias("_t")))

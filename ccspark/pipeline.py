@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ccspark import geo
+from ccspark import dedup, geo
 
 
 def with_geo(pages: DataFrame,
@@ -266,21 +266,6 @@ def _corpus_line_cols(df: DataFrame) -> list[str]:
     return cols
 
 
-def dedup_keep_first(lines: DataFrame, key: str = "hash") -> DataFrame:
-    """D1: exact dedup keeping the first copy (cc_corpus.py:345).  pandas
-    "first" depended on file order; we pin a deterministic tiebreak
-    (url, line_id) so results are stable under shuffle.
-
-    Delegates to ccspark.dedup.dedup_keep_first - the ONE shared
-    map-side-combining groupBy + min(struct) implementation (see its
-    docstring for the scale argument) - keeping this module's historical
-    key-first output column order."""
-    from ccspark import dedup as _dedup
-    order = [c for c in ("url", "line_id") if c in lines.columns]
-    rest = [c for c in lines.columns if c not in order and c != key]
-    return _dedup.dedup_keep_first(lines, key).select(key, *order, *rest)
-
-
 def corpus_lines(pages: DataFrame) -> DataFrame:
     """The flagship end-to-end plan.  Output schema mirrors the reference's
     line frame (Domain, Country, URL, LineID, Text, Hash - cc_corpus.py:315)
@@ -303,8 +288,9 @@ def corpus_lines(pages: DataFrame) -> DataFrame:
 def dedup_lines(lines: DataFrame, cols: list[str]) -> DataFrame:
     """F14 + D1 over explode_clean_fused output (its page rows filtered
     out): the stable xxhash64 of the cleaned ``text``, then keep-first
-    dedup carrying *cols* + (line_id, text).  Output columns: hash, url,
-    line_id, the rest of *cols*, text.
+    dedup (ccspark.dedup.dedup_keep_first: the first copy by (url,
+    line_id), stable under shuffle) carrying *cols* + (line_id, text).
+    Output columns: hash, url, line_id, the rest of *cols*, text.
 
     When the stage ran with ``scrub=True``, ``scrubbed`` rides the
     dedup payload and replaces ``text`` after it: the hash keys the
@@ -313,7 +299,10 @@ def dedup_lines(lines: DataFrame, cols: list[str]) -> DataFrame:
     lines (the scrubbed text is a function of the pre-scrub text)."""
     payload = [c for c in ("text", "scrubbed") if c in lines.columns]
     df = lines.withColumn("hash", F.xxhash64("text"))
-    out = dedup_keep_first(df.select(*cols, "line_id", *payload, "hash"))
+    rest = [c for c in cols if c != "url"]
+    out = (dedup.dedup_keep_first(
+        df.select(*cols, "line_id", *payload, "hash"))
+        .select("hash", "url", "line_id", *rest, *payload))
     if "scrubbed" not in payload:
         return out
     return (out.withColumn("text", F.coalesce("scrubbed", "text"))

@@ -5,7 +5,7 @@ Where skew lives in this workload and what handles it:
 
   * dimension joins - broadcast (never shuffled), skew-immune;
   * dedup / metrics aggregates - hash aggregation with map-side partial
-    combine: hot keys collapse before the exchange (pipeline.dedup_keep_first);
+    combine: hot keys collapse before the exchange (dedup.dedup_keep_first);
   * joins that do shuffle - AQE skew-join splitting is on (session.py);
   * per-URL windows - urls are fine-grained; a single url's lines always
     fit one task;
@@ -56,8 +56,8 @@ def cap_per_key(df: DataFrame, key: str, limit: int,
     SALTED TWO-PHASE top-k, not a per-key window: a single
     row_number() OVER (PARTITION BY key) funnels the hottest key's
     EVERY row through one task's sort just to keep *limit* of them -
-    the skewed-key full-window trap the token sampler (sampling.py)
-    already banished.  Phase 1 keeps the local top-*limit* within each
+    the skewed-key full-window trap, which this two-phase form
+    avoids.  Phase 1 keeps the local top-*limit* within each
     of *salt_n* deterministic sub-buckets of a key (hash(tiebreak) %
     salt_n - the hot key's rows sort on salt_n tasks in parallel, each
     sorting ~1/salt_n of them); phase 2 keeps the global top-*limit*

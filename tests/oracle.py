@@ -25,11 +25,14 @@ It also restates the char-n-gram Naive Bayes LID of ccspark.lid
 (``nb_train``, ``nb_scores``, ``nb_predict``) with ``collections.Counter``
 and a per-row scoring loop, so the Spark trainer and the numpy batch
 scorer are checked against a model and scores computed without them.
+
+The near-dup layer (ccspark.dedup) is restated from a pure-Python XXH64
+(``xxhash64``, checked against Spark's): the word-k-gram hash fold, the
+MinHash signature and the ``dedup_near`` survivor set.
 """
 
 from __future__ import annotations
 
-import hashlib
 import math
 import re
 import string
@@ -429,10 +432,11 @@ def c4_sentences(text: str) -> list:
 
 
 def word_shingle_jaccard(a: str, b: str, k: int = 3) -> float:
-    """Jaccard of two docs' dedup.shingles sets: the distinct ' '-joined
-    word k-grams of the ' '-split words (one shingle of all words when
-    there are fewer than k), empty shingles dropped; 0.0 when both sets
-    are empty."""
+    """Jaccard of two docs' word-k-gram sets: the distinct ' '-joined
+    word k-grams of the ' '-split words (one gram of all words when
+    there are fewer than k), empty grams dropped; 0.0 when both sets
+    are empty.  Strings, not hashes: it checks that dedup's hashed gram
+    sets have the sizes and overlaps of the grams themselves."""
     def grams(text):
         ws = text.split(" ")
         return {g for g in (" ".join(ws[i:i + k])
@@ -442,23 +446,148 @@ def word_shingle_jaccard(a: str, b: str, k: int = 3) -> float:
     return len(sa & sb) / union if union else 0.0
 
 
-def token_budget(docs, budget) -> dict:
-    """sampling.sample_by_token_budget / sample_by_mixture over
-    (doc_id, lang, text): {doc_id: (weight, cum, kept)}.  weight = the
-    non-empty ' '-split tokens; each lang is walked in
-    (md5(f"{lang}:{doc_id}"), doc_id) order; a doc is kept when the
-    tokens before it are under *budget* - an int, or a dict by lang
-    (0 for a lang it does not name)."""
-    by_lang = {}
-    for doc_id, lang, text in docs:
-        key = hashlib.md5(f"{lang}:{doc_id}".encode()).hexdigest()
-        weight = len([t for t in text.split(" ") if t])
-        by_lang.setdefault(lang, []).append((key, doc_id, weight))
-    out = {}
-    for lang, rows in by_lang.items():
-        cum = 0
-        for _, doc_id, weight in sorted(rows):
-            cum += weight
-            b = budget.get(lang, 0) if isinstance(budget, dict) else budget
-            out[doc_id] = (weight, cum, cum - weight < b)
-    return out
+# ---- near-dup hash family (ccspark.dedup) --------------------------------
+
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3 = 11400714785074694791, 14029467366897019727, \
+    1609587929392839161
+_P4, _P5 = 9650029242287828579, 2870177450012600261
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def xxh64(data: bytes, seed: int) -> int:
+    """The XXH64 digest of *data* (unsigned), lanes read little-endian."""
+    n, i = len(data), 0
+
+    def lane(j, w):
+        return int.from_bytes(data[j:j + w], "little")
+
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            v = [_round(v[j], lane(i + 8 * j, 8)) for j in range(4)]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h = (_rotl(h ^ _round(0, lane(i, 8)), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h = (_rotl(h ^ (lane(i, 4) * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h = _rotl(h ^ (data[i] * _P5 & _M64), 11) * _P1 & _M64
+        i += 1
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def xxhash64(*values) -> int:
+    """Spark's ``xxhash64(v1, v2, ...)``: seed 42, each non-NULL value
+    hashed with the previous digest as its seed (a str as its UTF-8
+    bytes, an int as an 8-byte signed long), NULL skipped; the result as
+    a signed long."""
+    h = 42
+    for v in values:
+        if v is None:
+            continue
+        data = (v.encode("utf-8") if isinstance(v, str)
+                else (v & _M64).to_bytes(8, "little"))
+        h = xxh64(data, h & _M64)
+        h = h - (1 << 64) if h >> 63 else h
+    return h
+
+
+def word_kgram_hashes(text, k: int = 3) -> set:
+    """dedup.shingle_hashes of one doc: each ' '-split word hashed, then
+    each run of k consecutive word hashes folded left with
+    ``xxhash64(acc, next)``.  A doc of m < k words has one gram; its
+    missing words are NULLs, so the fold rehashes the accumulator alone.
+    Empty and NULL text have no grams."""
+    if not text:
+        return set()
+    wh = [xxhash64(w) for w in text.split(" ")]
+    n = max(len(wh) - k + 1, 1)
+    grams = []
+    for j in range(n):
+        acc = wh[j]
+        for i in range(1, k):
+            acc = xxhash64(acc, wh[j + i] if j + i < len(wh) else None)
+        grams.append(acc)
+    return set(grams)
+
+
+def minhash_signature(text, k: int = 3, num_hashes: int = 12):
+    """dedup.minhash_signature_table's row for one doc (m0.. as a list),
+    or None for a doc with no gram: each gram hash reduced mod 2^31-1,
+    then the min of num_hashes affine hashes of it."""
+    p = 2147483647
+    hs = [g % p for g in word_kgram_hashes(text, k)]
+    if not hs:
+        return None
+    return [min(((1103515245 + 2 * i) * h + 12345 + 7 * i) % p for h in hs)
+            for i in range(num_hashes)]
+
+
+def dedup_near(docs, threshold: float = 0.5, k: int = 3,
+               num_hashes: int = 12, bands: int = 4,
+               verify_exact: bool = False) -> set:
+    """dedup.dedup_near over (doc_id, text) pairs: the surviving ids.
+    Docs with equal text (NULL equal to NULL) collapse to their minimum
+    id; two survivors pair when some band (``num_hashes // bands``
+    consecutive signature values) is equal, and are linked when the
+    fraction of equal signature values - or, with *verify_exact*, the
+    Jaccard of their gram sets - is >= *threshold*; of every linked
+    component only its minimum id survives."""
+    rep = {}
+    for doc_id, text in docs:
+        rep[text] = min(doc_id, rep.get(text, doc_id))
+    ids = sorted(rep.values())
+    text_of = {doc_id: text for doc_id, text in docs}
+    sig = {i: minhash_signature(text_of[i], k, num_hashes) for i in ids}
+    per = max(1, num_hashes // bands)
+    buckets = {}
+    for i in ids:
+        if sig[i] is None:
+            continue
+        for b in range(bands):
+            band = tuple(sig[i][b * per:(b + 1) * per])
+            if band:
+                buckets.setdefault((b, band), []).append(i)
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for members in buckets.values():
+        for x in members:
+            for y in members:
+                if x >= y:
+                    continue
+                if verify_exact:
+                    ga = word_kgram_hashes(text_of[x], k)
+                    gb = word_kgram_hashes(text_of[y], k)
+                    score = len(ga & gb) / len(ga | gb)
+                else:
+                    score = sum(a == b for a, b in zip(sig[x], sig[y])) \
+                        / num_hashes
+                if score >= threshold:
+                    rx, ry = find(x), find(y)
+                    parent[max(rx, ry)] = min(rx, ry)
+    return {i for i in ids if find(i) == i}

@@ -40,6 +40,11 @@ def test_fuzz_domain_and_tld(spark):
                    "bd", "ck", "kawasaki.jp", "sch.uk", ".", "..",
                    "xn--p1ai", "127.0.0.1", ""], 300, seed=202,
                   max_parts=5)
+    # PSL exception rules (!www.ck, !city.kawasaki.jp) with labels left
+    # of them, where the exception and the plain suffix rules disagree
+    hosts += synth(["city.", "kawasaki.jp", "www.", "ck", "x.", "a.",
+                    "jp", "."], 200, seed=203, max_parts=5)
+    hosts += ["x.www.ck", "a.city.kawasaki.jp"]
 
     def both(col):
         return f"concat({geo.tld_expr(col)}, '|', {geo.domain_expr(col)})"

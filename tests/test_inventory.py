@@ -21,7 +21,7 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 MODULES = {
     "__init__", "_zipstat", "api", "arrowgate", "arrowkernel",
     "checkpoint", "chunker", "decontam", "dedup", "geo", "lid",
-    "pipeline", "quality", "regexes", "sampling", "scrub", "session",
+    "pipeline", "quality", "regexes", "scrub", "session",
     "skew", "sources", "sqlgen", "unicode_ranges",
 }
 
@@ -29,7 +29,7 @@ FACADE_METHODS = {
     "process_wet", "process_pages", "build_training_corpus", "metrics",
     "lid_pass", "finalize", "aggregate_samples", "outlier_pass",
     "qq_diagnostics", "decontaminate", "dedup_near", "screen_new_crawl",
-    "sample_by_budget", "sample_mixture", "scrub", "mine_url_filters",
+    "scrub", "mine_url_filters",
 }
 
 

@@ -233,9 +233,53 @@ def test_blocklist_terms_are_literals_not_patterns(spark):
     assert kept == {1, 3}
 
 
+def test_oracle_xxhash64_matches_spark(spark):
+    """tests/oracle.py's pure-Python XXH64 is Spark's ``xxhash64``:
+    strings (empty, non-ASCII, under, at and over the 32-byte stripe),
+    longs (sign and range edges), the chained 2-argument form and NULL
+    (skipped; all-NULL gives the seed 42)."""
+    from tests import oracle
+    strs = ["", " ", "a", "hello", "héllo wörld", "中文字 😀", "x" * 31,
+            "y" * 32, "z" * 33, "0123456789abcdef" * 5 + "tail", None]
+    got = [r[0] for r in spark.createDataFrame(
+        [(x,) for x in strs], "s string").select(F.xxhash64("s")).collect()]
+    assert got == [oracle.xxhash64(x) for x in strs]
+    longs = [0, 1, -1, 42, 2 ** 31 - 1, 2 ** 63 - 1, -2 ** 63,
+             -7444071767201028348, None]
+    pairs = [(a, b) for a in longs for b in longs]
+    rows = spark.createDataFrame(pairs, "a bigint, b bigint").select(
+        F.xxhash64("a"), F.xxhash64("a", "b")).collect()
+    assert [r[0] for r in rows] == [oracle.xxhash64(a) for a, _ in pairs]
+    assert [r[1] for r in rows] == [oracle.xxhash64(a, b) for a, b in pairs]
+    assert oracle.xxhash64(None, None) == 42
+
+
+def test_minhash_signature_table_matches_oracle(spark):
+    """dedup.minhash_signature_table == oracle.minhash_signature row for
+    row: ordinary text, docs with fewer than k words (one composite
+    gram), whitespace-only text (grams of empty words), repeated grams
+    and non-ASCII; empty and NULL texts have no gram and no row."""
+    from ccspark import dedup
+    from tests import oracle
+    texts = ["the quick brown fox jumps over the lazy dog",
+             "one", "two words", "   ", " ", "a b c", "a b c a b c a b c",
+             "über straße 中文 😀 naïve café", "  lead and trail  ",
+             " ".join(f"w{i}" for i in range(60)), "", None]
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id bigint, text string")
+    for k, n in ((3, 12), (2, 7)):
+        got = {r.doc_id: [r[f"m{i}"] for i in range(n)]
+               for r in dedup.minhash_signature_table(
+                   docs, k=k, num_hashes=n).collect()}
+        want = {i: oracle.minhash_signature(t, k, n)
+                for i, t in enumerate(texts)}
+        assert got == {i: s for i, s in want.items() if s is not None}, k
+        assert set(want) - set(got) == {10, 11}
+
+
 def test_minhash_near_dups_module(spark):
-    """The module path (shingles -> wide signature -> explode-banded LSH
-    -> jaccard estimate): near-identical docs pair up, unrelated docs
+    """The module path (gram hashes -> wide signature -> explode-banded
+    LSH -> jaccard estimate): near-identical docs pair up, unrelated docs
     don't, and banding emits exactly `bands` rows per doc."""
     from ccspark import dedup
     base = ("the quick brown fox jumps over the lazy dog and then runs "
@@ -251,10 +295,9 @@ def test_minhash_near_dups_module(spark):
     assert not any(2 in p for p in got)
     est = {(r.doc_a, r.doc_b): r.jaccard_est for r in pairs}
     assert est[(0, 1)] >= 0.5
-    # the persisted banded layout of the same md5 signatures: bands rows
+    # the persisted banded layout of the same signatures: bands rows
     # per doc, and the pair is the one sharing a band digest
-    sig = dedup.minhash_signature_table(docs, num_hashes=16,
-                                        hash_family="md5")
+    sig = dedup.minhash_signature_table(docs, num_hashes=16)
     digests = {}
     for r in dedup.banded_signatures(sig, bands=4).collect():
         digests.setdefault(r.doc_id, []).append(r.digest)
@@ -264,11 +307,10 @@ def test_minhash_near_dups_module(spark):
 
 
 def test_minhash_xxhash64_fast_path(spark):
-    """hash_family='xxhash64' (production fast path: JVM long straight
-    from codegen, no per-shingle hex string) must reach the same
-    pair-level verdicts as the cross-engine md5 family: same near-dup
-    pair caught at the same >= 0.5 estimate, same unrelated doc left
-    alone, and exact duplicates at estimate 1.0 under BOTH families."""
+    """The xxhash64 word-k-gram family (a JVM long straight from codegen,
+    no per-shingle hex string) on a corpus with an exact copy: the copy
+    pairs at estimate 1.0, the near-dup at >= 0.5, the unrelated doc
+    pairs with nothing, and removal at 0.95 drops only the copy."""
     from ccspark import dedup
     base = ("the quick brown fox jumps over the lazy dog and then runs "
             "far away to the deep green forest before nightfall today")
@@ -278,16 +320,13 @@ def test_minhash_xxhash64_fast_path(spark):
         Row(doc_id=2, text=" ".join(f"token{i}" for i in range(40))),
         Row(doc_id=3, text=base),                       # exact dup of 0
     ])
-    for fam in ("md5", "xxhash64"):
-        pairs = dedup.minhash_near_dups(docs, hash_family=fam).collect()
-        got = {(r.doc_a, r.doc_b): r.jaccard_est for r in pairs}
-        assert got[(0, 3)] == 1.0, fam
-        assert got[(0, 1)] >= 0.5, fam
-        assert not any(2 in p for p in got), fam
-    # removal end-to-end rides the same parameter
+    pairs = dedup.minhash_near_dups(docs).collect()
+    got = {(r.doc_a, r.doc_b): r.jaccard_est for r in pairs}
+    assert got[(0, 3)] == 1.0
+    assert got[(0, 1)] >= 0.5
+    assert not any(2 in p for p in got)
     kept = {r.doc_id for r in
-            dedup.dedup_near(docs, threshold=0.95,
-                             hash_family="xxhash64").collect()}
+            dedup.dedup_near(docs, threshold=0.95).collect()}
     assert kept == {0, 1, 2}
 
 
@@ -368,18 +407,18 @@ def test_near_dup_removal_end_to_end(spark):
     kept = {r.doc_id for r in dedup.dedup_near(docs, threshold=0.5)
             .collect()}
     assert kept == {0, 3, 5}
-    # threshold gate: at 1.01 nothing can pair, so nothing is dropped
+    # threshold gate: at 1.01 nothing can pair, so only the exact
+    # copies (1 of 0, 4 of 3) are dropped
     all_kept = {r.doc_id for r in dedup.dedup_near(docs, threshold=1.01)
                 .collect()}
-    assert all_kept == {0, 1, 2, 3, 4, 5}
+    assert all_kept == {0, 2, 3, 5}
 
 
 def test_jaccard_on_candidates_exact(spark):
     """dedup.jaccard_on_candidates (the LSH->verify stage): every pair's
     value must be IDENTICAL to the pure-Python word-shingle Jaccard
     (tests/oracle.py: same gram sets, same arithmetic); a pair with
-    empty intersection must come back 0.0 rather than dropped; and both
-    hash families must agree (gram identity is family-independent)."""
+    empty intersection must come back 0.0 rather than dropped."""
     from ccspark import dedup
     from tests import oracle
     base = ("the quick brown fox jumps over the lazy dog and then runs "
@@ -397,12 +436,10 @@ def test_jaccard_on_candidates_exact(spark):
     want = {(a, b): oracle.word_shingle_jaccard(texts[a], texts[b])
             for a, b in ((0, 1), (0, 3), (1, 2))}
     assert want[(0, 3)] == 1.0 and 0.5 <= want[(0, 1)] < 1.0
-    for fam in ("md5", "xxhash64"):
-        got = {(r.doc_a, r.doc_b): r.jaccard
-               for r in dedup.jaccard_on_candidates(
-                   docs, cand, hash_family=fam).collect()}
-        assert got == want, fam
-        assert got[(1, 2)] == 0.0, fam
+    got = {(r.doc_a, r.doc_b): r.jaccard
+           for r in dedup.jaccard_on_candidates(docs, cand).collect()}
+    assert got == want
+    assert got[(1, 2)] == 0.0
 
 
 def test_dedup_near_verify_exact(spark):
@@ -422,39 +459,63 @@ def test_dedup_near_verify_exact(spark):
         Row(doc_id=3, text=" ".join(f"z{i}" for i in range(40))),
     ])
     kept = {r.doc_id for r in
-            dedup.dedup_near(docs, threshold=0.95, verify_exact=True,
-                             hash_family="xxhash64").collect()}
+            dedup.dedup_near(docs, threshold=0.95,
+                             verify_exact=True).collect()}
     assert kept == {0, 2, 3}
     # the verified edge set is a subset of the estimate edge set
-    est = dedup.near_dup_clusters(docs, 0.4, hash_family="xxhash64")
-    ver = dedup.near_dup_clusters(docs, 0.4, hash_family="xxhash64",
-                                  verify_exact=True)
+    est = dedup.near_dup_clusters(docs, 0.4)
+    ver = dedup.near_dup_clusters(docs, 0.4, verify_exact=True)
     assert {r.doc_id for r in ver.collect()} <= \
         {r.doc_id for r in est.collect()}
 
 
-def test_dedup_near_pre_exact_identical_survivors(spark):
-    """pre_exact=True must keep EXACTLY the same survivor set as the
-    direct form on a dup-heavy corpus (group representative = group min,
-    exact-dup groups always join their representative's cluster, min
-    over a cluster = min over its groups' minima)."""
-    from ccspark import dedup
+def _near_dup_corpora():
+    """(name, [(doc_id, text)], defined survivors or None) for
+    test_dedup_near_matches_oracle."""
     base = ("the quick brown fox jumps over the lazy dog and then runs "
             "far away to the deep green forest before nightfall today")
-    rows = []
-    did = 0
-    for variant in (base, base.replace("today", "tomorrow"),
-                    " ".join(f"token{i}" for i in range(40))):
-        for _ in range(5):                      # 5 exact copies each
-            rows.append(Row(doc_id=did, text=variant)); did += 1
-    docs = spark.createDataFrame(rows)
-    for kw in ({}, {"verify_exact": True}):
-        direct = {r.doc_id for r in dedup.dedup_near(
-            docs, threshold=0.5, hash_family="xxhash64", **kw).collect()}
-        pre = {r.doc_id for r in dedup.dedup_near(
-            docs, threshold=0.5, hash_family="xxhash64",
-            pre_exact=True, **kw).collect()}
-        assert direct == pre == {0, 10}, (kw, direct, pre)
+    variants = (base, base.replace("today", "tomorrow"),
+                " ".join(f"token{i}" for i in range(40)))
+    copies = [(i, variants[i // 5]) for i in range(15)]   # 5 copies each
+    hostile = list(enumerate(["", "", None, None, base, base, "   ",
+                              "   "]))
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(25)]
+    seeded = []
+    for i in range(30):
+        r = rng.random()
+        if seeded and r < 0.3:                          # exact replay
+            seeded.append((i, rng.choice(seeded)[1]))
+        elif seeded and r < 0.6:                        # light mutation
+            w = rng.choice(seeded)[1].split(" ")
+            w[rng.randrange(len(w))] = rng.choice(vocab)
+            seeded.append((i, " ".join(w)))
+        else:
+            seeded.append((i, " ".join(
+                rng.choice(vocab) for _ in range(rng.randint(1, 30)))))
+    return [("copies", copies, {0, 10}), ("hostile", hostile, {0, 2, 4, 6}),
+            ("seeded", seeded, None)]
+
+
+@pytest.mark.parametrize("verify_exact", [False, True])
+def test_dedup_near_matches_oracle(spark, verify_exact):
+    """dedup.dedup_near keeps exactly oracle.dedup_near's survivors: exact
+    copies (NULL texts included) collapse to their minimum id, then
+    near-dup clusters keep their minimum id.  Corpora: 3 texts x 5
+    exact copies; empty, NULL, whitespace-only and ordinary text in
+    pairs; a seeded mix of replays, one-word mutations and short
+    docs."""
+    from ccspark import dedup
+    from tests import oracle
+    for name, rows, defined in _near_dup_corpora():
+        docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+        got = {r.doc_id for r in dedup.dedup_near(
+            docs, threshold=0.5, verify_exact=verify_exact).collect()}
+        want = oracle.dedup_near(rows, threshold=0.5,
+                                 verify_exact=verify_exact)
+        assert got == want, (name, got, want)
+        assert defined is None or want == defined, (name, want)
+        assert len(want) < len(rows), name
 
 
 def test_incremental_near_dups(spark):
@@ -550,11 +611,13 @@ def test_incremental_near_dups_matches_bruteforce(spark, seed):
     >= 11 matching hashes, so at most ONE band is broken and >= 3 full
     bands match - banding provably produces every qualifying candidate,
     and candidates are filtered by the same agreement predicate, so the
-    survivor sets must be identical (not merely approximately equal)."""
-    import hashlib
+    survivor sets must be identical (not merely approximately equal).
+    The brute force takes its signatures from oracle.minhash_signature
+    (pure-Python XXH64)."""
     import random
 
     from ccspark import dedup
+    from tests import oracle
 
     rng = random.Random(seed)
     vocab = [f"w{i}" for i in range(30)]
@@ -577,20 +640,8 @@ def test_incremental_near_dups_matches_bruteforce(spark, seed):
         else:                                      # fresh
             new_texts.append(doc())
 
-    P = 2147483647
-
-    def sig(text, k=3, n=12):
-        mins = [P] * n
-        w = text.split(" ")
-        for i in range(max(len(w) - k, 0) + 1):
-            s = " ".join(w[i:i + k])
-            if not s:
-                continue
-            h = int(hashlib.md5(s.encode()).hexdigest()[:7], 16)
-            for j in range(n):
-                v = ((1103515245 + 2 * j) * h + (12345 + 7 * j)) % P
-                mins[j] = min(mins[j], v)
-        return mins
+    def sig(text):
+        return oracle.minhash_signature(text, k=3, num_hashes=12)
 
     hsigs = [sig(t) for t in hist_texts]
     want = set()
@@ -606,11 +657,9 @@ def test_incremental_near_dups_matches_bruteforce(spark, seed):
         [Row(doc_id=i, text=t) for i, t in enumerate(hist_texts)])
     new = spark.createDataFrame(
         [Row(doc_id=i, text=t) for i, t in enumerate(new_texts)])
-    hist_sig = dedup.minhash_signature_table(hist, num_hashes=12,
-                                             hash_family="md5")
+    hist_sig = dedup.minhash_signature_table(hist, num_hashes=12)
     got = {r.doc_id for r in dedup.incremental_near_dups(
-        new, hist_sig, threshold=0.9, bands=4,
-        hash_family="md5").collect()}
+        new, hist_sig, threshold=0.9, bands=4).collect()}
     assert got == want, (seed, got, want)
     # sanity: the scenario is non-trivial (something dropped, something
     # kept) - the generator mixes replays, mutations and fresh docs
@@ -620,7 +669,7 @@ def test_incremental_near_dups_matches_bruteforce(spark, seed):
 def test_jaccard_on_candidates_shingleless_docs(spark):
     """r4 advice: jaccard_on_candidates is a public verification API
     accepting ARBITRARY pairs - a pair where either doc produces no
-    shingles (empty text in both hash families) must come back at 0.0
+    grams (empty text) must come back at 0.0
     rather than be silently dropped by an inner size-join, and the
     both-shingleless pair must not trip ANSI DIVIDE_BY_ZERO."""
     from ccspark import dedup
@@ -628,21 +677,19 @@ def test_jaccard_on_candidates_shingleless_docs(spark):
             "far away to the deep green forest before nightfall today")
     docs = spark.createDataFrame([
         Row(doc_id=0, text=base),
-        Row(doc_id=1, text=""),           # no shingles in either family
+        Row(doc_id=1, text=""),           # no grams
         Row(doc_id=2, text=""),
     ])
     cand = spark.createDataFrame(
         [Row(doc_a=0, doc_b=1), Row(doc_a=1, doc_b=2)])
-    for fam in ("md5", "xxhash64"):
-        got = {(r.doc_a, r.doc_b): r.jaccard
-               for r in dedup.jaccard_on_candidates(
-                   docs, cand, hash_family=fam).collect()}
-        assert got == {(0, 1): 0.0, (1, 2): 0.0}, (fam, got)
+    got = {(r.doc_a, r.doc_b): r.jaccard
+           for r in dedup.jaccard_on_candidates(docs, cand).collect()}
+    assert got == {(0, 1): 0.0, (1, 2): 0.0}, got
 
 
 def test_incremental_near_dups_param_mismatch_raises(spark):
     """r4 advice: the cross-crawl screen silently trusted the caller to
-    probe with the same k/bands/hash_family the history signatures were
+    probe with the same k/bands/hash family the history signatures were
     built with - a mismatch matched nothing.  Build parameters are now
     stamped as column METADATA (persisted through parquet) and a
     mismatched probe raises instead of returning a silently-wrong set."""
@@ -664,9 +711,11 @@ def test_incremental_near_dups_param_mismatch_raises(spark):
         # metadata survives the parquet round-trip
         assert dedup._sig_meta(sig_rt)["ccspark_k"] == 3
         assert dedup._sig_meta(banded_rt)["ccspark_bands"] == 6
-        for bad in (dict(k=4), dict(hash_family="md5")):
-            with pytest.raises(ValueError):
-                dedup.incremental_near_dups(new, sig_rt, **bad)
+        with pytest.raises(ValueError):
+            dedup.incremental_near_dups(new, sig_rt, k=4)
+        # a history table stamped with another hash family
+        with pytest.raises(ValueError, match="hash family"):
+            dedup.incremental_near_dups(new, _stamp_md5(sig_rt))
         with pytest.raises(ValueError):   # pre-banded 6 probed with 4
             dedup.incremental_near_dups(new, banded_rt, bands=4)
         # matching parameters still work on both persisted layouts
@@ -683,26 +732,35 @@ def test_incremental_near_dups_param_mismatch_raises(spark):
         dedup.incremental_near_dups(new, bare, bands=4)
 
 
+def _stamp_md5(sig):
+    """*sig* stamped as an md5-family signature table (the layout an
+    older ccspark wrote)."""
+    from ccspark import dedup
+    meta = dict(dedup._sig_meta(sig), ccspark_hash_family="md5")
+    return sig.withColumn("m0", F.col("m0").alias("m0", metadata=meta))
+
+
 def test_banded_signatures_inherits_stamped_family(spark):
-    """Banding must INHERIT the signature table's stamped hash_family
-    (not clobber it with its own default): banding an md5 table with
-    default args previously re-stamped it xxhash64 and computed
-    xxhash64 digests over md5 string signatures - a later probe then
-    passed every stamped check and silently matched nothing.  An
-    explicitly contradictory family must raise."""
+    """Banding carries the signature table's stamp (family xxhash64,
+    bigint digests), and a table stamped with any other hash family
+    (e.g. an md5 table written by an older ccspark, whose digests no
+    probe built here can match) raises ValueError in both
+    banded_signatures and incremental_near_dups rather than silently
+    matching nothing."""
     from ccspark import dedup
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=" ".join(f"w{i}x{j}" for j in range(40)))
          for i in range(4)])
-    sig_md5 = dedup.minhash_signature_table(docs, hash_family="md5")
-    banded = dedup.banded_signatures(sig_md5)     # family inferred: md5
-    assert dedup._sig_meta(banded)["ccspark_hash_family"] == "md5"
-    # md5-family band digests are hex strings, not xxhash64 bigints
-    assert dict(banded.dtypes)["digest"] == "string"
-    with pytest.raises(ValueError, match="hash_family"):
-        dedup.banded_signatures(sig_md5, hash_family="xxhash64")
-    # and the inherited banding round-trips through the probe
+    sig = dedup.minhash_signature_table(docs)
+    banded = dedup.banded_signatures(sig)
+    assert dedup._sig_meta(banded)["ccspark_hash_family"] == "xxhash64"
+    assert dedup._sig_meta(banded)["ccspark_k"] == 3
+    assert dict(banded.dtypes)["digest"] == "bigint"
     new = docs.limit(1).select((F.col("doc_id") + 50).alias("doc_id"),
                                "text")
-    assert dedup.incremental_near_dups(
-        new, banded, hash_family="md5").count() == 0
+    assert dedup.incremental_near_dups(new, banded).count() == 0
+    sig_md5 = _stamp_md5(sig)
+    with pytest.raises(ValueError, match="hash family"):
+        dedup.banded_signatures(sig_md5)
+    with pytest.raises(ValueError, match="hash family"):
+        dedup.incremental_near_dups(new, sig_md5)

@@ -229,7 +229,7 @@ def test_hof_lambdas_reference_bound_columns(spark):
         return [ln for ln in plan_of(df).splitlines()
                 if "Generate" in ln and "lambdafunction" in ln]
 
-    df = dedup.shingles(docs)
+    df = dedup.shingle_hashes(docs)
     lines = generate_lines(df)
     assert lines, plan_of(df)
     for ln in lines:
@@ -272,9 +272,7 @@ def test_word_hash_kgrams_single_evaluation(spark):
 
     # single-branch plans: the fold must appear EXACTLY once
     assert folds(dedup.shingle_hashes(docs)) == 1
-    assert folds(dedup.minhash_signature_table(
-        docs, hash_family="xxhash64")) == 1
+    assert folds(dedup.minhash_signature_table(docs)) == 1
     # the pair query legitimately re-derives the signature subtree once
     # per join side (4 sides; uncached by design) - but never more
-    assert folds(dedup.minhash_near_dups(docs,
-                                         hash_family="xxhash64")) <= 4
+    assert folds(dedup.minhash_near_dups(docs)) <= 4

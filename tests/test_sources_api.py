@@ -370,30 +370,6 @@ def test_wet_parse_round_trip_digest(spark, tmp_path):
     assert sources.read_wet(spark, wet_dir).count() == 5
 
 
-def test_facade_sample_mixture(spark):
-    """api.sample_mixture: global budget split by proportions; absent
-    groups excluded; flags_only surfaces the derived per-group quota."""
-    from pyspark.sql import Row
-
-    cc = CCSparkCorpus(spark)
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, lang=("en", "de", "zh")[i % 3],
-             text=" ".join("w" * 3 for _ in range(10)))
-         for i in range(30)])            # 10 docs x 10 tokens per lang
-    out = cc.sample_mixture(docs, 50, {"en": 0.6, "de": 0.4})
-    by_lang = {}
-    for r in out.collect():
-        by_lang.setdefault(r.lang, []).append(r)
-    # en quota 30 -> greedy prefix of 3 docs; de quota 20 -> 2 docs
-    assert len(by_lang.get("en", [])) == 3
-    assert len(by_lang.get("de", [])) == 2
-    assert "zh" not in by_lang                # absent group: excluded
-    flags = cc.sample_mixture(docs, 50, {"en": 0.6, "de": 0.4},
-                              flags_only=True)
-    assert flags.count() == 30
-    assert {r.budget for r in flags.collect()} == {30, 20, 0}
-
-
 def test_facade_qq_diagnostics(spark):
     """api.qq_diagnostics (M6): sketch path by default, exact path on
     request, cleaned plot loses the planted outlier's point."""
