@@ -293,10 +293,13 @@ class CCSparkCorpus:
     def finalize(self, lid_pages: DataFrame, out_path: str | None = None,
                  country_limit: int = 150,
                  dedup_strategy: str = "keep_first") -> DataFrame:
-        """final_cc + geoWAC merge: per-country cap (W4, deterministic),
-        text dedup (keep_first = geoWAC.py:171; keep_none = :209), word
-        counts, optional 100k-sharded partitioned write.  Any other
-        *dedup_strategy* raises ValueError."""
+        """final_cc + geoWAC merge: per-country cap (W4, deterministic;
+        ``skew.cap_per_key``, one window that Spark bounds per map task
+        before the shuffle), text dedup (keep_first = geoWAC.py:171;
+        keep_none = :209), word counts, optional 100k-sharded
+        partitioned write.  Any other *dedup_strategy* raises
+        ValueError, and so does a *country_limit* above the session's
+        spark.sql.optimizer.windowGroupLimitThreshold."""
         if dedup_strategy not in ("keep_first", "keep_none"):
             raise ValueError(
                 f"unknown dedup_strategy {dedup_strategy!r}; expected "

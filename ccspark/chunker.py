@@ -72,7 +72,15 @@ def domain_samples(pages: DataFrame, chunksize: int = DEFAULT_CHUNK_WORDS,
     group must fit one task (AQE skew handling does not apply inside
     applyInPandas), so the deterministic per-key cap (the reference's own
     mitigation shape, geoWAC.py country_limit) is ON by default at
-    DEFAULT_MAX_ROWS_PER_DOMAIN; pass None to disable."""
+    DEFAULT_MAX_ROWS_PER_DOMAIN; pass None to disable.  The cap is
+    ``skew.cap_per_key``: its window shares the groupBy's exchange, and
+    Spark keeps at most the cap's rows per domain in each map task
+    before it.  A cap above the session's
+    spark.sql.optimizer.windowGroupLimitThreshold raises ValueError, so
+    the default cap needs a session from ``session.get_spark`` (which
+    sets the conf to DEFAULT_MAX_ROWS_PER_DOMAIN) or that conf set to at
+    least DEFAULT_MAX_ROWS_PER_DOMAIN; a stock session's 1000 rejects
+    it."""
     df = pages.select("domain", "url", "text")
     if max_rows_per_domain is not None:
         from ccspark.skew import cap_per_key

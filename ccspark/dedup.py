@@ -99,8 +99,6 @@ def _word_hash_kgrams(docs: DataFrame, text_col: str, k: int,
     Spark-4 re-inlining family as the kernel eval barrier).  With the
     expression inline the rule skips non-attribute generators and no
     duplicate evaluation exists (plan-asserted in tests)."""
-    from ccspark.skew import ensure_min_partitions
-    docs = ensure_min_partitions(docs, key=id_col)
     words = docs.select(F.col(id_col).alias(id_col),
                         F.split(F.col(text_col), " ").alias("_t"))
     wh = words.select(id_col,

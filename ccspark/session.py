@@ -58,6 +58,10 @@ def get_spark(app: str = "ccspark",
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # skew.cap_per_key needs the partial WindowGroupLimit, planned
+        # only for limits up to this (default 1000); 100000 is the
+        # largest default cap (chunker.DEFAULT_MAX_ROWS_PER_DOMAIN)
+        .config("spark.sql.optimizer.windowGroupLimitThreshold", "100000")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -9,10 +9,14 @@ Where skew lives in this workload and what handles it:
   * joins that do shuffle - AQE skew-join splitting is on (session.py);
   * per-URL windows - urls are fine-grained; a single url's lines always
     fit one task;
+  * per-key caps (the W4 country cap, the chunker's per-domain cap) -
+    ``cap_per_key`` below: one ``row_number()`` window whose top-k
+    Spark's ``InferWindowGroupLimit`` pushes below the exchange as a
+    partial ``WindowGroupLimit``, so each map task ships at most *limit*
+    rows per key however hot the key is;
   * per-DOMAIN sequential operators (the greedy chunker) - a mega-domain
-    must be processed by one task; the mitigations are the deterministic
-    per-key cap below (the reference's own answer: country_limit=150,
-    geoWAC.py:149-152) or pre-splitting by url prefix.
+    must be processed by one task; the mitigation is that per-key cap
+    (the reference's own answer: country_limit=150, geoWAC.py:149-152).
 """
 
 from __future__ import annotations
@@ -20,89 +24,42 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-
-def ensure_min_partitions(df: DataFrame, key: str | None = None,
-                          min_parts: int | None = None) -> DataFrame:
-    """Guard against UNDER-partitioned inputs (optimization guide par.2.5
-    "input skew": one small/unsplittable file = one scan partition = every
-    narrow map stage runs on ONE core).  If *df* currently has fewer
-    partitions than *min_parts* (default: the session's
-    spark.sql.shuffle.partitions, which ccspark.session derives from the
-    core count), hash-repartition it on *key* (deterministic - a
-    round-robin repartition would pay the sortBeforeRepartition local
-    sort and is retry-fragile per SPARK-38388); otherwise return *df*
-    unchanged.  Scale-adaptive by construction: a 100 TB scan arrives
-    with thousands of splits and passes through untouched - only the
-    pathological single-split read pays the one extra exchange, which
-    the 32x map parallelism immediately repays (measured 6-12x on the
-    documents-family queries at bench scale)."""
-    sess = df.sparkSession
-    n = min_parts or int(sess.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        cur = df.rdd.getNumPartitions()
-    except Exception:       # unresolvable plan (e.g. streaming) - skip
-        return df
-    if cur >= n:
-        return df
-    return df.repartition(n, key) if key else df.repartition(n)
+THRESHOLD_CONF = "spark.sql.optimizer.windowGroupLimitThreshold"
 
 
 def cap_per_key(df: DataFrame, key: str, limit: int,
-                tiebreak: str = "url", salt_n: int = 16) -> DataFrame:
+                tiebreak: str = "url") -> DataFrame:
     """W4 (geoWAC.py:149-152): deterministically keep at most *limit*
-    rows per key - selection pinned by md5(tiebreak) rather than
-    random.shuffle so results are stable across runs and executors.
+    rows per key - the first *limit* under (md5(tiebreak), tiebreak),
+    rather than random.shuffle, so results are stable across runs and
+    executors.
 
-    SALTED TWO-PHASE top-k, not a per-key window: a single
-    row_number() OVER (PARTITION BY key) funnels the hottest key's
-    EVERY row through one task's sort just to keep *limit* of them -
-    the skewed-key full-window trap, which this two-phase form
-    avoids.  Phase 1 keeps the local top-*limit* within each
-    of *salt_n* deterministic sub-buckets of a key (hash(tiebreak) %
-    salt_n - the hot key's rows sort on salt_n tasks in parallel, each
-    sorting ~1/salt_n of them); phase 2 keeps the global top-*limit*
-    over the surviving <= limit*salt_n candidates per key - a bounded
-    set regardless of how hot the key is.  Selection is by total order
-    (md5(tiebreak), tiebreak), so every global top-*limit* row is also
-    in its own sub-bucket's top-*limit*: phase 1 can never evict a
-    final survivor, and the result is provably identical to the
-    one-window form (``cap_per_key_window``, kept as the parity
-    anchor; equality asserted in tests).  Every module/facade path
-    routes here.
+    One ``row_number()`` window filtered by ``<= limit``.  Spark's
+    ``InferWindowGroupLimit`` turns that into a ``WindowGroupLimit``
+    pair: a Partial one in each map task below ``Exchange
+    hashpartitioning(key)`` and a Final one above it, so the hot key
+    ships at most limit x map-partitions rows, not all of them.  Spark
+    only does this when *limit* is at most THRESHOLD_CONF
+    (``session.get_spark`` raises it to the largest default cap); a
+    larger *limit*, or a threshold of -1 (rule off), raises ValueError
+    before any job runs, since the window would then sort every row of
+    the hot key in one task.  (Spark also skips the partial when the
+    input has at most *limit* rows - then there is nothing to bound.)
 
-    Reserved temp columns: ``_salt`` and ``_rk`` are created via
-    withColumn and dropped on exit - same-named INPUT columns would be
-    silently clobbered.  Rename such columns before calling (r6 ADVICE
-    note).
+    Reserved temp column: ``_rk`` is created and dropped - a same-named
+    input column would be clobbered.
 
     Determinism precondition: *tiebreak* must be unique within a key.
-    Rows sharing a tiebreak value share the entire sort key (and the
-    same salt bucket), so row_number breaks their tie by physical
-    order - WHICH of the tied rows survives a boundary cut is then
-    arbitrary in this form, in the window anchor, and across runs
-    (the cap itself is always respected; full-duplicate rows are
-    unaffected since any choice yields the same output).  The pipeline
-    satisfies this by construction - url is unique after URL dedup -
-    but callers capping on a non-unique column should pre-dedup or
-    pick a unique tiebreak."""
-    ords = [F.md5(F.col(tiebreak)).asc(), F.col(tiebreak).asc()]
-    w1 = Window.partitionBy(key, "_salt").orderBy(*ords)
-    w2 = Window.partitionBy(key).orderBy(*ords)
-    return (df.withColumn("_salt", F.pmod(F.xxhash64(F.col(tiebreak)),
-                                          F.lit(salt_n)))
-              .withColumn("_rk", F.row_number().over(w1))
-              .where(F.col("_rk") <= limit)
-              .drop("_rk")
-              .withColumn("_rk", F.row_number().over(w2))
-              .where(F.col("_rk") <= limit)
-              .drop("_rk", "_salt"))
-
-
-def cap_per_key_window(df: DataFrame, key: str, limit: int,
-                       tiebreak: str = "url") -> DataFrame:
-    """The one-window rendering of ``cap_per_key`` - the parity anchor.
-    Do NOT use on production paths: PARTITION BY key alone sorts the
-    hottest key's entire row set in ONE task at 100x scale."""
+    Rows sharing a tiebreak value share the whole sort key, so WHICH of
+    them survives a boundary cut is arbitrary (the cap itself always
+    holds; full-duplicate rows are unaffected).  The pipeline satisfies
+    this by construction - url is unique after URL dedup."""
+    threshold = int(df.sparkSession.conf.get(THRESHOLD_CONF))
+    if limit > threshold:
+        raise ValueError(
+            f"cap_per_key limit {limit} is above {THRESHOLD_CONF}="
+            f"{threshold}: Spark would not bound the per-key window "
+            "before the shuffle; raise the conf or lower the limit")
     w = Window.partitionBy(key).orderBy(F.md5(F.col(tiebreak)), tiebreak)
     return (df.withColumn("_rk", F.row_number().over(w))
               .where(F.col("_rk") <= limit).drop("_rk"))

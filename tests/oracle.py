@@ -29,10 +29,14 @@ scorer are checked against a model and scores computed without them.
 The near-dup layer (ccspark.dedup) is restated from a pure-Python XXH64
 (``xxhash64``, checked against Spark's): the word-k-gram hash fold, the
 MinHash signature and the ``dedup_near`` survivor set.
+
+The per-key cap (ccspark.skew) is restated with ``hashlib.md5`` and a
+per-group sort (``cap_per_key``).
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import re
 import string
@@ -591,3 +595,20 @@ def dedup_near(docs, threshold: float = 0.5, k: int = 3,
                     rx, ry = find(x), find(y)
                     parent[max(rx, ry)] = min(rx, ry)
     return {i for i in ids if find(i) == i}
+
+
+def cap_per_key(rows, key: str, limit: int, tiebreak: str = "url") -> list:
+    """skew.cap_per_key over mapping rows: per *key* value, the first
+    *limit* rows under (md5 hex of *tiebreak*, *tiebreak*), NULL
+    tiebreaks first."""
+    groups = {}
+    for r in rows:
+        groups.setdefault(r[key], []).append(r)
+
+    def order(r):
+        t = r[tiebreak]
+        if t is None:
+            return (False, "", "")
+        return (True, hashlib.md5(t.encode()).hexdigest(), t)
+
+    return [r for g in groups.values() for r in sorted(g, key=order)[:limit]]

@@ -93,6 +93,24 @@ def test_dedup_keep_none(spark):
     assert [r.text for r in out] == [oracle.verdict(GOOD2)[0]]
 
 
+def test_dedup_keep_none_matches_python(spark):
+    """keep-none drops every row of a repeated key - NULL keys group
+    (and drop) together - and keeps the input column order."""
+    from collections import Counter
+
+    from ccspark.dedup import dedup_keep_none
+    rows = [(f"u{i}", None if i % 9 == 0 else i % 7, f"t{i}")
+            for i in range(60)] + [("solo", 100, "s"), ("nul", None, "n")]
+    df = spark.createDataFrame(rows, "url string, hash long, text string")
+    n = Counter(h for _, h, _ in rows)
+    want = sorted(r for r in rows if n[r[1]] == 1)
+    for parts in (1, 4):
+        out = dedup_keep_none(df.repartition(parts))
+        assert out.columns == ["url", "hash", "text"]
+        got = sorted(tuple(r) for r in out.collect())
+        assert got == want, parts
+
+
 def test_metrics_match_oracle(spark):
     texts = [f"{GOOD}\nshort", f"{GOOD}\n{GOOD2}", "tiny"]
     pages = make_pages(spark, [

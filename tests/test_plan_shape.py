@@ -135,25 +135,25 @@ def test_keep_first_map_side_combining(spark):
 
 
 def test_finalize_dedup_is_aggregate(spark):
-    """api.finalize end-to-end: the per-country cap is the SALTED
-    two-phase top-k (r5) - exactly two row_number windows, the local
-    one partitioned by (country, salt) so no hot country ever sorts on
-    one task, the global one over the bounded <= limit*salt_n candidate
-    set - and the text dedup is aggregate-form with a map-side partial
-    phase (no dedup window at all)."""
+    """api.finalize end-to-end: the per-country cap is ONE row_number
+    window whose partial WindowGroupLimit Spark runs below the exchange
+    on country (the input has more rows than the cap), and the text
+    dedup is aggregate-form with a map-side partial phase (no dedup
+    window) - two exchanges in all."""
     from ccspark.api import CCSparkCorpus
     lid_pages = spark.createDataFrame(
         [(f"http://d{i}.de/p", "Germany", "europe", f"text {i % 5}")
-         for i in range(20)],
+         for i in range(400)],
         "url string, country string, region string, text string")
     out = CCSparkCorpus(spark).finalize(lid_pages)
     plan = plan_of(out)
     windows = [ln for ln in plan.splitlines()
                if re.search(r"\bWindow \[", ln)]
-    assert len(windows) == 2, plan               # the 2-phase cap only
-    salted = [ln for ln in windows if "_salt" in ln]
-    assert len(salted) == 1, plan                # phase 1 rides the salt
+    assert len(windows) == 1, plan               # the cap only
+    assert re.search(r"WindowGroupLimit \[country.*, 150, Partial", plan), \
+        plan
     assert "partial_min" in plan, plan
+    assert len(re.findall(r"\bExchange ", plan)) == 2, plan
     assert out.count() == 5
 
 
