@@ -3,21 +3,45 @@
 Local-mode defaults come from the host: ``local[<usable cores>]`` and a
 driver heap of half the physical RAM, capped at 24g (one JVM holds every
 executor thread).  ``SPARK_GRAFT_CPUS`` and ``CCSPARK_DRIVER_MEM``
-override them.  The same configs are what we'd submit to a real cluster
-via spark-submit --py-files, minus master/memory which come from the
-cluster manager.  AQE is on so skewed shuffles (giant domains) are split
-at runtime; shuffle partitions sized to cores rather than the 200
-default.
+override them.  ``SQL_CONFS`` are the fixed SQL settings the package
+relies on; ``scripts/submit_job.py`` applies the same mapping to a
+spark-submit session, where master and memory come from the cluster
+manager.  AQE is on so skewed shuffles (giant domains) are split at
+runtime; shuffle partitions sized to cores rather than the 200 default.
+
+``get_spark`` also starts the Python workers from ``ccspark.daemon``
+(``spark.python.daemon.module``), which imports pyspark compiled rather
+than from the bytecode-free ``pyspark.zip`` (see ``ccspark._zipstat``),
+unless the launch conf (``PYSPARK_SUBMIT_ARGS``, ``spark-defaults.conf``)
+already names a daemon module.  So that the workers can import
+ccspark from any working directory, it appends the directory holding
+the ``ccspark`` package (or its zip) to ``spark.executorEnv.PYTHONPATH``.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
-
 DRIVER_MEM_CAP_GB = 24
+DAEMON_MODULE = "spark.python.daemon.module"
+WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+
+SQL_CONFS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "20000",
+    "spark.sql.files.maxPartitionBytes": "134217728",
+    # skew.cap_per_key needs the partial WindowGroupLimit, planned only
+    # for limits up to this (default 1000); 100000 is the largest
+    # default cap (chunker.DEFAULT_MAX_ROWS_PER_DOMAIN)
+    "spark.sql.optimizer.windowGroupLimitThreshold": "100000",
+}
 
 
 def host_defaults(env, usable_cores: int,
@@ -44,25 +68,27 @@ def get_spark(app: str = "ccspark",
         os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
     cores = cores or default_cores
     shuffle_partitions = shuffle_partitions or max(cores, 8)
-    builder = (
-        SparkSession.builder
-        .master(f"local[{cores}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", driver_mem)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # skew.cap_per_key needs the partial WindowGroupLimit, planned
-        # only for limits up to this (default 1000); 100000 is the
-        # largest default cap (chunker.DEFAULT_MAX_ROWS_PER_DOMAIN)
-        .config("spark.sql.optimizer.windowGroupLimitThreshold", "100000")
-    )
-    spark = builder.getOrCreate()
+    conf = {
+        "spark.master": f"local[{cores}]",
+        "spark.app.name": app,
+        "spark.driver.memory": driver_mem,
+        "spark.ui.enabled": "false",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        **SQL_CONFS,
+    }
+    if SparkContext._gateway is None:
+        # the JVM starts here, with these confs on its command line (so
+        # the driver heap is set)
+        SparkContext._ensure_initialized(
+            conf=SparkConf().setAll(conf.items()))
+    launch = SparkConf()    # the confs the JVM was started with
+    if not launch.contains(DAEMON_MODULE):
+        conf[DAEMON_MODULE] = "ccspark.daemon"
+    # the directory holding the ccspark package (or its zip), after the
+    # caller's entries
+    conf[WORKER_PATH] = os.pathsep.join(p for p in (
+        launch.get(WORKER_PATH),
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))) if p)
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -12,6 +12,12 @@ for language-aware gates, lang - e.g. the materialized test pages
 (tests/fixtures.py:pages_cache_path).  On a real cluster only --master
 and the memory/executor flags change; the job itself is identical.
 Prints one JSON line with row counts so the invocation is verifiable.
+
+The session gets the package's fixed SQL settings
+(``ccspark.session.SQL_CONFS``; master and memory stay with spark-submit).
+It keeps Spark's own Python daemon: on a standalone cluster the
+``--py-files`` zip reaches a worker only per task, after the daemon has
+started, so a daemon module inside the zip could not be imported.
 """
 
 from __future__ import annotations
@@ -28,11 +34,13 @@ def main() -> None:
     pages_path = sys.argv[1]
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/ccspark_submit_out"
 
-    spark = SparkSession.builder.appName("ccspark-submit").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     from ccspark.api import CCSparkCorpus
     from ccspark import pipeline
+    from ccspark.session import SQL_CONFS
+
+    spark = (SparkSession.builder.appName("ccspark-submit")
+             .config(map=SQL_CONFS).getOrCreate())
+    spark.sparkContext.setLogLevel("WARN")
 
     pages = spark.read.parquet(pages_path)
     cc = CCSparkCorpus(spark)

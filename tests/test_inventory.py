@@ -20,7 +20,7 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 MODULES = {
     "__init__", "_zipstat", "api", "arrowgate", "arrowkernel",
-    "checkpoint", "chunker", "decontam", "dedup", "geo", "lid",
+    "checkpoint", "chunker", "daemon", "decontam", "dedup", "geo", "lid",
     "pipeline", "quality", "regexes", "scrub", "session",
     "skew", "sources", "sqlgen", "unicode_ranges",
 }

@@ -1,11 +1,14 @@
-"""The stat-gated zip directory reload in ``ccspark._zipstat``.
+"""The stat-gated zip directory reload and the ``pyspark.zip`` path
+order in ``ccspark._zipstat``.
 
 Without Spark: a subprocess that carries the worker marker puts a zip it
 builds on ``sys.path``, imports from it, and counts
 ``zipimport._read_directory`` calls around
-``importlib.invalidate_caches()``.  Through Spark: a reused Python
-worker that has imported ccspark must not re-read ``pyspark.zip`` when
-its next task starts.
+``importlib.invalidate_caches()``.  Path order: a subprocess gets a fake
+``pyspark.zip`` and a fake installed pyspark under ``tmp_path`` on its
+``PYTHONPATH``, imports ccspark, then pyspark, and reports where pyspark
+came from.  Through Spark: a reused Python worker that has imported
+ccspark must not re-read ``pyspark.zip`` when its next task starts.
 """
 
 from __future__ import annotations
@@ -15,6 +18,7 @@ import os
 import subprocess
 import sys
 import textwrap
+import zipfile
 
 import pytest
 
@@ -198,3 +202,73 @@ def test_reused_worker_does_not_reread_pyspark_zip(spark):
     seen = [r.rereads for r in rows if r.rereads >= 0]
     assert seen, f"no task ran on a reused worker: {rows}"
     assert seen == [0] * len(seen), rows
+
+
+# Imports ccspark (which may reorder sys.path) and then pyspark, after
+# importing pyspark first when argv[1] says so.  Prints one JSON object.
+ORDER_PROBE = textwrap.dedent("""
+    import json, sys
+    before = list(sys.path)
+    if sys.argv[1] == "pyspark-first":
+        import pyspark
+    import ccspark
+    import pyspark
+    print(json.dumps({"before": before, "after": sys.path,
+                      "file": pyspark.__file__}))
+""")
+
+
+def _order_probe(tmp_path, marker: bool, installed_version: str = "1.2.3",
+                 mode: str = "") -> tuple[dict, str, str]:
+    """(probe result, fake pyspark.zip, fake installed tree); the zip's
+    pyspark is version 1.2.3."""
+    lib, site = tmp_path / "lib", tmp_path / "site"
+    lib.mkdir()
+    (site / "pyspark").mkdir(parents=True)
+    (site / "pyspark" / "__init__.py").write_text("")
+    (site / "pyspark" / "version.py").write_text(
+        f"__version__ = {installed_version!r}\n")
+    zpath = str(lib / "pyspark.zip")
+    with zipfile.ZipFile(zpath, "w") as z:
+        z.writestr("pyspark/__init__.py", "")
+        z.writestr("pyspark/version.py", "__version__ = '1.2.3'\n")
+    py4j = str(lib / "py4j-0.0-src.zip")
+    with zipfile.ZipFile(py4j, "w") as z:
+        z.writestr("py4j/__init__.py", "")
+    # Spark's order: pyspark.zip, py4j's zip, then the caller's entries
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        [zpath, py4j, ROOT, str(site)]))
+    env.pop(MARKER, None)
+    if marker:
+        env[MARKER] = "x"
+    out = subprocess.run([sys.executable, "-c", ORDER_PROBE, mode],
+                         env=env, cwd=str(tmp_path), capture_output=True,
+                         text=True, check=True)
+    return json.loads(out.stdout.strip().splitlines()[-1]), zpath, str(site)
+
+
+def test_worker_imports_installed_pyspark_of_the_zips_version(tmp_path):
+    r, zpath, site = _order_probe(tmp_path, marker=True)
+    assert r["file"].startswith(site + os.sep), r["file"]
+    # only the pyspark zip moves, to the end; py4j's zip and every other
+    # entry keep their order
+    assert r["after"] == [p for p in r["before"] if p != zpath] + [zpath]
+
+
+def test_worker_keeps_zip_first_when_versions_differ(tmp_path):
+    r, zpath, _ = _order_probe(tmp_path, marker=True,
+                               installed_version="1.2.4")
+    assert r["after"] == r["before"]
+    assert r["file"].startswith(zpath + os.sep), r["file"]
+
+
+def test_worker_with_pyspark_imported_keeps_path(tmp_path):
+    r, zpath, _ = _order_probe(tmp_path, marker=True, mode="pyspark-first")
+    assert r["after"] == r["before"]
+    assert r["file"].startswith(zpath + os.sep), r["file"]
+
+
+def test_driver_keeps_path(tmp_path):
+    r, zpath, _ = _order_probe(tmp_path, marker=False)
+    assert r["after"] == r["before"]
+    assert r["file"].startswith(zpath + os.sep), r["file"]
