@@ -28,8 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ccspark import (
-    chunker, dedup, lid as lid_mod, pipeline, quality, scrub as scrub_mod,
-    skew, sources,
+    chunker, dedup, geo, lid as lid_mod, pipeline, quality,
+    scrub as scrub_mod, skew, sources,
 )
 
 _LINE_COLS = ["domain", "tld", "country", "region", "url"]
@@ -39,28 +39,30 @@ class CCSparkCorpus:
     def __init__(self, spark: SparkSession,
                  countries_to_skip: tuple[str, ...] = (),
                  url_filter: DataFrame | None = None):
+        """*url_filter* (column ``domain``) replaces the built-in MNC
+        list; it is collected here, once (geo.filter_domains)."""
         self.spark = spark
         self.countries_to_skip = tuple(countries_to_skip)
         self.url_filter = url_filter
+        self._geo_args = {
+            "mnc_domains": None if url_filter is None
+            else geo.filter_domains(url_filter),
+            "countries_to_skip": frozenset(self.countries_to_skip)}
 
     # ---- ingestion + quality-filter kernel (stage 3.1) ----
 
     def process_wet(self, path_glob: str) -> DataFrame:
         """WET segment files -> deduplicated corpus lines (the
         automatically_process_crawl flow, cc_corpus.py:353-381)."""
-        pages = sources.read_wet(self.spark, path_glob)
-        return self.process_pages(pages.withColumn("lang", F.lit(None)
-                                                   .cast("string")))
+        return self.process_pages(sources.read_wet(self.spark, path_glob))
 
     def process_pages(self, pages: DataFrame) -> DataFrame:
-        """pages table -> geo gate -> fused split + clean/keep kernel +
+        """pages table -> fused geo gate + split + clean/keep kernel +
         line ordinal -> keep-first dedup (corpus_lines schema without
         lang).  One row per url is assumed: with duplicate urls each row
         numbers its own lines (see pipeline.explode_clean_fused)."""
-        geo_pages = pipeline.with_geo(pages, self.url_filter,
-                                      self.countries_to_skip)
         return pipeline.dedup_lines(pipeline.explode_clean_fused(
-            geo_pages.select(*_LINE_COLS, "text")), _LINE_COLS)
+            pages.select("url", "text"), **self._geo_args), _LINE_COLS)
 
     def build_training_corpus(self, pages: DataFrame,
                               gopher: bool = True, c4: bool = True,
@@ -70,10 +72,12 @@ class CCSparkCorpus:
                               domain_min_keep: float | None = None,
                               with_metrics: bool = False):
         """The quality_filter composite a modern training-data pipeline
-        runs: document gates FIRST (Gopher + C4 page rules - whole-batch
-        Arrow gates that prune whole pages before the line split), then
-        the reference line kernel + geo gate + dedup (process_pages),
-        then the PII scrub over the surviving lines.
+        runs: the geo gate, then the document gates (Gopher + C4 page
+        rules - whole-batch Arrow gates that prune whole pages before the
+        line split), then the reference line kernel + dedup
+        (process_pages), then the PII scrub over the surviving lines.
+        The geo gate, the document gates, the kernel and the scrub run in
+        one fused Arrow stage (pipeline.explode_clean_fused).
 
         The Gopher gate is LANGUAGE-AWARE by default when the pages carry
         a ``lang`` column (per-row stopword sets, CJK-safe word counts;
@@ -137,34 +141,28 @@ class CCSparkCorpus:
         quality.gopher_thresholds(gopher_thresholds)
         lang_col = "lang" if (lang_aware and "lang" in pages.columns) \
             else None
-        # geo gate FIRST: host/ccTLD/MNC is a cheap projection + two
-        # broadcast joins that prunes non-geographic pages before the doc
-        # gates' full text pass (the filters commute, so output is
-        # unchanged; the oracle twin has always been geo-first)
-        df = pipeline.with_geo(pages, self.url_filter,
-                               self.countries_to_skip)
         obs = Observation() if with_metrics else None
         lines = self._fused_gated_lines(
-            df, lang_col, gopher_thresholds, gopher=gopher, c4=c4,
+            pages, lang_col, gopher_thresholds, gopher=gopher, c4=c4,
             domain_min_keep=domain_min_keep, obs=obs, scrub=scrub_pii)
         if not with_metrics:
             return lines
         return lines, lambda: dict(obs.get)
 
-    def _fused_gated_lines(self, geo_pages: DataFrame,
+    def _fused_gated_lines(self, pages: DataFrame,
                            lang_col: str | None,
                            thresholds: dict | None,
                            gopher: bool = True,
                            c4: bool = True,
                            domain_min_keep: float | None = None,
                            obs=None, scrub: bool = False) -> DataFrame:
-        """Line pipeline with the Gopher/C4 document gates, the domain
-        rollup's page verdicts and (*scrub*) the PII chain fused into
-        the single mapInArrow stage (see pipeline.explode_clean_fused);
-        *obs* observes the lineage counters on its page and line rows.
-        The dedup hashes the pre-scrub text (pipeline.dedup_lines)."""
-        from pyspark.sql.window import Window
-        in_cols = _LINE_COLS + ([lang_col] if lang_col else [])
+        """Line pipeline with the geo gate, the Gopher/C4 document gates,
+        the domain rollup's page verdicts and (*scrub*) the PII chain
+        fused into the single mapInArrow stage (see
+        pipeline.explode_clean_fused); *obs* observes the lineage
+        counters on its page and line rows.  The dedup hashes the
+        pre-scrub text (pipeline.dedup_lines)."""
+        in_cols = ["url"] + ([lang_col] if lang_col else [])
         rollup = domain_min_keep is not None
 
         def page_gate(chunk):
@@ -218,14 +216,10 @@ class CCSparkCorpus:
 
         page_rows = rollup or obs is not None
         df = pipeline.explode_clean_fused(
-            geo_pages.select(*in_cols, "text"), page_gate=page_gate,
-            page_rows=page_rows, scrub=scrub)
+            pages.select(*in_cols, "text"), page_gate=page_gate,
+            page_rows=page_rows, scrub=scrub, **self._geo_args)
         if rollup:
-            frac = quality.domain_keep_frac(
-                "gopher_keep", Window.partitionBy("domain"))
-            df = (df.withColumn("_keep_frac", frac)
-                  .where(F.col("domain").isNotNull()
-                         & (F.col("_keep_frac") >= domain_min_keep)))
+            df = quality.domain_gate(df, domain_min_keep)
         if obs is not None:
             page = F.col("line_id").isNull()
             df = df.observe(

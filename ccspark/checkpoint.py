@@ -82,7 +82,7 @@ def build_resumable(spark: SparkSession, pages: DataFrame, root: str,
         # metrics (page rows + line rows) both derive from the persisted
         # stage output, so the bucket's pages are read once
         rows = pipeline.explode_clean_fused(
-            pipeline.with_geo(part).select(*cols, "text"), page_rows=True)
+            part.select("lang", "url", "text"), page_rows=True)
         rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
         out = pipeline.dedup_lines(
             rows.where(F.col("line_id").isNotNull()), cols)

@@ -1,4 +1,4 @@
-"""URL geography: host/domain/ccTLD extraction + broadcast dimension tables.
+"""URL geography: the geo gate as one Arrow batch function.
 
 Reference semantics (cc_corpus.py:244-248, utilities.py:226-228):
 
@@ -6,21 +6,31 @@ Reference semantics (cc_corpus.py:244-248, utilities.py:226-228):
     is ``suffix.split('.')[-1]`` - i.e. the LAST label of the public suffix,
     which for any host under a known TLD equals the last hostname label.
   * a page survives only if that label is a key of COUNTRY_CODE_NAME
-    (ccspark/data/cctld.csv) - this is a ~345-row broadcast inner join;
+    (ccspark/data/cctld.csv, ~345 rows);
   * and its registrable *domain* label is not in the multinational filter
-    (url_filter.txt + utilities.py:148-219) - a broadcast anti join.
+    (url_filter.txt + utilities.py:148-219).
+
+``geo_batch`` makes that decision for a batch of urls, first thing in
+the fused line stage (pipeline.explode_clean_fused).  The host comes from
+four RE2 kernels over the batch (``_HOST_CUTS``, a newline being an
+ordinary character); lowercasing, the tld (the last dot-label, '' when
+the host ends in '.'), the PSL walk, the ccTLD lookup and the MNC test
+run in Python once per DISTINCT host.  A NULL url fails.  The ccTLD dict
+and the MNC set are built once per process, at import.
+
+The host used to be lowercased by Spark's ``lower()``; Python's
+``str.lower`` agrees with it on every code point except the 27 newer
+Unicode capitals ccspark.lid's docstring lists (Spark lowercases them,
+Python 3.11 keeps them).  No ccTLD or MNC entry holds one, so only the
+``host`` and ``domain`` spelling of such a page could differ, never its
+verdict.
 
 ``tldextract``'s Public Suffix List lookup is reproduced with the real PSL
 algorithm over a vendored rule file in the UPSTREAM format
 (``ccspark/data/psl_snapshot.dat`` - exact rules, ``*.`` wildcards, ``!``
-exceptions, ICANN + PRIVATE sections; a pinned public-knowledge subset,
-regenerated by scripts/gen_psl_snapshot.py).  Private-domain rules are
-applied like tldextract's default configuration does (the reference's
-setup): ``user.github.io`` / ``myblog.blogspot.com`` register under the
-platform suffix, so platform-hosted pages don't collapse into one giant
-pseudo-domain.  Dropping in the full
-publicsuffix.org/list/public_suffix_list.dat gives complete fidelity with
-zero code changes.  Matching follows the PSL spec: exceptions beat
+exceptions, ICANN + PRIVATE sections, as in tldextract's default; a
+pinned subset, regenerated by scripts/gen_psl_snapshot.py; the full
+public_suffix_list.dat drops in with zero code changes).  Matching follows the PSL spec: exceptions beat
 wildcards, longest rule wins, the registrable domain is the label left of
 the matched public suffix (``trademe.co.nz`` -> ``trademe``;
 ``council.aberdeenshire.sch.uk`` -> ``council``, since ``*.sch.uk`` makes
@@ -28,21 +38,20 @@ the matched public suffix (``trademe.co.nz`` -> ``trademe``;
 via ``!www.ck``).  One pragmatic divergence, kept
 from round 1: a host that IS a bare public suffix (``http://co.uk/``)
 yields its second-from-last label instead of tldextract's empty domain -
-only the MNC anti-join key is affected.
+only the MNC key is affected.
 
 IDN ccTLDs: the reference dicts key on the UNICODE form only
 (cc_corpus.py:21-74; its own TODO at WET_processor.py:51 notes real crawl
 URLs carry the punycode ``xn--`` form instead, so every IDN page silently
 failed its geo gate).  Fixed here as data, not code: cctld.csv carries
 each IDN ccTLD twice - unicode AND punycode (``рф`` + ``xn--p1ai``, both
--> Russia) - so either host form gates correctly through the same
-broadcast join.
+-> Russia) - so either host form gates correctly.
 """
 
 from __future__ import annotations
 
-from ccspark.sqlgen import lit, rrep
-
+import pyarrow as pa
+import pyarrow.compute as pc
 
 # --------------------------------------------------------------------------
 # Public Suffix List (vendored snapshot, upstream file format)
@@ -52,8 +61,7 @@ def _parse_psl_text(text: str):
     exceptions) rule sets.  Every parsed rule must land in a shape the
     engine handles (a '*' only as the ENTIRE leftmost label - the only
     form the PSL spec defines); anything else fails loudly at import so
-    an unsupported rule can never silently change the MNC anti-join
-    key."""
+    an unsupported rule can never silently change the MNC key."""
     exact, wild, exc = set(), set(), set()
     for line in text.splitlines():
         line = line.strip()
@@ -72,157 +80,139 @@ def _parse_psl_text(text: str):
     return exact, wild, exc
 
 
-def _load_psl():
-    """Read ccspark/data/psl_snapshot.dat through importlib.resources
-    (zip-safe, like the dimension CSVs) and parse it."""
+def _data(name: str) -> str:
+    """A file of ccspark/data, read through importlib.resources so the
+    package works both from a checkout and from the spark-submit
+    --py-files zip."""
     import importlib.resources as _res
-
-    text = _res.files("ccspark").joinpath("data/psl_snapshot.dat") \
-        .read_text(encoding="utf-8")
-    return _parse_psl_text(text)
+    return _res.files("ccspark").joinpath(f"data/{name}").read_text(
+        encoding="utf-8")
 
 
-PSL_EXACT, PSL_WILDCARD_PARENTS, PSL_EXCEPTIONS = _load_psl()
+PSL_EXACT, PSL_WILDCARD_PARENTS, PSL_EXCEPTIONS = _parse_psl_text(
+    _data("psl_snapshot.dat"))
+
+# one dict over every rule: suffix -> kind bits
+_EXACT, _WILD, _EXCEPTION = 1, 2, 4
+_PSL = {}
+for _kind, _rules in ((_EXACT, PSL_EXACT), (_WILD, PSL_WILDCARD_PARENTS),
+                      (_EXCEPTION, PSL_EXCEPTIONS)):
+    for _rule in _rules:
+        _PSL[_rule] = _PSL.get(_rule, 0) | _kind
 
 
-def _by_depth(rules) -> dict[int, tuple[str, ...]]:
-    """Partition a rule set by label count (depth) for the SQL CASE
-    generator, so EVERY depth present in the data file is handled - no
-    hard-coded 2/3-label tiers."""
-    out: dict[int, list[str]] = {}
-    for r in rules:
-        out.setdefault(r.count(".") + 1, []).append(r)
-    return {k: tuple(sorted(v)) for k, v in out.items()}
-
-
-_EXACT_BY_DEPTH = _by_depth(PSL_EXACT)
-_WILD_BY_DEPTH = _by_depth(PSL_WILDCARD_PARENTS)   # parent depth; rule = +1
-_EXC_BY_DEPTH = _by_depth(PSL_EXCEPTIONS)
-# deepest public suffix any rule can produce (wildcard parent depth k
-# yields a suffix of depth k+1)
-_MAX_SUFFIX_DEPTH = max(
-    [0] + list(_EXACT_BY_DEPTH) + [k + 1 for k in _WILD_BY_DEPTH])
-
-
-# --------------------------------------------------------------------------
-# Spark SQL expression builders
-
-def host_expr(url: str) -> str:
-    """Lowercased hostname: strip scheme, take authority, strip
-    userinfo + port."""
-    no_scheme = rrep(url, "^[A-Za-z][A-Za-z0-9+.-]*://", "")
-    auth = f"regexp_extract({no_scheme}, {lit('^([^/?#]*)')}, 1)"
-    no_user = rrep(auth, "^[^@]*@", "")
-    no_port = rrep(no_user, ":[0-9]*\\z", "")
-    return f"lower({no_port})"
-
-
-def tld_expr(host: str) -> str:
-    """Last dot-label of the host (the reference's suffix.split('.')[-1])."""
-    last_label = lit("([^.]+)\\z")
-    return f"regexp_extract({host}, {last_label}, 1)"
-
-
-def domain_expr(host: str) -> str:
-    """Registrable domain label (tldextract's ``domain`` field): the PSL
-    algorithm rendered as one CASE over the vendored rule sets - exception
-    rules first (they beat wildcards), then longest match.  Equal to
-    the Python PSL walk tests/oracle.py::registrable_domain (asserted in
-    tests/test_geo_helpers.py and the domain fuzz); the IN-lists compile
-    to Catalyst OptimizedInSet, so this stays a pure projection - no
-    join, no UDF.  Arms are GENERATED per rule depth
-    found in the data file (not fixed 2/3-label tiers), so dropping in
-    the full public_suffix_list.dat - which carries 4+-label exact rules
-    and 3-label wildcards - renders a complete CASE."""
-    dot = lit("\\.")
-    labels = f"split({host}, {dot})"
-    n = f"size({labels})"
-
-    def label(i: int) -> str:          # 1-based; negative from the end
-        return f"element_at({labels}, {i})"
-
-    def lastk(k: int) -> str:
-        parts = [label(-i) for i in range(k, 0, -1)]
-        return parts[0] if k == 1 else \
-            "concat(" + ", '.', ".join(parts) + ")"
-
-    def isin(k: int, rules) -> str:
-        return f"({lastk(k)} IN ({', '.join(map(lit, rules))}))"
-
-    arms = []
-    for k in sorted(_EXC_BY_DEPTH, reverse=True):    # exceptions prevail,
-        arms.append(f"WHEN {n} >= {k} AND "          # longest first
-                    f"{isin(k, _EXC_BY_DEPTH[k])} "
-                    f"THEN {label(-k)}")
-    for depth in range(_MAX_SUFFIX_DEPTH, 0, -1):    # longest suffix wins
-        if depth in _EXACT_BY_DEPTH:
-            arms.append(f"WHEN {n} >= {depth + 1} AND "
-                        f"{isin(depth, _EXACT_BY_DEPTH[depth])} "
-                        f"THEN {label(-(depth + 1))}")
-        if depth - 1 in _WILD_BY_DEPTH:
-            arms.append(f"WHEN {n} >= {depth + 1} AND "
-                        f"{isin(depth - 1, _WILD_BY_DEPTH[depth - 1])} "
-                        f"THEN {label(-(depth + 1))}")
-    arms.append(f"WHEN {n} >= 2 THEN {label(-2)}")
-    return "(CASE " + " ".join(arms) + f" ELSE {host} END)"
+def _domain(host: str) -> str:
+    """Registrable domain label of a lowercased host: walk its suffixes
+    longest first.  An exception rule ends the walk (its leftmost label);
+    otherwise the first public suffix found is the longest - a wildcard
+    parent matched at a suffix makes the suffix one label longer public,
+    an exact rule the suffix itself - and the domain is the label left of
+    it.  No match: the second-from-last label, or the host itself."""
+    labels = host.split(".")
+    found = None
+    suffix = host
+    for i in range(len(labels)):             # suffix == ".".join(labels[i:])
+        kind = _PSL.get(suffix, 0)
+        if kind & _EXCEPTION:
+            return labels[i]
+        if found is None:
+            if kind & _WILD and i >= 2:
+                found = labels[i - 2]
+            elif kind & _EXACT and i >= 1:
+                found = labels[i - 1]
+        suffix = suffix.partition(".")[2]
+    if found is not None:
+        return found
+    return labels[-2] if len(labels) >= 2 else host
 
 
 # --------------------------------------------------------------------------
-# Dimension tables (Spark side).  Read through importlib.resources so the
-# package works both from a checkout and from the spark-submit --py-files
-# zip (a csv inside a zip has no filesystem path for spark.read.csv); the
-# tables are tiny (<=971 rows), so a LocalRelation + broadcast join is the
-# right physical shape anyway.
+# Dimension data
 
 def _read_data_csv(name: str) -> list[list[str]]:
     import csv as _csv
-    import importlib.resources as _res
     import io as _io
-
-    text = _res.files("ccspark").joinpath(f"data/{name}.csv").read_text(
-        encoding="utf-8")
-    rows = list(_csv.reader(_io.StringIO(text)))
-    return rows[1:]        # drop header
+    return list(_csv.reader(_io.StringIO(_data(f"{name}.csv"))))[1:]
 
 
-def _values_dim(spark, rows, cols):
-    """Dimension rows as a VALUES LocalRelation, not createDataFrame:
-    createDataFrame(list) parallelizes a Python RDD, so EVERY query
-    joining the dim ran a separate mini-job (python-worker scan ->
-    collect) just to build its broadcast.  A LocalRelation is evaluated
-    driver-side - BroadcastExchange builds with no job at all (r6:
-    with_geo 0.85s -> 0.31s fixed overhead at sf0.001; rows and types
-    identical, columns become non-nullable which only strengthens the
-    planner's null-filter elimination)."""
-    def lit(v):
-        if isinstance(v, int):
-            return str(v)
-        # escape for Spark SQL string literals: backslash first (Spark
-        # treats \ as an escape even in '...'), then quote-doubling
-        return ("'" + str(v).replace("\\", "\\\\").replace("'", "''")
-                + "'")
-    vals = ", ".join("(" + ", ".join(lit(c) for c in r) + ")" for r in rows)
-    return spark.sql(
-        f"SELECT * FROM VALUES {vals} AS t({', '.join(cols)})")
+_CCTLD_ROWS = _read_data_csv("cctld")
+_URL_FILTER_ROWS = [(d, int(a), int(b))
+                    for d, a, b in _read_data_csv("url_filter")]
+CCTLD = {tld: (country, region) for tld, country, region in _CCTLD_ROWS}
+MNC_DOMAINS = frozenset(d for d, _, _ in _URL_FILTER_ROWS)
+
+# url -> host: each pattern is cut, in this order (RE2)
+_HOST_CUTS = (
+    "^[A-Za-z][A-Za-z0-9+.-]*://",   # scheme
+    "(?s)[/?#].*",                   # path, query, fragment
+    "^[^@]*@",                       # userinfo
+    ":[0-9]*\\z",                    # port
+)
+GEO_COLS = ("host", "tld", "domain", "country", "region")
+
+
+def _judge(raw: str, mnc: frozenset, skip: frozenset) -> tuple:
+    """(host, tld, domain, country, region, keep) of one raw host."""
+    host = raw.lower()
+    tld = host[host.rfind(".") + 1:]
+    dom = _domain(host)
+    country, region = CCTLD.get(tld, (None, None))
+    keep = (country is not None and country not in skip
+            and dom not in mnc)
+    return host, tld, dom, country, region, keep
+
+
+def geo_batch(url: pa.Array, mnc: frozenset | None = None,
+              countries_to_skip: frozenset = frozenset()):
+    """The geo gate over a batch of urls: ``(keep, cols)`` - ``keep`` a
+    numpy bool mask, ``cols`` a RecordBatch of GEO_COLS (strings) with
+    one row per url.  A page is kept when its tld is a ccTLD whose
+    country is not in *countries_to_skip* and its domain is not in *mnc*
+    (None: the built-in MNC list).  A NULL url gets NULL columns and
+    fails."""
+    mnc = MNC_DOMAINS if mnc is None else mnc
+    host = url
+    for pat in _HOST_CUTS:
+        host = pc.replace_substring_regex(host, pat, "")
+    enc = pc.dictionary_encode(host)
+    judged = [_judge(h, mnc, countries_to_skip)
+              for h in enc.dictionary.to_pylist()]
+    cols = list(zip(*judged)) or [()] * (len(GEO_COLS) + 1)
+    idx = enc.indices
+    out = [pa.array(c, pa.string()).take(idx) for c in cols[:-1]]
+    keep = pc.fill_null(pa.array(cols[-1], pa.bool_()).take(idx), False)
+    return (keep.to_numpy(zero_copy_only=False),
+            pa.RecordBatch.from_arrays(out, names=list(GEO_COLS)))
+
+
+def filter_domains(url_filter) -> frozenset:
+    """A caller's MNC table (a DataFrame with a ``domain`` column) as
+    the set ``geo_batch`` takes.  NULL domains are left out: no page
+    domain is NULL.  Raises ValueError, before any job, when the table
+    has no ``domain`` column."""
+    if "domain" not in url_filter.columns:
+        raise ValueError(
+            f"url_filter needs a 'domain' column; it has {url_filter.columns}")
+    return frozenset(r[0] for r in url_filter.select("domain").collect()
+                     if r[0] is not None)
+
+
+# --------------------------------------------------------------------------
+# The dimension tables as DataFrames (LocalTableScans built from Arrow)
+
+def _arrow_dim(spark, rows, schema: str):
+    names = [f.split()[0] for f in schema.split(", ")]
+    table = pa.table([list(c) for c in zip(*rows)], names=names)
+    return spark.createDataFrame(table, schema)
 
 
 def cctld_dim(spark):
-    """~295-row (tld, country, region) dimension -> broadcast inner join."""
-    return _values_dim(spark, _read_data_csv("cctld"),
-                       ["tld", "country", "region"])
+    """The (tld, country, region) ccTLD table."""
+    return _arrow_dim(spark, _CCTLD_ROWS,
+                      "tld string, country string, region string")
 
 
 def url_filter_dim(spark):
-    """Multinational-domain exclusion list -> broadcast anti join."""
-    rows = [(d, int(a), int(b)) for d, a, b in _read_data_csv("url_filter")]
-    return _values_dim(spark, rows,
-                       ["domain", "num_of_countries", "num_of_pages"])
-
-
-def write_url_filter_csv(df, path: str) -> None:
-    """S9 writer (utilities.py:247-256): persist a mined multinational-
-    domain filter as the space-delimited url_filter format."""
-    (df.selectExpr("concat_ws(' ', domain, num_of_countries, num_of_pages)"
-                   " AS line")
-       .coalesce(1).write.mode("overwrite").text(path))
-
+    """The multinational-domain exclusion list."""
+    return _arrow_dim(spark, _URL_FILTER_ROWS, "domain string, "
+                      "num_of_countries int, num_of_pages int")

@@ -6,21 +6,21 @@ Spark re-expression of the reference flow
 download_and_process_wet_segment :296-317 -> _process_wet_record :237-294
 -> _deduplicate_cc :338-349):
 
-  read pages -> F2 host/tld/domain (pure regex exprs) -> J1 broadcast join
-  ccTLD dim -> J2 broadcast anti-join MNC filter -> ONE fused Arrow stage:
-  F5 line split, F6 cheap raw-length gate *before* the regex chain
-  (reference order, cc_corpus.py:256), F7-F13 clean + keep rules
-  (arrowkernel), W1 per-page kept-line ordinal -> F14 stable hash -> D1
-  deterministic keep-first dedup.
+  read pages -> ONE fused Arrow stage: F2-F4 geo gate (host, tld, PSL
+  domain, ccTLD country/region, MNC filter; geo.geo_batch), F5 line
+  split, F6 cheap raw-length gate *before* the regex chain (reference
+  order, cc_corpus.py:256), F7-F13 clean + keep rules (arrowkernel), W1
+  per-page kept-line ordinal -> F14 stable hash -> D1 deterministic
+  keep-first dedup.
 
-Shuffle profile: exactly one exchange, by `hash` for dedup.  The
-dimension joins are broadcast (295 / 971 rows) and the line ordinal is
-computed inside the fused stage, so nothing shuffles before the dedup.
-At 10^12-doc scale the same plan holds; AQE (skew-join + coalesce)
-handles giant domains, and dedup keys are 8-byte xxhash64 values rather
-than full lines.  The fused stage is the only line split and kernel in
-ccspark: the per-cell metrics (cell_metrics, checkpoint.build_resumable)
-read its page rows.
+Shuffle profile: exactly one exchange, by `hash` for dedup.  The geo
+gate and the line ordinal run inside the fused stage, so nothing joins
+or shuffles before the dedup.  At 10^12-doc scale the same plan holds;
+AQE (skew-join + coalesce) handles giant domains, and dedup keys are
+8-byte xxhash64 values rather than full lines.  The fused stage is the
+only geo gate, line split and kernel on the corpus path: the per-cell
+metrics (cell_metrics, checkpoint.build_resumable) read its page rows.
+``with_geo`` runs the same geo function as a frame of its own.
 """
 
 from __future__ import annotations
@@ -29,71 +29,71 @@ from pyspark.sql import DataFrame, functions as F
 
 from ccspark import dedup, geo
 
+# the geo columns the fused stage emits (geo.GEO_COLS without host)
+GEO_OUT = ("domain", "tld", "country", "region")
+
+
+def _ddl(pages: DataFrame, names) -> str:
+    """DDL of *names*: a column of *pages* keeps its type, others are
+    strings."""
+    types = {f.name: f.dataType.simpleString() for f in pages.schema.fields}
+    return ", ".join(f"{n} {types.get(n, 'string')}" for n in names)
+
 
 def with_geo(pages: DataFrame,
              url_filter: DataFrame | None = None,
              countries_to_skip: tuple[str, ...] = ()) -> DataFrame:
-    """F2-F4: host/tld/domain extraction + geo gate + MNC anti-join.
-    Adds (host, tld, domain, country, region); drops non-ccTLD pages and
-    multinational domains.
+    """F2-F4 alone: geo.geo_batch in one ``mapInArrow`` (the corpus
+    builders run it inside explode_clean_fused instead).  Output columns:
+    domain, tld, the page columns, host, country, region; non-ccTLD pages
+    and multinational domains are dropped.  *url_filter*: custom MNC
+    domain table (column ``domain``, collected here) replacing the
+    built-in list (cc_corpus.py:210-213).  *countries_to_skip*: country
+    names excluded outright (cc_corpus.py:205-208)."""
+    mnc = None if url_filter is None else geo.filter_domains(url_filter)
+    skip = frozenset(countries_to_skip)
+    names = ["domain", "tld", *pages.columns, "host", "country", "region"]
 
-    *url_filter*: custom MNC domain table (column ``domain``) replacing
-    the built-in list (CC_Corpus's url_filter ctor arg, cc_corpus.py:
-    210-213).  *countries_to_skip*: country names excluded outright
-    (cc_corpus.py:205-208)."""
-    spark = pages.sparkSession
-    host = geo.host_expr("url")
-    # host and (tld, domain) are bound behind generator-position
-    # evaluation barriers (explode of a 1-element array), not plain
-    # withColumn projections: Spark-4 pushdown re-inlines projection
-    # columns into the dimension-join keys and the scan's isnotnull
-    # filter, re-evaluating the 4-regex host chain inside every PSL
-    # CASE arm (~40x per page; values identical, r6).
-    df = pages.select(
-        "*", F.explode(F.array(F.expr(host))).alias("host"))
-    td = F.struct(F.expr(geo.tld_expr("host")).alias("tld"),
-                  F.expr(geo.domain_expr("host")).alias("domain"))
-    df = (df.select("*", F.explode(F.array(td)).alias("_td"))
-          .withColumn("tld", F.col("_td.tld"))
-          .withColumn("domain", F.col("_td.domain"))
-          .drop("_td"))
-    dim = geo.cctld_dim(spark)
-    if countries_to_skip:
-        dim = dim.where(~F.col("country").isin(*countries_to_skip))
-    df = df.join(F.broadcast(dim), "tld", "inner")
-    mnc = (url_filter if url_filter is not None
-           else geo.url_filter_dim(spark)).select("domain")
-    df = df.join(F.broadcast(mnc), "domain", "left_anti")
-    return df
+    def gate(batches):
+        import pyarrow as pa
+        for batch in batches:
+            keep, cols = geo.geo_batch(batch.column("url"), mnc, skip)
+            out = pa.RecordBatch.from_arrays(
+                [cols.column(n) if n in geo.GEO_COLS else batch.column(n)
+                 for n in names], names=names)
+            yield out.filter(pa.array(keep))
+
+    return pages.mapInArrow(gate, _ddl(pages, names))
 
 
-def explode_clean_fused(geo_pages: DataFrame,
+def explode_clean_fused(pages: DataFrame,
                         pages_per_chunk: int = 4096,
                         page_gate=None,
                         page_rows: bool = False,
-                        scrub: bool = False) -> DataFrame:
-    """F5 + F6-F13 FUSED into one ``mapInArrow`` stage, the one line
-    split and kernel in ccspark: the line split (RE2
-    ``split_pattern_regex`` over ``regexes.RE_LINE_SPLIT``), the
-    raw-length gate, and the whole-batch clean/verdict kernel all run
-    inside a single Arrow-native Python stage, and only KEPT lines come
-    back out.
+                        scrub: bool = False,
+                        mnc_domains: frozenset | None = None,
+                        countries_to_skip: frozenset = frozenset()
+                        ) -> DataFrame:
+    """F2-F4 + F5 + F6-F13 FUSED into one ``mapInArrow`` stage, the one
+    geo gate, line split and kernel in ccspark: the geo gate
+    (geo.geo_batch), the line split (RE2 ``split_pattern_regex`` over
+    ``regexes.RE_LINE_SPLIT``), the raw-length gate, and the whole-batch
+    clean/verdict kernel all run inside a single Arrow-native Python
+    stage, and only KEPT lines come back out.
 
-    Why this beat the staged JVM posexplode + pandas-UDF form it
-    replaced (measured 1.34x on the full flagship, 1.6x on
-    explode+kernel alone at 3M docs):
+    The geo gate runs first, on every batch: a page whose url fails it
+    (not a ccTLD, a country in *countries_to_skip*, a domain in
+    *mnc_domains* - None: the built-in MNC list - or a NULL url) is
+    dropped before the page_gate and the split, and gets no page row.
+    So no plan holds a broadcast join or the PSL for it.
 
-      * pages cross the JVM->Python Arrow boundary ONCE - the staged
-        form transfers every line with its url/domain/... columns
-        duplicated per line;
-      * the JVM regex split (the single most expensive stage after the
-        round-3 kernel work, ~7s of a 15s flagship run at 3M docs)
-        becomes an RE2 batch kernel;
-      * this is NOT the round-1 "page-at-a-time UDF returning
-        array<struct>" shape that measured 4.6x slower - mapInArrow
-        emits flat RecordBatches, so no Arrow nested-type serialization.
+    Pages cross the JVM->Python Arrow boundary ONCE, and mapInArrow
+    emits flat RecordBatches: a staged posexplode + pandas UDF measured
+    1.34x slower, a page-at-a-time UDF returning array<struct> 4.6x.
 
-    Output columns: every non-``text`` input column + (pos int,
+    Input: ``url``, ``text`` and any other page columns (e.g. ``lang``);
+    an input column named like a geo column is replaced.  Output columns:
+    (domain, tld, country, region), the other input columns, then (pos int,
     line_id int, text string): ``pos`` is the 0-based piece index of
     the line split (empty and trailing pieces count), ``line_id`` the
     1-based ordinal over the page's kept lines (the reference's
@@ -121,14 +121,14 @@ def explode_clean_fused(geo_pages: DataFrame,
     materializes its lines ~3 times during the kernel passes).
 
     *page_gate*: optional page-level gate fused into the SAME stage - a
-    callable (RecordBatch chunk) -> (keep, verdict): ``keep`` is a numpy
-    bool mask over the chunk's pages, ``verdict`` a per-page bool array
-    or None.  Gated-out pages never reach the split/kernel, and the page
-    text crosses the JVM->Python boundary once for gate AND kernel (the
-    facade passes the Gopher/C4 document gates here - see
-    api.build_training_corpus).
+    callable (RecordBatch chunk of geo-passing pages) -> (keep,
+    verdict): ``keep`` is a numpy bool mask over the chunk's pages,
+    ``verdict`` a per-page bool array or None.  Gated-out pages never
+    reach the split/kernel, and the page text crosses the JVM->Python
+    boundary once for geo, gate AND kernel (the facade passes the
+    Gopher/C4 document gates here - see api.build_training_corpus).
 
-    *page_rows*: also emit ONE page row per input page, after that
+    *page_rows*: also emit ONE page row per geo-passing page, after that
     chunk's line rows.  Output gains (gopher_keep boolean, lines_gated
     int, lines_seen int): a page row carries the passthrough columns,
     the page_gate's ``verdict`` as ``gopher_keep`` (NULL when it
@@ -150,11 +150,9 @@ def explode_clean_fused(geo_pages: DataFrame,
     chain runs only on lines with a digit or an '@' (every PII pattern
     needs one).  ``text`` stays the pre-scrub line, so a hash keyed on
     it never sees a placeholder (see api.build_training_corpus)."""
-    keep_cols = [c for c in geo_pages.columns if c != "text"]
-    passthrough = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in geo_pages.schema.fields if f.name != "text")
-    schema = f"{passthrough}, pos int, line_id int, text string"
+    in_cols = [c for c in pages.columns if c not in ("text", *GEO_OUT)]
+    keep_cols = list(GEO_OUT) + in_cols
+    schema = _ddl(pages, keep_cols) + ", pos int, line_id int, text string"
     if scrub:
         schema += ", scrubbed string"
     if page_rows:
@@ -164,8 +162,8 @@ def explode_clean_fused(geo_pages: DataFrame,
     # cannot run on a stream
     import os as _os
     if _os.environ.get("CCSPARK_CHECK_UNIQUE_URLS") == "1" \
-            and "url" in geo_pages.columns and not geo_pages.isStreaming:
-        dup = (geo_pages.groupBy("url").count()
+            and not pages.isStreaming:
+        dup = (pages.groupBy("url").count()
                .where(F.col("count") > 1).limit(1).collect())
         if dup:
             raise ValueError(
@@ -193,6 +191,14 @@ def explode_clean_fused(geo_pages: DataFrame,
             return cols if take is None else [c.take(take) for c in cols]
 
         for batch in batches:
+            geo_keep, geo_cols = geo.geo_batch(
+                batch.column("url"), mnc_domains, countries_to_skip)
+            batch = pa.RecordBatch.from_arrays(
+                [geo_cols.column(c) for c in GEO_OUT]
+                + [batch.column(c) for c in in_cols + ["text"]],
+                names=keep_cols + ["text"])
+            if not geo_keep.all():
+                batch = batch.filter(pa.array(geo_keep))
             for start in range(0, batch.num_rows, pages_per_chunk):
                 chunk = batch.slice(start, pages_per_chunk)
                 n_pages = chunk.num_rows
@@ -256,7 +262,7 @@ def explode_clean_fused(geo_pages: DataFrame,
                            pa.array(n_gated), pa.array(n_seen)],
                         names=names)
 
-    return geo_pages.mapInArrow(fused, schema)
+    return pages.mapInArrow(fused, schema)
 
 
 def _corpus_line_cols(df: DataFrame) -> list[str]:
@@ -271,18 +277,15 @@ def corpus_lines(pages: DataFrame) -> DataFrame:
     line frame (Domain, Country, URL, LineID, Text, Hash - cc_corpus.py:315)
     plus region/tld.
 
-    Plan shape: scan -> broadcast joins -> ONE fused Arrow stage
-    (RE2 line split + clean + verdict + in-stage line ordinal, kept
-    lines only - see explode_clean_fused) -> hash-aggregate dedup.  A
-    page-at-a-time UDF returning array<struct> was measured 4.6x slower
-    than a staged posexplode + pandas UDF (Arrow nested-return
-    serialization dominates); the fused form instead emits flat
-    RecordBatches and beats both."""
-    df = with_geo(pages)
-    cols = _corpus_line_cols(df)
+    Plan shape: scan -> ONE fused Arrow stage (geo gate + RE2 line
+    split + clean + verdict + in-stage line ordinal, kept lines only -
+    see explode_clean_fused) -> hash-aggregate dedup."""
+    cols = _corpus_line_cols(pages)
     # the explicit projection here doubles as the html-pruning barrier:
-    # only these columns + text enter the Python stage
-    return dedup_lines(explode_clean_fused(df.select(*cols, "text")), cols)
+    # only url, lang and text enter the Python stage
+    page_cols = [c for c in cols if c not in GEO_OUT]
+    return dedup_lines(explode_clean_fused(pages.select(*page_cols, "text")),
+                       cols)
 
 
 def dedup_lines(lines: DataFrame, cols: list[str]) -> DataFrame:
@@ -317,8 +320,8 @@ def cell_metrics(pages: DataFrame) -> DataFrame:
     sources.read_wet output) fall back to 'und'."""
     if "lang" not in pages.columns:
         pages = pages.withColumn("lang", F.lit("und"))
-    df = with_geo(pages).select("region", "country", "lang", "url", "text")
-    return cell_metrics_from_rows(explode_clean_fused(df, page_rows=True))
+    return cell_metrics_from_rows(explode_clean_fused(
+        pages.select("lang", "url", "text"), page_rows=True))
 
 
 def cell_metrics_from_rows(rows: DataFrame) -> DataFrame:

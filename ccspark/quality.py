@@ -25,7 +25,7 @@ predictable = HIGH side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 CELL = ("region", "country", "lang")
 
@@ -197,7 +197,6 @@ def qq_points(df: DataFrame, value_col: str = "loglik",
                         norm_ppf(F.element_at(parr, F.col("_i") + 1))
                         .alias("theoretical_q"),
                         "sample_q"))
-    from pyspark.sql import Window
     w = Window.partitionBy(*g).orderBy(F.col("_v"))
     ranked = (df.select(*g, v.alias("_v"))
               .withColumn("rank", F.row_number().over(w))
@@ -335,6 +334,19 @@ def domain_keep_frac(verdict_col: str = "gopher_keep", window=None):
     0/1 doubles, so the sum is exact in any order."""
     avg = F.avg(F.col(verdict_col).cast("double"))
     return F.round(avg if window is None else avg.over(window), 4)
+
+
+def domain_gate(rows: DataFrame, min_keep: float,
+                verdict_col: str = "gopher_keep") -> DataFrame:
+    """The facade's domain gate over fused-stage rows: a row continues
+    when its domain's keep fraction (domain_keep_frac over a
+    ``partitionBy(domain)`` window) is at least *min_keep*; a NULL
+    domain never continues."""
+    frac = domain_keep_frac(verdict_col, Window.partitionBy("domain"))
+    return (rows.withColumn("_keep_frac", frac)
+            .where(F.col("domain").isNotNull()
+                   & (F.col("_keep_frac") >= min_keep))
+            .drop("_keep_frac"))
 
 
 def domain_quality(pages: DataFrame, text_col: str = "text",

@@ -203,8 +203,8 @@ US_STATES = ("al ak az ar ca co ct de dc fl ga hi id il in ia ks ky la me "
 US_FEDERAL = ["fed.us", "isa.us", "nsn.us", "dni.us"]
 
 # 4-label exact rules from the upstream list (Massachusetts carves its
-# k12 tree one level deeper) - these exercise the generated depth-4 CASE
-# arm in geo.domain_expr.
+# k12 tree one level deeper) - these exercise the depth-4 suffix lookups
+# of geo._domain.
 US_FOURTH = ["pvt.k12.ma.us", "chtr.k12.ma.us", "paroch.k12.ma.us"]
 
 # PRIVATE DOMAINS section (r3 verdict item 2 follow-through: the full

@@ -226,16 +226,33 @@ def nb_predict(model, text: str, min_len: int = 0) -> str:
 
 
 # ---------------------------------------------------------------------
-# Pure-Python restatements of the Spark SQL operators and the Arrow
-# gates, for the fuzz and the module tests.
+# Pure-Python restatements of the geo gate, the Spark SQL operators and
+# the Arrow gates, for the fuzz and the module tests.
+
+def host(url):
+    """The url's lowercased host, as the Spark SQL ``host_expr`` that
+    geo.geo_batch replaced defined it: strip a scheme (a letter, then
+    letters, digits, '+', '.' or '-', then '://') at the start; keep the
+    authority, everything before the first '/', '?' or '#'; strip
+    userinfo, everything up to and including the first '@'; strip a ':'
+    followed only by digits at the very end; lowercase.  A newline is an
+    ordinary character throughout.  None for a None url."""
+    if url is None:
+        return None
+    s = re.sub(r"\A[A-Za-z][A-Za-z0-9+.\-]*://", "", url)
+    s = re.match(r"[^/?#]*", s).group()
+    s = re.sub(r"\A[^@]*@", "", s)
+    s = re.sub(r":[0-9]*\Z", "", s)
+    return s.lower()
+
 
 def tld(host: str) -> str:
-    """geo.tld_expr: the last dot-label, '' when the host ends in '.'."""
+    """geo's tld: the last dot-label, '' when the host ends in '.'."""
     return host.rsplit(".", 1)[-1]
 
 
 def registrable_domain(host: str) -> str:
-    """geo.domain_expr (tldextract's ``domain`` field): the PSL walk over
+    """geo's domain (tldextract's ``domain`` field): the PSL walk over
     geo's vendored rule sets.  A matching exception rule prevails (the
     domain is its leftmost label); otherwise the longest matching suffix
     wins, where a wildcard ``*.parent`` matches any suffix one label

@@ -1,8 +1,8 @@
 """Cross-engine fuzz: the Spark SQL operators that production runs (Java
-regex: geo host/TLD/domain, the decontam normalizer and grams) and the
-RE2 kernels of the fused Arrow stage (the Gopher and C4 gates, the PII
-chain) must agree with the pure-Python restatements in tests/oracle.py
-on adversarial inputs.  Deterministic seeded corpora; each Spark check
+regex: the decontam normalizer and grams) and the kernels of the fused
+Arrow stage (the geo gate, the Gopher and C4 gates, the PII chain) must
+agree with the pure-Python restatements in tests/oracle.py on
+adversarial inputs.  Deterministic seeded corpora; each Spark check
 runs as ONE Spark query."""
 
 from __future__ import annotations
@@ -35,7 +35,9 @@ def assert_same(inputs, got, want):
     assert not bad, bad[:3]
 
 
-def test_fuzz_domain_and_tld(spark):
+def test_fuzz_domain_and_tld():
+    """geo.geo_batch's tld and PSL domain equal oracle.tld and
+    oracle.registrable_domain on synthetic hosts."""
     hosts = synth(["www.", "a.", "b-c.", "x", "co.", "gov.", "uk", "de",
                    "bd", "ck", "kawasaki.jp", "sch.uk", ".", "..",
                    "xn--p1ai", "127.0.0.1", ""], 300, seed=202,
@@ -45,12 +47,55 @@ def test_fuzz_domain_and_tld(spark):
     hosts += synth(["city.", "kawasaki.jp", "www.", "ck", "x.", "a.",
                     "jp", "."], 200, seed=203, max_parts=5)
     hosts += ["x.www.ck", "a.city.kawasaki.jp"]
+    _, cols = geo.geo_batch(pa.array([f"http://{h}/p" for h in hosts]))
+    assert_same(hosts, cols.column("host").to_pylist(), hosts)
+    got = [f"{t}|{d}" for t, d in zip(cols.column("tld").to_pylist(),
+                                       cols.column("domain").to_pylist())]
+    assert_same(hosts, got, [f"{oracle.tld(h)}|{oracle.registrable_domain(h)}"
+                             for h in hosts])
 
-    def both(col):
-        return f"concat({geo.tld_expr(col)}, '|', {geo.domain_expr(col)})"
-    assert_same(hosts, spark_eval(spark, both, hosts),
-                [f"{oracle.tld(h)}|{oracle.registrable_domain(h)}"
-                 for h in hosts])
+
+URL_ATOMS = [
+    "http://", "HTTPS://", "ftp://", "svn+ssh://", "a.b-c://", "1x://",
+    "mailto:", "//", "user:pw@", "u@", "@", "/p@q", "www.", "WWW.",
+    "Sub.", "a.", "co.", "uk", "de", "DE", "Kawasaki.JP", "city.", "ck",
+    "hotel.", "xn--p1ai", "XN--P1AI", "рф", "РФ", "пример.", "İ", "Σ",
+    "ΟΔΟΣ.", "ß", ".", "..", ":", ":8080", ":08", "/", "?", "#", "/x",
+    "?q=a/b", "#f/g", "\n", " ", "",
+]
+
+
+def test_fuzz_url_host():
+    """geo.geo_batch on hostile urls: its host equals oracle.host, its
+    tld and domain the oracle's restatements of the host, and a page is
+    kept exactly when the tld is a ccTLD and the domain is not an MNC
+    domain - over schemes, userinfo (also an '@' after the path), ports,
+    '?' and '#' before any '/', upper-case ASCII and non-ASCII hosts,
+    unicode and punycode IDN ccTLDs, trailing dots, empty strings, NULLs
+    and embedded newlines."""
+    urls = (synth(URL_ATOMS, 1500, seed=606, max_parts=10)
+            + synth(URL_ATOMS[:12] + ["x.de", "y.fr", "z.рф", ":1", "/",
+                                      "@", "?", "#", "\n", "."],
+                    500, seed=607, max_parts=6)
+            + [None, "", "\n", "file:///x", "mailto:a@b.de", ":8080",
+               "http://:8080/", "http://a.de./", "http://İSTANBUL.COM.TR/",
+               "http://ΣΟΦΙΑ.GR/", "http://a.de:12\n34/"])
+    keep, cols = geo.geo_batch(pa.array(urls, type=pa.string()))
+    hosts = [oracle.host(u) for u in urls]
+    assert_same(urls, cols.column("host").to_pylist(), hosts)
+    tlds = [None if h is None else oracle.tld(h) for h in hosts]
+    doms = [None if h is None else oracle.registrable_domain(h)
+            for h in hosts]
+    assert_same(urls, cols.column("tld").to_pylist(), tlds)
+    assert_same(urls, cols.column("domain").to_pylist(), doms)
+    want = [t in geo.CCTLD and d not in geo.MNC_DOMAINS
+            for t, d in zip(tlds, doms)]
+    assert_same(urls, keep.tolist(), want)
+    assert_same(urls, cols.column("country").to_pylist(),
+                [geo.CCTLD.get(t, (None,))[0] for t in tlds])
+    assert 0.05 < sum(want) / len(urls) < 0.95
+    assert any(h and "\n" in h for h in hosts)
+    assert any(h and not h.isascii() for h in hosts)
 
 
 QUALITY_ATOMS = [

@@ -1,6 +1,8 @@
-"""geo helpers: the PSL registrable domain (the Spark SQL rendering and
-its Python restatement in tests/oracle.py), the PSL parser, the ccTLD
-table and the url_filter writer."""
+"""geo helpers: the PSL registrable domain (geo.geo_batch and its Python
+restatement in tests/oracle.py), the PSL parser, the ccTLD table and the
+dimension DataFrames."""
+
+import pyarrow as pa
 
 from ccspark import geo
 from tests import oracle
@@ -68,32 +70,33 @@ def test_psl_registrable_domain_python_twin():
         assert oracle.registrable_domain(host) == want, host
 
 
-def test_psl_domain_expr_matches_twin_both_dialects(spark):
+def test_psl_geo_batch_matches_cases():
+    """geo.geo_batch's domain column gives tldextract's domain on every
+    PSL case, and its host column is the host itself."""
     hosts = sorted(PSL_CASES)
-    sdf = spark.createDataFrame([(h,) for h in hosts], "host string")
-    sdf.createOrReplaceTempView("psl_hosts")
-    q_s = (f"SELECT host, {geo.domain_expr('host')} AS dom "
-           f"FROM psl_hosts")
-    got_s = dict(spark.sql(q_s).collect())
-    for h in hosts:
-        assert got_s[h] == PSL_CASES[h], ("spark", h, got_s[h])
+    keep, cols = geo.geo_batch(pa.array([f"http://{h}/p" for h in hosts]))
+    assert cols.column("host").to_pylist() == hosts
+    assert cols.column("domain").to_pylist() == [PSL_CASES[h]
+                                                 for h in hosts]
 
 
-def test_write_url_filter_csv_roundtrip(spark, tmp_path):
-    from pyspark.sql import Row
-    from ccspark import geo
-    df = spark.createDataFrame([
-        Row(domain="hotel", num_of_countries=9, num_of_pages=253383),
-        Row(domain="kayak", num_of_countries=4, num_of_pages=1000),
-    ])
-    path = str(tmp_path / "uf")
-    geo.write_url_filter_csv(df, path)
-    back = spark.read.csv(
-        path, sep=" ",
-        schema="domain string, num_of_countries int, num_of_pages int")
-    got = {r.domain: (r.num_of_countries, r.num_of_pages)
-           for r in back.collect()}
-    assert got == {"hotel": (9, 253383), "kayak": (4, 1000)}
+def test_dimension_frames_are_local_table_scans(spark):
+    """cctld_dim and url_filter_dim are LocalTableScans built from Arrow
+    (no SQL text, no Python job), with the CSV rows, the old column names
+    and int counts."""
+    cc = geo.cctld_dim(spark)
+    uf = geo.url_filter_dim(spark)
+    assert cc.dtypes == [("tld", "string"), ("country", "string"),
+                         ("region", "string")]
+    assert uf.dtypes == [("domain", "string"), ("num_of_countries", "int"),
+                         ("num_of_pages", "int")]
+    for df in (cc, uf):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.startswith("LocalTableScan"), plan
+    assert {tuple(r) for r in cc.collect()} == {
+        tuple(r) for r in geo._read_data_csv("cctld")}
+    assert {r.domain for r in uf.collect()} == geo.MNC_DOMAINS
+    assert ("hotel", 9, 253383) in {tuple(r) for r in uf.collect()}
 
 
 def test_psl_parser_rejects_malformed_rules():

@@ -85,8 +85,7 @@ def test_dedup_keep_none(spark):
         ("https://www.b.de/2", GOOD),
         ("https://www.b.de/3", GOOD2),
     ])
-    df = pipeline.with_geo(pages)
-    df = (pipeline.explode_clean_fused(df.select("url", "text"))
+    df = (pipeline.explode_clean_fused(pages.select("url", "text"))
           .withColumn("hash", F.xxhash64("text")))
     from ccspark.dedup import dedup_keep_none
     out = dedup_keep_none(df).collect()
@@ -192,15 +191,19 @@ def test_fused_explode_clean_matches_oracle(spark):
     """The fused mapInArrow stage's line rows (url, pos, line_id, text)
     equal a pure-Python line split (oracle.split_lines) run through
     oracle.verdict, with line_id the 1-based kept-line ordinal per page
-    row; its page rows carry the split's piece count as lines_seen - on
-    the fixture corpus AND on crafted edge pages."""
+    row; its page rows carry the split's piece count as lines_seen, and
+    exactly the with_geo pages get one, with with_geo's (domain, tld,
+    country, region) - on the fixture corpus AND on crafted edge pages."""
     from tests.fixtures import pages_spark
     for pages in (pages_spark(spark, "/root/testdata/sf0.001"),
                   _edge_pages(spark)):
-        geo = pipeline.with_geo(pages)
-        cols = pipeline._corpus_line_cols(geo)
         out = pipeline.explode_clean_fused(
-            geo.select(*cols, "text"), page_rows=True)
+            pages.select("lang", "url", "text"), page_rows=True)
+        geo_cols = ["url", "domain", "tld", "country", "region"]
+        assert sorted(map(tuple, out.where("line_id IS NULL")
+                          .select(*geo_cols).collect())) == \
+            sorted(map(tuple, pipeline.with_geo(pages)
+                       .select(*geo_cols).collect()))
         lines, seen = [], []
         for r in _geo_page_rows(pages):
             pieces = oracle.split_lines(r.text)
@@ -283,11 +286,11 @@ def _planted():
     add("lifted", _PASS, 1)                 # 10/11 only because the
     add("lifted", _C4FAIL, 9)               # C4 fails count as Gopher
     add("lifted", _FAIL, 1)                 # passes
-    add("nodomain", _PASS, 1)               # domain forced to NULL
+    add("nodomain", _PASS, 1)               # a one-page domain
     return rows
 
 
-def test_domain_gate_equals_ungated_over_kept_domains(spark, monkeypatch):
+def test_domain_gate_equals_ungated_over_kept_domains(spark):
     """build_training_corpus(domain_min_keep=...) equals the ungated
     composite run over only the pages of the domains
     quality.domain_quality keeps - language-aware, language-blind and
@@ -295,23 +298,25 @@ def test_domain_gate_equals_ungated_over_kept_domains(spark, monkeypatch):
     edge domains: one exactly at the minimum, one whose failing page has
     a NULL lang (it counts against the domain), one whose Gopher-passing
     pages all fail C4 (kept, no lines), one lifted over the minimum only
-    by such pages, and a page with a NULL domain (dropped)."""
+    by such pages.  The gate's rule (quality.domain_gate) drops a NULL
+    domain: the geo gate never emits one for a kept page, so the rule is
+    pinned on stage-shaped rows carrying one."""
     from ccspark import quality
     from ccspark.api import CCSparkCorpus
     from tests.fixtures import pages_spark
 
-    # with_geo never yields a NULL domain for a URL today, so the gate's
-    # NULL rule is pinned by forcing one for the planted page
-    with_geo = pipeline.with_geo
+    # page rows (line_id NULL) with their verdicts, then line rows
+    stage_rows = spark.createDataFrame(
+        [(None, True, None), (None, True, None), (None, True, 1),
+         ("kept", True, None), ("kept", True, 1), ("kept", True, 2),
+         ("dropped", False, None), ("dropped", None, 1)],
+        "domain string, gopher_keep boolean, line_id int")
+    gated = quality.domain_gate(stage_rows, DOMAIN_MIN_KEEP)
+    assert gated.columns == stage_rows.columns
+    assert sorted((r.domain, r.line_id) for r in gated.collect()
+                  if r.line_id is not None) == [("kept", 1), ("kept", 2)]
+
     nodomain = "https://www.nodomain.de/p"
-
-    def geo_with_null_domain(*args, **kwargs):
-        df = with_geo(*args, **kwargs)
-        return df.withColumn("domain", F.when(
-            F.col("url").startswith(nodomain), F.lit(None).cast("string"))
-            .otherwise(F.col("domain")))
-    monkeypatch.setattr(pipeline, "with_geo", geo_with_null_domain)
-
     planted = spark.createDataFrame(_planted(),
                                     "url string, text string, lang string")
     pages = (pages_spark(spark, "/root/testdata/sf0.001")
@@ -555,13 +560,13 @@ def test_unique_url_guard_raises_on_duplicate_url(spark, monkeypatch):
                                ("https://www.a.de/1", GOOD2),
                                ("https://www.a.de/2", GOOD)])
     monkeypatch.setenv("CCSPARK_CHECK_UNIQUE_URLS", "1")
-    geo = pipeline.with_geo(pages)
     with pytest.raises(ValueError, match="aggregate the pages by url"):
-        pipeline.explode_clean_fused(geo.select("url", "text"))
+        pipeline.explode_clean_fused(pages.select("url", "text"))
     with pytest.raises(ValueError, match="https://www.a.de/1"):
         CCSparkCorpus(spark).process_pages(pages)
     unique = pipeline.explode_clean_fused(
-        geo.where(F.col("url") != "https://www.a.de/1").select("url", "text"))
+        pages.where(F.col("url") != "https://www.a.de/1")
+        .select("url", "text"))
     assert [(r.url, r.line_id) for r in unique.collect()] == [
         ("https://www.a.de/2", 1)]
 
@@ -574,11 +579,43 @@ def test_duplicate_url_numbers_lines_per_row(spark, monkeypatch):
     monkeypatch.delenv("CCSPARK_CHECK_UNIQUE_URLS", raising=False)
     pages = make_pages(spark, [("https://www.a.de/1", GOOD),
                                ("https://www.a.de/1", GOOD2)])
-    fused = pipeline.explode_clean_fused(
-        pipeline.with_geo(pages).select("url", "text"))
+    fused = pipeline.explode_clean_fused(pages.select("url", "text"))
     assert sorted((r.url, r.line_id, r.text) for r in fused.collect()) == \
         sorted(("https://www.a.de/1", 1, oracle.verdict(t)[0])
                for t in (GOOD, GOOD2))
     out = CCSparkCorpus(spark).process_pages(pages)
     assert sorted((r.url, r.line_id) for r in out.collect()) == [
         ("https://www.a.de/1", 1), ("https://www.a.de/1", 1)]
+
+
+def test_hostile_urls_fail_the_geo_gate(spark):
+    """Pages with a NULL, empty, hostless (file:///x), port-only or
+    trailing-dot url fail the geo gate: process_pages and
+    build_training_corpus(with_metrics=True) succeed, no such page
+    reaches their output, and docs_seen counts the geo-passing pages
+    only - a geo-passing page with NULL text among them.  The host rule
+    reads ``b.de`` from ``mailto:a@b.de`` (userinfo ends at the first
+    '@'), so that page passes, as it did under the Spark SQL host."""
+    from ccspark.api import CCSparkCorpus
+
+    failing = [None, "", "file:///x", "http://:8080/x", ":8080",
+               "http://a.de./x", "https://www.b.com/x"]
+    passing = ["https://www.good.de/1", "mailto:a@b.de",
+               "https://www.nulltext.de/1"]
+    pages = spark.createDataFrame(
+        [(u, _PASS.format(i=i), "en")
+         for i, u in enumerate(failing + passing[:2])]
+        + [(passing[2], None, "en")],
+        "url string, text string, lang string")
+    assert [oracle.host(u) for u in failing] == [
+        None, "", "", "", "", "a.de.", "www.b.com"]
+    cc = CCSparkCorpus(spark)
+    got = {r.url for r in cc.process_pages(pages).collect()}
+    assert got == set(passing[:2])
+    lines, metrics_fn = cc.build_training_corpus(pages, with_metrics=True)
+    assert {r.url for r in lines.collect()} == set(passing[:2])
+    metrics = metrics_fn()
+    assert metrics["docs_seen"] == len(passing)
+    assert metrics["lines_kept"] > 0
+    cells = pipeline.cell_metrics(pages).collect()
+    assert [(r.country, r.docs_seen) for r in cells] == [("Germany", 2)]

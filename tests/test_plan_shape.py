@@ -2,7 +2,8 @@
 
 - column pruning: the kernel never reads the (large, binary) `html`
   column even though the input table carries it;
-- the dimension joins are broadcast, not shuffled;
+- the geo gate runs inside the fused Arrow stage: no broadcast, no
+  Generate and one MapInArrow below the first exchange;
 - the flagship plan contains exactly one real exchange (the dedup
   aggregate) - no accidental extras, and no line-ordinal window;
 - the line split has one rendering (the fused Arrow stage).
@@ -33,11 +34,44 @@ def test_html_column_pruned(spark):
         assert "warc_ts" not in ln, f"warc_ts not pruned: {ln}"
 
 
-def test_dimension_joins_broadcast(spark):
+def _below(plan: str, marker: str) -> list:
+    """The lines of each subtree rooted at a node whose line contains
+    *marker* (the node's line first)."""
+    lines = plan.splitlines()
+    out = []
+    for i, ln in enumerate(lines):
+        if marker not in ln:
+            continue
+        depth = len(ln) - len(ln.lstrip(" :+-"))
+        sub = [ln]
+        for nxt in lines[i + 1:]:
+            if len(nxt) - len(nxt.lstrip(" :+-")) <= depth:
+                break
+            sub.append(nxt)
+        out.append(sub)
+    return out
+
+
+def test_geo_gate_in_fused_stage(spark):
+    """process_pages, build_training_corpus (with and without the domain
+    gate) and cell_metrics plan no BroadcastExchange and no Generate: the
+    geo gate runs in the one MapInArrow, and no exchange sits below it."""
+    from ccspark.api import CCSparkCorpus
     pages = pages_spark(spark, "/root/testdata/sf0.001", materialize=True)
-    plan = plan_of(pipeline.with_geo(pages))
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-    assert "SortMergeJoin" not in plan
+    cc = CCSparkCorpus(spark)
+    for name, df in (
+            ("process_pages", cc.process_pages(pages)),
+            ("build_training_corpus", cc.build_training_corpus(pages)),
+            ("domain gate", cc.build_training_corpus(
+                pages, domain_min_keep=0.7)),
+            ("cell_metrics", pipeline.cell_metrics(pages))):
+        plan = plan_of(df)
+        assert "BroadcastExchange" not in plan, (name, plan)
+        assert not re.search(r"\bGenerate\b", plan), (name, plan)
+        stages = _below(plan, "MapInArrow")
+        assert len(stages) == 1, (name, plan)
+        assert not any("Exchange" in ln for ln in stages[0]), (name, plan)
+        assert re.search(r"Exchange hashpartitioning", plan), (name, plan)
 
 
 def test_flagship_exchange_count(spark):
@@ -52,17 +86,15 @@ def test_flagship_exchange_count(spark):
 
 
 def test_cell_metrics_one_fused_stage(spark):
-    """cell_metrics is one pass: one page scan, one MapInArrow (split,
-    kernel and per-page counts), no pandas UDF, no line-ordinal Window.
-    Its only Generates are with_geo's two one-element explode(array(...))
-    evaluation barriers - no posexplode of the lines."""
+    """cell_metrics is one pass: one page scan, one MapInArrow (geo gate,
+    split, kernel and per-page counts), no pandas UDF, no line-ordinal
+    Window, no join and no Generate."""
     pages = pages_spark(spark, "/root/testdata/sf0.001", materialize=True)
     plan = plan_of(pipeline.cell_metrics(pages))
     assert len(re.findall(r"\bFileScan ", plan)) == 1, plan
     assert plan.count("MapInArrow") == 1, plan
     assert "ArrowEvalPython" not in plan and "Window" not in plan, plan
-    assert re.findall(r"Generate (\w+\(\w+)", plan) == \
-        ["explode(array"] * 2, plan
+    assert "Join" not in plan and "Generate" not in plan, plan
 
 
 def test_one_line_split_inventory():
@@ -102,9 +134,7 @@ def test_composite_doc_gates_run_before_explode(spark):
 
     plan = plan_of(CCSparkCorpus(spark).build_training_corpus(pages))
     # the line explode must be fused inside the MapInArrow stage: no
-    # posexplode Generate in the plan.  (with_geo's 1-element
-    # explode(array(...)) evaluation barriers - r6 - ARE Generates, but
-    # never row-multiplying ones.)
+    # posexplode Generate in the plan
     assert "MapInArrow" in plan and "posexplode" not in plan, plan
     assert "size(filter(" not in plan, plan     # gates fused, not staged
     assert len(re.findall(
@@ -160,8 +190,8 @@ def test_finalize_dedup_is_aggregate(spark):
 def test_domain_gate_judges_pages_once(spark):
     """The wholesale domain gate (build_training_corpus(domain_min_keep=
     ...)) judges each page once: the gated plan scans the pages parquet
-    once, runs ONE MapInArrow stage (gates + rollup verdicts + kernel),
-    no ArrowEvalPython gate UDF and no second with_geo Generate chain.
+    once, runs ONE MapInArrow stage (geo, gates, rollup verdicts and
+    kernel), no ArrowEvalPython gate UDF and no Generate.
     The rollup's window adds exactly one exchange to the ungated
     composite's."""
     from ccspark.api import CCSparkCorpus
@@ -178,7 +208,7 @@ def test_domain_gate_judges_pages_once(spark):
     assert "ArrowEvalPython" not in plan, plan
     n_gen = lambda p: len([ln for ln in p.splitlines()
                            if re.search(r"\bGenerate\b", ln)])
-    assert n_gen(plan) == n_gen(base) == 2, (n_gen(plan), n_gen(base))
+    assert n_gen(plan) == n_gen(base) == 0, (n_gen(plan), n_gen(base))
     # the gate itself must not shuffle more than once: the only exchange
     # it may add is the window's partitionBy(domain), on top of the
     # composite's own

@@ -130,6 +130,51 @@ def test_facade_countries_to_skip(spark, tmp_path):
     assert urls == {"https://www.beta.co.nz/2"}
 
 
+def test_facade_custom_url_filter(spark, monkeypatch):
+    """A custom url_filter replaces the built-in MNC list on
+    process_pages and build_training_corpus alike; it is collected once
+    per CCSparkCorpus, its NULL domains are ignored, and a table without
+    a domain column raises ValueError before any job."""
+    from ccspark import geo
+    def text(d):
+        return "\n".join(
+            f"the quick brown fox jumps over that lazy dog to be of "
+            f"service and have fun with every word in {d} line {j}."
+            for j in range(6))
+    pages = spark.createDataFrame(
+        [(f"https://www.{d}/p", text(d), "en")
+         for d in ("alpha.de", "hotel.fr", "beta.co.nz")],
+        "url string, text string, lang string")
+    calls = []
+    orig = geo.filter_domains
+    monkeypatch.setattr(geo, "filter_domains",
+                        lambda df: calls.append(1) or orig(df))
+    uf = spark.createDataFrame([("alpha", 1), (None, 2)],
+                               "domain string, n int")
+    assert orig(uf) == frozenset({"alpha"})
+    cc = CCSparkCorpus(spark, url_filter=uf)
+    want = {"https://www.hotel.fr/p", "https://www.beta.co.nz/p"}
+    for _ in range(2):
+        assert {r.url for r in cc.process_pages(pages).collect()} == want
+        assert {r.url for r in cc.build_training_corpus(
+            pages, domain_min_keep=0.5).collect()} == want
+    assert len(calls) == 1
+    # the built-in list drops hotel.fr instead
+    assert {r.url for r in CCSparkCorpus(spark).process_pages(
+        pages).collect()} == {"https://www.alpha.de/p",
+                              "https://www.beta.co.nz/p"}
+
+    tracker = spark.sparkContext.statusTracker()
+    spark.sparkContext.setJobGroup("url_filter_probe", "no job expected")
+    try:
+        with pytest.raises(ValueError, match="domain"):
+            CCSparkCorpus(spark, url_filter=uf.withColumnRenamed(
+                "domain", "host"))
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup("url_filter_probe") == []
+
+
 def test_facade_lid_and_finalize(spark):
     pages = spark.createDataFrame([
         Row(doc_id=i, url=f"https://www.s{i % 5}.de/p{i}",
