@@ -331,22 +331,6 @@ class CCSparkCorpus:
         return quality.remove_outliers(docs, group_cols,
                                        z_cut=z_cut, min_words=min_words)
 
-    def qq_diagnostics(self, docs: DataFrame,
-                       group_cols=("region", "country", "lang"),
-                       cleaned: bool = False, z_cut: float = 3.0,
-                       min_words: int = 5_000_000,
-                       n_points: int | None = 200,
-                       approx: bool = True) -> DataFrame:
-        """M6: the probplot data the reference renders per cell before
-        (outlier_detection.py:88-91) and after (:117-119, cleaned=True)
-        the outlier cut - (rank, theoretical_q, sample_q) per group,
-        ready for any plotting frontend.  Defaults to the sketch path
-        (one mergeable aggregation, no per-group sort); pass
-        approx=False, n_points=None for the exact scipy-parity set."""
-        return quality.perplexity_qq(docs, group_cols, cleaned=cleaned,
-                                     z_cut=z_cut, min_words=min_words,
-                                     n_points=n_points, approx=approx)
-
     def decontaminate(self, docs: DataFrame, benchmark: DataFrame,
                       n: int = 13, remove: bool = True,
                       text_col: str = "text", id_col: str = "doc_id",

@@ -9,7 +9,7 @@ but independent ACROSS domains -> ``groupBy(domain).applyInPandas`` with
 rows sorted by url inside each group.  Reference quirks handled:
 
   * lines are the per-row text split on '\\n' with '\\r' stripped
-    (deduplication.py:45-47);
+    (deduplication.py:45-47); a NULL text is one empty line;
   * a sample is emitted when count EXCEEDS chunksize (> not >=, :72);
   * the trailing partial sample of a domain is emitted with .strip()
     (:60 - the reference emits it when the NEXT domain begins; its very
@@ -18,8 +18,8 @@ rows sorted by url inside each group.  Reference quirks handled:
   * the reference labels the domain-change sample with the NEW row's
     date/domain (:60 - a bug); we label samples with their OWN domain.
 
-This module is the exact greedy semantics, pytest-verified against a
-pandas transcription.
+tests/oracle.py restates these rules (``greedy_samples``) as the test
+reference.
 """
 
 from __future__ import annotations

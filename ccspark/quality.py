@@ -20,7 +20,10 @@ no Python in the scoring path, everything stays in whole-stage codegen:
     cut    = pure column arithmetic
 
 Keeping the reference's sign convention: higher mean loglik = more
-predictable = HIGH side.
+predictable = HIGH side.  A doc with no non-empty ' '-split token (NULL,
+'' or whitespace-only text) gets no score and is never an outlier.  The
+reference's QQ plots (M6, outlier_detection.py:88-91,117-119) are out of
+scope.
 """
 
 from __future__ import annotations
@@ -83,177 +86,14 @@ def remove_outliers(docs: DataFrame, group_cols=CELL,
                     text_col: str = "text", id_col: str = "doc_id",
                     z_cut: float = 3.0, min_words: int = 5_000_000
                     ) -> DataFrame:
-    """End-to-end M3-M5: keep docs scored IN (or ORIGINAL)."""
+    """End-to-end M3-M5: drop the docs predicted HIGH or LOW and keep
+    every other doc - IN, ORIGINAL, and any doc that was never scored
+    (no tokens), which is never an outlier."""
     scored = score_loglik(docs, group_cols, text_col, id_col)
     marked = mark_outliers(scored, group_cols, z_cut, min_words)
-    keep_ids = marked.where(F.col("prediction").isin("IN", "ORIGINAL")) \
+    drop_ids = marked.where(F.col("prediction").isin("HIGH", "LOW")) \
                      .select(id_col)
-    return docs.join(keep_ids, id_col, "left_semi")
-
-
-# --------------------------------------------------------------------------
-# M6: QQ-plot diagnostics, data side.
-#
-# The reference renders normal probability plots of the per-cell
-# perplexity distribution before and after the outlier cut
-# (scipy.stats.probplot at outlier_detection.py:88-91 original,
-# :117-119 cleaned) - the one matplotlib call previously declared out of
-# scope.  The FIGURE is driver-side, but every number behind it is not:
-# probplot(x, dist='norm') is (a) Filliben plotting positions
-# pp_i = (i - 0.3175)/(n + 0.365) with pp_1 = 1 - 0.5^(1/n),
-# pp_n = 0.5^(1/n), (b) theoretical quantiles norm.ppf(pp), (c) the
-# order statistics of x, and (d) with fit=True a least-squares line
-# osr ~ osm plus Pearson r.  All four are computed here as DataFrames;
-# a user plots the ~hundreds of returned points with whatever they have.
-
-# Acklam's rational approximation of the inverse normal CDF (published
-# algorithm, max relative error 1.15e-9) - pure arithmetic, so it stays
-# a Catalyst projection inside whole-stage codegen; no scipy, no UDF.
-_ACK_A = (-3.969683028665376e+01, 2.209460984245205e+02,
-          -2.759285104469687e+02, 1.383577518672690e+02,
-          -3.066479806614716e+01, 2.506628277459239e+00)
-_ACK_B = (-5.447609879822406e+01, 1.615858368580409e+02,
-          -1.556989798598866e+02, 6.680131188771972e+01,
-          -1.328068155288572e+01)
-_ACK_C = (-7.784894002430293e-03, -3.223964580411365e-01,
-          -2.400758277161838e+00, -2.549732539343734e+00,
-          4.374664141464968e+00, 2.938163982698783e+00)
-_ACK_D = (7.784695709041462e-03, 3.224671290700398e-01,
-          2.445134137142996e+00, 3.754408661907416e+00)
-_ACK_PLOW = 0.02425
-
-
-def _horner(q, coefs):
-    acc = F.lit(coefs[0])
-    for c in coefs[1:]:
-        acc = acc * q + F.lit(c)
-    return acc
-
-
-def norm_ppf(p) -> F.Column:
-    """Standard-normal inverse CDF of a probability column, as a pure
-    Catalyst expression (Acklam's approximation).  p must lie in (0, 1);
-    out-of-range inputs return NULL rather than +-inf."""
-    p = F.col(p) if isinstance(p, str) else p
-    q_tail_low = F.sqrt(-2.0 * F.log(p))
-    q_tail_high = F.sqrt(-2.0 * F.log(1.0 - p))
-    tail_low = _horner(q_tail_low, _ACK_C) / \
-        (_horner(q_tail_low, _ACK_D) * q_tail_low + 1.0)
-    tail_high = -(_horner(q_tail_high, _ACK_C) /
-                  (_horner(q_tail_high, _ACK_D) * q_tail_high + 1.0))
-    q_mid = p - 0.5
-    r = q_mid * q_mid
-    central = _horner(r, _ACK_A) * q_mid / (_horner(r, _ACK_B) * r + 1.0)
-    return (F.when((p <= 0.0) | (p >= 1.0), F.lit(None).cast("double"))
-             .when(p < _ACK_PLOW, tail_low)
-             .when(p > 1.0 - _ACK_PLOW, tail_high)
-             .otherwise(central))
-
-
-def _filliben_pp(rank_col, n_col) -> F.Column:
-    """Filliben (1975) plotting positions, the exact scheme
-    scipy.stats.probplot uses."""
-    first = 1.0 - F.pow(0.5, 1.0 / n_col)
-    last = F.pow(0.5, 1.0 / n_col)
-    return (F.when(rank_col == 1, first)
-             .when(rank_col == n_col, last)
-             .otherwise((rank_col - 0.3175) / (n_col + 0.365)))
-
-
-def qq_points(df: DataFrame, value_col: str = "loglik",
-              group_cols=(), n_points: int | None = None,
-              approx: bool = False) -> DataFrame:
-    """(theoretical_q, sample_q) pairs of a normal probability plot of
-    value_col, per group - the data behind probplot's scatter.
-
-    Exact path (default): rank every row per group (probplot's full
-    order statistics; ties carry equal sample_q so the point SET is
-    deterministic), optionally decimated to ~n_points evenly spaced
-    ranks with both endpoints kept.  This is the scipy-parity anchor -
-    and a per-group full sort, so at crawl scale use approx=True.
-
-    Approx path (approx=True, requires n_points): evaluates a mergeable
-    quantile sketch (percentile_approx) at n_points fixed Hazen
-    positions (j - 0.5)/m - percentile_approx's percentage argument
-    must be foldable, so the probe probabilities cannot depend on the
-    group's n; at sketch scale the Filliben and Hazen interiors are
-    indistinguishable anyway.  One aggregation, no per-group sort,
-    bounded memory at any group size (a QQ plot needs hundreds of
-    points, never the 10^9 order statistics).  The exact path is the
-    scipy-parity anchor; this is the production path."""
-    g = list(group_cols)
-    v = F.col(value_col).cast("double")
-    if approx:
-        if not n_points:
-            raise ValueError("approx QQ needs n_points")
-        probs = [(j - 0.5) / n_points for j in range(1, n_points + 1)]
-        prob_sql = "array(" + ",".join(f"{p!r}D" for p in probs) + ")"
-        parr = F.array(*[F.lit(p) for p in probs])
-        agg = df.groupBy(*g).agg(F.expr(
-            f"percentile_approx(cast({value_col} as double), {prob_sql},"
-            " 10000)").alias("_qs"))
-        return (agg.select(*g, F.posexplode("_qs").alias("_i", "sample_q"))
-                .select(*g, (F.col("_i") + 1).alias("rank"),
-                        norm_ppf(F.element_at(parr, F.col("_i") + 1))
-                        .alias("theoretical_q"),
-                        "sample_q"))
-    w = Window.partitionBy(*g).orderBy(F.col("_v"))
-    ranked = (df.select(*g, v.alias("_v"))
-              .withColumn("rank", F.row_number().over(w))
-              .withColumn("_n", F.count("*").over(
-                  Window.partitionBy(*g) if g else Window.partitionBy())))
-    if n_points:
-        if n_points < 2:
-            raise ValueError("exact QQ decimation keeps both endpoints: "
-                             "n_points must be >= 2")
-        step = F.greatest(F.lit(1), F.ceil((F.col("_n") - 1.0)
-                                           / (n_points - 1)).cast("bigint"))
-        ranked = ranked.where(
-            (F.col("rank") == 1) | (F.col("rank") == F.col("_n"))
-            | ((F.col("rank") - 1) % step == 0))
-    return ranked.select(
-        *g, "rank",
-        norm_ppf(_filliben_pp(F.col("rank"), F.col("_n")))
-        .alias("theoretical_q"),
-        F.col("_v").alias("sample_q"))
-
-
-def qq_fit(qq: DataFrame, group_cols=()) -> DataFrame:
-    """probplot's fit=True output per group: least-squares sample_q ~
-    theoretical_q (slope, intercept) + Pearson r - native aggregates.
-    A degenerate group (a single QQ point, routine in crawl-tail cells,
-    or all-equal theoretical_q) has zero variance: try_divide yields
-    NULL slope/intercept there instead of the whole-job DIVIDE_BY_ZERO
-    Spark 4's default ANSI mode raises on 0.0/0.0 (r matches: corr of a
-    degenerate group is already NULL)."""
-    g = list(group_cols)
-    agg = qq.groupBy(*g).agg(
-        F.covar_pop("theoretical_q", "sample_q").alias("_cov"),
-        F.var_pop("theoretical_q").alias("_var"),
-        F.avg("theoretical_q").alias("_mt"),
-        F.avg("sample_q").alias("_ms"),
-        F.corr("theoretical_q", "sample_q").alias("r"))
-    return (agg.withColumn("slope", F.try_divide(F.col("_cov"),
-                                                 F.col("_var")))
-               .withColumn("intercept",
-                           F.col("_ms") - F.col("slope") * F.col("_mt"))
-               .select(*g, "slope", "intercept", "r"))
-
-
-def perplexity_qq(docs: DataFrame, group_cols=CELL,
-                  cleaned: bool = False, z_cut: float = 3.0,
-                  min_words: int = 5_000_000,
-                  n_points: int | None = None,
-                  approx: bool = False) -> DataFrame:
-    """The reference's two diagnostic plots as data: QQ of the per-doc
-    mean log-likelihood per cell, before (outlier_detection.py:88-91) or
-    after (cleaned=True, :117-119 - IN rows only) the modified-z cut."""
-    scored = score_loglik(docs, group_cols)
-    if cleaned:
-        scored = mark_outliers(scored, group_cols, z_cut, min_words) \
-            .where(F.col("prediction") == "IN")
-    return qq_points(scored, "loglik", group_cols,
-                     n_points=n_points, approx=approx)
+    return docs.join(drop_ids, id_col, "left_anti")
 
 
 # --------------------------------------------------------------------------

@@ -32,6 +32,11 @@ MinHash signature and the ``dedup_near`` survivor set.
 
 The per-key cap (ccspark.skew) is restated with ``hashlib.md5`` and a
 per-group sort (``cap_per_key``).
+
+The paper's last two stages are restated from their module docstrings:
+the greedy per-domain sample accumulator of ccspark.chunker
+(``greedy_samples``) and the per-cell unigram-LM outlier cut of
+ccspark.quality (``outlier_marks``).
 """
 
 from __future__ import annotations
@@ -434,11 +439,16 @@ def gopher_keep(text: str, lang: str = None, thresholds: dict = None,
             and s["dup_line_char_frac"] <= t["max_dup_line_char_frac"])
 
 
-def round4(x: float) -> float:
-    """Spark round(double, 4): HALF_UP on the shortest decimal repr."""
+def round_half_up(x: float, places: int) -> float:
+    """Spark round(double, places): HALF_UP on the shortest decimal
+    repr."""
     from decimal import ROUND_HALF_UP, Decimal
-    return float(Decimal(repr(x)).quantize(Decimal("0.0001"),
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-places),
                                            rounding=ROUND_HALF_UP))
+
+
+def round4(x: float) -> float:
+    return round_half_up(x, 4)
 
 
 def c4_sentences(text: str) -> list:
@@ -629,3 +639,75 @@ def cap_per_key(rows, key: str, limit: int, tiebreak: str = "url") -> list:
         return (True, hashlib.md5(t.encode()).hexdigest(), t)
 
     return [r for g in groups.values() for r in sorted(g, key=order)[:limit]]
+
+
+def greedy_samples(rows, chunksize: int) -> list:
+    """chunker.domain_samples over mapping rows (domain, url, text):
+    per domain, its rows in url order, each text (NULL as '') split on
+    '\\n' with '\\r' removed; every line is appended to the sample with
+    one trailing space and adds its whitespace-separated word count; a
+    sample is emitted once the count is > *chunksize* and the next one
+    starts empty; the domain's last sample is emitted stripped, unless
+    it is only whitespace.  Returns (domain, chunk_id, n_words, text)
+    tuples, each labelled with its own domain."""
+    by_domain = {}
+    for r in rows:
+        by_domain.setdefault(r["domain"], []).append(r)
+    out = []
+    for domain, members in by_domain.items():
+        samples, parts, count = [], [], 0
+        for r in sorted(members, key=lambda r: r["url"]):
+            for line in (r["text"] or "").split("\n"):
+                line = line.replace("\r", "")
+                parts.append(line + " ")
+                count += len(line.split())
+                if count > chunksize:
+                    samples.append((count, "".join(parts)))
+                    parts, count = [], 0
+        tail = "".join(parts).strip()
+        if tail:
+            samples.append((count, tail))
+        out += [(domain, i, n, t) for i, (n, t) in enumerate(samples)]
+    return out
+
+
+def _median(xs: list) -> float:
+    """Exact median, interpolated between the two middle values of an
+    even-sized list (Spark's ``median`` = ``percentile(x, 0.5)``)."""
+    s = sorted(xs)
+    pos = 0.5 * (len(s) - 1)
+    lo, hi = math.floor(pos), math.ceil(pos)
+    return s[lo] if lo == hi else (hi - pos) * s[lo] + (pos - lo) * s[hi]
+
+
+def outlier_marks(docs, group_cols, z_cut: float = 3.0,
+                  min_words: int = 5_000_000) -> dict:
+    """quality.mark_outliers(quality.score_loglik(...)) over mapping rows
+    (doc_id, text, *group_cols*): doc_id -> (loglik, n_words, z,
+    prediction).  A doc's tokens are its non-empty ' '-split words; a doc
+    with none is not scored (no entry).  Per cell, P(w) is w's count
+    over the cell's token total and loglik is the mean ln P over the
+    doc's tokens; z = 0.6745 * (loglik - median) / MAD (0 when MAD is 0),
+    rounded to 6 places; a cell with fewer than *min_words* tokens is
+    ORIGINAL, else z > z_cut is HIGH, z < -z_cut LOW and the rest IN."""
+    cells = {}
+    for d in docs:
+        toks = [w for w in (d["text"] or "").split(" ") if w]
+        if toks:
+            cell = tuple(d[c] for c in group_cols)
+            cells.setdefault(cell, []).append((d["doc_id"], toks))
+    marks = {}
+    for members in cells.values():
+        counts = Counter(w for _, toks in members for w in toks)
+        total = sum(counts.values())
+        ll = {i: sum(math.log(counts[w] / total) for w in toks) / len(toks)
+              for i, toks in members}
+        med = _median(list(ll.values()))
+        mad = _median([abs(x - med) for x in ll.values()])
+        for i, toks in members:
+            z = 0.0 if mad == 0 else \
+                round_half_up(0.6745 * (ll[i] - med) / mad, 6)
+            pred = ("ORIGINAL" if total < min_words else
+                    "HIGH" if z > z_cut else "LOW" if z < -z_cut else "IN")
+            marks[i] = (ll[i], len(toks), z, pred)
+    return marks

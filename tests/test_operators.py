@@ -10,34 +10,37 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from ccspark import chunker, lid, quality, scrub
+from tests import oracle
 
 
 # ---------------- chunker (A3) ----------------
 
 def test_greedy_chunker_matches_transcription(spark):
+    """domain_samples == oracle.greedy_samples for every domain: CRLF
+    lines, a NULL text, a row landing exactly on chunksize (not emitted:
+    the rule is >) and a whitespace-only tail (no tail sample)."""
     rows = []
     random.seed(3)
-    for d, dom in enumerate(["alpha", "beta"]):
+    for dom in ("alpha", "beta"):
         for i in range(6):
             words = " ".join(f"w{random.randint(0, 30)}" for _ in range(40))
-            rows.append(Row(domain=dom, url=f"https://{dom}.de/{i}",
-                            text=words + "\nsecond line here\r\nthird"))
-    df = spark.createDataFrame(rows)
-    out = chunker.domain_samples(df, chunksize=60).collect()
-
-    # reference-transcription on driver for one domain
-    import pandas as pd
-    pdf = pd.DataFrame([r.asDict() for r in rows if r.domain == "alpha"])
-    exp = chunker.greedy_chunks_pdf(pdf, 60)
-    got = sorted([(r.chunk_id, r.n_words, r.text) for r in out
-                  if r.domain == "alpha"])
-    assert got == sorted(map(tuple, exp[["chunk_id", "n_words", "text"]]
-                             .itertuples(index=False, name=None)))
-    # every domain emits its tail; chunks exceed the threshold except tails
-    for r in out:
-        if r.chunk_id < max(x.chunk_id for x in out
-                            if x.domain == r.domain):
-            assert r.n_words > 60
+            rows.append(dict(domain=dom, url=f"https://{dom}.de/{i}",
+                             text=words + "\nsecond line here\r\nthird"))
+    rows.append(dict(domain="beta", url="https://beta.de/3a", text=None))
+    exact = " ".join(f"x{i}" for i in range(60))
+    rows += [dict(domain="gamma", url="https://gamma.de/0", text=exact),
+             dict(domain="gamma", url="https://gamma.de/1", text="one"),
+             dict(domain="gamma", url="https://gamma.de/2",
+                  text="  \r\n \t ")]
+    random.shuffle(rows)
+    df = spark.createDataFrame(rows, "domain string, url string, "
+                                     "text string")
+    got = sorted(tuple(r) for r in chunker.domain_samples(df, 60).collect())
+    exp = sorted(oracle.greedy_samples(rows, 60))
+    assert got == exp
+    assert {d for d, *_ in exp} == {"alpha", "beta", "gamma"}
+    assert [(n, t[-4:]) for d, _, n, t in exp if d == "gamma"] \
+        == [(61, "one ")]
 
 
 def test_chunker_resets_on_overflow(spark):
@@ -168,6 +171,81 @@ def test_remove_outliers_roundtrip(spark):
     kept = quality.remove_outliers(docs, group_cols=("lang",), min_words=0)
     ids = {r.doc_id for r in kept.collect()}
     assert 99 not in ids and len(ids) >= 28
+
+
+def test_remove_outliers_keeps_docs_without_tokens(spark):
+    """A doc with NULL, '' or whitespace-only text has no token, so it is
+    never scored and never an outlier: it passes through a cell under
+    the word gate and a scored cell alike."""
+    random.seed(5)
+    vocab = [f"t{i}" for i in range(30)]
+    rows = [(i, "en", "a few words here") for i in range(6)]
+    rows += [(10 + i, "de", " ".join(random.choice(vocab)
+                                     for _ in range(50))) for i in range(30)]
+    rows.append((99, "de", " ".join(f"zz{i}" for i in range(50))))
+    for cell, base in (("en", 200), ("de", 300)):
+        rows += [(base, cell, ""), (base + 1, cell, None),
+                 (base + 2, cell, "   ")]
+    docs = spark.createDataFrame(rows, "doc_id long, lang string, "
+                                       "text string")
+    kept = {r.doc_id for r in quality.remove_outliers(
+        docs, group_cols=("lang",), min_words=100).collect()}
+    marks = oracle.outlier_marks(
+        [dict(doc_id=i, lang=c, text=t) for i, c, t in rows], ("lang",),
+        min_words=100)
+    assert marks[0][3] == "ORIGINAL" and marks[99][3] == "LOW"
+    assert {i for i, m in marks.items() if m[3] in ("HIGH", "LOW")} \
+        == {99}
+    assert kept == {i for i, _, _ in rows} - {99}
+
+
+def test_outlier_stage_matches_oracle(spark):
+    """mark_outliers(score_loglik(...)) == oracle.outlier_marks row for
+    row: prediction, n_words and the 6-place z exactly, loglik to
+    1e-9.  Cells: en (odd-sized, planted HIGH and LOW, a doc with no
+    token), de (even-sized), fr (under the word gate), it (every score
+    ties: MAD 0), pt (most scores tie: MAD 0, so its odd doc is IN too).
+    Each cell is cut on its own."""
+    random.seed(11)
+    vocab = [f"tok{i}" for i in range(50)]
+    rows = [dict(doc_id=i, lang="en", text=" ".join(
+        random.choice(vocab) for _ in range(60))) for i in range(39)]
+    rows += [dict(doc_id=100, lang="en", text="tok0 " * 60),
+             dict(doc_id=101, lang="en",
+                  text=" ".join(f"rare{i}" for i in range(60))),
+             dict(doc_id=102, lang="en", text=" ")]
+    rows += [dict(doc_id=200 + i, lang="de", text=" ".join(
+        random.choice(vocab[:8]) for _ in range(5 + 3 * i)))
+        for i in range(20)]
+    rows += [dict(doc_id=300 + i, lang="fr", text="un deux")
+             for i in range(2)]
+    rows += [dict(doc_id=400 + i, lang="it", text="ab cd ab cd")
+             for i in range(6)]
+    rows += [dict(doc_id=500 + i, lang="pt", text="ab cd ab cd")
+             for i in range(5)]
+    rows.append(dict(doc_id=505, lang="pt", text="ab ef gh ij kl"))
+    docs = spark.createDataFrame(rows, "doc_id long, lang string, "
+                                       "text string")
+    marked = quality.mark_outliers(
+        quality.score_loglik(docs, group_cols=("lang",)),
+        group_cols=("lang",), min_words=20)
+    got = {r.doc_id: r for r in marked.collect()}
+    exp = oracle.outlier_marks(rows, ("lang",), min_words=20)
+    assert set(got) == set(exp) == {r["doc_id"] for r in rows} - {102}
+    for i, (loglik, n_words, z, pred) in exp.items():
+        r = got[i]
+        assert r.prediction == pred, (i, r, exp[i])
+        assert abs(r.loglik - loglik) <= 1e-9
+        assert (r.n_words, r.z) == (n_words, z)
+    pred = {i: m[3] for i, m in exp.items()}
+    assert pred[100] == "HIGH" and pred[101] == "LOW"
+    assert {pred[i] for i in (300, 301)} == {"ORIGINAL"}
+    assert {pred[i] for i in range(400, 406)} == {"IN"}
+    assert {exp[i][2] for i in range(500, 506)} == {0.0}
+    assert set(pred.values()) == {"HIGH", "LOW", "IN", "ORIGINAL"}
+    # pooled into one cell the cut differs, so the frame tells cells apart
+    pooled = oracle.outlier_marks(rows, (), min_words=20)
+    assert {i: m[3] for i, m in pooled.items()} != pred
 
 
 # ---------------- scrub (F17) ----------------

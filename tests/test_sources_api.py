@@ -413,30 +413,3 @@ def test_wet_parse_round_trip_digest(spark, tmp_path):
     assert got == sorted(_wet_expected_rows())
     # conversion_only=True is the F1 gate over the same bytes
     assert sources.read_wet(spark, wet_dir).count() == 5
-
-
-def test_facade_qq_diagnostics(spark):
-    """api.qq_diagnostics (M6): sketch path by default, exact path on
-    request, cleaned plot loses the planted outlier's point."""
-    from pyspark.sql import Row
-
-    cc = CCSparkCorpus(spark)
-    docs = [Row(doc_id=f"d{i}", region="eu", country="de", lang="deu",
-                text="der hund lief durch den park " * (2 + i % 4))
-            for i in range(40)]
-    docs.append(Row(doc_id="out", region="eu", country="de", lang="deu",
-                    text=" ".join(f"einzel{j}" for j in range(60))))
-    df = spark.createDataFrame(docs)
-    qq = cc.qq_diagnostics(df, ("lang",), min_words=0, n_points=10)
-    rows = qq.collect()
-    assert set(qq.columns) == {"lang", "rank", "theoretical_q",
-                               "sample_q"}
-    assert len(rows) == 10                    # sketch probes, not docs
-    exact = cc.qq_diagnostics(df, ("lang",), min_words=0,
-                              n_points=None, approx=False)
-    n_exact = exact.count()
-    assert n_exact == 41                      # full order statistics
-    cleaned = cc.qq_diagnostics(df, ("lang",), cleaned=True,
-                                min_words=0, n_points=None,
-                                approx=False)
-    assert cleaned.count() < n_exact          # outlier's point dropped
